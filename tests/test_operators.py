@@ -3064,28 +3064,49 @@ def test_txn_log_snapshot_replay_matters(spark, sf_dir):
     assert naive.count() > n_src  # the removed files are still on disk
 
 
-def test_txn_log_replay_asserts_one_action_per_file_per_commit(spark):
+def test_txn_log_snapshot_build_starts_no_spark_job(spark, sf_dir):
+    """Building a txn-log snapshot read is pure planning: the writer
+    replay resolves the live files on the driver from the JSON log, so
+    constructing the entry's DataFrame (fixture warm) starts ZERO Spark
+    jobs — a Spark-side replay of the same log pays driver-synced jobs
+    before the query even runs."""
+    import __spark_entry__ as em
+
+    qs = em.queries()
+    sc = spark.sparkContext
+    for name in ("source_txn_log_snapshot", "source_txn_log_checkpoint"):
+        qs[name](spark, sf_dir)  # warm: build the fixture once
+        group = f"build-jobs-{name}"
+        sc.setJobGroup(group, "build-phase job-count pin")
+        try:
+            qs[name](spark, sf_dir)
+        finally:
+            sc.setJobGroup("", "")
+        jobs = sc.statusTracker().getJobIdsForGroup(group)
+        assert list(jobs) == [], (name, list(jobs))
+
+
+def test_txn_log_replay_asserts_one_action_per_file_per_commit():
     """r10 VERDICT item 1: a log carrying add+remove of the SAME file
     in ONE commit has no defined replay order — the replay must refuse
     loudly instead of resolving by a tiebreak. Valid histories (remove
     and re-add across DIFFERENT commits) still replay fine."""
     import pytest
 
-    from user_feed_cdc_spark.sources.formats import _replay_live_files
+    from user_feed_cdc_spark.sources.txn_writer import _last_wins
 
-    ok = spark.createDataFrame(
+    def log(rows):
+        return [{"version": v, "action": a, "file": f} for v, a, f in rows]
+
+    ok = log(
         [(0, "add", "f0"), (1, "remove", "f0"), (2, "add", "f0"),
-         (0, "add", "f1"), (1, "remove", "f1")],
-        "version long, action string, file string",
+         (0, "add", "f1"), (1, "remove", "f1")]
     )
-    assert _replay_live_files(ok) == ["f0"]
+    assert _last_wins(ok) == ["f0"]
 
-    bad = spark.createDataFrame(
-        [(0, "add", "f0"), (0, "remove", "f0"), (0, "add", "f1")],
-        "version long, action string, file string",
-    )
+    bad = log([(0, "add", "f0"), (0, "remove", "f0"), (0, "add", "f1")])
     with pytest.raises(ValueError, match="one-action-per-file-per-commit"):
-        _replay_live_files(bad)
+        _last_wins(bad)
 
 
 def test_txn_writer_concurrent_commits(tmp_path):
@@ -3791,6 +3812,54 @@ def test_fan_out_estimate_matches_rdd_probe(spark, sf_dir):
     )
 
 
+def test_fan_out_estimate_survives_unusual_size_confs(
+    spark, sf_dir, monkeypatch
+):
+    """Size confs in units Spark accepts but the parser used to miss
+    ('1t', '2pb') are parsed; a malformed value makes the estimate
+    return None (the RDD-probe fallback) instead of raising out of
+    fan_out."""
+    from pyspark.sql.conf import RuntimeConfig
+
+    from user_feed_cdc_spark.sources.tables import (
+        _scan_partition_estimate,
+        _size_bytes,
+        fan_out,
+        load_table,
+    )
+
+    assert _size_bytes("1t", 0) == 1 << 40
+    assert _size_bytes(" 2TB ", 0) == 2 << 40
+    assert _size_bytes("1p", 0) == 1 << 50
+    assert _size_bytes("3pb", 0) == 3 << 50
+    assert _size_bytes("junk", 0) is None
+    assert _size_bytes("inf", 0) is None
+    assert _size_bytes(None, 7) == 7
+
+    df = load_table(spark, sf_dir, "events")
+    key = "spark.sql.files.maxPartitionBytes"
+    prev = spark.conf.get(key, None)
+    try:
+        spark.conf.set(key, "1t")
+        assert _scan_partition_estimate(df) == df.rdd.getNumPartitions()
+        # spark.conf.set refuses a malformed size, so serve one from
+        # below the session the way an unvalidated conf source would
+        real_get = RuntimeConfig.get
+
+        def junk_get(self, k, *default):
+            return "junk" if k == key else real_get(self, k, *default)
+
+        monkeypatch.setattr(RuntimeConfig, "get", junk_get)
+        assert _scan_partition_estimate(df) is None
+        assert fan_out(df).count() == df.count()
+        monkeypatch.undo()
+    finally:
+        if prev is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prev)
+
+
 def test_txn_cdf_between_timestamps(spark, sf_dir):
     """Timestamp-bounded change feed (startingTimestamp/endingTimestamp
     semantics): over the CDF fixture (commit timestamps 1000..6000),
@@ -3939,7 +4008,7 @@ def test_txn_log_checkpoint_skips_old_commits(spark, sf_dir, tmp_path):
 
     from user_feed_cdc_spark.sources.formats import (
         _txn_log_ckpt_table,
-        read_txn_log_checkpointed,
+        read_snapshot,
     )
     from user_feed_cdc_spark.sources.tables import load_table
 
@@ -3954,7 +4023,7 @@ def test_txn_log_checkpoint_skips_old_commits(spark, sf_dir, tmp_path):
                 os.remove(os.path.join(log2, name))
                 removed += 1
     assert removed == 3  # v0, v1, v2 gone — only the checkpoint remains
-    snap = read_txn_log_checkpointed(spark, root2, log2)
+    snap = read_snapshot(spark, root2)
     n_src = load_table(spark, sf_dir, "events").count()
     assert snap.count() == n_src
     assert snap.select("event_id").distinct().count() == n_src
@@ -4023,7 +4092,7 @@ def test_txn_log_checkpoint_at_head_has_empty_tail(spark, sf_dir, tmp_path):
 
     from user_feed_cdc_spark.sources.formats import (
         _txn_log_ckpt_table,
-        read_txn_log_checkpointed,
+        read_snapshot,
     )
     from user_feed_cdc_spark.sources.tables import load_table
 
@@ -4040,7 +4109,7 @@ def test_txn_log_checkpoint_at_head_has_empty_tail(spark, sf_dir, tmp_path):
             )
     with open(os.path.join(log2, "_last_checkpoint"), "w") as f:
         f.write(json.dumps({"version": 4}) + "\n")
-    snap = read_txn_log_checkpointed(spark, root2, log2)
+    snap = read_snapshot(spark, root2)
     assert snap.count() == load_table(spark, sf_dir, "events").count()
 
 
@@ -4427,7 +4496,7 @@ def test_txn_protocol_reader_version_gate(spark, sf_dir, tmp_path):
     reads at or below the engine's supported version work and the
     demand survives checkpointing; a table whose newest protocol
     demands MORE refuses on every read path (writer-side replay,
-    restore, clone, the Spark checkpoint reader) while the upgrade
+    restore, clone, the formats.read_snapshot read) while the upgrade
     COMMIT itself still succeeds (its interval checkpoint is skipped
     with a warning — checkpoint failure never surfaces as commit
     failure); time travel to below the upgrade still works."""
@@ -4437,9 +4506,7 @@ def test_txn_protocol_reader_version_gate(spark, sf_dir, tmp_path):
 
     import pytest
 
-    from user_feed_cdc_spark.sources.formats import (
-        read_txn_log_checkpointed,
-    )
+    from user_feed_cdc_spark.sources.formats import read_snapshot
     from user_feed_cdc_spark.sources.txn_writer import (
         SUPPORTED_READER_VERSION,
         TxnLogWriter,
@@ -4475,7 +4542,7 @@ def test_txn_protocol_reader_version_gate(spark, sf_dir, tmp_path):
     with pytest.raises(ValueError, match="reader version"):
         w.clone_to(str(tmp_path / "c"))
     with pytest.raises(ValueError, match="reader version"):
-        read_txn_log_checkpointed(spark, str(root), w.log_dir)
+        read_snapshot(spark, str(root))
     # time travel BELOW the upgrade replays only the supported history
     assert w.live_files(as_of=2) == ["a", "b"]
 

@@ -1178,17 +1178,14 @@ def test_txn_log_bloom_index_prunes_files(spark, sf_dir):
         _txn_log_bloom_table,
     )
     from user_feed_cdc_spark.sources.tables import load_table
+    from user_feed_cdc_spark.sources.txn_writer import TxnLogWriter
 
     df = em.queries()["source_txn_log_bloom_index"](spark, sf_dir)
     scanned = {f.rstrip("/").split("/")[-2] for f in df.inputFiles()}
 
-    root, log_dir = _txn_log_bloom_table(spark, sf_dir)
-    import json
-
-    entries = []
-    with open(os.path.join(log_dir, "00000.json")) as fh:
-        for line in fh:
-            entries.append(json.loads(line))
+    root, _log_dir = _txn_log_bloom_table(spark, sf_dir)
+    w = TxnLogWriter(root)
+    entries = list(w._winning_adds(w.latest_version()).values())
     probe = (
         load_table(spark, sf_dir, "events").agg(F.max("event_id")).first()[0]
     )
@@ -1309,7 +1306,7 @@ def test_txn_optimize_zorder_prunes_both_dims(spark, sf_dir):
 
     with open(os.path.join(root, "_META")) as f:
         max_user = json.loads(f.readline())["max_user"]
-    lower = _zorder_prune(spark, root, log_dir, "user", 0, max_user // 2 - 1)
+    lower = _zorder_prune(root, "user", 0, max_user // 2 - 1)
     assert lower == ["z0", "z2"], lower
     # CDF silence: the ZORDER publish (v4) changes no data
     assert table_changes(spark, root, log_dir, 4, 4).count() == 0

@@ -16,8 +16,8 @@ contract end to end:
   surface CommitConflict (concurrent remove-remove),
 * the replayed live set equals exactly what the winners committed,
   and the one-action-per-file-per-commit invariant holds across every
-  commit file (the same replay assertion formats._replay_live_files
-  runs).
+  commit file (the same assertion txn_writer._last_wins makes on
+  every replay).
 
 Reference parity: the reference's feed writes race freely (Cassandra
 batch inserts, event_processor.py:89-113, last-write-wins); this pins

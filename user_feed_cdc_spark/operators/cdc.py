@@ -22,6 +22,7 @@ import weakref
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from user_feed_cdc_spark.registry import registry
 from user_feed_cdc_spark.sources.tables import load_table
 from user_feed_cdc_spark.streaming.cdc_pipeline import (
     dead_letters,
@@ -29,18 +30,7 @@ from user_feed_cdc_spark.streaming.cdc_pipeline import (
     parse_cdc,
 )
 
-QUERIES: dict = {}
-ORACLES: dict[str, str] = {}
-
-
-def _register(name: str, oracle: str | None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
+QUERIES, ORACLES, _register = registry()
 
 
 def _op():

@@ -16,27 +16,17 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from user_feed_cdc_spark.registry import registry
 from user_feed_cdc_spark.sources.tables import load_table
 from user_feed_cdc_spark.streaming.windows import session_counts, sliding_counts
 
-QUERIES: dict = {}
-ORACLES: dict[str, str] = {}
+QUERIES, ORACLES, _register = registry()
 
 
 def _r6(c):
     """Half-up micro-rounding (1e-6), the oracle-load-bearing freeze:
     FLOOR(x*1e6 + 0.5)/1e6 with the identical literal in every twin."""
     return F.floor(c * 1000000.0 + F.lit(0.5)) / 1000000.0
-
-
-def _register(name: str, oracle: str | None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
 
 
 @_register(

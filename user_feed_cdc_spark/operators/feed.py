@@ -27,20 +27,10 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from user_feed_cdc_spark.functions.numeric import round_half_up as r2
+from user_feed_cdc_spark.registry import registry
 from user_feed_cdc_spark.sources.tables import load_table
 
-QUERIES: dict = {}
-ORACLES: dict[str, str] = {}
-
-
-def _register(name: str, oracle: str | None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
+QUERIES, ORACLES, _register = registry()
 
 
 def derived_followers(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -31,6 +31,7 @@ from user_feed_cdc_spark.operators.png import (
     decode_png,
     encode_png,
 )
+from user_feed_cdc_spark.registry import registry
 from user_feed_cdc_spark.sources.tables import fan_out, load_table
 
 class DecodeError(ValueError):
@@ -92,18 +93,7 @@ def ascii_seed(text: str) -> bytes:
     return text.encode("utf-8")
 
 
-QUERIES: dict = {}
-ORACLES: dict[str, str] = {}
-
-
-def _register(name: str, oracle: str | None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
+QUERIES, ORACLES, _register = registry()
 
 
 MODALITIES = ("image", "audio", "video")

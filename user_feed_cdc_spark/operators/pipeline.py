@@ -12,20 +12,10 @@ from pyspark.sql import functions as F
 
 from user_feed_cdc_spark.operators.dedup import shingles
 from user_feed_cdc_spark.operators.textanalysis import EN_STOPWORDS
+from user_feed_cdc_spark.registry import registry
 from user_feed_cdc_spark.sources.tables import fan_out, load_table
 
-QUERIES: dict = {}
-ORACLES: dict[str, str] = {}
-
-
-def _register(name: str, oracle: str | None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
+QUERIES, ORACLES, _register = registry()
 
 
 # train split keeps ceil(9/10 · n) docs per stratum (see the entry's

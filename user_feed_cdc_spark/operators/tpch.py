@@ -53,20 +53,10 @@ quantity (the only stock signal available). All money flows as
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from user_feed_cdc_spark.registry import registry
 from user_feed_cdc_spark.sources.tables import load_table
 
-QUERIES: dict = {}
-ORACLES: dict[str, str] = {}
-
-
-def _register(name: str, oracle: str | None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
+QUERIES, ORACLES, _register = registry()
 
 
 def _cents(col: str = "l_extendedprice", discount: bool = True):

@@ -32,6 +32,11 @@ def get_spark(app_name: str = "user_feed_cdc_spark") -> SparkSession:
         # floor-probe A/B) with identical atomic-rename semantics; the
         # conf only binds the file:// scheme, so HDFS/S3 deployments
         # are untouched (their FileContext impls are unaffected).
+        # The trade: with no .crc sidecars, ChecksumFs CRC verification
+        # is gone for local FileContext I/O — a torn or bit-flipped
+        # checkpoint/WAL file on local disk is no longer caught by a
+        # checksum mismatch on read (FileSystem-API reads and writes
+        # keep their checksums).
         .config(
             "spark.hadoop.fs.AbstractFileSystem.file.impl",
             "org.apache.hadoop.fs.local.RawLocalFs",

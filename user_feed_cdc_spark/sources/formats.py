@@ -44,21 +44,11 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from user_feed_cdc_spark.registry import registry
 from user_feed_cdc_spark.schemas import TABLE_SCHEMAS
 from user_feed_cdc_spark.sources.tables import load_table
 
-QUERIES: dict = {}
-ORACLES: dict[str, str] = {}
-
-
-def _register(name: str, oracle: str | None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
+QUERIES, ORACLES, _register = registry()
 
 
 _TS_FMT = "yyyy-MM-dd HH:mm:ss.SSSSSS"  # full microseconds, both directions
@@ -848,21 +838,23 @@ def source_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _txn_log_table(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
-    """Build (once per (sf, source-mtime)) a tiny lakehouse-style table:
-    seven parquet data files plus a JSON transaction log of three
-    commits — v0 adds b0..b2, v1 adds b3..b5, v2 COMPACTS b1+b2 into c12
-    (remove f1, remove f2, add c12). The live snapshot therefore equals
-    the full events table exactly once, while the DIRECTORY contains the
-    removed files too — a reader that lists files instead of replaying
-    the log double-counts buckets 1 and 2 and fails the hash gate."""
-    import json
+    """Build (once per (sf, source-mtime, rev)) a tiny lakehouse-style
+    table through the committer: seven parquet data files and three
+    commits — v0 adds f0..f2, v1 adds f3..f5, v2 COMPACTS f1+f2 into
+    c12 (remove f1, remove f2, add c12). The live snapshot therefore
+    equals the full events table exactly once, while the DIRECTORY
+    still holds the removed files — a reader that lists files instead
+    of replaying the log double-counts buckets 1 and 2 and fails the
+    hash gate."""
+    from user_feed_cdc_spark.sources.txn_writer import TxnLogWriter
 
     src_path = os.path.join(sf_dir, "events.parquet")
     mtime = int(os.path.getmtime(src_path))
-    key = hashlib.md5(f"txnlog:{sf_dir}:{mtime}".encode()).hexdigest()[:12]
+    key = hashlib.md5(f"txnlog:{sf_dir}:{mtime}:v2".encode()).hexdigest()[:12]
     root = _scratch_path("txnlog", sf_dir, key)
     log_dir = os.path.join(root, "_log")
     if not os.path.exists(os.path.join(root, "_BUILT")):
+        w = TxnLogWriter(root)
         ev = load_table(spark, sf_dir, "events")
         bucket = F.pmod(F.col("event_id"), F.lit(6))
         for b in range(6):
@@ -872,58 +864,49 @@ def _txn_log_table(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
         ev.filter(bucket.isin(1, 2)).write.mode("overwrite").parquet(
             os.path.join(root, "c12")
         )
-        os.makedirs(log_dir, exist_ok=True)
-        commits = [
-            [("add", "f0"), ("add", "f1"), ("add", "f2")],
-            [("add", "f3"), ("add", "f4"), ("add", "f5")],
-            [("remove", "f1"), ("remove", "f2"), ("add", "c12")],
-        ]
-        for v, actions in enumerate(commits):
-            with open(os.path.join(log_dir, f"{v:05d}.json"), "w") as f:
-                for action, name in actions:
-                    f.write(
-                        json.dumps(
-                            {"version": v, "action": action, "file": name}
-                        )
-                        + "\n"
-                    )
+        w.begin().add("f0").add("f1").add("f2").commit(timestamp=1000)
+        w.begin().add("f3").add("f4").add("f5").commit(timestamp=2000)
+        w.begin().remove("f1").remove("f2").add("c12").commit(timestamp=3000)
         with open(os.path.join(root, "_BUILT"), "w") as f:
             f.write("ok\n")
     return root, log_dir
 
 
-def _replay_live_files(log: DataFrame) -> list[str]:
-    """Shared last-action-wins replay of add/remove actions → sorted
-    live file names — the planning step every txn-log read runs. One
-    Spark job aggregates the log per (file, version); the replay then
-    finishes driver-side over planning-scale rows (|distinct file| ×
-    |commits touching it| — exactly what Delta's snapshot resolution
-    holds in driver memory). The ONE-ACTION-PER-FILE-PER-COMMIT
-    invariant the writers hold is ASSERTED here (r10 VERDICT item 1),
-    not assumed: a log carrying add+remove of the same file in one
-    commit has no defined replay order, so it refuses loudly instead
-    of resolving by a tiebreak that looks like collation luck. Across
-    commits the later version wins; a remove ranks above an add only
-    across versions (re-add generalizes correctly)."""
-    rank = F.when(F.col("action") == "remove", F.lit(1)).otherwise(F.lit(0))
-    rows = (
-        log.filter(F.col("action").isin("add", "remove"))
-        .groupBy("file", "version")
-        .agg(F.count("*").alias("n"), F.max(rank).alias("action_rank"))
-        .collect()
-    )  # planning step: one row per (file, commit) — catalog scale
-    dup = [r for r in rows if r.n > 1]
-    if dup:
-        raise ValueError(
-            "transaction log violates one-action-per-file-per-commit: "
-            + ", ".join(f"{r.file}@v{r.version}" for r in dup[:5])
-        )
-    last: dict[str, tuple[int, int]] = {}
-    for r in rows:
-        st = (r.version, r.action_rank)
-        if r.file not in last or st > last[r.file]:
-            last[r.file] = st
-    return sorted(f for f, (_v, a) in last.items() if a == 0)
+def read_snapshot(
+    spark: SparkSession, root: str, as_of: int | None = None
+) -> DataFrame:
+    """The ONE txn-log snapshot read every certified reader shares:
+    TxnLogWriter's replay (checkpoint base + tail, multi-part parts,
+    vacuumed-history refusal, protocol gate, asserted one-action-per-
+    file-per-commit) resolves the live files as of `as_of` (default
+    HEAD) on the driver — planning scale, no Spark job — and the live
+    files are scanned with the newest metaData schema the replay sees
+    (schema-on-log), else the events schema. A column-mapping
+    metaData (a JSON document, not DDL) names LOGICAL columns over the
+    physical events columns, so those tables scan the events schema
+    too (read_txn_log_mapped projects). Data files never move until
+    the scan executes."""
+    from user_feed_cdc_spark.sources.txn_writer import (
+        TxnLogWriter,
+        _last_wins,
+        _newest_action,
+    )
+
+    w = TxnLogWriter(root)
+    hi = w.latest_version() if as_of is None else as_of
+    acts = w._replay_actions(hi) if hi >= 0 else []
+    meta = _newest_action(acts, "metaData")
+    schema = (
+        meta["schema"]
+        if meta and not meta["schema"].startswith("{")
+        else TABLE_SCHEMAS["events"]
+    )
+    live = _last_wins(acts)
+    if not live:
+        return spark.createDataFrame([], schema)
+    return spark.read.schema(schema).parquet(
+        *[os.path.join(root, name) for name in live]
+    )
 
 
 @_register("source_txn_log_snapshot", _ROUNDTRIP_ORACLE)
@@ -932,38 +915,24 @@ def source_txn_log_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     live snapshot of a table from its transaction log — the read
     protocol Delta/Iceberg/Hudi run on every query — and certify the
     result against the oracle over the original rows. The log is three
-    JSON commits over seven parquet files, the last a compaction
-    (remove two files, add their merged replacement); a reader that
-    trusts the directory listing instead of the log double-counts the
-    compacted buckets and the value hash fails loudly — the gate
-    certifies the log replay itself. Last-action-wins per file is
-    computed as a MAX over (version, action_rank) structs with an
-    EXPLICIT numeric rank (remove=1 > add=0), not string collation:
-    across commits the later version wins (re-added files generalize
-    correctly), and within one commit a remove deliberately beats an
-    add (a file both added and removed in the same commit is dead) —
-    though the log writer holds the one-action-per-file-per-commit
-    invariant, so that tiebreak is defensive, not load-bearing.
+    commits over seven parquet files, the last a compaction (remove
+    two files, add their merged replacement); a reader that trusts the
+    directory listing instead of the log double-counts the compacted
+    buckets and the value hash fails loudly — the gate certifies the
+    log replay itself (txn_writer._last_wins: later version wins per
+    file, and one commit may not both add and remove a file).
 
     This is file-level time travel, the complement of the row-level
     CDC family (cdc_timetravel_lookup reads a key AS OF a timestamp;
-    this reads a TABLE as of a log version). Scale posture: the log
-    replay touches |log| rows and only the FILE LIST reaches the
-    driver (exactly what a production table format's planning phase
+    this reads a TABLE as of a log version). Scale posture: the replay
+    reads |log| JSON lines on the driver and only the FILE LIST comes
+    out of it (exactly what a production table format's planning phase
     does — data files never move until the pruned scan); snapshot
     reads then parallelize over live files like any parquet scan, and
     checkpointing the replayed file list every N commits (Delta's
     _last_checkpoint) bounds replay cost as the log grows."""
-    root, log_dir = _txn_log_table(spark, sf_dir)
-    log = spark.read.schema("version long, action string, file string").json(
-        os.path.join(log_dir, "*.json")
-    )
-    live = _replay_live_files(log)  # planning phase: |files| rows to the
-    # driver, the table-format catalog step — data files themselves
-    # never leave the executors
-    paths = [os.path.join(root, name) for name in live]
-    snapshot = spark.read.schema(TABLE_SCHEMAS["events"]).parquet(*paths)
-    return _fidelity_agg(snapshot)
+    root, _log_dir = _txn_log_table(spark, sf_dir)
+    return _fidelity_agg(read_snapshot(spark, root))
 
 
 # ---------------------------------------------------------------------------
@@ -972,24 +941,26 @@ def source_txn_log_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _txn_log_ckpt_table(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
-    """Build (once per (sf, source-mtime)) a checkpointed txn-log
-    table: eight buckets f0..f7 of events (pmod 8), five commits —
-    v0 adds f0..f2, v1 adds f3..f5, v2 compacts f1+f2 into c12, then
-    a CHECKPOINT at v2 (`00002.checkpoint.json` = the live file list
-    after replaying v0..v2, plus `_last_checkpoint` naming it), then
-    v3 adds f6..f7 and v4 REWRITES f0 as f0r (remove + re-add of the
-    same rows — an OPTIMIZE-style rewrite that exercises last-action-
-    wins past the checkpoint). Final live set = {c12, f3..f7, f0r} =
-    every bucket exactly once, so the snapshot equals the events
-    table and the usual fidelity oracle certifies the replay."""
-    import json
+    """Build (once per (sf, source-mtime, rev)) a checkpointed txn-log
+    table through the committer: eight buckets f0..f7 of events
+    (pmod 8), five commits — v0 adds f0..f2, v1 adds f3..f5, v2
+    compacts f1+f2 into c12, then a CHECKPOINT at v2
+    (`00002.checkpoint.json` = the live file list after replaying
+    v0..v2, plus `_last_checkpoint` naming it), then v3 adds f6..f7
+    and v4 REWRITES f0 as f0r (remove + re-add of the same rows — an
+    OPTIMIZE-style rewrite that exercises last-action-wins past the
+    checkpoint). Final live set = {c12, f3..f7, f0r} = every bucket
+    exactly once, so the snapshot equals the events table and the
+    usual fidelity oracle certifies the replay."""
+    from user_feed_cdc_spark.sources.txn_writer import TxnLogWriter
 
     src_path = os.path.join(sf_dir, "events.parquet")
     mtime = int(os.path.getmtime(src_path))
-    key = hashlib.md5(f"txnckpt:{sf_dir}:{mtime}".encode()).hexdigest()[:12]
+    key = hashlib.md5(f"txnckpt:{sf_dir}:{mtime}:v2".encode()).hexdigest()[:12]
     root = _scratch_path("txnckpt", sf_dir, key)
     log_dir = os.path.join(root, "_log")
     if not os.path.exists(os.path.join(root, "_BUILT")):
+        w = TxnLogWriter(root)
         ev = load_table(spark, sf_dir, "events")
         bucket = F.pmod(F.col("event_id"), F.lit(8))
         for b in range(8):
@@ -1002,116 +973,15 @@ def _txn_log_ckpt_table(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
         ev.filter(bucket == 0).write.mode("overwrite").parquet(
             os.path.join(root, "f0r")
         )
-        os.makedirs(log_dir, exist_ok=True)
-        commits = [
-            [("add", "f0"), ("add", "f1"), ("add", "f2")],
-            [("add", "f3"), ("add", "f4"), ("add", "f5")],
-            [("remove", "f1"), ("remove", "f2"), ("add", "c12")],
-            [("add", "f6"), ("add", "f7")],
-            [("remove", "f0"), ("add", "f0r")],
-        ]
-        for v, actions in enumerate(commits):
-            with open(os.path.join(log_dir, f"{v:05d}.json"), "w") as f:
-                for action, name in actions:
-                    f.write(
-                        json.dumps(
-                            {"version": v, "action": action, "file": name}
-                        )
-                        + "\n"
-                    )
-        ckpt_live = ["f0", "f3", "f4", "f5", "c12"]  # replay of v0..v2
-        with open(os.path.join(log_dir, "00002.checkpoint.json"), "w") as f:
-            for name in ckpt_live:
-                f.write(
-                    json.dumps({"version": 2, "action": "add", "file": name})
-                    + "\n"
-                )
-        with open(os.path.join(log_dir, "_last_checkpoint"), "w") as f:
-            f.write(json.dumps({"version": 2}) + "\n")
+        w.begin().add("f0").add("f1").add("f2").commit(timestamp=1000)
+        w.begin().add("f3").add("f4").add("f5").commit(timestamp=2000)
+        w.begin().remove("f1").remove("f2").add("c12").commit(timestamp=3000)
+        w.write_checkpoint(2)
+        w.begin().add("f6").add("f7").commit(timestamp=4000)
+        w.begin().remove("f0").add("f0r").commit(timestamp=5000)
         with open(os.path.join(root, "_BUILT"), "w") as f:
             f.write("ok\n")
     return root, log_dir
-
-
-def read_txn_log_checkpointed(
-    spark: SparkSession, root: str, log_dir: str
-) -> DataFrame:
-    """The checkpoint read protocol (Delta's `_last_checkpoint`
-    mechanics): load the checkpoint pointer, read the checkpoint's
-    live-file list as the base state, replay ONLY commits with
-    version > checkpoint on top (same last-action-wins MAX-struct as
-    the full replay), and scan the resulting live files. Replay cost
-    is |checkpoint| + |commits since|, bounded no matter how long the
-    table's history grows — `test_txn_log_checkpoint_skips_old_commits`
-    proves pre-checkpoint commit files are never read by deleting
-    them. Exposed as a helper (root/log_dir parameterized) so tests
-    can drive mutated copies."""
-    import json
-
-    with open(os.path.join(log_dir, "_last_checkpoint")) as f:
-        pointer = json.loads(f.readline())
-    ckpt_version, parts = pointer["version"], pointer.get("parts")
-    tail = [
-        os.path.join(log_dir, name)
-        for name in os.listdir(log_dir)  # planning step: |log| names
-        if name.endswith(".json")
-        and ".checkpoint." not in name  # multi-part files end .json too
-        and int(name.split(".")[0]) > ckpt_version
-    ]
-    if parts is None:
-        ckpt_paths = [
-            os.path.join(log_dir, f"{ckpt_version:05d}.checkpoint.json")
-        ]
-    else:
-        # multi-part checkpoint (r15): the pointer names the part
-        # count; a missing part REFUSES rather than replaying a
-        # partial live set. The part files load as ONE distributed
-        # json read — at Delta scale this is the entire point of the
-        # layout (a million-file live set loads in parallel).
-        ckpt_paths = [
-            os.path.join(
-                log_dir,
-                f"{ckpt_version:05d}.checkpoint."
-                f"{i:04d}.{parts:04d}.json",
-            )
-            for i in range(parts)
-        ]
-        missing = [p for p in ckpt_paths if not os.path.exists(p)]
-        if missing:
-            raise ValueError(
-                f"checkpoint v{ckpt_version} is incomplete: "
-                f"{[os.path.basename(p) for p in missing]} missing"
-            )
-    log_schema = "version long, action string, file string, minReader long"
-    base = spark.read.schema(log_schema).json(ckpt_paths)
-    log = (
-        base.unionByName(spark.read.schema(log_schema).json(tail))
-        if tail  # a checkpoint at HEAD has no tail to replay
-        else base
-    )
-    # protocol gate (Delta's minReaderVersion): refuse a table whose
-    # newest protocol action demands a reader newer than this engine —
-    # mirrored from the writer-side replay (txn_writer._replay_actions)
-    from user_feed_cdc_spark.sources.txn_writer import (
-        SUPPORTED_READER_VERSION,
-    )
-
-    newest_proto = (
-        log.filter(F.col("action") == "protocol")
-        .orderBy(F.col("version").desc())
-        .select("minReader")
-        .first()
-    )  # NEWEST-wins, matching the writer-side gate and checkpoint carry
-    need = newest_proto[0] if newest_proto else None
-    if need is not None and need > SUPPORTED_READER_VERSION:
-        raise ValueError(
-            f"table requires reader version {need}; this engine "
-            f"supports {SUPPORTED_READER_VERSION}"
-        )
-    paths = [
-        os.path.join(root, name) for name in _replay_live_files(log)
-    ]
-    return spark.read.schema(TABLE_SCHEMAS["events"]).parquet(*paths)
 
 
 @_register("source_txn_log_checkpoint", _ROUNDTRIP_ORACLE)
@@ -1128,9 +998,11 @@ def source_txn_log_checkpoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     replay cost is |checkpoint entries| + |commits since checkpoint|
     regardless of total history length — exactly why Delta/Iceberg
     write checkpoints every N commits; only the file LIST reaches the
-    driver, and the snapshot scan parallelizes over live files."""
-    root, log_dir = _txn_log_ckpt_table(spark, sf_dir)
-    return _fidelity_agg(read_txn_log_checkpointed(spark, root, log_dir))
+    driver, and the snapshot scan parallelizes over live files.
+    `test_txn_log_checkpoint_skips_old_commits` proves pre-checkpoint
+    commit files are never read by deleting them."""
+    root, _log_dir = _txn_log_ckpt_table(spark, sf_dir)
+    return _fidelity_agg(read_snapshot(spark, root))
 
 
 # ---------------------------------------------------------------------------
@@ -1162,20 +1034,24 @@ def _txn_log_dv_table(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     cumulative snapshots, not deltas), and data files are never
     rewritten. Sidecars are parquet of the deleted event_ids (the
     repo's row-address analogue of a roaring bitmap of row indexes)."""
-    import json
+    from user_feed_cdc_spark.sources.txn_writer import TxnLogWriter
 
     src_path = os.path.join(sf_dir, "events.parquet")
     mtime = int(os.path.getmtime(src_path))
-    key = hashlib.md5(f"txndv:{sf_dir}:{mtime}".encode()).hexdigest()[:12]
+    key = hashlib.md5(f"txndv:{sf_dir}:{mtime}:v2".encode()).hexdigest()[:12]
     root = _scratch_path("txndv", sf_dir, key)
     log_dir = os.path.join(root, "_log")
     if not os.path.exists(os.path.join(root, "_BUILT")):
+        w = TxnLogWriter(root)
         ev = load_table(spark, sf_dir, "events")
         bucket = F.pmod(F.col("event_id"), F.lit(6))
+        txn = w.begin()
         for b in range(6):
             ev.filter(bucket == b).write.mode("overwrite").parquet(
                 os.path.join(root, f"f{b}")
             )
+            txn.add(f"f{b}")
+        txn.commit(timestamp=1000)  # v0
         mod10 = F.pmod(F.col("event_id"), F.lit(10))
         dvs = [
             ("dv_f1a", (bucket == 1) & (mod10 == 3)),
@@ -1186,19 +1062,10 @@ def _txn_log_dv_table(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
             ev.filter(pred).select("event_id").write.mode(
                 "overwrite"
             ).parquet(os.path.join(root, name))
-        os.makedirs(log_dir, exist_ok=True)
-        commits = [
-            [{"action": "add", "file": f"f{b}"} for b in range(6)],
-            [
-                {"action": "dv", "file": "f1", "dv": "dv_f1a"},
-                {"action": "dv", "file": "f3", "dv": "dv_f3a"},
-            ],
-            [{"action": "dv", "file": "f1", "dv": "dv_f1b"}],
-        ]
-        for v, actions in enumerate(commits):
-            with open(os.path.join(log_dir, f"{v:05d}.json"), "w") as f:
-                for a in actions:
-                    f.write(json.dumps({"version": v, **a}) + "\n")
+        w.begin().set_dv("f1", "dv_f1a").set_dv("f3", "dv_f3a").commit(
+            timestamp=2000
+        )  # v1
+        w.begin().set_dv("f1", "dv_f1b").commit(timestamp=3000)  # v2
         with open(os.path.join(root, "_BUILT"), "w") as f:
             f.write("ok\n")
     return root, log_dir
@@ -1226,26 +1093,15 @@ def source_txn_log_deletes(spark: SparkSession, sf_dir: str) -> DataFrame:
     rewritten (merge-on-read), which is the entire point of DVs at
     100 TB: a 1e5-row delete against a 1e11-row table costs a sidecar
     write, not a rewrite."""
-    root, log_dir = _txn_log_dv_table(spark, sf_dir)
-    log = spark.read.schema(
-        "version long, action string, file string, dv string"
-    ).json(os.path.join(log_dir, "*.json"))
-    winning_dv = (
-        log.filter(F.col("action") == "dv")
-        .groupBy("file")
-        .agg(F.max(F.struct(F.col("version"), F.col("dv"))).alias("st"))
-        .select("file", F.col("st.dv").alias("dv"))
-    )
-    live_files = _replay_live_files(log)
-    dv_map = {r.file: r.dv for r in winning_dv.collect()}  # planning step:
-    # |files| + |dv| rows to the driver, like the snapshot read
-    scan = (
-        spark.read.schema(TABLE_SCHEMAS["events"])
-        .parquet(*[os.path.join(root, name) for name in live_files])
-        .withColumn(
-            "_file",
-            F.regexp_extract(F.input_file_name(), "/([^/]+)/[^/]+$", 1),
-        )
+    from user_feed_cdc_spark.sources.txn_writer import TxnLogWriter
+
+    root, _log_dir = _txn_log_dv_table(spark, sf_dir)
+    w = TxnLogWriter(root)
+    v = w.latest_version()  # pin: the DVs and the scan share one version
+    dv_map = w._newest_dv(v)  # planning step: |dv| actions, driver-side
+    scan = read_snapshot(spark, root, as_of=v).withColumn(
+        "_file",
+        F.regexp_extract(F.input_file_name(), "/([^/]+)/[^/]+$", 1),
     )
     dv_schema = "event_id long"
     dv_rows = None
@@ -1282,25 +1138,25 @@ _TXN_SKIP_ORACLE = """
 
 
 def _txn_log_stats_table(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
-    """Build (once per (sf, source-mtime)) a table laid out for DATA
-    SKIPPING: events split into four CONTIGUOUS event_id ranges
+    """Build (once per (sf, source-mtime, rev)) a table laid out for
+    DATA SKIPPING: events split into four CONTIGUOUS event_id ranges
     (quarters of MAX(event_id) — range-clustered files, the layout
-    OPTIMIZE ZORDER / liquid clustering produces), with each add
-    action carrying the file's exact min/max event_id stats — the
-    per-file column statistics Delta's add.stats JSON and Iceberg's
-    manifest entries record at write time."""
-    import json
+    OPTIMIZE ZORDER / liquid clustering produces), committed in one
+    transaction whose add actions carry each file's exact min/max
+    event_id stats — the per-file column statistics Delta's add.stats
+    JSON and Iceberg's manifest entries record at write time."""
+    from user_feed_cdc_spark.sources.txn_writer import TxnLogWriter
 
     src_path = os.path.join(sf_dir, "events.parquet")
     mtime = int(os.path.getmtime(src_path))
-    key = hashlib.md5(f"txnskip:{sf_dir}:{mtime}".encode()).hexdigest()[:12]
+    key = hashlib.md5(f"txnskip:{sf_dir}:{mtime}:v2".encode()).hexdigest()[:12]
     root = _scratch_path("txnskip", sf_dir, key)
     log_dir = os.path.join(root, "_log")
     if not os.path.exists(os.path.join(root, "_BUILT")):
         ev = load_table(spark, sf_dir, "events")
         max_id = ev.agg(F.max("event_id")).first()[0]
         bounds = [0] + [max_id * (k + 1) // 4 for k in range(3)] + [max_id]
-        actions = []
+        txn = TxnLogWriter(root).begin()
         for k in range(4):
             lo, hi = bounds[k], bounds[k + 1]
             part = ev.filter(
@@ -1310,18 +1166,8 @@ def _txn_log_stats_table(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
             stats = part.agg(
                 F.min("event_id").alias("mn"), F.max("event_id").alias("mx")
             ).first()
-            actions.append(
-                {
-                    "action": "add",
-                    "file": f"r{k}",
-                    "min_id": int(stats.mn),
-                    "max_id": int(stats.mx),
-                }
-            )
-        os.makedirs(log_dir, exist_ok=True)
-        with open(os.path.join(log_dir, "00000.json"), "w") as f:
-            for a in actions:
-                f.write(json.dumps({"version": 0, **a}) + "\n")
+            txn.add(f"r{k}", min_id=int(stats.mn), max_id=int(stats.mx))
+        txn.commit(timestamp=1000)
         with open(os.path.join(root, "_BUILT"), "w") as f:
             f.write("ok\n")
     return root, log_dir
@@ -1349,23 +1195,17 @@ def source_txn_log_data_skipping(
     selective predicate over a range-clustered column turns a
     full-table scan into touching only the matching fraction —
     the reason OPTIMIZE ZORDER / liquid clustering exists."""
-    root, log_dir = _txn_log_stats_table(spark, sf_dir)
-    log = spark.read.schema(
-        "version long, action string, file string, min_id long, max_id long"
-    ).json(os.path.join(log_dir, "*.json"))
-    # predicate: event_id <= max/2 (computed from the stats themselves —
-    # the planning phase knows the table's max without scanning data)
-    hi = (
-        log.agg(F.max("max_id")).first()[0] // 2
-    )
-    survivors = sorted(
-        r.file
-        for r in log.filter(
-            (F.col("action") == "add") & (F.col("min_id") <= hi)
-        )
-        .select("file")
-        .collect()
-    )  # planning step: |files| rows, exactly the Delta stats-pruning pass
+    from user_feed_cdc_spark.sources.txn_writer import TxnLogWriter
+
+    root, _log_dir = _txn_log_stats_table(spark, sf_dir)
+    w = TxnLogWriter(root)
+    # planning step: |files| winning add actions, exactly the Delta
+    # stats-pruning pass; the predicate event_id <= max/2 comes from
+    # the stats themselves (the planning phase knows the table's max
+    # without scanning data)
+    adds = w._winning_adds(w.latest_version())
+    hi = max(a["max_id"] for a in adds.values()) // 2
+    survivors = sorted(f for f, a in adds.items() if a["min_id"] <= hi)
     scan = spark.read.schema(TABLE_SCHEMAS["events"]).parquet(
         *[os.path.join(root, name) for name in survivors]
     )
@@ -1394,28 +1234,18 @@ def source_txn_log_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     source_txn_log_snapshot reads at HEAD, yielding the v0 live set
     {f0, f1, f2} — buckets 0..2 of events, a strictly different
     answer than the head snapshot, so the hash gate proves the
-    version predicate actually bounded the replay (a reader that
-    ignores it reproduces HEAD and fails loudly). Same last-action-
-    wins MAX-struct mechanics; the version filter is a pushdown on
-    the log scan, not a post-replay subtraction — exactly how
-    Delta/Iceberg resolve `VERSION AS OF v` (replay commits 0..v,
-    or nearest checkpoint <= v plus tail).
+    version bound actually limited the replay (a reader that ignores
+    it reproduces HEAD and fails loudly). The bound is applied before
+    replay, not as a post-replay subtraction — exactly how
+    Delta/Iceberg resolve `VERSION AS OF v` (replay commits 0..v, or
+    nearest checkpoint <= v plus tail).
 
-    Scale posture: identical to the snapshot read — |log <= v| rows
+    Scale posture: identical to the snapshot read — |log <= v| lines
     replayed, file list to the driver, parallel scan of the v0
     files; historical versions cost no data movement beyond their
     own live files."""
-    root, log_dir = _txn_log_table(spark, sf_dir)
-    log = (
-        spark.read.schema("version long, action string, file string")
-        .json(os.path.join(log_dir, "*.json"))
-        .filter(F.col("version") <= 0)  # VERSION AS OF 0
-    )
-    paths = [
-        os.path.join(root, name) for name in _replay_live_files(log)
-    ]
-    snapshot = spark.read.schema(TABLE_SCHEMAS["events"]).parquet(*paths)
-    return _fidelity_agg(snapshot)
+    root, _log_dir = _txn_log_table(spark, sf_dir)
+    return _fidelity_agg(read_snapshot(spark, root, as_of=0))
 
 
 # ---------------------------------------------------------------------------
@@ -1479,12 +1309,16 @@ def _txn_log_bloom_table(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     so every file's [min,max] contains every probe — but each id
     LIVES in exactly one file, which the per-file bloom knows. m is
     sized ~8 bits/key (next power of two), k=4 → false-positive rate
-    ≈ (1−e^{−k/8})⁴ < 2·10⁻⁴, effectively zero extra files scanned."""
-    import json
+    ≈ (1−e^{−k/8})⁴ < 2·10⁻⁴, effectively zero extra files scanned.
+    One commit adds the four files, each add carrying its sidecar
+    name and m."""
+    from user_feed_cdc_spark.sources.txn_writer import TxnLogWriter
 
     src_path = os.path.join(sf_dir, "events.parquet")
     mtime = int(os.path.getmtime(src_path))
-    key = hashlib.md5(f"txnbloom:{sf_dir}:{mtime}".encode()).hexdigest()[:12]
+    key = hashlib.md5(
+        f"txnbloom:{sf_dir}:{mtime}:v2".encode()
+    ).hexdigest()[:12]
     root = _scratch_path("txnbloom", sf_dir, key)
     log_dir = os.path.join(root, "_log")
     if not os.path.exists(os.path.join(root, "_BUILT")):
@@ -1495,7 +1329,7 @@ def _txn_log_bloom_table(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
         bounds = [0] + [max_user * (k + 1) // 4 for k in range(3)] + [
             max_user
         ]
-        actions = []
+        txn = TxnLogWriter(root).begin()
         for k in range(4):
             lo, hi = bounds[k], bounds[k + 1]
             part = ev.filter(
@@ -1524,18 +1358,8 @@ def _txn_log_bloom_table(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
             bits.write.mode("overwrite").parquet(
                 os.path.join(root, f"bloom_u{k}")
             )
-            actions.append(
-                {
-                    "action": "add",
-                    "file": f"u{k}",
-                    "bloom": f"bloom_u{k}",
-                    "m": m,
-                }
-            )
-        os.makedirs(log_dir, exist_ok=True)
-        with open(os.path.join(log_dir, "00000.json"), "w") as f:
-            for a in actions:
-                f.write(json.dumps({"version": 0, **a}) + "\n")
+            txn.add(f"u{k}", bloom=f"bloom_u{k}", m=m)
+        txn.commit(timestamp=1000)
         with open(os.path.join(root, "_BUILT"), "w") as f:
             f.write("ok\n")
     return root, log_dir
@@ -1563,26 +1387,23 @@ def source_txn_log_bloom_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     the difference between a seek and a table scan; sidecars merge
     per file like any bloom (bit-OR), so compaction rebuilds them
     from the members only."""
-    root, log_dir = _txn_log_bloom_table(spark, sf_dir)
+    from user_feed_cdc_spark.sources.txn_writer import TxnLogWriter
+
+    root, _log_dir = _txn_log_bloom_table(spark, sf_dir)
     probe = (
         load_table(spark, sf_dir, "events").agg(F.max("event_id")).first()[0]
     )
-    log = spark.read.schema(
-        "version long, action string, file string, bloom string, m long"
-    ).json(os.path.join(log_dir, "*.json"))
-    files = [
-        (r.file, r.bloom, r.m)
-        for r in log.filter(F.col("action") == "add").collect()
-    ]  # planning step: |files| rows
+    w = TxnLogWriter(root)
+    adds = w._winning_adds(w.latest_version())  # planning step: |files|
     by_bloom = _read_bloom_sidecars(
-        spark, root, [bloomname for _, bloomname, _ in files]
+        spark, root, [a["bloom"] for a in adds.values()]
     )
     survivors = []
-    for fname, bloomname, m in sorted(files):
-        words = by_bloom.get(bloomname, {})
+    for fname, a in sorted(adds.items()):
+        words = by_bloom.get(a["bloom"], {})
         hit = all(
             (words.get(pos // 64, 0) >> (pos % 64)) & 1
-            for pos in _fbloom_positions(probe, m)
+            for pos in _fbloom_positions(probe, a["m"])
         )
         if hit:
             survivors.append(fname)
@@ -1656,11 +1477,12 @@ def source_txn_log_writer_roundtrip(
     enforcement at write time), including TWO checkpoints the
     committer wrote itself (v3, v7 at checkpoint_interval=4) and an
     engine-side OPTIMIZE (b0+b1 → c01, a remove/remove/add
-    transaction) landing AFTER the newest checkpoint. The certified
-    checkpoint READER (source_txn_log_checkpoint) then reconstructs
-    the snapshot — base state from the engine-written checkpoint plus
-    a two-commit tail containing the rewrite — and the fidelity agg
-    hashes it against the original events table. A committer that
+    transaction) landing AFTER the newest checkpoint. The shared
+    snapshot read (read_snapshot, certified by
+    source_txn_log_checkpoint) then reconstructs the snapshot — base
+    state from the engine-written checkpoint plus a two-commit tail
+    containing the rewrite — and the fidelity agg hashes it against
+    the original events table. A committer that
     mis-numbers versions, drops actions, checkpoints the wrong live
     set, or breaks the one-action-per-file invariant moves the hash
     or trips the replay assertion.
@@ -1672,8 +1494,8 @@ def source_txn_log_writer_roundtrip(
     replay cost exactly as on the read side. Concurrency semantics
     (allocation races retry, concurrent remove-remove conflicts
     raise) are pinned by tests/test_operators.py."""
-    root, log_dir = _txn_writer_table(spark, sf_dir)
-    return _fidelity_agg(read_txn_log_checkpointed(spark, root, log_dir))
+    root, _log_dir = _txn_writer_table(spark, sf_dir)
+    return _fidelity_agg(read_snapshot(spark, root))
 
 
 def _events_multifile_stream_dir(spark: SparkSession, sf_dir: str) -> str:
@@ -1717,9 +1539,9 @@ def streaming_txn_sink_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     already covers the batch (idempotent replay), else write the
     batch's parquet data file THEN commit [add, txn] atomically —
     with checkpoint_interval=2 making the sink write checkpoints at
-    v1 and v3 mid-stream. After the drain, the certified checkpoint
-    reader reconstructs the table from the sink's own log and the
-    fidelity agg hashes it against the source events. A sink that
+    v1 and v3 mid-stream. After the drain, the shared snapshot read
+    (read_snapshot) reconstructs the table from the sink's own log and
+    the fidelity agg hashes it against the source events. A sink that
     duplicates a replayed batch, commits before the data lands, or
     checkpoints a stale live set moves the hash. Fresh sink root per
     invocation (uuid key; the scratch pruner clears the previous
@@ -1756,9 +1578,7 @@ def streaming_txn_sink_live(spark: SparkSession, sf_dir: str) -> DataFrame:
         .start()
     )
     q.awaitTermination()
-    return _fidelity_agg(
-        read_txn_log_checkpointed(spark, root, writer.log_dir)
-    )
+    return _fidelity_agg(read_snapshot(spark, root))
 
 
 _TXN_DELETE_ORACLE = """
@@ -1870,15 +1690,8 @@ def source_txn_log_delete_rewrite(
     Copy-on-write vs the DV path is the standard read-amplification /
     write-amplification trade: rewrite once and reads stay pure
     scans, or sidecar the deletes and pay an anti-join per read."""
-    root, log_dir = _txn_delete_table(spark, sf_dir)
-    log = spark.read.schema(
-        "version long, action string, file string"
-    ).json(os.path.join(log_dir, "*.json"))
-    paths = [
-        os.path.join(root, name) for name in _replay_live_files(log)
-    ]
-    snapshot = spark.read.schema(TABLE_SCHEMAS["events"]).parquet(*paths)
-    return _fidelity_agg(snapshot)
+    root, _log_dir = _txn_delete_table(spark, sf_dir)
+    return _fidelity_agg(read_snapshot(spark, root))
 
 
 _TXN_OPTIMIZE_ORACLE = """
@@ -1983,18 +1796,13 @@ def source_txn_log_optimize_cluster(
     shuffle (a range-partitioned sort), its commit is one JSON file,
     and readers racing it see the old or new layout atomically, never
     a mix (last-action-wins replay)."""
-    root, log_dir = _txn_optimize_table(spark, sf_dir)
-    log = spark.read.schema(
-        "version long, action string, file string, min_id long, max_id long"
-    ).json(os.path.join(log_dir, "*.json"))
-    live = set(_replay_live_files(log))
-    stats = {
-        r.file: (r.min_id, r.max_id)
-        for r in log.filter(F.col("action") == "add").collect()
-        if r.file in live
-    }  # planning step: |files| rows
-    hi = max(mx for _mn, mx in stats.values()) // 4
-    survivors = sorted(f for f, (mn, _mx) in stats.items() if mn <= hi)
+    from user_feed_cdc_spark.sources.txn_writer import TxnLogWriter
+
+    root, _log_dir = _txn_optimize_table(spark, sf_dir)
+    w = TxnLogWriter(root)
+    adds = w._winning_adds(w.latest_version())  # planning step: |files|
+    hi = max(a["max_id"] for a in adds.values()) // 4
+    survivors = sorted(f for f, a in adds.items() if a["min_id"] <= hi)
     scan = spark.read.schema(TABLE_SCHEMAS["events"]).parquet(
         *[os.path.join(root, name) for name in survivors]
     )
@@ -2118,10 +1926,7 @@ def source_txn_log_optimize_dv(
         raise ValueError(
             f"unexpected post-OPTIMIZE live set: {sorted(live)}"
         )
-    scan = spark.read.schema(TABLE_SCHEMAS["events"]).parquet(
-        *[os.path.join(root, name) for name in live]
-    )
-    return _fidelity_agg(scan)
+    return _fidelity_agg(read_snapshot(spark, root))
 
 
 def _txn_compact_table(spark: SparkSession, sf_dir: str) -> str:
@@ -2250,10 +2055,7 @@ def source_txn_log_compact_small_files(
             f"{n_removes} removed fragments — a single-file bin was "
             "pointlessly rewritten"
         )
-    scan = spark.read.schema(TABLE_SCHEMAS["events"]).parquet(
-        *[os.path.join(root, name) for name in live]
-    )
-    return _fidelity_agg(scan)
+    return _fidelity_agg(read_snapshot(spark, root))
 
 
 _TXN_SCHEMA_EVO_ORACLE = """
@@ -2338,22 +2140,8 @@ def source_txn_log_schema_evolution(
     Scale posture: schema changes are one JSON line; no data file is
     ever touched by an ADD COLUMN, and every later scan still prunes
     and pushes down on the explicit schema exactly as before."""
-    import json as _json
-
-    root, log_dir = _txn_schema_evo_table(spark, sf_dir)
-    log = spark.read.schema(
-        "version long, action string, file string, schema string"
-    ).json(os.path.join(log_dir, "*.json"))
-    newest_schema = (
-        log.filter(F.col("action") == "metaData")
-        .orderBy(F.col("version").desc())
-        .select("schema")
-        .first()[0]
-    )  # planning step: one row
-    paths = [
-        os.path.join(root, name) for name in _replay_live_files(log)
-    ]
-    snapshot = spark.read.schema(newest_schema).parquet(*paths)
+    root, _log_dir = _txn_schema_evo_table(spark, sf_dir)
+    snapshot = read_snapshot(spark, root)  # newest metaData schema
     return snapshot.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n"),
         F.sum(
@@ -3119,27 +2907,20 @@ def _txn_zorder_table(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     return root, log_dir
 
 
-def _zorder_prune(
-    spark: SparkSession, root: str, log_dir: str, dim: str, lo: int, hi: int
-) -> list[str]:
+def _zorder_prune(root: str, dim: str, lo: int, hi: int) -> list[str]:
     """Stats-prune the live files of the ZORDER table on one dimension
     (`user` or `hour`): survivors are files whose [min,max] interval
     on that dimension intersects [lo, hi] — the Delta data-skipping
     pass, now effective on BOTH dimensions because the layout is
-    Morton-clustered. Planning scale: |files| log rows."""
-    log = spark.read.schema(
-        "version long, action string, file string, "
-        "user_min long, user_max long, hour_min long, hour_max long"
-    ).json(os.path.join(log_dir, "*.json"))
-    live = set(_replay_live_files(log))
+    Morton-clustered. Planning scale: |files| winning add actions."""
+    from user_feed_cdc_spark.sources.txn_writer import TxnLogWriter
+
+    w = TxnLogWriter(root)
     mn, mx = f"{dim}_min", f"{dim}_max"
-    stats = {
-        r.file: (r[mn], r[mx])
-        for r in log.filter(F.col("action") == "add").collect()
-        if r.file in live
-    }
     return sorted(
-        f for f, (fmn, fmx) in stats.items() if fmn <= hi and fmx >= lo
+        f
+        for f, a in w._winning_adds(w.latest_version()).items()
+        if a[mn] <= hi and a[mx] >= lo
     )
 
 
@@ -3170,8 +2951,8 @@ def source_txn_log_optimize_zorder(
     (selectivity^(1/d)); the interleave math is already certified
     row-level by pipeline_zorder_stats, and readers racing the
     rewrite see old or new atomically (last-action-wins replay)."""
-    root, log_dir = _txn_zorder_table(spark, sf_dir)
-    survivors = _zorder_prune(spark, root, log_dir, "hour", 0, 5)
+    root, _log_dir = _txn_zorder_table(spark, sf_dir)
+    survivors = _zorder_prune(root, "hour", 0, 5)
     scan = spark.read.schema(TABLE_SCHEMAS["events"]).parquet(
         *[os.path.join(root, name) for name in survivors]
     )
@@ -3568,17 +3349,10 @@ def source_txn_log_timestamp_travel(
     driver, parallel scan of the historical live set)."""
     from user_feed_cdc_spark.sources.txn_writer import TxnLogWriter
 
-    root, log_dir = _txn_ts_table(spark, sf_dir)
+    root, _log_dir = _txn_ts_table(spark, sf_dir)
     v = TxnLogWriter(root).version_at_timestamp(2500)  # planning: one
     # readline per commit file, then the standard bounded replay
-    log = (
-        spark.read.schema("version long, action string, file string")
-        .json(os.path.join(log_dir, "*.json"))
-        .filter(F.col("version") <= v)
-    )
-    paths = [os.path.join(root, name) for name in _replay_live_files(log)]
-    snapshot = spark.read.schema(TABLE_SCHEMAS["events"]).parquet(*paths)
-    return _fidelity_agg(snapshot)
+    return _fidelity_agg(read_snapshot(spark, root, as_of=v))
 
 
 # ---------------------------------------------------------------------------
@@ -3930,13 +3704,8 @@ def source_txn_log_restore(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: restore is pure control plane — it replays two file LISTS
     (catalog scale) and writes one JSON commit; zero data moves, which
     is why lakehouse restores are instant at 100 TB."""
-    root, log_dir = _txn_restore_table(spark, sf_dir)
-    log = spark.read.schema(
-        "version long, action string, file string"
-    ).json(os.path.join(log_dir, "*.json"))
-    paths = [os.path.join(root, n) for n in _replay_live_files(log)]
-    snapshot = spark.read.schema(TABLE_SCHEMAS["events"]).parquet(*paths)
-    return _fidelity_agg(snapshot)
+    root, _log_dir = _txn_restore_table(spark, sf_dir)
+    return _fidelity_agg(read_snapshot(spark, root))
 
 
 def _txn_clone_tables(
@@ -4050,15 +3819,9 @@ def source_txn_log_shallow_clone(
     Scale: cloning a 100 TB table costs one catalog-scale commit;
     divergent writes pay only for what they change — the entire point
     of zero-copy clones for experimentation on production tables."""
-    _src_root, clone_root, log_dir = _txn_clone_tables(spark, sf_dir)
-    from user_feed_cdc_spark.sources.txn_writer import TxnLogWriter
-
-    clone = TxnLogWriter(clone_root)
-    paths = [
-        os.path.join(clone_root, n) for n in clone.live_files()
-    ]  # identity on the absolute source names
-    snapshot = spark.read.schema(TABLE_SCHEMAS["events"]).parquet(*paths)
-    return _fidelity_agg(snapshot)
+    _src_root, clone_root, _log_dir = _txn_clone_tables(spark, sf_dir)
+    # os.path.join is the identity on the absolute source names
+    return _fidelity_agg(read_snapshot(spark, clone_root))
 
 
 def _txn_constraints_table(
@@ -4157,13 +3920,8 @@ def source_txn_log_check_constraints(
     Scale: enforcement costs one map-side-combinable aggregate over
     the batch being written (executors), |constraints| counters to the
     driver, zero extra shuffles; the declaration is one JSON line."""
-    root, log_dir = _txn_constraints_table(spark, sf_dir)
-    log = spark.read.schema(
-        "version long, action string, file string"
-    ).json(os.path.join(log_dir, "*.json"))
-    paths = [os.path.join(root, n) for n in _replay_live_files(log)]
-    snapshot = spark.read.schema(TABLE_SCHEMAS["events"]).parquet(*paths)
-    return _fidelity_agg(snapshot)
+    root, _log_dir = _txn_constraints_table(spark, sf_dir)
+    return _fidelity_agg(read_snapshot(spark, root))
 
 
 # ---------------------------------------------------------------------------
@@ -4261,9 +4019,7 @@ def _txn_colmap_table(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     return root, log_dir
 
 
-def read_txn_log_mapped(
-    spark: SparkSession, root: str, log_dir: str
-) -> DataFrame:
+def read_txn_log_mapped(spark: SparkSession, root: str) -> DataFrame:
     """Column-mapping read protocol (Delta's column mapping, name
     mode, in miniature): replay for the live files AND the newest
     metaData, read each file by its PHYSICAL parquet column names,
@@ -4275,11 +4031,9 @@ def read_txn_log_mapped(
 
     from user_feed_cdc_spark.sources.txn_writer import TxnLogWriter
 
-    w = TxnLogWriter(root)
-    meta = _json.loads(w._newest_schema())
+    meta = _json.loads(TxnLogWriter(root)._newest_schema())
     mapping = meta.get("columnMapping", {})
-    paths = [os.path.join(root, n) for n in w.live_files()]
-    snap = spark.read.schema(TABLE_SCHEMAS["events"]).parquet(*paths)
+    snap = read_snapshot(spark, root)  # PHYSICAL (events) column names
     return snap.select(
         *[
             F.col(mapping.get(logical, logical)).alias(logical)
@@ -4308,8 +4062,8 @@ def source_txn_log_column_mapping(
     Scale: renames on a 100 TB table are instant — catalog-scale
     metadata, no rewrite; the projection is a zero-cost alias inside
     whole-stage codegen."""
-    root, log_dir = _txn_colmap_table(spark, sf_dir)
-    snap = read_txn_log_mapped(spark, root, log_dir)
+    root, _log_dir = _txn_colmap_table(spark, sf_dir)
+    snap = read_txn_log_mapped(spark, root)
     return snap.groupBy("etype").agg(
         F.count(F.lit(1)).alias("n"),
         F.sum(
@@ -4459,14 +4213,9 @@ def source_txn_log_cdf_ivm(spark: SparkSession, sf_dir: str) -> DataFrame:
     version, anti-joins over just the touched files), the whole point
     of maintaining a 100 TB table's views from its feed instead of
     rescanning it."""
-    from user_feed_cdc_spark.sources.txn_writer import TxnLogWriter
-
     root, log_dir = _txn_cdf_table(spark, sf_dir)
-    w = TxnLogWriter(root)
     cents = F.floor(F.col("value") * 100.0 + F.lit(0.5)).cast("long")
-    base = spark.read.schema(TABLE_SCHEMAS["events"]).parquet(
-        *[os.path.join(root, f) for f in w.live_files(as_of=1)]
-    )
+    base = read_snapshot(spark, root, as_of=1)
     mv1 = base.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n0"), F.sum(cents).alias("c0")
     )
@@ -5196,9 +4945,7 @@ def source_txn_log_generated_columns(
         )
         with open(os.path.join(root, "_BUILT"), "w") as f:
             f.write("ok\n")
-    snap = spark.read.schema(
-        "event_id long, ts timestamp, value double, cents long, hr long"
-    ).parquet(*[os.path.join(root, f) for f in w.live_files()])
+    snap = read_snapshot(spark, root)  # the metaData's declared schema
     return snap.groupBy("hr").agg(
         F.count(F.lit(1)).alias("n"),
         F.sum("cents").alias("cents_sum"),
@@ -6101,8 +5848,9 @@ def source_txn_log_multipart_checkpoint(
     (r15): the live-set materialization round-robins across N part
     files and `_last_checkpoint` records {"version", "parts"}, the
     form that keeps any single checkpoint file bounded as the live
-    set grows to millions of entries AND lets the reader load parts
-    as one distributed json read instead of a single-file bottleneck.
+    set grows to millions of entries AND lets a distributed reader
+    load parts in parallel instead of through a single-file
+    bottleneck.
     This table's history is fully vacuumed, so the three parts are
     the ONLY source of state — a reader that loads a strict subset of
     parts loses live files (and an in-flight delete carried by a
@@ -6127,7 +5875,7 @@ def source_txn_log_multipart_checkpoint(
         n.endswith(".checkpoint.json") for n in os.listdir(log_dir)
     ):
         raise ValueError("single-file checkpoint present alongside parts")
-    return _fidelity_agg(read_txn_log_checkpointed(spark, root, log_dir))
+    return _fidelity_agg(read_snapshot(spark, root))
 
 
 _HIDDEN_PART_ORACLE = """
@@ -6530,9 +6278,7 @@ def _identity_table(spark: SparkSession, sf_dir: str) -> DataFrame:
         append_with_identity(w, ev.filter(bucket == 2), "p2")  # v4
         with open(os.path.join(root, "_BUILT"), "w") as f:
             f.write("ok\n")
-    return spark.read.schema(
-        "event_id long, event_type string, value double, sid long"
-    ).parquet(*[os.path.join(root, f) for f in w.live_files()])
+    return read_snapshot(spark, root)  # the metaData's declared schema
 
 
 _IDENTITY_ORACLE = """

@@ -138,17 +138,25 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.schema(TABLE_SCHEMAS[name]).parquet(path)
 
 
-def _size_bytes(v: str | None, default: int) -> int:
-    """Parse a Spark size conf string ('134217728', '128m', '4MB')."""
+def _size_bytes(v: str | None, default: int) -> int | None:
+    """Parse a Spark size conf string ('134217728', '128m', '4MB',
+    '1t', '2pb'): `default` when unset, None when malformed — the
+    caller then falls back rather than failing the query."""
     if v is None:
         return default
     s = str(v).strip().lower()
     units = {"b": 1, "k": 1 << 10, "kb": 1 << 10, "m": 1 << 20,
-             "mb": 1 << 20, "g": 1 << 30, "gb": 1 << 30}
+             "mb": 1 << 20, "g": 1 << 30, "gb": 1 << 30, "t": 1 << 40,
+             "tb": 1 << 40, "p": 1 << 50, "pb": 1 << 50}
+    num, scale = s, 1
     for suf in sorted(units, key=len, reverse=True):
         if s.endswith(suf):
-            return int(float(s[: -len(suf)])) * units[suf]
-    return int(s)
+            num, scale = s[: -len(suf)], units[suf]
+            break
+    try:
+        return int(float(num)) * scale
+    except (ValueError, OverflowError):
+        return None
 
 
 def _scan_partition_estimate(df: DataFrame) -> int | None:
@@ -198,6 +206,8 @@ def _scan_partition_estimate(df: DataFrame) -> int | None:
     open_cost = _size_bytes(
         conf.get("spark.sql.files.openCostInBytes", None), 4 << 20
     )
+    if max_pb is None or open_cost is None:
+        return None
     min_pn = conf.get("spark.sql.files.minPartitionNum", None)
     parallelism = (
         int(min_pn)

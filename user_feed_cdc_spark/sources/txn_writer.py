@@ -1,10 +1,11 @@
 """Engine-side lakehouse WRITE protocol — the committer half of the
 mini table format whose READ side (snapshot replay, checkpoints,
 deletion vectors, data skipping, time travel, bloom index) is
-certified in sources/formats.py. Until now every transaction log was
-fixture-built; this module lets the ENGINE produce logs: optimistic-
-concurrency version allocation, logical conflict checks, checkpoint
-writing, and an idempotent streaming foreachBatch sink — the write
+certified in sources/formats.py. Every transaction log — the certified
+fixtures included — is produced here: optimistic-concurrency version
+allocation, logical conflict checks, checkpoint writing, and an
+idempotent streaming foreachBatch sink — and the replay below
+(_replay_actions + _last_wins) is the one every reader runs. The write
 path a user of the reference's feed table (event_processor.py:89-113
 appends each activity batch to serving storage) hits first.
 
@@ -23,7 +24,7 @@ Protocol (a faithful miniature of Delta's OptimisticTransaction):
   OPTIMIZE of the same file group, the classic case).
 * Every commit holds the ONE-ACTION-PER-FILE-PER-COMMIT invariant at
   write time (the replay side independently asserts it — see
-  formats._replay_live_files).
+  _last_wins, the one replay every reader and writer runs).
 * With `checkpoint_interval=N`, every Nth commit also writes
   `{v:05d}.checkpoint.json` (the live file list as of v, plus the
   newest txn action per streaming app — Delta checkpoints carry
@@ -73,10 +74,18 @@ class ConstraintViolation(Exception):
     staged — the table never holds a violating row)."""
 
 
-def _last_wins(actions: list[dict]) -> list[str]:
-    """Driver-side twin of formats._replay_live_files over already-
-    loaded action dicts: last-action-wins per file, remove outranking
-    add only across versions; asserts one-action-per-file-per-commit."""
+def _last_actions(actions: list[dict]) -> dict[str, tuple[int, int]]:
+    """THE last-action-wins replay over already-loaded action dicts:
+    file -> (version, 1 if its winning action is a remove else 0).
+    Every txn-log reader (formats.py's snapshot reads included) and
+    every writer-side state derivation resolves files here — live
+    sets through _last_wins, vacuum's removed-at-or-below-checkpoint
+    sweep directly. Across commits the later version wins (a re-add
+    generalizes); a remove ranks above an add only across versions.
+    The ONE-ACTION-PER-FILE-PER-COMMIT invariant the committer holds
+    is ASSERTED, not assumed: a log carrying add+remove of one file in
+    one commit has no defined replay order, so it refuses loudly
+    instead of resolving by a tiebreak."""
     seen: set[tuple[str, int]] = set()
     last: dict[str, tuple[int, int]] = {}
     for a in actions:
@@ -92,7 +101,15 @@ def _last_wins(actions: list[dict]) -> list[str]:
         st = (a["version"], 1 if a["action"] == "remove" else 0)
         if a["file"] not in last or st > last[a["file"]]:
             last[a["file"]] = st
-    return sorted(f for f, (_v, r) in last.items() if r == 0)
+    return last
+
+
+def _last_wins(actions: list[dict]) -> list[str]:
+    """Sorted live file names: the files whose winning action (see
+    _last_actions) is an add."""
+    return sorted(
+        f for f, (_v, r) in _last_actions(actions).items() if r == 0
+    )
 
 
 def _winning_adds_of(
@@ -382,12 +399,7 @@ class TxnLogWriter:
         # was vacuumed. Refusing beats silently ignoring a feature the
         # snapshot depends on; time travel to below an upgrade still
         # works because only the replayed actions are consulted.
-        newest = None
-        for a in acts:
-            if a.get("action") == "protocol" and (
-                newest is None or a["version"] >= newest["version"]
-            ):
-                newest = a
+        newest = _newest_action(acts, "protocol")
         need = newest["minReader"] if newest else 1
         if need > SUPPORTED_READER_VERSION:
             raise ValueError(
@@ -774,13 +786,7 @@ class TxnLogWriter:
         # ONE scan, reused below for the referenced set (r15 review:
         # re-reading the whole log per consumer tripled vacuum's I/O)
         raw_acts = self._actions_between(0, self.latest_version())
-        last: dict[str, tuple[int, int]] = {}
-        for a in raw_acts:
-            if a.get("action") not in ("add", "remove"):
-                continue
-            st = (a["version"], 1 if a["action"] == "remove" else 0)
-            if a["file"] not in last or st > last[a["file"]]:
-                last[a["file"]] = st
+        last = _last_actions(raw_acts)
         cutoff = None
         if retain_ms is not None:
             now = int(time.time() * 1000) if now_ms is None else now_ms
@@ -927,15 +933,10 @@ class TxnLogWriter:
         partial set; readers REFUSE a pointer whose parts are missing
         rather than replaying half a live set."""
         acts = self._replay_actions(version)
-        winning_add: dict[str, dict] = {}
-        for a in acts:
-            if a.get("action") == "add" and (
-                a["file"] not in winning_add
-                or a["version"] >= winning_add[a["file"]]["version"]
-            ):
-                winning_add[a["file"]] = a
+        live = _last_wins(acts)
+        winning_add = _winning_adds_of(acts, set(live))
         lines = []
-        for f in _last_wins(acts):
+        for f in live:
             payload = {
                 k: v
                 for k, v in winning_add[f].items()
@@ -944,18 +945,9 @@ class TxnLogWriter:
             lines.append(
                 {"version": version, "action": "add", "file": f, **payload}
             )
-        newest_dv: dict[str, dict] = {}
-        for a in acts:
-            if a.get("action") == "dv" and (
-                a["file"] not in newest_dv
-                or a["version"] >= newest_dv[a["file"]]["version"]
-            ):
-                newest_dv[a["file"]] = a
-        live_set = set(_last_wins(acts))
         lines.extend(
-            {**a, "version": version}
-            for f, a in sorted(newest_dv.items())
-            if f in live_set
+            {"version": version, "action": "dv", "file": f, "dv": dv}
+            for f, dv in sorted(_newest_dv_of(acts, set(live)).items())
         )
         # carry the newest commitInfo forward (ORIGINAL version + ts,
         # not re-stamped): after vacuum it is the resolver's floor —
