@@ -641,6 +641,99 @@ def test_feed_meta_records_and_validates_bucket_count(spark, tmp_path):
     assert read_feed_meta(spark, compacted) == 32
 
 
+def _compacted_feed(spark, tmp_path) -> str:
+    """The fixture events through the CDC pipeline, then compact_feed
+    into the serving layout; returns the compacted table's path."""
+    from user_feed_cdc_spark.streaming.cdc_pipeline import compact_feed
+
+    src = tmp_path / "cdc_in"
+    feed = str(tmp_path / "feed")
+    src.mkdir()
+    (src / "b.jsonl").write_text("\n".join(fixture_lines()) + "\n")
+    run_cdc_pipeline(spark, str(src), feed, str(tmp_path / "ck")).awaitTermination()
+    compacted = str(tmp_path / "feed_c")
+    compact_feed(spark, feed, compacted)
+    return compacted
+
+
+def _group_jobs(spark, group: str, fn):
+    """(fn's result, the Spark job ids fn started under `group`)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, "feed page job-count pin")
+    try:
+        out = fn()
+    finally:
+        sc.setJobGroup("", "")
+    return out, list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_compacted_feed_page_is_one_spark_job(spark, tmp_path):
+    """A storage page over a compacted table reads its schema from the
+    sidecar, so building it starts NO Spark job (no parquet inference),
+    and the native top-k with offset collects in exactly one."""
+    compacted = _compacted_feed(spark, tmp_path)
+    read_user_feed(spark, compacted, "2", limit=2, offset=2).collect()  # warm
+    for offset in (0, 2):
+        df, build = _group_jobs(
+            spark, f"feed-build-{offset}",
+            lambda: read_user_feed(spark, compacted, "2", limit=2, offset=offset),
+        )
+        assert build == [], (offset, build)
+        rows, run = _group_jobs(spark, f"feed-collect-{offset}", df.collect)
+        assert len(run) == 1, (offset, run)
+        assert len(rows) == 2
+
+
+def test_compact_feed_records_read_schema(spark, tmp_path):
+    """compact_feed records the schema Spark infers from the table it
+    wrote (as StructType.json()); read_feed_meta still returns the
+    bucket count alone."""
+    from user_feed_cdc_spark.streaming.cdc_pipeline import read_feed_meta
+
+    compacted = _compacted_feed(spark, tmp_path)
+    meta = json.loads((tmp_path / "feed_c" / "_feed_meta.json").read_text())
+    assert meta["schema"] == json.loads(spark.read.parquet(compacted).schema.json())
+    assert read_feed_meta(spark, compacted) == 32
+
+
+def test_compacted_feed_pages_match_inferred_read(spark, tmp_path):
+    """Storage and cached pages read with the recorded schema return the
+    same rows, in the same order and column order, as a read that infers
+    the schema — first page, a later page, and past the end."""
+    from user_feed_cdc_spark.streaming.cdc_pipeline import FeedCache, _page_from_frame
+
+    compacted = _compacted_feed(spark, tmp_path)
+    assert read_user_feed(spark, compacted, "2", limit=10).count() == 4
+    inferred = spark.read.parquet(compacted)
+    cache = FeedCache(spark, compacted)
+    try:
+        for user in ("2", "4"):
+            for offset in (0, 2, 10):  # 10 is past the end for every user
+                want = _page_from_frame(inferred, user, 2, offset, 32)
+                for got in (
+                    read_user_feed(spark, compacted, user, limit=2, offset=offset),
+                    cache.page(user, 2, offset),
+                ):
+                    assert got.columns == want.columns
+                    assert got.collect() == want.collect(), (user, offset)
+    finally:
+        cache.invalidate()
+
+
+def test_bucket_only_feed_meta_reads_by_inference(spark, tmp_path):
+    """A sidecar written before the schema was recorded holds only the
+    bucket count; such a table still reads, with the schema inferred."""
+    from user_feed_cdc_spark.streaming.cdc_pipeline import read_feed_meta, write_feed_meta
+
+    compacted = _compacted_feed(spark, tmp_path)
+    write_feed_meta(spark, compacted, 32)  # through Hadoop FS: keeps the .crc in step
+    meta = json.loads((tmp_path / "feed_c" / "_feed_meta.json").read_text())
+    assert meta == {"n_user_buckets": 32}
+    assert read_feed_meta(spark, compacted) == 32
+    page = read_user_feed(spark, compacted, "2", limit=2, offset=2).collect()
+    assert [r.metadata["primary_key_value"] for r in page] == ["10", "7"]
+
+
 def test_parse_tolerates_schema_drift(spark):
     """Forward/backward compatibility of the merged-schema parse: an
     upstream producer adding unknown fields must not break or corrupt

@@ -302,52 +302,32 @@ def test_scd2_history_single_window(spark, sf_dir):
     assert head.count("Exchange hashpartitioning") == 1
 
 
-def _assert_window_input_limited(plan: str) -> None:
-    """The two OFFSET-pagination paths use an unpartitioned window BY
-    CONTRACT over an input already bounded to <= offset+limit rows. This
-    gate pins that contract in the physical plan: every single-partition
-    Window node must have a limit operator (TakeOrderedAndProject /
-    GlobalLimit) BELOW it in the tree — so a future edit can't silently
-    unbound the window into a full-data single-partition sort."""
-    def indent(ln: str) -> int:
-        return len(ln) - len(ln.lstrip(" :+-*"))
-
-    lines = plan.split("== Initial Plan ==")[0].splitlines()
-    win_rows = [
-        i
-        for i, ln in enumerate(lines)
-        if "Window [" in ln and "WindowGroupLimit" not in ln
-    ]
-    assert win_rows, "expected a Window node in the paged plan"
-    for i in win_rows:
-        # only the Window's OWN subtree counts: walk following lines while
-        # they are more deeply indented — a limit in a sibling subtree
-        # must not satisfy this gate
-        base = indent(lines[i])
-        subtree = []
-        for ln in lines[i + 1 :]:
-            if ln.strip() and indent(ln) <= base:
-                break
-            subtree.append(ln)
-        below = "\n".join(subtree)
-        assert "TakeOrderedAndProject" in below or "GlobalLimit" in below, (
-            f"Window at plan line {i} is not fed by a limit in its own "
-            "subtree:\n" + "\n".join(lines)
-        )
+def _assert_native_offset_topk(plan: str, limit: int, offset: int) -> None:
+    """The two OFFSET-pagination paths plan as ONE native top-k with an
+    offset: a TakeOrderedAndProject whose heap is bounded to offset+limit
+    rows and which drops the first `offset` itself — so no Window slice
+    and no single-partition Exchange/Sort sits above the bounded set,
+    and a future edit can't unbound the page into a global sort."""
+    head = plan.split("== Initial Plan ==")[0]
+    topk = [ln for ln in head.splitlines() if "TakeOrderedAndProject" in ln]
+    assert len(topk) == 1, head
+    assert f"TakeOrderedAndProject(limit={offset + limit}, offset={offset}," in topk[0], head
+    assert "Window [" not in head, head
+    assert "Exchange SinglePartition" not in head, head
 
 
-def test_offset_page_window_is_limit_bounded(spark, sf_dir):
-    """feed_single_user_page_offset: the row_number slice rides a
-    bounded top-(offset+limit), never a global single-partition sort."""
+def test_offset_page_is_one_native_topk(spark, sf_dir):
+    """feed_single_user_page_offset (limit 100, offset 100) is one
+    TakeOrderedAndProject(limit=200, offset=100) over the semi-join."""
     import __spark_entry__ as em
 
     plan = _executed_plan(
         em.queries()["feed_single_user_page_offset"](spark, sf_dir)
     )
-    _assert_window_input_limited(plan)
+    _assert_native_offset_topk(plan, limit=100, offset=100)
 
 
-def test_feed_table_page_window_is_limit_bounded(spark):
+def test_feed_table_page_is_one_native_topk(spark):
     """_page_from_frame (the feed-table/cache read path): same contract
     on the streaming-materialized layout."""
     from pyspark.sql import types as T
@@ -365,7 +345,7 @@ def test_feed_table_page_window_is_limit_bounded(spark):
     )
     feed = spark.createDataFrame([], schema)
     plan = _executed_plan(_page_from_frame(feed, "7", limit=10, offset=10, n_user_buckets=32))
-    _assert_window_input_limited(plan)
+    _assert_native_offset_topk(plan, limit=10, offset=10)
 
 
 def test_repetition_scores_column_pruning(spark, sf_dir):

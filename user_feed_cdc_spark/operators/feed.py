@@ -160,10 +160,9 @@ def feed_single_user_page_offset(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The reference endpoint's second page: limit=100 offset=100
     (main.py:137,164-166 — note CQL has no OFFSET, a reference bug
     SURVEY.md §7.3.4; this implements the documented intent). Plan shape:
-    top-(offset+limit) via TakeOrderedAndProject (per-task k-heaps, never
-    a global sort), then a row_number slice over that bounded ≤200-row
-    set — the single-partition window is safe because its input is
-    already limited."""
+    ONE TakeOrderedAndProject(limit=offset+limit, offset=offset) — per-task
+    k-heaps of offset+limit rows, never a global sort, and no window or
+    single-partition exchange above it."""
     limit, offset = 100, 100
     events = load_table(spark, sf_dir, "events")
     edges = (
@@ -171,16 +170,9 @@ def feed_single_user_page_offset(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("follower_id") == 3)
         .select(F.col("following_id").alias("user_id"))
     )
-    order = [F.col("ts").desc(), F.col("event_id").desc()]
-    page = (
-        events.join(F.broadcast(edges), "user_id", "left_semi")
-        .orderBy(*order)
-        .limit(offset + limit)
-    )
-    w = W.orderBy(*order)
     return (
-        page.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") > offset)
+        events.join(F.broadcast(edges), "user_id", "left_semi")
+        .orderBy(F.col("ts").desc(), F.col("event_id").desc())
         .select(
             "event_id",
             F.col("user_id").alias("author_id"),
@@ -188,6 +180,8 @@ def feed_single_user_page_offset(spark: SparkSession, sf_dir: str) -> DataFrame:
             "ts",
             r2(F.col("value")).alias("value"),
         )
+        .limit(offset + limit)
+        .offset(offset)
     )
 
 

@@ -511,36 +511,68 @@ def user_bucket_expr(user_id_col, n_buckets: int = N_USER_BUCKETS) -> Column:
 _FEED_META = "_feed_meta.json"  # '_' prefix: invisible to parquet file listing
 
 
-def write_feed_meta(spark: SparkSession, feed_path: str, n_user_buckets: int) -> None:
-    """Record the table's bucket count in a sidecar under feed_path.
-    Goes through the Hadoop FileSystem API so it works on any supported
-    store (local, HDFS, s3a), not just local paths."""
+def write_feed_meta(
+    spark: SparkSession,
+    feed_path: str,
+    n_user_buckets: int,
+    schema: T.StructType | None = None,
+) -> None:
+    """Record the table's read contract in a sidecar under feed_path:
+    its bucket count and, when given, its read schema (as
+    StructType.json()). Readers pass a recorded schema to
+    spark.read.schema(...) instead of inferring it per read; a layout
+    written before any data exists records no schema. Goes through the
+    Hadoop FileSystem API so it works on any supported store (local,
+    HDFS, s3a), not just local paths."""
     import json
 
+    meta = {"n_user_buckets": n_user_buckets}
+    if schema is not None:
+        meta["schema"] = schema.jsonValue()
     jvm = spark.sparkContext._jvm
     hpath = jvm.org.apache.hadoop.fs.Path(feed_path, _FEED_META)
     fs = hpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
     out = fs.create(hpath, True)
-    out.write(json.dumps({"n_user_buckets": n_user_buckets}).encode("utf-8"))
+    out.write(json.dumps(meta).encode("utf-8"))
     out.close()
 
 
-def read_feed_meta(spark: SparkSession, feed_path: str) -> int | None:
-    """Bucket count recorded with the table, or None for pre-meta
-    tables."""
+def _feed_contract(
+    spark: SparkSession, feed_path: str
+) -> tuple[int | None, T.StructType | None]:
+    """(bucket count, read schema) recorded with the table; either is
+    None when the sidecar (pre-meta tables) or its schema (the raw
+    streaming layout) is absent."""
     import json
 
     jvm = spark.sparkContext._jvm
     hpath = jvm.org.apache.hadoop.fs.Path(feed_path, _FEED_META)
     fs = hpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
     if not fs.exists(hpath):
-        return None
+        return None, None
     stream = fs.open(hpath)
     try:
-        raw = jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8")
+        meta = json.loads(jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8"))
     finally:
         stream.close()
-    return int(json.loads(raw)["n_user_buckets"])
+    schema = meta.get("schema")
+    return (
+        int(meta["n_user_buckets"]),
+        T.StructType.fromJson(schema) if schema is not None else None,
+    )
+
+
+def read_feed_meta(spark: SparkSession, feed_path: str) -> int | None:
+    """Bucket count recorded with the table, or None for pre-meta
+    tables."""
+    return _feed_contract(spark, feed_path)[0]
+
+
+def _read_feed(spark: SparkSession, feed_path: str, schema: T.StructType | None) -> DataFrame:
+    """Parquet read of a feed table: with its recorded schema, building
+    the DataFrame starts no Spark job; without one, Spark infers it."""
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader.parquet(feed_path)
 
 
 def write_feed_stream(
@@ -714,7 +746,13 @@ def compact_feed(spark: SparkSession, feed_path: str, compacted_path: str) -> No
     each file — so a per-user page read is a pruned scan of pre-ordered
     rows, the parquet translation of Cassandra's clustering layout.
     Run periodically (e.g. per closed date partition); the streaming
-    sink keeps writing new _batch_id partitions meanwhile."""
+    sink keeps writing new _batch_id partitions meanwhile.
+
+    The compacted table's sidecar carries the source's bucket count and
+    the schema Spark infers from the files just written: one inference
+    per compaction instead of one per page read. A writer that later
+    changes the table's schema out of band is not seen by readers until
+    the next compact_feed, the same contract as the bucket count."""
     feed = spark.read.parquet(feed_path)
     (
         feed.repartition(F.col("activity_date"), F.col("user_bucket"))
@@ -733,7 +771,8 @@ def compact_feed(spark: SparkSession, feed_path: str, compacted_path: str) -> No
     # compaction preserves the bucket layout → carry its contract along
     buckets = read_feed_meta(spark, feed_path)
     if buckets is not None:
-        write_feed_meta(spark, compacted_path, buckets)
+        schema = spark.read.parquet(compacted_path).schema
+        write_feed_meta(spark, compacted_path, buckets, schema=schema)
 
 
 def read_user_feed(
@@ -751,17 +790,22 @@ def read_user_feed(
     so the scan partition-prunes to 1/n_buckets of the files before the
     user_id filter even runs — the Cassandra partition-key read path
     re-expressed. Ordering: (event_timestamp, _batch_id, _seq) DESC — the
-    explicit TIMEUUID-clustering replacement (SURVEY.md §7.3.1). OFFSET
-    is top-(offset+limit) then a row_number slice over that bounded set
-    (never a global sort).
+    explicit TIMEUUID-clustering replacement (SURVEY.md §7.3.1). The page
+    plans as ONE TakeOrderedAndProject(limit=offset+limit, offset=offset)
+    over the pruned scan (never a global sort), and collecting it is one
+    Spark job.
 
-    The pruning predicate recomputes user_bucket, so its modulus MUST
-    match the one the table was written with — a mismatch silently
-    returns wrong/empty pages. The bucket count is therefore read from
-    the table's own _feed_meta sidecar (recorded by write_feed_stream);
-    passing an explicit n_user_buckets that contradicts it is an error,
-    and only meta-less (pre-meta) tables fall back to the default."""
-    recorded = read_feed_meta(spark, feed_path)
+    The table's _feed_meta sidecar is read once per call. It holds the
+    bucket count (recorded by write_feed_stream) and, for a compacted
+    table, the read schema (recorded by compact_feed); with a schema,
+    building the page starts no Spark job, and without one (pre-meta
+    tables, the raw streaming layout) Spark infers it. The pruning
+    predicate recomputes user_bucket, so its modulus MUST match the one
+    the table was written with — a mismatch silently returns wrong/empty
+    pages. Passing an explicit n_user_buckets that contradicts the
+    recorded one is therefore an error, and only meta-less (pre-meta)
+    tables fall back to the default."""
+    recorded, schema = _feed_contract(spark, feed_path)
     if n_user_buckets is None:
         n_user_buckets = recorded if recorded is not None else N_USER_BUCKETS
     elif recorded is not None and recorded != n_user_buckets:
@@ -771,35 +815,28 @@ def read_user_feed(
             f"{n_user_buckets}; pruning with the wrong modulus would "
             "silently return wrong pages"
         )
-    feed = spark.read.parquet(feed_path)
+    feed = _read_feed(spark, feed_path, schema)
     return _page_from_frame(feed, user_id, limit, offset, n_user_buckets)
 
 
 def _page_from_frame(
     feed: DataFrame, user_id: str, limit: int, offset: int, n_user_buckets: int
 ) -> DataFrame:
-    order = [
-        F.col("event_timestamp").desc(),
-        F.col("_batch_id").desc(),
-        F.col("_seq").desc(),
-    ]
-    page = (
+    """One user's page: bucket+user filter, then the native top-k with
+    offset. (event_timestamp, _batch_id, _seq) is a total order per
+    user, so the slice is deterministic."""
+    return (
         feed.filter(
             (F.col("user_bucket") == user_bucket_expr(F.lit(user_id), n_user_buckets))
             & (F.col("user_id") == user_id)
         )
-        .orderBy(*order)
+        .orderBy(
+            F.col("event_timestamp").desc(),
+            F.col("_batch_id").desc(),
+            F.col("_seq").desc(),
+        )
         .limit(offset + limit)
-    )
-    if offset == 0:
-        return page
-    from pyspark.sql import Window as W
-
-    w = W.orderBy(*order)  # single partition of ≤ offset+limit rows — bounded
-    return (
-        page.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") > offset)
-        .drop("_rn")
+        .offset(offset)
     )
 
 
@@ -823,7 +860,14 @@ class FeedCache:
 
     Caching the table instead of per-user pages is the right granularity
     for Spark: one cache entry serves every user (no per-key churn), and
-    the per-page work over cached blocks is a pruned in-memory filter."""
+    the per-page work over cached blocks is a pruned in-memory filter
+    feeding one TakeOrderedAndProject.
+
+    The _feed_meta sidecar is read once per snapshot: its bucket count
+    drives pruning, and its recorded schema (compact_feed's) skips the
+    parquet inference job when the snapshot is re-listed. An
+    out-of-band schema change is seen only after the next compact_feed
+    rewrites the sidecar."""
 
     def __init__(self, spark: SparkSession, feed_path: str):
         self.spark = spark
@@ -833,9 +877,9 @@ class FeedCache:
 
     def _materialized(self) -> tuple[DataFrame, int]:
         if self._frame is None:
-            recorded = read_feed_meta(self.spark, self.feed_path)
+            recorded, schema = _feed_contract(self.spark, self.feed_path)
             self._buckets = recorded if recorded is not None else N_USER_BUCKETS
-            self._frame = self.spark.read.parquet(self.feed_path).persist()
+            self._frame = _read_feed(self.spark, self.feed_path, schema).persist()
         return self._frame, self._buckets
 
     def page(self, user_id: str, limit: int = 100, offset: int = 0) -> DataFrame:
