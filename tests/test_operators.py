@@ -3069,12 +3069,17 @@ def test_txn_log_snapshot_build_starts_no_spark_job(spark, sf_dir):
     replay resolves the live files on the driver from the JSON log, so
     constructing the entry's DataFrame (fixture warm) starts ZERO Spark
     jobs — a Spark-side replay of the same log pays driver-synced jobs
-    before the query even runs."""
+    before the query even runs. The partition-values entry reads its
+    probe type off the log's add actions, not a distinct() job."""
     import __spark_entry__ as em
 
     qs = em.queries()
     sc = spark.sparkContext
-    for name in ("source_txn_log_snapshot", "source_txn_log_checkpoint"):
+    for name in (
+        "source_txn_log_snapshot",
+        "source_txn_log_checkpoint",
+        "source_txn_log_partition_values",
+    ):
         qs[name](spark, sf_dir)  # warm: build the fixture once
         group = f"build-jobs-{name}"
         sc.setJobGroup(group, "build-phase job-count pin")

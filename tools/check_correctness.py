@@ -22,6 +22,7 @@ import datetime as dt
 import hashlib
 import math
 import sys
+from pathlib import Path
 
 import duckdb
 
@@ -71,7 +72,7 @@ def main() -> int:
     sf_dir = argv[0] if len(argv) > 0 else "/root/testdata/sf0.01"
     name_filter = argv[1] if len(argv) > 1 else None
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
     import __spark_entry__ as entrymod
     from user_feed_cdc_spark.session import get_spark
 

@@ -11,8 +11,10 @@ from __future__ import annotations
 
 import io
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+REPO = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(REPO))
 
 REPRESENTATIVE = [
     "filter_project",          # pushdown + pruning
@@ -157,7 +159,7 @@ def main() -> None:
             df._jdf.queryExecution(), "formatted"
         )
         out.write(f"\n## {name}\n\n```\n{plan}\n```\n")
-    with open("/root/repo/PLANS.md", "w") as f:
+    with open(REPO / "PLANS.md", "w") as f:
         f.write(out.getvalue())
     print(f"wrote PLANS.md ({len(REPRESENTATIVE)} plans)")
 

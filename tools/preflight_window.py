@@ -16,6 +16,7 @@ Exit 1 if any window entry fails the canonicalizer simulation.
 from __future__ import annotations
 
 import sys
+from pathlib import Path
 
 import pandas as pd
 
@@ -24,7 +25,7 @@ def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     window = int(sys.argv[2]) if len(sys.argv) > 2 else 50
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
     import __spark_entry__ as entrymod
     from user_feed_cdc_spark.session import get_spark
 

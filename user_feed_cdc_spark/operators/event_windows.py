@@ -4272,25 +4272,21 @@ def events_max_concurrent_sessions(
         F.col("d.delta").alias("delta"),
         F.to_date("d.ts").alias("day"),
     )
-    import hashlib
-    import os
+    from user_feed_cdc_spark.sources.formats import cached_fixture
 
-    from user_feed_cdc_spark.sources.formats import _scratch_path
-
-    mtime = int(os.path.getmtime(os.path.join(sf_dir, "events.parquet")))
     # Cache key folds in the sessionization LOGIC, not just the source
     # (r10 ADVICE): unlike the txn-log fixtures (pure functions of the
     # data), the deltas depend on the gap constant and struct shape —
     # a code change here must invalidate the scratch, not silently
     # reuse stale deltas until testdata regenerates. The revision
     # lives in _CONC_DELTAS_REV beside _CONC_GAP_US (r11 ADVICE).
-    logic = f"gap={_CONC_GAP_US}:v={_CONC_DELTAS_REV}"
-    key = hashlib.md5(
-        f"concdeltas:{sf_dir}:{mtime}:{logic}".encode()
-    ).hexdigest()[:12]
-    path = _scratch_path("conc_deltas", sf_dir, key)
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        deltas_src.write.mode("overwrite").parquet(path)
+    path = cached_fixture(
+        "conc_deltas",
+        sf_dir,
+        f":gap={_CONC_GAP_US}:v={_CONC_DELTAS_REV}",
+        lambda root: deltas_src.write.mode("overwrite").parquet(root),
+        tag="concdeltas",
+    )
     deltas = spark.read.schema("ts timestamp, delta int, day date").parquet(
         path
     )

@@ -38,8 +38,11 @@ conversion being the write side of this very round-trip.
 
 from __future__ import annotations
 
+import fcntl
 import hashlib
 import os
+import shutil
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -64,13 +67,12 @@ def _scratch_dir() -> str:
 
 
 def _scratch_path(prefix: str, sf_dir: str, key: str) -> str:
-    """Scratch dir for one (prefix, sf, cache-key) triple, pruning stale
-    same-(prefix, sf) siblings first — the mtime-keyed entries would
-    otherwise accumulate forever as testdata regenerates (r07 ADVICE).
-    The SF tag is part of the prune scope so a test run at sf0.001
-    never evicts the still-valid bench cache at sf0.1."""
-    import shutil
-
+    """Path `<scratch>/<prefix>_<sf tag>_<key>`, after deleting every
+    other `<prefix>_<sf tag>_*` sibling: an entry keyed on an older
+    source mtime is garbage once the testdata regenerates. The sf tag
+    scopes the prune, so a run at sf0.001 never evicts sf0.1 entries.
+    Cached fixtures reach this through cached_fixture; only per-call
+    uuid-keyed dirs call it directly."""
     root = _scratch_dir()
     sf_tag = os.path.basename(os.path.normpath(sf_dir))
     scoped = f"{prefix}_{sf_tag}"
@@ -81,16 +83,57 @@ def _scratch_path(prefix: str, sf_dir: str, key: str) -> str:
     return os.path.join(root, want)
 
 
+def cached_fixture(
+    prefix: str,
+    sf_dir: str,
+    rev: str,
+    build: Callable[[str], None],
+    tag: str | None = None,
+    table: str = "events",
+) -> str:
+    """Build an on-disk fixture once per (sf, source mtime, rev) and
+    return its root. The one cache protocol every fixture uses:
+
+    1. key: md5 of f"{tag}:{sf_dir}:{mtime}{rev}", tag defaulting to
+       prefix and mtime read off `table`'s parquet file, so regenerated
+       testdata or a bumped rev never reuses a stale build;
+    2. root: _scratch_path(prefix, sf_dir, key);
+    3. lock: an exclusive flock on `<scratch>/.locks/<root name>`, a
+       file neither the sibling prune nor a builder overwriting root
+       can delete; concurrent callers wait and reuse one build;
+    4. under the lock, if `_BUILT` is absent: wipe whatever a killed
+       or failed build left at root, recreate it empty, call
+       build(root), and write `_BUILT` last.
+
+    So a partial build (half a txn log, codec output that failed its
+    check) is never reused or appended to; builders run every check
+    on their output inside `build`. Roots are built in place, not
+    renamed into place, because some fixtures record absolute paths
+    under them. Nested fixtures lock their own keys."""
+    mtime = int(os.path.getmtime(os.path.join(sf_dir, f"{table}.parquet")))
+    key = hashlib.md5(
+        f"{tag or prefix}:{sf_dir}:{mtime}{rev}".encode()
+    ).hexdigest()[:12]
+    root = _scratch_path(prefix, sf_dir, key)
+    built = os.path.join(root, "_BUILT")
+    locks = os.path.join(_scratch_dir(), ".locks")
+    os.makedirs(locks, exist_ok=True)
+    with open(os.path.join(locks, os.path.basename(root)), "a") as lock:
+        fcntl.flock(lock, fcntl.LOCK_EX)
+        if not os.path.exists(built):
+            shutil.rmtree(root, ignore_errors=True)
+            os.makedirs(root)
+            build(root)
+            with open(built, "w") as f:
+                f.write("ok\n")
+    return root
+
+
 def roundtrip_events(spark: SparkSession, sf_dir: str, fmt: str) -> DataFrame:
     """events → write as `fmt` (cached per (fmt, sf dir, source mtime))
     → read back with the canonical explicit schema. Returns the
     read-back DataFrame; callers certify fidelity by aggregating it
     against an oracle over the original parquet."""
-    src_path = os.path.join(sf_dir, "events.parquet")
-    mtime = int(os.path.getmtime(src_path))
-    key = hashlib.md5(f"{fmt}:{sf_dir}:{mtime}".encode()).hexdigest()[:12]
-    path = _scratch_path(f"events_{fmt}", sf_dir, key)
-
     opts = {}
     if fmt in ("csv", "json", "xml"):
         opts["timestampFormat"] = _TS_FMT
@@ -101,7 +144,7 @@ def roundtrip_events(spark: SparkSession, sf_dir: str, fmt: str) -> DataFrame:
         # rowTag is mandatory on both sides of the trip
         opts["rowTag"] = "event"
 
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
+    def build(path: str) -> None:
         (
             load_table(spark, sf_dir, "events")
             .write.mode("overwrite")
@@ -109,6 +152,8 @@ def roundtrip_events(spark: SparkSession, sf_dir: str, fmt: str) -> DataFrame:
             .format(fmt)
             .save(path)
         )
+
+    path = cached_fixture(f"events_{fmt}", sf_dir, "", build, tag=fmt)
     return (
         spark.read.schema(TABLE_SCHEMAS["events"])
         .options(**opts)
@@ -180,6 +225,20 @@ _PARTITIONED_ORACLE = """
 """
 
 
+def _events_part_dir(spark: SparkSession, sf_dir: str) -> str:
+    """events written partitionBy(event_type): one directory per type."""
+
+    def build(path: str) -> None:
+        (
+            load_table(spark, sf_dir, "events")
+            .write.mode("overwrite")
+            .partitionBy("event_type")
+            .parquet(path)
+        )
+
+    return cached_fixture("events_part", sf_dir, "", build, tag="part")
+
+
 @_register("source_partitioned_pruned", _PARTITIONED_ORACLE)
 def source_partitioned_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hive-style PARTITIONED lake layout + partition pruning, certified:
@@ -200,18 +259,9 @@ def source_partitioned_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     low-cardinality and hot in predicates — exactly event_type here;
     high-cardinality partitioning (user_id) produces the small-files
     problem the z-order entry's clustering math addresses instead."""
-    src_path = os.path.join(sf_dir, "events.parquet")
-    mtime = int(os.path.getmtime(src_path))
-    key = hashlib.md5(f"part:{sf_dir}:{mtime}".encode()).hexdigest()[:12]
-    path = _scratch_path("events_part", sf_dir, key)
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        (
-            load_table(spark, sf_dir, "events")
-            .write.mode("overwrite")
-            .partitionBy("event_type")
-            .parquet(path)
-        )
-    df = spark.read.parquet(path).filter(F.col("event_type") == "purchase")
+    df = spark.read.parquet(_events_part_dir(spark, sf_dir)).filter(
+        F.col("event_type") == "purchase"
+    )
     return df.groupBy(F.date_trunc("hour", "ts").alias("window_start")).agg(
         F.count(F.lit(1)).alias("n"),
         F.sum(
@@ -260,22 +310,8 @@ def source_partitioned_dpp(spark: SparkSession, sf_dir: str) -> DataFrame:
     full fact scan no matter how selective the dim filter. The dim
     build is one 5-row parquet write; the fact-side benefit scales
     with the table."""
-    src_path = os.path.join(sf_dir, "events.parquet")
-    mtime = int(os.path.getmtime(src_path))
-    key = hashlib.md5(f"part:{sf_dir}:{mtime}".encode()).hexdigest()[:12]
-    path = _scratch_path("events_part", sf_dir, key)
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        (
-            load_table(spark, sf_dir, "events")
-            .write.mode("overwrite")
-            .partitionBy("event_type")
-            .parquet(path)
-        )
-    dim_key = hashlib.md5(
-        f"typedim:{sf_dir}:{mtime}:v2".encode()
-    ).hexdigest()[:12]
-    dim_path = _scratch_path("typedim", sf_dir, dim_key)
-    if not os.path.exists(os.path.join(dim_path, "_SUCCESS")):
+
+    def build_dim(dim_path: str) -> None:
         (
             load_table(spark, sf_dir, "events")
             .select("event_type")
@@ -291,7 +327,9 @@ def source_partitioned_dpp(spark: SparkSession, sf_dir: str) -> DataFrame:
             .write.mode("overwrite")
             .parquet(dim_path)
         )
-    fact = spark.read.parquet(path)
+
+    dim_path = cached_fixture("typedim", sf_dir, ":v2", build_dim)
+    fact = spark.read.parquet(_events_part_dir(spark, sf_dir))
     dim = spark.read.parquet(dim_path).filter(
         F.col("category") == "conversion"
     )
@@ -336,20 +374,16 @@ def source_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-deriving it per read, which is exactly what reading with an
     explicit evolved schema (no mergeSchema) does; the certified
     behavior (NULL-fill on old files) is identical on both paths."""
-    src_path = os.path.join(sf_dir, "events.parquet")
-    mtime = int(os.path.getmtime(src_path))
-    key = hashlib.md5(f"evo:{sf_dir}:{mtime}".encode()).hexdigest()[:12]
-    path = _scratch_path("events_evo", sf_dir, key)
-    v1, v2 = os.path.join(path, "gen=1"), os.path.join(path, "gen=2")
-    if not (
-        os.path.exists(os.path.join(v1, "_SUCCESS"))
-        and os.path.exists(os.path.join(v2, "_SUCCESS"))
-    ):
+
+    def build(path: str) -> None:
         ev = load_table(spark, sf_dir, "events")
-        ev.write.mode("overwrite").parquet(v1)
+        ev.write.mode("overwrite").parquet(os.path.join(path, "gen=1"))
         ev.withColumn("ingest_source", F.lit("cdc_v2")).write.mode(
             "overwrite"
-        ).parquet(v2)
+        ).parquet(os.path.join(path, "gen=2"))
+
+    path = cached_fixture("events_evo", sf_dir, "", build, tag="evo")
+    v1, v2 = os.path.join(path, "gen=1"), os.path.join(path, "gen=2")
     merged = spark.read.option("mergeSchema", "true").parquet(v1, v2)
     return merged.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n_rows"),
@@ -389,14 +423,8 @@ def source_json_permissive(spark: SparkSession, sf_dir: str) -> DataFrame:
     parse (Spark refuses `count()` on a corrupt-only projection of a
     lazy parse), and the corrupt column must be in the explicit
     schema."""
-    import json as _json
 
-    src_path = os.path.join(sf_dir, "events.parquet")
-    mtime = int(os.path.getmtime(src_path))
-    key = hashlib.md5(f"perm:{sf_dir}:{mtime}".encode()).hexdigest()[:12]
-    path = _scratch_path("events_perm", sf_dir, key)
-    marker = os.path.join(path, "_COMPLETE")
-    if not os.path.exists(marker):
+    def build(path: str) -> None:
         (
             load_table(spark, sf_dir, "events")
             .write.mode("overwrite")
@@ -415,8 +443,8 @@ def source_json_permissive(spark: SparkSession, sf_dir: str) -> DataFrame:
         assert len(bad_lines) == _N_CORRUPT
         with open(os.path.join(path, "zz_corrupt.json"), "w") as f:
             f.write("\n".join(bad_lines) + "\n")
-        with open(marker, "w") as f:
-            _json.dump({}, f)
+
+    path = cached_fixture("events_perm", sf_dir, "", build, tag="perm")
     # COPY the canonical schema — StructType.add MUTATES in place, and
     # appending _corrupt_record to the shared TABLE_SCHEMAS["events"]
     # poisons every later events read in the session (a second call
@@ -556,11 +584,6 @@ def source_python_datasource_write(spark: SparkSession, sf_dir: str) -> DataFram
         WriterCommitMessage,
     )
 
-    src_path = os.path.join(sf_dir, "events.parquet")
-    mtime = int(os.path.getmtime(src_path))
-    key = hashlib.md5(f"pydsw:{sf_dir}:{mtime}".encode()).hexdigest()[:12]
-    path = _scratch_path("events_pydsw", sf_dir, key)
-
     class _Committed(WriterCommitMessage):
         def __init__(self, n_rows: int):
             self.n_rows = n_rows
@@ -617,7 +640,7 @@ def source_python_datasource_write(spark: SparkSession, sf_dir: str) -> DataFram
 
     spark.dataSource.register(JsonLinesSink)
 
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
+    def build(path: str) -> None:
         (
             load_table(spark, sf_dir, "events")
             .select(
@@ -636,7 +659,10 @@ def source_python_datasource_write(spark: SparkSession, sf_dir: str) -> DataFram
             .mode("append")
             .save()
         )
+        if not os.path.exists(os.path.join(path, "_SUCCESS")):
+            raise ValueError("sink commit() published no _SUCCESS manifest")
 
+    path = cached_fixture("events_pydsw", sf_dir, "", build, tag="pydsw")
     back = (
         spark.read.schema(
             "event_id long, ts_us long, user_id long, "
@@ -848,12 +874,7 @@ def _txn_log_table(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     hash gate."""
     from user_feed_cdc_spark.sources.txn_writer import TxnLogWriter
 
-    src_path = os.path.join(sf_dir, "events.parquet")
-    mtime = int(os.path.getmtime(src_path))
-    key = hashlib.md5(f"txnlog:{sf_dir}:{mtime}:v2".encode()).hexdigest()[:12]
-    root = _scratch_path("txnlog", sf_dir, key)
-    log_dir = os.path.join(root, "_log")
-    if not os.path.exists(os.path.join(root, "_BUILT")):
+    def build(root: str) -> None:
         w = TxnLogWriter(root)
         ev = load_table(spark, sf_dir, "events")
         bucket = F.pmod(F.col("event_id"), F.lit(6))
@@ -867,9 +888,9 @@ def _txn_log_table(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
         w.begin().add("f0").add("f1").add("f2").commit(timestamp=1000)
         w.begin().add("f3").add("f4").add("f5").commit(timestamp=2000)
         w.begin().remove("f1").remove("f2").add("c12").commit(timestamp=3000)
-        with open(os.path.join(root, "_BUILT"), "w") as f:
-            f.write("ok\n")
-    return root, log_dir
+
+    root = cached_fixture("txnlog", sf_dir, ":v2", build)
+    return root, os.path.join(root, "_log")
 
 
 def read_snapshot(
@@ -954,12 +975,7 @@ def _txn_log_ckpt_table(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     usual fidelity oracle certifies the replay."""
     from user_feed_cdc_spark.sources.txn_writer import TxnLogWriter
 
-    src_path = os.path.join(sf_dir, "events.parquet")
-    mtime = int(os.path.getmtime(src_path))
-    key = hashlib.md5(f"txnckpt:{sf_dir}:{mtime}:v2".encode()).hexdigest()[:12]
-    root = _scratch_path("txnckpt", sf_dir, key)
-    log_dir = os.path.join(root, "_log")
-    if not os.path.exists(os.path.join(root, "_BUILT")):
+    def build(root: str) -> None:
         w = TxnLogWriter(root)
         ev = load_table(spark, sf_dir, "events")
         bucket = F.pmod(F.col("event_id"), F.lit(8))
@@ -979,9 +995,9 @@ def _txn_log_ckpt_table(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
         w.write_checkpoint(2)
         w.begin().add("f6").add("f7").commit(timestamp=4000)
         w.begin().remove("f0").add("f0r").commit(timestamp=5000)
-        with open(os.path.join(root, "_BUILT"), "w") as f:
-            f.write("ok\n")
-    return root, log_dir
+
+    root = cached_fixture("txnckpt", sf_dir, ":v2", build)
+    return root, os.path.join(root, "_log")
 
 
 @_register("source_txn_log_checkpoint", _ROUNDTRIP_ORACLE)
@@ -1036,12 +1052,7 @@ def _txn_log_dv_table(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     repo's row-address analogue of a roaring bitmap of row indexes)."""
     from user_feed_cdc_spark.sources.txn_writer import TxnLogWriter
 
-    src_path = os.path.join(sf_dir, "events.parquet")
-    mtime = int(os.path.getmtime(src_path))
-    key = hashlib.md5(f"txndv:{sf_dir}:{mtime}:v2".encode()).hexdigest()[:12]
-    root = _scratch_path("txndv", sf_dir, key)
-    log_dir = os.path.join(root, "_log")
-    if not os.path.exists(os.path.join(root, "_BUILT")):
+    def build(root: str) -> None:
         w = TxnLogWriter(root)
         ev = load_table(spark, sf_dir, "events")
         bucket = F.pmod(F.col("event_id"), F.lit(6))
@@ -1066,9 +1077,9 @@ def _txn_log_dv_table(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
             timestamp=2000
         )  # v1
         w.begin().set_dv("f1", "dv_f1b").commit(timestamp=3000)  # v2
-        with open(os.path.join(root, "_BUILT"), "w") as f:
-            f.write("ok\n")
-    return root, log_dir
+
+    root = cached_fixture("txndv", sf_dir, ":v2", build)
+    return root, os.path.join(root, "_log")
 
 
 @_register("source_txn_log_deletes", _TXN_DV_ORACLE)
@@ -1147,12 +1158,7 @@ def _txn_log_stats_table(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     JSON and Iceberg's manifest entries record at write time."""
     from user_feed_cdc_spark.sources.txn_writer import TxnLogWriter
 
-    src_path = os.path.join(sf_dir, "events.parquet")
-    mtime = int(os.path.getmtime(src_path))
-    key = hashlib.md5(f"txnskip:{sf_dir}:{mtime}:v2".encode()).hexdigest()[:12]
-    root = _scratch_path("txnskip", sf_dir, key)
-    log_dir = os.path.join(root, "_log")
-    if not os.path.exists(os.path.join(root, "_BUILT")):
+    def build(root: str) -> None:
         ev = load_table(spark, sf_dir, "events")
         max_id = ev.agg(F.max("event_id")).first()[0]
         bounds = [0] + [max_id * (k + 1) // 4 for k in range(3)] + [max_id]
@@ -1168,9 +1174,9 @@ def _txn_log_stats_table(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
             ).first()
             txn.add(f"r{k}", min_id=int(stats.mn), max_id=int(stats.mx))
         txn.commit(timestamp=1000)
-        with open(os.path.join(root, "_BUILT"), "w") as f:
-            f.write("ok\n")
-    return root, log_dir
+
+    root = cached_fixture("txnskip", sf_dir, ":v2", build)
+    return root, os.path.join(root, "_log")
 
 
 @_register("source_txn_log_data_skipping", _TXN_SKIP_ORACLE)
@@ -1314,14 +1320,7 @@ def _txn_log_bloom_table(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     name and m."""
     from user_feed_cdc_spark.sources.txn_writer import TxnLogWriter
 
-    src_path = os.path.join(sf_dir, "events.parquet")
-    mtime = int(os.path.getmtime(src_path))
-    key = hashlib.md5(
-        f"txnbloom:{sf_dir}:{mtime}:v2".encode()
-    ).hexdigest()[:12]
-    root = _scratch_path("txnbloom", sf_dir, key)
-    log_dir = os.path.join(root, "_log")
-    if not os.path.exists(os.path.join(root, "_BUILT")):
+    def build(root: str) -> None:
         ev = load_table(spark, sf_dir, "events")
         n_total = ev.count()
         m = 1 << max(12, (8 * n_total).bit_length())
@@ -1360,9 +1359,9 @@ def _txn_log_bloom_table(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
             )
             txn.add(f"u{k}", bloom=f"bloom_u{k}", m=m)
         txn.commit(timestamp=1000)
-        with open(os.path.join(root, "_BUILT"), "w") as f:
-            f.write("ok\n")
-    return root, log_dir
+
+    root = cached_fixture("txnbloom", sf_dir, ":v2", build)
+    return root, os.path.join(root, "_log")
 
 
 @_register("source_txn_log_bloom_index", _TXN_BLOOM_ORACLE)
@@ -1440,14 +1439,7 @@ def _txn_writer_table(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     live set = {c01, b2..b8} = events exactly once."""
     from user_feed_cdc_spark.sources.txn_writer import TxnLogWriter
 
-    src_path = os.path.join(sf_dir, "events.parquet")
-    mtime = int(os.path.getmtime(src_path))
-    key = hashlib.md5(f"txnwriter:{sf_dir}:{mtime}:v2".encode()).hexdigest()[
-        :12
-    ]
-    root = _scratch_path("txnwriter", sf_dir, key)
-    log_dir = os.path.join(root, "_log")
-    if not os.path.exists(os.path.join(root, "_BUILT")):
+    def build(root: str) -> None:
         writer = TxnLogWriter(root, checkpoint_interval=4)
         ev = load_table(spark, sf_dir, "events")
         bucket = F.pmod(F.col("event_id"), F.lit(9))
@@ -1461,9 +1453,9 @@ def _txn_writer_table(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
         )
         merged.write.mode("overwrite").parquet(os.path.join(root, "c01"))
         writer.begin().remove("b0").remove("b1").add("c01").commit()  # v9
-        with open(os.path.join(root, "_BUILT"), "w") as f:
-            f.write("ok\n")
-    return root, log_dir
+
+    root = cached_fixture("txnwriter", sf_dir, ":v2", build)
+    return root, os.path.join(root, "_log")
 
 
 @_register("source_txn_log_writer_roundtrip", _ROUNDTRIP_ORACLE)
@@ -1505,14 +1497,8 @@ def _events_multifile_stream_dir(spark: SparkSession, sf_dir: str) -> str:
     micro-batches — the single-file events.parquet replay the other
     live entries use gives only one."""
     import glob
-    import shutil
 
-    src_path = os.path.join(sf_dir, "events.parquet")
-    mtime = int(os.path.getmtime(src_path))
-    key = hashlib.md5(f"evmulti:{sf_dir}:{mtime}".encode()).hexdigest()[:12]
-    path = _scratch_path("events_multifile", sf_dir, key)
-    if not os.path.exists(os.path.join(path, "_BUILT")):
-        os.makedirs(path, exist_ok=True)
+    def build(path: str) -> None:
         ev = load_table(spark, sf_dir, "events")
         bucket = F.pmod(F.col("event_id"), F.lit(4))
         for b in range(4):
@@ -1523,9 +1509,8 @@ def _events_multifile_stream_dir(spark: SparkSession, sf_dir: str) -> str:
             (part,) = glob.glob(os.path.join(tmp, "part-*.parquet"))
             os.replace(part, os.path.join(path, f"ev{b}.parquet"))
             shutil.rmtree(tmp)
-        with open(os.path.join(path, "_BUILT"), "w") as f:
-            f.write("ok\n")
-    return path
+
+    return cached_fixture("events_multifile", sf_dir, "", build, tag="evmulti")
 
 
 @_register("streaming_txn_sink_live", _ROUNDTRIP_ORACLE)
@@ -1612,14 +1597,7 @@ def _txn_delete_table(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
 
     from user_feed_cdc_spark.sources.txn_writer import TxnLogWriter
 
-    src_path = os.path.join(sf_dir, "events.parquet")
-    mtime = int(os.path.getmtime(src_path))
-    key = hashlib.md5(f"txndelete:{sf_dir}:{mtime}:v2".encode()).hexdigest()[
-        :12
-    ]
-    root = _scratch_path("txndelete", sf_dir, key)
-    log_dir = os.path.join(root, "_log")
-    if not os.path.exists(os.path.join(root, "_BUILT")):
+    def build(root: str) -> None:
         writer = TxnLogWriter(root)
         ev = load_table(spark, sf_dir, "events")
         max_id = int(ev.agg(F.max("event_id")).first()[0])
@@ -1661,9 +1639,9 @@ def _txn_delete_table(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
         txn.commit()
         with open(os.path.join(root, "_DELETE_META"), "w") as f:
             f.write(json.dumps({"cut": cut}) + "\n")
-        with open(os.path.join(root, "_BUILT"), "w") as f:
-            f.write("ok\n")
-    return root, log_dir
+
+    root = cached_fixture("txndelete", sf_dir, ":v2", build)
+    return root, os.path.join(root, "_log")
 
 
 @_register("source_txn_log_delete_rewrite", _TXN_DELETE_ORACLE)
@@ -1723,14 +1701,7 @@ def _txn_optimize_table(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
 
     from user_feed_cdc_spark.sources.txn_writer import TxnLogWriter
 
-    src_path = os.path.join(sf_dir, "events.parquet")
-    mtime = int(os.path.getmtime(src_path))
-    key = hashlib.md5(
-        f"txnoptimize:{sf_dir}:{mtime}:v2".encode()
-    ).hexdigest()[:12]
-    root = _scratch_path("txnoptimize", sf_dir, key)
-    log_dir = os.path.join(root, "_log")
-    if not os.path.exists(os.path.join(root, "_BUILT")):
+    def build(root: str) -> None:
         writer = TxnLogWriter(root)
         ev = load_table(spark, sf_dir, "events")
         max_user = int(ev.agg(F.max("user_id")).first()[0])
@@ -1768,9 +1739,9 @@ def _txn_optimize_table(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
         txn.commit()
         with open(os.path.join(root, "_META"), "w") as f:
             f.write(json.dumps({"max_id": max_id}) + "\n")
-        with open(os.path.join(root, "_BUILT"), "w") as f:
-            f.write("ok\n")
-    return root, log_dir
+
+    root = cached_fixture("txnoptimize", sf_dir, ":v2", build)
+    return root, os.path.join(root, "_log")
 
 
 @_register("source_txn_log_optimize_cluster", _TXN_OPTIMIZE_ORACLE)
@@ -1827,13 +1798,7 @@ def _txn_dv_optimize_table(spark: SparkSession, sf_dir: str) -> str:
         _newest_dv_of,
     )
 
-    src_path = os.path.join(sf_dir, "events.parquet")
-    mtime = int(os.path.getmtime(src_path))
-    key = hashlib.md5(
-        f"txndvopt:{sf_dir}:{mtime}:v1".encode()
-    ).hexdigest()[:12]
-    root = _scratch_path("txndvopt", sf_dir, key)
-    if not os.path.exists(os.path.join(root, "_BUILT")):
+    def build(root: str) -> None:
         w = TxnLogWriter(root)
         ev = load_table(spark, sf_dir, "events")
         bucket = F.pmod(F.col("event_id"), F.lit(6))
@@ -1878,9 +1843,8 @@ def _txn_dv_optimize_table(spark: SparkSession, sf_dir: str) -> str:
             txn.remove(fname, data_change=False)
             txn.add(f"c_{fname}", data_change=False)
         txn.commit()
-        with open(os.path.join(root, "_BUILT"), "w") as f:
-            f.write("ok\n")
-    return root
+
+    return cached_fixture("txndvopt", sf_dir, ":v1", build)
 
 
 @_register("source_txn_log_optimize_dv", _TXN_DV_ORACLE)
@@ -1941,13 +1905,6 @@ def _txn_compact_table(spark: SparkSession, sf_dir: str) -> str:
     rewriting them would be pure write amplification."""
     from user_feed_cdc_spark.sources.txn_writer import TxnLogWriter
 
-    src_path = os.path.join(sf_dir, "events.parquet")
-    mtime = int(os.path.getmtime(src_path))
-    key = hashlib.md5(
-        f"txncompact:{sf_dir}:{mtime}:v1".encode()
-    ).hexdigest()[:12]
-    root = _scratch_path("txncompact", sf_dir, key)
-
     def _dir_bytes(d: str) -> int:
         return sum(
             os.path.getsize(os.path.join(d, n))
@@ -1955,7 +1912,7 @@ def _txn_compact_table(spark: SparkSession, sf_dir: str) -> str:
             if n.endswith(".parquet")
         )
 
-    if not os.path.exists(os.path.join(root, "_BUILT")):
+    def build(root: str) -> None:
         w = TxnLogWriter(root)
         ev = load_table(spark, sf_dir, "events")
         txn = w.begin()
@@ -2000,9 +1957,8 @@ def _txn_compact_table(spark: SparkSession, sf_dir: str) -> str:
                 txn.remove(n, data_change=False)
             txn.add(out, bytes=_dir_bytes(os.path.join(root, out)))
         txn.commit()  # v1: one atomic re-layout
-        with open(os.path.join(root, "_BUILT"), "w") as f:
-            f.write("ok\n")
-    return root
+
+    return cached_fixture("txncompact", sf_dir, ":v1", build)
 
 
 @_register("source_txn_log_compact_small_files", _ROUNDTRIP_ORACLE)
@@ -2086,18 +2042,9 @@ def _txn_schema_evo_table(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     generation-0 files null-fill `tag` — schema-on-log, not
     schema-on-file-footer (mergeSchema), which is what lets a 4096-file
     table evolve without touching any footer."""
-    import json
-
     from user_feed_cdc_spark.sources.txn_writer import TxnLogWriter
 
-    src_path = os.path.join(sf_dir, "events.parquet")
-    mtime = int(os.path.getmtime(src_path))
-    key = hashlib.md5(
-        f"txnschemaevo:{sf_dir}:{mtime}:v2".encode()
-    ).hexdigest()[:12]
-    root = _scratch_path("txnschemaevo", sf_dir, key)
-    log_dir = os.path.join(root, "_log")
-    if not os.path.exists(os.path.join(root, "_BUILT")):
+    def build(root: str) -> None:
         writer = TxnLogWriter(root)
         ev = load_table(spark, sf_dir, "events")
         base_schema = TABLE_SCHEMAS["events"].toDDL()  # schema AS TEXT —
@@ -2113,9 +2060,9 @@ def _txn_schema_evo_table(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
         ).write.mode("overwrite").parquet(os.path.join(root, "g1"))
         writer.begin().set_metadata(widened).add("g1").commit()
         # v1: widened schema + odd rows carrying tag
-        with open(os.path.join(root, "_BUILT"), "w") as f:
-            f.write(json.dumps({"ok": True}) + "\n")
-    return root, log_dir
+
+    root = cached_fixture("txnschemaevo", sf_dir, ":v2", build)
+    return root, os.path.join(root, "_log")
 
 
 @_register("source_txn_log_schema_evolution", _TXN_SCHEMA_EVO_ORACLE)
@@ -2215,23 +2162,7 @@ def _txn_stream_table(spark: SparkSession, sf_dir: str) -> tuple[str, str, int]:
 
     from user_feed_cdc_spark.sources.txn_writer import TxnLogWriter
 
-    import shutil
-
-    src_path = os.path.join(sf_dir, "events.parquet")
-    mtime = int(os.path.getmtime(src_path))
-    key = hashlib.md5(
-        f"txnstream:{sf_dir}:{mtime}:v3".encode()
-    ).hexdigest()[:12]
-    root = _scratch_path("txnstream", sf_dir, key)
-    log_dir = os.path.join(root, "_log")
-    meta_path = os.path.join(root, "_META")
-    if not os.path.exists(os.path.join(root, "_BUILT")):
-        # wipe any PARTIAL build first: unlike the snapshot fixtures
-        # (last-action-wins makes re-adds idempotent), the streaming
-        # reader replays commit BY commit, so resuming the committer's
-        # version numbering over leftover commits would double-count
-        # the re-added files forever (r11 review finding)
-        shutil.rmtree(root, ignore_errors=True)
+    def build(root: str) -> None:
         writer = TxnLogWriter(root)
         ev = (
             load_table(spark, sf_dir, "events")
@@ -2250,13 +2181,13 @@ def _txn_stream_table(spark: SparkSession, sf_dir: str) -> tuple[str, str, int]:
             )
             writer.begin().add(f"a{b}").commit()
         ev.unpersist()
-        with open(meta_path, "w") as f:
+        with open(os.path.join(root, "_META"), "w") as f:
             f.write(json.dumps({"total": int(total)}) + "\n")
-        with open(os.path.join(root, "_BUILT"), "w") as f:
-            f.write("ok\n")
-    with open(meta_path) as f:
+
+    root = cached_fixture("txnstream", sf_dir, ":v3", build)
+    with open(os.path.join(root, "_META")) as f:
         total = json.loads(f.readline())["total"]
-    return root, log_dir, total
+    return root, os.path.join(root, "_log"), total
 
 
 def _txn_stream_file_table(root: str, file: str, memo: dict | None = None):
@@ -2829,14 +2760,7 @@ def _txn_zorder_table(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
 
     from user_feed_cdc_spark.sources.txn_writer import TxnLogWriter
 
-    src_path = os.path.join(sf_dir, "events.parquet")
-    mtime = int(os.path.getmtime(src_path))
-    key = hashlib.md5(f"txnzorder:{sf_dir}:{mtime}:v1".encode()).hexdigest()[
-        :12
-    ]
-    root = _scratch_path("txnzorder", sf_dir, key)
-    log_dir = os.path.join(root, "_log")
-    if not os.path.exists(os.path.join(root, "_BUILT")):
+    def build(root: str) -> None:
         writer = TxnLogWriter(root)
         ev = load_table(spark, sf_dir, "events")
         max_user = int(ev.agg(F.max("user_id")).first()[0])
@@ -2902,9 +2826,9 @@ def _txn_zorder_table(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
         txn.commit()  # v4: one atomic publish
         with open(os.path.join(root, "_META"), "w") as f:
             f.write(json.dumps({"max_user": max_user}) + "\n")
-        with open(os.path.join(root, "_BUILT"), "w") as f:
-            f.write("ok\n")
-    return root, log_dir
+
+    root = cached_fixture("txnzorder", sf_dir, ":v1", build)
+    return root, os.path.join(root, "_log")
 
 
 def _zorder_prune(root: str, dim: str, lo: int, hi: int) -> list[str]:
@@ -3023,12 +2947,7 @@ def _txn_cdf_table(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     independently derivable from the source table for the oracle."""
     from user_feed_cdc_spark.sources.txn_writer import TxnLogWriter
 
-    src_path = os.path.join(sf_dir, "events.parquet")
-    mtime = int(os.path.getmtime(src_path))
-    key = hashlib.md5(f"txncdf:{sf_dir}:{mtime}:v2".encode()).hexdigest()[:12]
-    root = _scratch_path("txncdf", sf_dir, key)
-    log_dir = os.path.join(root, "_log")
-    if not os.path.exists(os.path.join(root, "_BUILT")):
+    def build(root: str) -> None:
         writer = TxnLogWriter(root)
         ev = load_table(spark, sf_dir, "events")
         even = ev.filter(F.col("event_id") % 2 == 0)
@@ -3060,9 +2979,9 @@ def _txn_cdf_table(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
             ).otherwise(F.col("value")),
         ).write.mode("overwrite").parquet(os.path.join(root, "c1m"))
         writer.begin().remove("c1").add("c1m").commit(timestamp=6000)
-        with open(os.path.join(root, "_BUILT"), "w") as f:
-            f.write("ok\n")
-    return root, log_dir
+
+    root = cached_fixture("txncdf", sf_dir, ":v2", build)
+    return root, os.path.join(root, "_log")
 
 
 def table_changes(
@@ -3303,12 +3222,7 @@ def _txn_ts_table(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     resolve to v1 — a strictly different live set than HEAD."""
     from user_feed_cdc_spark.sources.txn_writer import TxnLogWriter
 
-    src_path = os.path.join(sf_dir, "events.parquet")
-    mtime = int(os.path.getmtime(src_path))
-    key = hashlib.md5(f"txnts:{sf_dir}:{mtime}:v1".encode()).hexdigest()[:12]
-    root = _scratch_path("txnts", sf_dir, key)
-    log_dir = os.path.join(root, "_log")
-    if not os.path.exists(os.path.join(root, "_BUILT")):
+    def build(root: str) -> None:
         writer = TxnLogWriter(root)
         ev = load_table(spark, sf_dir, "events")
         for b in range(3):
@@ -3316,9 +3230,9 @@ def _txn_ts_table(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
                 "overwrite"
             ).parquet(os.path.join(root, f"t{b}"))
             writer.begin().add(f"t{b}").commit(timestamp=(b + 1) * 1000)
-        with open(os.path.join(root, "_BUILT"), "w") as f:
-            f.write("ok\n")
-    return root, log_dir
+
+    root = cached_fixture("txnts", sf_dir, ":v1", build)
+    return root, os.path.join(root, "_log")
 
 
 @_register("source_txn_log_timestamp_travel", _TXN_TS_ORACLE)
@@ -3637,14 +3551,7 @@ def _txn_restore_table(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
 
     from user_feed_cdc_spark.sources.txn_writer import TxnLogWriter
 
-    src_path = os.path.join(sf_dir, "events.parquet")
-    mtime = int(os.path.getmtime(src_path))
-    key = hashlib.md5(
-        f"txnrestore:{sf_dir}:{mtime}:v1".encode()
-    ).hexdigest()[:12]
-    root = _scratch_path("txnrestore", sf_dir, key)
-    log_dir = os.path.join(root, "_log")
-    if not os.path.exists(os.path.join(root, "_BUILT")):
+    def build(root: str) -> None:
         writer = TxnLogWriter(root)
         ev = load_table(spark, sf_dir, "events")
         bucket = F.pmod(F.col("event_id"), F.lit(4))
@@ -3678,9 +3585,9 @@ def _txn_restore_table(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
             )
         with open(os.path.join(root, "_META"), "w") as f:
             f.write(_json.dumps({"restored_to": 3, "at": v}) + "\n")
-        with open(os.path.join(root, "_BUILT"), "w") as f:
-            f.write("ok\n")
-    return root, log_dir
+
+    root = cached_fixture("txnrestore", sf_dir, ":v1", build)
+    return root, os.path.join(root, "_log")
 
 
 @_register("source_txn_log_restore", _ROUNDTRIP_ORACLE)
@@ -3724,14 +3631,7 @@ def _txn_clone_tables(
 
     from user_feed_cdc_spark.sources.txn_writer import TxnLogWriter
 
-    src_path = os.path.join(sf_dir, "events.parquet")
-    mtime = int(os.path.getmtime(src_path))
-    key = hashlib.md5(
-        f"txnclone:{sf_dir}:{mtime}:v1".encode()
-    ).hexdigest()[:12]
-    src_root = _scratch_path("txnclonesrc", sf_dir, key)
-    clone_root = _scratch_path("txnclonedst", sf_dir, key)
-    if not os.path.exists(os.path.join(clone_root, "_BUILT")):
+    def build_src(src_root: str) -> None:
         src = TxnLogWriter(src_root)
         ev = load_table(spark, sf_dir, "events")
         max_id = int(ev.agg(F.max("event_id")).first()[0])
@@ -3750,13 +3650,16 @@ def _txn_clone_tables(
             src.begin().add(
                 f"r{k}", min_id=int(st.mn), max_id=int(st.mx)
             ).commit()
+
+    def build_clone(clone_root: str) -> None:
+        src = TxnLogWriter(src_root)
         clone = TxnLogWriter(clone_root)
         src.clone_to(clone_root)
         src_live_before = src.live_files()
         src_log_before = src.latest_version()
         # diverge the clone: stats-pruned COW DELETE (only r0 matches)
-        cut = max_id // 8
         adds = clone._winning_adds(clone.latest_version())
+        cut = max(a["max_id"] for a in adds.values()) // 8
         txn = clone.begin()
         rewrote = []
         for name, a in sorted(adds.items()):
@@ -3791,8 +3694,13 @@ def _txn_clone_tables(
             raise RuntimeError(f"clone live set wrong: {live}")
         with open(os.path.join(clone_root, "_META"), "w") as f:
             f.write(_json.dumps({"cut": cut}) + "\n")
-        with open(os.path.join(clone_root, "_BUILT"), "w") as f:
-            f.write("ok\n")
+
+    src_root = cached_fixture(
+        "txnclonesrc", sf_dir, ":v1", build_src, tag="txnclone"
+    )
+    clone_root = cached_fixture(
+        "txnclonedst", sf_dir, ":v1", build_clone, tag="txnclone"
+    )
     return src_root, clone_root, os.path.join(clone_root, "_log")
 
 
@@ -3847,14 +3755,7 @@ def _txn_constraints_table(
         append_with_checks,
     )
 
-    src_path = os.path.join(sf_dir, "events.parquet")
-    mtime = int(os.path.getmtime(src_path))
-    key = hashlib.md5(
-        f"txnconstraints:{sf_dir}:{mtime}:v1".encode()
-    ).hexdigest()[:12]
-    root = _scratch_path("txnconstraints", sf_dir, key)
-    log_dir = os.path.join(root, "_log")
-    if not os.path.exists(os.path.join(root, "_BUILT")):
+    def build(root: str) -> None:
         writer = TxnLogWriter(root)
         writer.begin().set_constraints(
             ["event_id >= 0", "user_id IS NOT NULL"]
@@ -3893,9 +3794,9 @@ def _txn_constraints_table(
             "event_id >= 0", "user_id IS NOT NULL", "event_type IS NOT NULL",
         ]:
             raise RuntimeError(f"constraint set wrong: {writer.constraints()}")
-        with open(os.path.join(root, "_BUILT"), "w") as f:
-            f.write("ok\n")
-    return root, log_dir
+
+    root = cached_fixture("txnconstraints", sf_dir, ":v1", build)
+    return root, os.path.join(root, "_log")
 
 
 @_register("source_txn_log_check_constraints", _ROUNDTRIP_ORACLE)
@@ -3953,14 +3854,7 @@ def _txn_colmap_table(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
 
     from user_feed_cdc_spark.sources.txn_writer import TxnLogWriter
 
-    src_path = os.path.join(sf_dir, "events.parquet")
-    mtime = int(os.path.getmtime(src_path))
-    key = hashlib.md5(
-        f"txncolmap:{sf_dir}:{mtime}:v1".encode()
-    ).hexdigest()[:12]
-    root = _scratch_path("txncolmap", sf_dir, key)
-    log_dir = os.path.join(root, "_log")
-    if not os.path.exists(os.path.join(root, "_BUILT")):
+    def build(root: str) -> None:
         writer = TxnLogWriter(root)
         ev = load_table(spark, sf_dir, "events")
         bucket = F.pmod(F.col("event_id"), F.lit(2))
@@ -4014,9 +3908,9 @@ def _txn_colmap_table(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
         for b in range(2):
             if os.path.getmtime(os.path.join(root, f"h{b}")) != mtimes[b]:
                 raise RuntimeError("rename rewrote a data file")
-        with open(os.path.join(root, "_BUILT"), "w") as f:
-            f.write("ok\n")
-    return root, log_dir
+
+    root = cached_fixture("txncolmap", sf_dir, ":v1", build)
+    return root, os.path.join(root, "_log")
 
 
 def read_txn_log_mapped(spark: SparkSession, root: str) -> DataFrame:
@@ -4087,30 +3981,21 @@ _TXN_PARTVALS_ORACLE = """
 """
 
 
-def _txn_partvals_table(
-    spark: SparkSession, sf_dir: str
-) -> tuple[str, str, list[str]]:
+def _txn_partvals_table(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     """Build (once per (sf, source-mtime, rev)) a LOG-PARTITIONED
     table: one data file per event_type, the partition column DROPPED
     from the parquet (hive/Delta convention — partition values live in
     metadata, not data), each add action carrying
-    partition_values={"event_type": t}. Returns (root, log_dir,
-    sorted types)."""
+    partition_values={"event_type": t}."""
     from user_feed_cdc_spark.sources.txn_writer import TxnLogWriter
 
-    src_path = os.path.join(sf_dir, "events.parquet")
-    mtime = int(os.path.getmtime(src_path))
-    key = hashlib.md5(
-        f"txnpartvals:{sf_dir}:{mtime}:v1".encode()
-    ).hexdigest()[:12]
-    root = _scratch_path("txnpartvals", sf_dir, key)
-    log_dir = os.path.join(root, "_log")
-    ev = load_table(spark, sf_dir, "events")
-    types = sorted(
-        r.event_type for r in ev.select("event_type").distinct().collect()
-    )
-    if not os.path.exists(os.path.join(root, "_BUILT")):
+    def build(root: str) -> None:
         writer = TxnLogWriter(root)
+        ev = load_table(spark, sf_dir, "events")
+        types = sorted(
+            r.event_type
+            for r in ev.select("event_type").distinct().collect()
+        )
         for i, t in enumerate(types):
             part = ev.filter(F.col("event_type") == t).drop("event_type")
             part.write.mode("overwrite").parquet(
@@ -4119,9 +4004,9 @@ def _txn_partvals_table(
             writer.begin().add(
                 f"pt{i}", partition_values={"event_type": t}
             ).commit()
-        with open(os.path.join(root, "_BUILT"), "w") as f:
-            f.write("ok\n")
-    return root, log_dir, types
+
+    root = cached_fixture("txnpartvals", sf_dir, ":v1", build)
+    return root, os.path.join(root, "_log")
 
 
 @_register("source_txn_log_partition_values", _TXN_PARTVALS_ORACLE)
@@ -4143,12 +4028,13 @@ def source_txn_log_partition_values(
     At 100 TB this is the difference between planning from kilobytes
     of JSON and listing millions of objects: partition pruning before
     the first byte of data moves."""
-    root, log_dir, types = _txn_partvals_table(spark, sf_dir)
+    root, _log_dir = _txn_partvals_table(spark, sf_dir)
     from user_feed_cdc_spark.sources.txn_writer import TxnLogWriter
 
-    target = types[0]  # deterministic probe: MIN(event_type)
     w = TxnLogWriter(root)
     adds = w._winning_adds(w.latest_version())
+    # deterministic probe: MIN(event_type), read off the log's adds
+    target = min(a["partition_values"]["event_type"] for a in adds.values())
     survivors = sorted(
         f
         for f, a in adds.items()
@@ -4762,18 +4648,10 @@ def source_txn_log_row_tracking(
     row until a rewrite materializes them; reads stay parquet-native
     (row_index is metadata, not data) — this is why row tracking
     scales where a stored id column would bloat every file."""
-    import uuid
-
     from user_feed_cdc_spark.sources.txn_writer import TxnLogWriter
 
-    src_path = os.path.join(sf_dir, "events.parquet")
-    mtime = int(os.path.getmtime(src_path))
-    key = hashlib.md5(
-        f"rowtrack:{sf_dir}:{mtime}:v1".encode()
-    ).hexdigest()[:12]
-    root = _scratch_path("rowtrack", sf_dir, key)
-    w = TxnLogWriter(root)
-    if not os.path.exists(os.path.join(root, "_BUILT")):
+    def build(root: str) -> None:
+        w = TxnLogWriter(root)
         ev = load_table(spark, sf_dir, "events").select("event_id")
         sizes = {}
         for name, m in (("ra", 0), ("rb", 1)):
@@ -4832,8 +4710,9 @@ def source_txn_log_row_tracking(
         w.begin().add(
             "rd", base_row_id=_row_id_high_water(w), num_records=d.count()
         ).commit()
-        with open(os.path.join(root, "_BUILT"), "w") as f:
-            f.write(uuid.uuid4().hex + "\n")
+
+    root = cached_fixture("rowtrack", sf_dir, ":v1", build)
+    w = TxnLogWriter(root)
     adds = w._winning_adds(w.latest_version())
     frames = []
     for name in w.live_files():
@@ -4910,14 +4789,9 @@ def source_txn_log_generated_columns(
         "cents": "BIGINT(FLOOR(value * 100.0D + 0.5D))",
         "hr": "BIGINT(HOUR(ts))",
     }
-    src_path = os.path.join(sf_dir, "events.parquet")
-    mtime = int(os.path.getmtime(src_path))
-    key = hashlib.md5(
-        f"gencols:{sf_dir}:{mtime}:v1".encode()
-    ).hexdigest()[:12]
-    root = _scratch_path("gencols", sf_dir, key)
-    w = TxnLogWriter(root)
-    if not os.path.exists(os.path.join(root, "_BUILT")):
+
+    def build(root: str) -> None:
+        w = TxnLogWriter(root)
         ev = load_table(spark, sf_dir, "events")
         w.begin().set_metadata(
             "event_id long, ts timestamp, value double, cents long, hr long",
@@ -4943,8 +4817,8 @@ def source_txn_log_generated_columns(
             ),
             "odd",
         )
-        with open(os.path.join(root, "_BUILT"), "w") as f:
-            f.write("ok\n")
+
+    root = cached_fixture("gencols", sf_dir, ":v1", build)
     snap = read_snapshot(spark, root)  # the metaData's declared schema
     return snap.groupBy("hr").agg(
         F.count(F.lit(1)).alias("n"),
@@ -4967,15 +4841,10 @@ def _binaryfile_media_dir(spark: SparkSession, sf_dir: str) -> str:
 
     The files are written by EXECUTORS via foreachPartition (the
     shape a real ingest job has on a shared filesystem: the driver
-    never holds a payload), then the _BUILT marker gates reuse."""
-    src_path = os.path.join(sf_dir, "documents.parquet")
-    mtime = int(os.path.getmtime(src_path))
-    key = hashlib.md5(
-        f"binmedia:{sf_dir}:{mtime}:v2".encode()
-    ).hexdigest()[:12]
-    root = _scratch_path("binmedia", sf_dir, key)
-    media = os.path.join(root, "media")
-    if not os.path.exists(os.path.join(root, "_BUILT")):
+    never holds a payload)."""
+
+    def build(root: str) -> None:
+        media = os.path.join(root, "media")
         # bounded by contract: the certification needs a real
         # multi-hundred-file tree, not an unbounded stress corpus —
         # per-file task overhead in the STREAMING file source is
@@ -5037,9 +4906,11 @@ def _binaryfile_media_dir(spark: SparkSession, sf_dir: str) -> str:
         for decoy in ("README.txt", "b0/thumbs.db", "b1/doc999999.txt"):
             with open(os.path.join(media, decoy), "w") as f:
                 f.write("not media\n")
-        with open(os.path.join(root, "_BUILT"), "w") as f:
-            f.write("ok\n")
-    return media
+
+    root = cached_fixture(
+        "binmedia", sf_dir, ":v2", build, table="documents"
+    )
+    return os.path.join(root, "media")
 
 
 _BINARYFILE_MEDIA_ORACLE = """
@@ -5260,13 +5131,7 @@ def source_json_gzip_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     pass)."""
     import gzip as _gzip
 
-    src_path = os.path.join(sf_dir, "events.parquet")
-    mtime = int(os.path.getmtime(src_path))
-    key = hashlib.md5(
-        f"jsongz:{sf_dir}:{mtime}:v1".encode()
-    ).hexdigest()[:12]
-    path = _scratch_path("events_jsongz", sf_dir, key)
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
+    def build(path: str) -> None:
         (
             load_table(spark, sf_dir, "events")
             .write.mode("overwrite")
@@ -5289,6 +5154,10 @@ def source_json_gzip_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
                     raise ValueError(f"{n} lacks the gzip magic")
             with _gzip.open(os.path.join(path, n), "rb") as f:
                 f.read(64)  # must inflate cleanly
+
+    path = cached_fixture(
+        "events_jsongz", sf_dir, ":v1", build, tag="jsongz"
+    )
     back = (
         spark.read.schema(TABLE_SCHEMAS["events"])
         .option("timestampFormat", _TS_FMT)
@@ -5319,13 +5188,8 @@ def source_json_bzip2_roundtrip(
     parallel splits. The conf tweak is scoped try/finally and the
     split assertion keeps the claim load-bearing instead of
     documentation."""
-    src_path = os.path.join(sf_dir, "events.parquet")
-    mtime = int(os.path.getmtime(src_path))
-    key = hashlib.md5(
-        f"jsonbz2:{sf_dir}:{mtime}:v1".encode()
-    ).hexdigest()[:12]
-    path = _scratch_path("events_jsonbz2", sf_dir, key)
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
+
+    def build(path: str) -> None:
         (
             load_table(spark, sf_dir, "events")
             .coalesce(1)
@@ -5344,6 +5208,10 @@ def source_json_bzip2_roundtrip(
         with open(os.path.join(path, parts[0]), "rb") as f:
             if f.read(3) != b"BZh":
                 raise ValueError(f"{parts[0]} lacks the bzip2 magic")
+
+    path = cached_fixture(
+        "events_jsonbz2", sf_dir, ":v1", build, tag="jsonbz2"
+    )
     conf_key = "spark.sql.files.maxPartitionBytes"
     old = spark.conf.get(conf_key)
     part_file = [
@@ -5415,52 +5283,35 @@ def source_parquet_zstd_roundtrip(
     faster decode than gzip); splittability is parquet's own row-group
     structure — unaffected by the codec — so scan parallelism is
     preserved, unlike the text-codec trade the JSONL entries pin."""
-    src_path = os.path.join(sf_dir, "events.parquet")
-    mtime = int(os.path.getmtime(src_path))
-    key = hashlib.md5(
-        f"pqzstd:{sf_dir}:{mtime}:v1".encode()
-    ).hexdigest()[:12]
-    path = _scratch_path("events_pqzstd", sf_dir, key)
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
+
+    def build(path: str) -> None:
         (
             load_table(spark, sf_dir, "events")
             .write.mode("overwrite")
             .option("compression", "zstd")
             .parquet(path)
         )
-        # verification inside a try that DISCARDS the fixture on
-        # failure (r15 review): Spark lands _SUCCESS before these
-        # checks run, so raising while leaving the dir in place would
-        # let every rerun skip the verification and silently certify
-        # the non-zstd fixture the check exists to refuse
-        try:
-            parts = [
-                n for n in os.listdir(path) if n.startswith("part-")
-            ]
-            if not parts or not all(
-                n.endswith(".zstd.parquet") for n in parts
-            ):
-                raise ValueError(
-                    "zstd parquet write produced wrong suffixes: "
-                    f"{parts[:3]}"
-                )
-            import pyarrow.parquet as pq
+        parts = [n for n in os.listdir(path) if n.startswith("part-")]
+        if not parts or not all(n.endswith(".zstd.parquet") for n in parts):
+            raise ValueError(
+                f"zstd parquet write produced wrong suffixes: {parts[:3]}"
+            )
+        import pyarrow.parquet as pq
 
-            md = pq.ParquetFile(os.path.join(path, parts[0])).metadata
-            codecs = {
-                md.row_group(i).column(j).compression
-                for i in range(md.num_row_groups)
-                for j in range(md.row_group(i).num_columns)
-            }
-            if codecs != {"ZSTD"}:
-                raise ValueError(
-                    f"parquet column chunks are not ZSTD: {sorted(codecs)}"
-                )
-        except BaseException:
-            import shutil
+        md = pq.ParquetFile(os.path.join(path, parts[0])).metadata
+        codecs = {
+            md.row_group(i).column(j).compression
+            for i in range(md.num_row_groups)
+            for j in range(md.row_group(i).num_columns)
+        }
+        if codecs != {"ZSTD"}:
+            raise ValueError(
+                f"parquet column chunks are not ZSTD: {sorted(codecs)}"
+            )
 
-            shutil.rmtree(path, ignore_errors=True)
-            raise
+    path = cached_fixture(
+        "events_pqzstd", sf_dir, ":v1", build, tag="pqzstd"
+    )
     back = spark.read.schema(TABLE_SCHEMAS["events"]).parquet(path)
     return _fidelity_agg(back)
 
@@ -5477,24 +5328,8 @@ def _jsonl_zstd_dir(
     write) — the r15 VERDICT asked for the documented "producer shard
     size sets parallelism" contract to be a tested fact, and the
     plan gate reads an N-shard build of this fixture."""
-    src_path = os.path.join(sf_dir, "events.parquet")
-    mtime = int(os.path.getmtime(src_path))
-    key = hashlib.md5(
-        f"jsonzstd:{sf_dir}:{mtime}:s{shards}:v1".encode()
-    ).hexdigest()[:12]
-    tag = "events_jsonzstd" if shards is None else (
-        f"events_jsonzstd{shards}"
-    )
-    root = _scratch_path(tag, sf_dir, key)
-    if not os.path.exists(os.path.join(root, "_BUILT")):
-        # idempotent rebuild (r15 review): an interrupted build leaves
-        # uuid-named partial shards that a blind rerun would APPEND a
-        # full second set alongside — unlike the parquet builders'
-        # mode("overwrite"), executor-side shard writes need an
-        # explicit clean slate
-        import shutil
 
-        shutil.rmtree(root, ignore_errors=True)
+    def build(root: str) -> None:
         lines = load_table(spark, sf_dir, "events").select(
             F.to_json(
                 F.struct("*"), {"timestampFormat": _TS_FMT}
@@ -5523,17 +5358,21 @@ def _jsonl_zstd_dir(
                     out.write(row["value"].encode() + b"\n")
 
         lines.foreachPartition(write_shards)
-        shards = [n for n in os.listdir(root) if n.endswith(".jsonl.zst")]
-        if not shards:
+        written = [n for n in os.listdir(root) if n.endswith(".jsonl.zst")]
+        if not written:
             raise ValueError("zstd JSONL write produced no shards")
-        with open(os.path.join(root, shards[0]), "rb") as f:
+        with open(os.path.join(root, written[0]), "rb") as f:
             if f.read(4) != _ZSTD_MAGIC:
                 raise ValueError(
-                    f"{shards[0]} lacks the zstd frame magic"
+                    f"{written[0]} lacks the zstd frame magic"
                 )
-        with open(os.path.join(root, "_BUILT"), "w") as f:
-            f.write("ok\n")
-    return root
+
+    prefix = "events_jsonzstd" if shards is None else (
+        f"events_jsonzstd{shards}"
+    )
+    return cached_fixture(
+        prefix, sf_dir, f":s{shards}:v1", build, tag="jsonzstd"
+    )
 
 
 @_register("source_json_zstd_roundtrip", _ROUNDTRIP_ORACLE)
@@ -5637,18 +5476,8 @@ def _avro_dir(spark: SparkSession, sf_dir: str) -> str:
     Timestamps are converted to exact microsecond longs JVM-side
     (unix_micros) BEFORE the Python writer sees them, so no float
     datetime math can shave a microsecond."""
-    src_path = os.path.join(sf_dir, "events.parquet")
-    mtime = int(os.path.getmtime(src_path))
-    key = hashlib.md5(
-        f"avro:{sf_dir}:{mtime}:v2".encode()
-    ).hexdigest()[:12]
-    root = _scratch_path("events_avro", sf_dir, key)
-    if not os.path.exists(os.path.join(root, "_BUILT")):
-        # clean slate (r15 review): an interrupted build's uuid-named
-        # partial shards must not survive into the rebuild
-        import shutil
 
-        shutil.rmtree(root, ignore_errors=True)
+    def build(root: str) -> None:
         cols = load_table(spark, sf_dir, "events").select(
             "event_id",
             F.unix_micros("ts").alias("ts"),
@@ -5696,9 +5525,8 @@ def _avro_dir(spark: SparkSession, sf_dir: str) -> str:
         with open(os.path.join(root, shards[0]), "rb") as f:
             if f.read(4) != b"Obj\x01":
                 raise ValueError(f"{shards[0]} lacks the Avro magic")
-        with open(os.path.join(root, "_BUILT"), "w") as f:
-            f.write("ok\n")
-    return root
+
+    return cached_fixture("events_avro", sf_dir, ":v2", build, tag="avro")
 
 
 def _avro_decode_batches(batches):
@@ -5815,14 +5643,7 @@ def _txn_multipart_table(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
 
     from user_feed_cdc_spark.sources.txn_writer import TxnLogWriter
 
-    src_path = os.path.join(sf_dir, "events.parquet")
-    mtime = int(os.path.getmtime(src_path))
-    key = hashlib.md5(
-        f"txnmultipart:{sf_dir}:{mtime}:v1".encode()
-    ).hexdigest()[:12]
-    root = _scratch_path("txnmultipart", sf_dir, key)
-    log_dir = os.path.join(root, "_log")
-    if not os.path.exists(os.path.join(root, "_BUILT")):
+    def build(root: str) -> None:
         w = TxnLogWriter(root)
         ev = load_table(spark, sf_dir, "events")
         for b in range(6):
@@ -5835,9 +5656,9 @@ def _txn_multipart_table(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
         # prune history: pass an explicit aged now so the orphan
         # age-gate math can't defer; the removed f5 dir goes too
         w.vacuum(retain_ms=0, now_ms=int(_time.time() * 1000))
-        with open(os.path.join(root, "_BUILT"), "w") as f:
-            f.write("ok\n")
-    return root, log_dir
+
+    root = cached_fixture("txnmultipart", sf_dir, ":v1", build)
+    return root, os.path.join(root, "_log")
 
 
 @_register("source_txn_log_multipart_checkpoint", _MULTIPART_CKPT_ORACLE)
@@ -5903,13 +5724,7 @@ def _txn_hidden_part_table(spark: SparkSession, sf_dir: str) -> str:
     predicates."""
     from user_feed_cdc_spark.sources.txn_writer import TxnLogWriter
 
-    src_path = os.path.join(sf_dir, "events.parquet")
-    mtime = int(os.path.getmtime(src_path))
-    key = hashlib.md5(
-        f"txnhidden:{sf_dir}:{mtime}:v1".encode()
-    ).hexdigest()[:12]
-    root = _scratch_path("txnhidden", sf_dir, key)
-    if not os.path.exists(os.path.join(root, "_BUILT")):
+    def build(root: str) -> None:
         w = TxnLogWriter(root)
         ev = load_table(spark, sf_dir, "events")
         days = [
@@ -5927,9 +5742,8 @@ def _txn_hidden_part_table(spark: SparkSession, sf_dir: str) -> str:
             ).parquet(os.path.join(root, name))
             txn.add(name, partition_values={"ts_day": d})
         txn.commit()
-        with open(os.path.join(root, "_BUILT"), "w") as f:
-            f.write("ok\n")
-    return root
+
+    return cached_fixture("txnhidden", sf_dir, ":v1", build)
 
 
 @_register("source_txn_log_hidden_partitioning", _HIDDEN_PART_ORACLE)
@@ -6050,13 +5864,7 @@ def _txn_string_stats_table(spark: SparkSession, sf_dir: str) -> str:
     max through _truncated_upper_bound."""
     from user_feed_cdc_spark.sources.txn_writer import TxnLogWriter
 
-    src_path = os.path.join(sf_dir, "documents.parquet")
-    mtime = int(os.path.getmtime(src_path))
-    key = hashlib.md5(
-        f"txnstrstats:{sf_dir}:{mtime}:v1".encode()
-    ).hexdigest()[:12]
-    root = _scratch_path("txnstrstats", sf_dir, key)
-    if not os.path.exists(os.path.join(root, "_BUILT")):
+    def build(root: str) -> None:
         w = TxnLogWriter(root)
         docs = load_table(spark, sf_dir, "documents")
         txn = w.begin()
@@ -6074,9 +5882,10 @@ def _txn_string_stats_table(spark: SparkSession, sf_dir: str) -> str:
                 stats["max_text"] = ub
             txn.add(f"b{b}", **stats)
         txn.commit()
-        with open(os.path.join(root, "_BUILT"), "w") as f:
-            f.write("ok\n")
-    return root
+
+    return cached_fixture(
+        "txnstrstats", sf_dir, ":v1", build, table="documents"
+    )
 
 
 @_register("source_txn_log_string_stats_pruning", _STRING_STATS_ORACLE)
@@ -6241,14 +6050,8 @@ def _identity_table(spark: SparkSession, sf_dir: str) -> DataFrame:
         append_with_identity,
     )
 
-    src_path = os.path.join(sf_dir, "events.parquet")
-    mtime = int(os.path.getmtime(src_path))
-    key = hashlib.md5(
-        f"txnidentity:{sf_dir}:{mtime}:v1".encode()
-    ).hexdigest()[:12]
-    root = _scratch_path("txnidentity", sf_dir, key)
-    w = TxnLogWriter(root)
-    if not os.path.exists(os.path.join(root, "_BUILT")):
+    def build(root: str) -> None:
+        w = TxnLogWriter(root)
         ev = load_table(spark, sf_dir, "events").select(
             "event_id", "event_type", "value"
         )
@@ -6276,8 +6079,8 @@ def _identity_table(spark: SparkSession, sf_dir: str) -> DataFrame:
         append_with_identity(w, ev.filter(bucket == 1), "p1")  # v2
         w.begin().remove("p1").commit()  # v3 — ids 'burned', never reused
         append_with_identity(w, ev.filter(bucket == 2), "p2")  # v4
-        with open(os.path.join(root, "_BUILT"), "w") as f:
-            f.write("ok\n")
+
+    root = cached_fixture("txnidentity", sf_dir, ":v1", build)
     return read_snapshot(spark, root)  # the metaData's declared schema
 
 
@@ -6428,16 +6231,8 @@ def _avro_nested_dir(spark: SparkSession, sf_dir: str) -> str:
     {h: hour, m: minute}; lsn = event_id; ts_ms = micros DIV 1000.
     hour/minute/unix_micros are computed JVM-side BEFORE the Python
     writer sees them (same no-float-datetime rule as _avro_dir)."""
-    src_path = os.path.join(sf_dir, "events.parquet")
-    mtime = int(os.path.getmtime(src_path))
-    key = hashlib.md5(
-        f"avronested:{sf_dir}:{mtime}:v2".encode()
-    ).hexdigest()[:12]
-    root = _scratch_path("events_avro_nested", sf_dir, key)
-    if not os.path.exists(os.path.join(root, "_BUILT")):
-        import shutil
 
-        shutil.rmtree(root, ignore_errors=True)
+    def build(root: str) -> None:
         cols = load_table(spark, sf_dir, "events").select(
             "event_id",
             F.unix_micros("ts").alias("ts_us"),
@@ -6505,9 +6300,10 @@ def _avro_nested_dir(spark: SparkSession, sf_dir: str) -> str:
         shards = [n for n in os.listdir(root) if n.endswith(".avro")]
         if not shards:
             raise ValueError("nested avro write produced no shards")
-        with open(os.path.join(root, "_BUILT"), "w") as f:
-            f.write("ok\n")
-    return root
+
+    return cached_fixture(
+        "events_avro_nested", sf_dir, ":v2", build, tag="avronested"
+    )
 
 
 def _avro_nested_decode_batches(batches):
