@@ -3512,7 +3512,7 @@ def test_txn_stream_source_refuses_change_commits(spark, sf_dir, tmp_path):
 
     from user_feed_cdc_spark.sources.formats import _txn_stream_table
 
-    root, log_dir, _total = _txn_stream_table(spark, sf_dir)
+    root, log_dir = _txn_stream_table(spark, sf_dir)
     root2 = str(tmp_path / "txnstream_copy")
     shutil.copytree(root, root2)
     log2 = os.path.join(root2, "_log")
@@ -3630,7 +3630,7 @@ def test_txn_stream_commit_batches_match_tuple_reference(spark, sf_dir):
         _txn_stream_table,
     )
 
-    root, log_dir, _total = _txn_stream_table(spark, sf_dir)
+    root, log_dir = _txn_stream_table(spark, sf_dir)
     memo_b: dict = {}
     memo_r: dict = {}
     for v in range(5):

@@ -714,8 +714,6 @@ def source_python_stream_datasource(spark: SparkSession, sf_dir: str) -> DataFra
     feed ingestion rung (internal queue, paginated API): offsets make
     restarts exact, and the per-batch read runs on executors like any
     source scan."""
-    import time
-
     from pyspark.sql.datasource import (
         DataSource,
         SimpleDataSourceStreamReader,
@@ -2152,14 +2150,12 @@ def _await_stream_offset(q, key: str, target: int, deadline_s: float = 120.0):
         _time.sleep(0.02)
 
 
-def _txn_stream_table(spark: SparkSession, sf_dir: str) -> tuple[str, str, int]:
+def _txn_stream_table(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     """Build (once per (sf, source-mtime, rev)) an APPEND-ONLY table
     the committer wrote in five commits (pmod 5 buckets of the 5%
     event_id%20==0 slice — small enough to stream through the
     driver-side simple offset protocol at any sf). Returns
-    (root, log_dir, total_rows)."""
-    import json
-
+    (root, log_dir)."""
     from user_feed_cdc_spark.sources.txn_writer import TxnLogWriter
 
     def build(root: str) -> None:
@@ -2167,9 +2163,8 @@ def _txn_stream_table(spark: SparkSession, sf_dir: str) -> tuple[str, str, int]:
         ev = (
             load_table(spark, sf_dir, "events")
             .filter(F.col("event_id") % 20 == 0)
-            .persist()  # one scan serves the count and all five writes
+            .persist()  # one scan serves all five writes
         )
-        total = ev.count()
         # bucket on event_id/20: the slice is exactly the multiples of
         # 20, so pmod(event_id, 5) would be constantly ZERO — all rows
         # in commit 0 and four empty commits, a vacuous five-batch
@@ -2181,13 +2176,9 @@ def _txn_stream_table(spark: SparkSession, sf_dir: str) -> tuple[str, str, int]:
             )
             writer.begin().add(f"a{b}").commit()
         ev.unpersist()
-        with open(os.path.join(root, "_META"), "w") as f:
-            f.write(json.dumps({"total": int(total)}) + "\n")
 
     root = cached_fixture("txnstream", sf_dir, ":v3", build)
-    with open(os.path.join(root, "_META")) as f:
-        total = json.loads(f.readline())["total"]
-    return root, os.path.join(root, "_log"), total
+    return root, os.path.join(root, "_log")
 
 
 def _txn_stream_file_table(root: str, file: str, memo: dict | None = None):
@@ -2647,14 +2638,12 @@ def streaming_txn_source_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     plan each batch, and the real-cluster form reads the added files
     executor-side like any scan (the Simple reader trades that for
     protocol clarity at fixture scale)."""
-    import time
-
     from pyspark.sql.datasource import (
         DataSource,
         SimpleDataSourceStreamReader,
     )
 
-    root, log_dir, total = _txn_stream_table(spark, sf_dir)
+    root, log_dir = _txn_stream_table(spark, sf_dir)
 
     memo: dict = {}  # per-invocation file cache (see _txn_stream_file_table)
 
@@ -3299,8 +3288,6 @@ def streaming_txn_cdf_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     is bounded by that commit's touched files (the executor-side form
     maps the same per-commit diff onto partitioned anti-joins, exactly
     what the batch table_changes already does in Spark)."""
-    import time
-
     from pyspark.sql.datasource import (
         DataSource,
         SimpleDataSourceStreamReader,
@@ -3408,7 +3395,6 @@ def streaming_txn_source_exec_live(
     batch replans from the same offsets because planning is a pure
     function of the log."""
     import json as _json
-    import time
 
     from pyspark.sql.datasource import (
         DataSource,
@@ -3416,7 +3402,7 @@ def streaming_txn_source_exec_live(
         InputPartition,
     )
 
-    root, log_dir, total = _txn_stream_table(spark, sf_dir)
+    root, log_dir = _txn_stream_table(spark, sf_dir)
     latest = max(
         int(n.split(".")[0])
         for n in os.listdir(log_dir)
@@ -3746,8 +3732,6 @@ def _txn_constraints_table(
     (event_type IS NOT NULL — passes, v4) and a constraint the data
     already violates (event_id > min) is refused with the table's
     constraint set unchanged."""
-    import json as _json
-
     from user_feed_cdc_spark.sources.txn_writer import (
         ConstraintViolation,
         TxnLogWriter,
