@@ -3538,6 +3538,88 @@ def test_txn_stream_source_refuses_change_commits(spark, sf_dir, tmp_path):
     assert all(n > 0 for n in per_commit), per_commit
 
 
+def test_txn_stream_planners_share_the_append_only_refusal(
+    spark, sf_dir, tmp_path
+):
+    """Every append-only planner of the txn-log stream refuses a commit
+    that removes a file: the tuple rows, the Arrow batches, and the
+    executor-side reader's driver planning (partitions) — each plans
+    the clean commits before it as usual."""
+    import json
+    import os
+    import shutil
+
+    import pytest
+
+    from user_feed_cdc_spark.sources.formats import (
+        _txn_exec_stream_source,
+        _txn_stream_commit_batches,
+        _txn_stream_commit_rows,
+        _txn_stream_table,
+    )
+
+    root, _log_dir = _txn_stream_table(spark, sf_dir)
+    root2 = str(tmp_path / "txnstream_copy")
+    shutil.copytree(root, root2)
+    log2 = os.path.join(root2, "_log")
+    with open(os.path.join(log2, "00005.json"), "w") as f:
+        f.write(json.dumps(
+            {"version": 5, "action": "remove", "file": "a0"}) + "\n")
+        f.write(json.dumps(
+            {"version": 5, "action": "add", "file": "a0r"}) + "\n")
+
+    assert _txn_stream_commit_rows(root2, log2, 4)
+    assert _txn_stream_commit_batches(root2, log2, 4)
+    reader = _txn_exec_stream_source(root2, 5)({}).streamReader(None)
+    parts = reader.partitions({"v": -1}, {"v": 4})
+    assert sorted(p.value for p in parts) == [f"a{b}" for b in range(5)]
+    for plan in (
+        lambda: _txn_stream_commit_rows(root2, log2, 5),
+        lambda: _txn_stream_commit_batches(root2, log2, 5),
+        lambda: reader.partitions({"v": 4}, {"v": 5}),
+    ):
+        with pytest.raises(ValueError, match="not append-only"):
+            plan()
+
+
+def test_commit_file_format_stays_in_txn_writer():
+    """The commit file's name and the version listing of `_log` belong
+    to TxnLogWriter alone: no other module builds a `{v:05d}.json`
+    name or parses a version out of a log listing
+    (`int(name.split(".")[0])`) — they read commits through
+    TxnLogWriter.commit_actions and the head through latest_version."""
+    import ast
+    from pathlib import Path
+
+    pkg = Path(__file__).resolve().parents[1] / "user_feed_cdc_spark"
+    offenders = []
+    for path in sorted(pkg.rglob("*.py")):
+        if path.name == "txn_writer.py":
+            continue
+        for node in ast.walk(ast.parse(path.read_text())):
+            if isinstance(node, ast.JoinedStr):
+                parts = node.values
+                for fv, nxt in zip(parts, parts[1:]):
+                    if (
+                        isinstance(fv, ast.FormattedValue)
+                        and fv.format_spec is not None
+                        and ast.unparse(fv.format_spec) == "f'05d'"
+                        and isinstance(nxt, ast.Constant)
+                        and nxt.value.split(".")[1:2] == ["json"]
+                    ):
+                        offenders.append(f"{path.name}:{node.lineno}")
+            elif (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Name)
+                and node.func.id == "int"
+                and node.args
+                and isinstance(node.args[0], ast.Subscript)
+                and ast.unparse(node.args[0]).endswith(".split('.')[0]")
+            ):
+                offenders.append(f"{path.name}:{node.lineno}")
+    assert not offenders, offenders
+
+
 def test_txn_stream_cdf_mode(spark, sf_dir):
     """The streaming source's opt-in CDF mode (r11 VERDICT item 3) —
     the refuse-on-remove contract relaxed into change emission: over
@@ -3815,6 +3897,46 @@ def test_fan_out_estimate_matches_rdd_probe(spark, sf_dir):
         _scan_partition_estimate(spark.createDataFrame([(1,)], "a int"))
         is None
     )
+
+
+def test_fan_out_estimate_respects_partition_pruning(spark, tmp_path):
+    """inputFiles() ignores partition pruning, so on a table partitioned
+    by `p` a filter on `p` kept the full-table file count: 8 partitions
+    estimated where the pruned scan has 1, and fan_out skipped the
+    repartition it needed. A partitioned relation must take the RDD
+    probe."""
+    from pyspark.sql import functions as F
+
+    from user_feed_cdc_spark.sources.tables import (
+        _scan_partition_estimate,
+        fan_out,
+    )
+
+    path = str(tmp_path / "by_p")
+    (
+        spark.range(200_000)
+        .withColumn("p", F.col("id") % 8)
+        .repartition(1)
+        .write.partitionBy("p")
+        .parquet(path)
+    )
+    key = "spark.sql.files.maxPartitionBytes"
+    prev = spark.conf.get(key, None)
+    try:
+        spark.conf.set(key, "1m")
+        full = spark.read.parquet(path)
+        pruned = full.filter(F.col("p") == 3)
+        for df in (full, pruned):
+            est = _scan_partition_estimate(df)
+            assert est in (None, df.rdd.getNumPartitions())
+        n = pruned.rdd.getNumPartitions()
+        assert n < full.rdd.getNumPartitions()
+        assert fan_out(pruned, min_parallelism=n + 1) is not pruned
+    finally:
+        if prev is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prev)
 
 
 def test_fan_out_estimate_survives_unusual_size_confs(

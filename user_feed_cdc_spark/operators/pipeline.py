@@ -1735,8 +1735,6 @@ def pipeline_data_card(spark: SparkSession, sf_dir: str) -> DataFrame:
     and two partial-agged rollups — the cheap always-on summary the
     profiling (pipeline_profile_columns) and quality
     (pipeline_quality_checks) passes sit beneath."""
-    from user_feed_cdc_spark.functions.numeric import round_half_up as r2
-
     docs = load_table(spark, sf_dir, "documents")
     base = docs.select(
         "doc_id",

@@ -42,7 +42,7 @@ import fcntl
 import hashlib
 import os
 import shutil
-from typing import Callable
+from typing import TYPE_CHECKING, Callable, NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -50,6 +50,9 @@ from pyspark.sql import functions as F
 from user_feed_cdc_spark.registry import registry
 from user_feed_cdc_spark.schemas import TABLE_SCHEMAS
 from user_feed_cdc_spark.sources.tables import load_table
+
+if TYPE_CHECKING:
+    from user_feed_cdc_spark.sources.txn_writer import TxnLogWriter
 
 QUERIES, ORACLES, _register = registry()
 
@@ -743,25 +746,15 @@ def source_python_stream_datasource(spark: SparkSession, sf_dir: str) -> DataFra
             return RangeStreamReader()
 
     spark.dataSource.register(RangeStream)
-    sink = "source_python_stream_sink"
-    q = (
-        spark.readStream.format("bounded_range_stream")
-        .load()
-        .writeStream.format("memory")
-        .queryName(sink)
-        .trigger(processingTime="0 seconds")
-        .start()
+    back = _drain_to_memory(
+        spark,
+        "bounded_range_stream",
+        "source_python_stream_sink",
+        "pos",
+        _STREAM_N,
     )
-    try:
-        _await_stream_offset(q, "pos", _STREAM_N)
-    finally:
-        q.stop()
-        q.awaitTermination(30)
-    return (
-        spark.table(sink)
-        .coalesce(1)  # driver-resident memory sink: no fan-out agg
-        .groupBy((F.col("v") % 8).alias("bucket"))
-        .agg(F.count(F.lit(1)).alias("n"), F.sum("v").alias("v_sum"))
+    return back.groupBy((F.col("v") % 8).alias("bucket")).agg(
+        F.count(F.lit(1)).alias("n"), F.sum("v").alias("v_sum")
     )
 
 
@@ -2150,6 +2143,89 @@ def _await_stream_offset(q, key: str, target: int, deadline_s: float = 120.0):
         _time.sleep(0.02)
 
 
+def _drain_to_memory(
+    spark: SparkSession, fmt: str, sink: str, key: str, target: int
+) -> DataFrame:
+    """Run the registered stream source `fmt` into the memory sink
+    `sink` on a processingTime trigger until its last completed batch
+    has read through offset {key: target}, stop the query, and return
+    the sink's rows in one partition (driver-resident memory sink: no
+    fan-out agg)."""
+    q = (
+        spark.readStream.format(fmt)
+        .load()
+        .writeStream.format("memory")
+        .queryName(sink)
+        .trigger(processingTime="0 seconds")
+        .start()
+    )
+    try:
+        _await_stream_offset(q, key, target)
+    finally:
+        q.stop()
+        q.awaitTermination(30)
+    return spark.table(sink).coalesce(1)
+
+
+def _register_version_stream(
+    spark: SparkSession,
+    fmt: str,
+    schema: str,
+    start: int,
+    latest: int,
+    batch_of: Callable[[int], list],
+) -> None:
+    """Register a Python streaming source `fmt` whose OFFSETS ARE LOG
+    VERSIONS ({"v": n}): it starts after version `start`, each read
+    advances one commit by serving `batch_of(v)` (the commit's rows or
+    Arrow batches) until `latest`, then idles at the head;
+    readBetweenOffsets replays a committed version range exactly after
+    a failure. The Simple offset protocol plans and reads on the
+    driver — the documented trade at fixture scale."""
+    from pyspark.sql.datasource import (
+        DataSource,
+        SimpleDataSourceStreamReader,
+    )
+
+    class VersionStreamReader(SimpleDataSourceStreamReader):
+        def initialOffset(self):
+            return {"v": start}
+
+        def read(self, offset):
+            v = offset["v"]
+            if v >= latest:
+                return (iter([]), {"v": v})  # steady state: no new commit
+            return (iter(batch_of(v + 1)), {"v": v + 1})
+
+        def readBetweenOffsets(self, lo, hi):
+            batches: list = []
+            for v in range(lo["v"] + 1, hi["v"] + 1):
+                batches.extend(batch_of(v))
+            return iter(batches)
+
+    class VersionStream(DataSource):
+        @classmethod
+        def name(cls):
+            return fmt
+
+        def schema(self):
+            return schema
+
+        def simpleStreamReader(self, schema):
+            return VersionStreamReader()
+
+    spark.dataSource.register(VersionStream)
+
+
+_TXN_STREAM_SCHEMA = (
+    "event_id long, ts_us long, user_id long, "
+    "event_type string, value double, props string"
+)
+_TXN_CDF_STREAM_SCHEMA = (
+    "change_type string, commit_version long, " + _TXN_STREAM_SCHEMA
+)
+
+
 def _txn_stream_table(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     """Build (once per (sf, source-mtime, rev)) an APPEND-ONLY table
     the committer wrote in five commits (pmod 5 buckets of the 5%
@@ -2242,6 +2318,84 @@ def _txn_stream_file_rows(
     return rows
 
 
+class _TxnCommitPlan(NamedTuple):
+    """What one commit contributes to a txn-log stream: the data files
+    it adds and removes (dataChange=false rewrites drop out in 'cdf'
+    mode) and its dv actions as (file, sidecar) pairs."""
+
+    writer: TxnLogWriter
+    version: int
+    adds: list[str]
+    removes: list[str]
+    dvs: list[tuple[str, str]]
+
+    def prev_dv(self, file: str) -> str | None:
+        """`file`'s newest dv sidecar BEFORE this commit, by a
+        log-only backward walk (stateless, so failure replay via
+        readBetweenOffsets stays exact); None when it had none. A
+        commit the walk needs that was vacuumed REFUSES — the delta
+        would otherwise be computed against a guessed base."""
+        for v in range(self.version - 1, -1, -1):
+            try:
+                older = self.writer.commit_actions(v)
+            except FileNotFoundError:
+                raise ValueError(
+                    f"commit v{v} needed to resolve v{self.version}'s dv "
+                    "delta was vacuumed"
+                ) from None
+            hit = [
+                x["dv"]
+                for x in older
+                if x["action"] == "dv" and x["file"] == file
+            ]
+            if hit:
+                return hit[-1]
+        return None
+
+
+def _txn_commit_plan(
+    root: str, version: int, mode: str = "append_only"
+) -> _TxnCommitPlan:
+    """Plan one commit of the table at `root` for a stream or change
+    feed — the parse, refusal and file lists every txn-log streaming
+    planner shares (tuple rows, Arrow batches, the executor-side
+    reader's partitions, table_changes).
+
+    * mode='append_only': REFUSE a commit carrying a remove (the
+      skipChangeCommits contract: silently streaming past a compaction
+      would replay rewritten rows); `adds` is every added file.
+    * mode='cdf': every commit is legal; `adds`/`removes` keep only
+      dataChange=true actions, so an OPTIMIZE plans to nothing.
+
+    Raises FileNotFoundError when the commit file is gone."""
+    from user_feed_cdc_spark.sources.txn_writer import TxnLogWriter
+
+    writer = TxnLogWriter(root)
+    actions = writer.commit_actions(version)
+    if mode == "append_only":
+        if any(a["action"] == "remove" for a in actions):
+            raise ValueError(
+                f"commit v{version} is not append-only; streaming past "
+                "a change commit would replay rewritten rows "
+                "(opt into mode='cdf' to stream changes instead)"
+            )
+        adds = [a["file"] for a in actions if a["action"] == "add"]
+        return _TxnCommitPlan(writer, version, adds, [], [])
+    assert mode == "cdf", mode
+
+    def changed(kind: str) -> list[str]:
+        return [
+            a["file"]
+            for a in actions
+            if a["action"] == kind and a.get("dataChange", True)
+        ]
+
+    dvs = [(a["file"], a["dv"]) for a in actions if a["action"] == "dv"]
+    return _TxnCommitPlan(
+        writer, version, changed("add"), changed("remove"), dvs
+    )
+
+
 def _txn_stream_commit_rows(
     root: str,
     log_dir: str,
@@ -2249,13 +2403,12 @@ def _txn_stream_commit_rows(
     mode: str = "append_only",
     memo: dict | None = None,
 ) -> list[tuple]:
-    """One streaming micro-batch = one commit, two contracts:
+    """One streaming micro-batch = one commit, two contracts (planned
+    by _txn_commit_plan; `log_dir` is `root`'s `_log`):
 
-    * mode='append_only' (default): REFUSE non-append commits (remove
-      actions — the skipChangeCommits contract: silently streaming
-      past a compaction would replay rewritten rows); emit the added
-      files' rows as (event_id, ts_us, user_id, event_type, value,
-      props).
+    * mode='append_only' (default): REFUSE non-append commits; emit
+      the added files' rows as (event_id, ts_us, user_id, event_type,
+      value, props).
     * mode='cdf' (opt-in, r11 VERDICT item 3): every commit is legal;
       emit (change_type, commit_version, <row>) — the streaming form
       of table_changes. dataChange=false commits (OPTIMIZE) emit
@@ -2264,45 +2417,22 @@ def _txn_stream_commit_rows(
       both sides with CHANGED content emit an update_preimage/
       update_postimage pair, content-equal carried rows stay silent);
       a dv action emits its sidecar's delta over the file's previous
-      winning dv (found by a log-only walk of earlier commits —
-      stateless, so failure replay via readBetweenOffsets stays
-      exact).
+      winning dv (_TxnCommitPlan.prev_dv).
 
     All reads are driver-side pyarrow — the Simple offset protocol's
     documented trade; the executor-side form maps the same per-commit
     plan onto a partitioned scan."""
-    import json
-
-    with open(os.path.join(log_dir, f"{version:05d}.json")) as f:
-        actions = [json.loads(line) for line in f if line.strip()]
+    plan = _txn_commit_plan(root, version, mode)
     if mode == "append_only":
-        bad = [a for a in actions if a["action"] == "remove"]
-        if bad:
-            raise ValueError(
-                f"commit v{version} is not append-only; streaming past "
-                "a change commit would replay rewritten rows "
-                "(opt into mode='cdf' to stream changes instead)"
-            )
-        rows: list[tuple] = []
-        for a in actions:
-            if a["action"] == "add":
-                rows.extend(_txn_stream_file_rows(root, a["file"], memo))
-        return rows
+        return [
+            r for f in plan.adds for r in _txn_stream_file_rows(root, f, memo)
+        ]
 
-    assert mode == "cdf", mode
-    adds = [
-        a["file"]
-        for a in actions
-        if a["action"] == "add" and a.get("dataChange", True)
+    added = [
+        r for f in plan.adds for r in _txn_stream_file_rows(root, f, memo)
     ]
-    removes = [
-        a["file"]
-        for a in actions
-        if a["action"] == "remove" and a.get("dataChange", True)
-    ]
-    added = [r for f in adds for r in _txn_stream_file_rows(root, f, memo)]
     removed = [
-        r for f in removes for r in _txn_stream_file_rows(root, f, memo)
+        r for f in plan.removes for r in _txn_stream_file_rows(root, f, memo)
     ]
     added_ids = {r[0] for r in added}
     removed_by_id = {r[0]: r for r in removed}
@@ -2318,44 +2448,23 @@ def _txn_stream_commit_rows(
         if old is not None and old != r:  # changed content = update pair
             out.append(("update_preimage", version, *old))
             out.append(("update_postimage", version, *r))
-    for a in actions:
-        if a["action"] != "dv":
-            continue
-        prev = None
-        for v in range(version - 1, -1, -1):
-            p = os.path.join(log_dir, f"{v:05d}.json")
-            if not os.path.exists(p):
-                raise ValueError(
-                    f"commit v{v} needed to resolve v{version}'s dv "
-                    "delta was vacuumed"
-                )
-            with open(p) as f:
-                older = [json.loads(line) for line in f if line.strip()]
-            hit = [
-                x
-                for x in older
-                if x.get("action") == "dv" and x["file"] == a["file"]
-            ]
-            if hit:
-                prev = hit[-1]["dv"]
-                break
-        import pyarrow.parquet as pq
+    import pyarrow.parquet as pq
 
-        def _dv_ids(name: str) -> set:
-            return set(
-                pq.read_table(
-                    os.path.join(root, name), columns=["event_id"]
-                )
-                .column("event_id")
-                .to_pylist()
-            )
+    def _dv_ids(name: str) -> set:
+        return set(
+            pq.read_table(os.path.join(root, name), columns=["event_id"])
+            .column("event_id")
+            .to_pylist()
+        )
 
-        new_ids = _dv_ids(a["dv"])
+    for file, dv in plan.dvs:
+        prev = plan.prev_dv(file)
+        new_ids = _dv_ids(dv)
         if prev is not None:
             new_ids -= _dv_ids(prev)
         out.extend(
             ("delete", version, *r)
-            for r in _txn_stream_file_rows(root, a["file"], memo)
+            for r in _txn_stream_file_rows(root, file, memo)
             if r[0] in new_ids
         )
     return out
@@ -2399,29 +2508,16 @@ def _txn_stream_commit_batches(
     (event_id, commit_version), never by adjacency within a
     micro-batch; every certified consumer here aggregates and is
     order-insensitive."""
-    import json
-
     import pyarrow as pa
 
-    with open(os.path.join(log_dir, f"{version:05d}.json")) as f:
-        actions = [json.loads(line) for line in f if line.strip()]
+    plan = _txn_commit_plan(root, version, mode)
     if mode == "append_only":
-        bad = [a for a in actions if a["action"] == "remove"]
-        if bad:
-            raise ValueError(
-                f"commit v{version} is not append-only; streaming past "
-                "a change commit would replay rewritten rows "
-                "(opt into mode='cdf' to stream changes instead)"
-            )
-        batches: list = []
-        for a in actions:
-            if a["action"] == "add":
-                batches.extend(
-                    _txn_stream_file_table(root, a["file"], memo).to_batches()
-                )
-        return batches
+        return [
+            b
+            for f in plan.adds
+            for b in _txn_stream_file_table(root, f, memo).to_batches()
+        ]
 
-    assert mode == "cdf", mode
     import pyarrow.compute as pc
 
     def _cdf_cols(t, change_type: str):
@@ -2432,17 +2528,7 @@ def _txn_stream_commit_batches(
             1, "commit_version", pa.array([version] * n, pa.int64())
         )
 
-    adds = [
-        a["file"]
-        for a in actions
-        if a["action"] == "add" and a.get("dataChange", True)
-    ]
-    removes = [
-        a["file"]
-        for a in actions
-        if a["action"] == "remove" and a.get("dataChange", True)
-    ]
-    dvs = [a for a in actions if a["action"] == "dv"]
+    adds, removes, dvs = plan.adds, plan.removes, plan.dvs
     if not removes and not dvs:
         # pure-insert commit (or a dataChange=false rewrite, which emits
         # nothing): prepend the two constant CDF columns to the Arrow
@@ -2518,31 +2604,11 @@ def _txn_stream_commit_batches(
     # any fallback decision).
     dv_plans: list = []
     dv_vec_ok = True
-    for a in dvs:
-        # find the file's previous winning dv (log-only walk —
-        # stateless, so failure replay via readBetweenOffsets stays
-        # exact)
-        prev = None
-        for v in range(version - 1, -1, -1):
-            p = os.path.join(log_dir, f"{v:05d}.json")
-            if not os.path.exists(p):
-                raise ValueError(
-                    f"commit v{v} needed to resolve v{version}'s dv "
-                    "delta was vacuumed"
-                )
-            with open(p) as f:
-                older = [json.loads(line) for line in f if line.strip()]
-            hit = [
-                x
-                for x in older
-                if x.get("action") == "dv" and x["file"] == a["file"]
-            ]
-            if hit:
-                prev = hit[-1]["dv"]
-                break
-        new_arr = _dv_id_arr(a["dv"])
+    for file, dv in dvs:
+        prev = plan.prev_dv(file)
+        new_arr = _dv_id_arr(dv)
         prev_arr = _dv_id_arr(prev) if prev is not None else None
-        ft = _txn_stream_file_table(root, a["file"], memo)
+        ft = _txn_stream_file_table(root, file, memo)
         if (
             new_arr.null_count
             or (prev_arr is not None and prev_arr.null_count)
@@ -2619,7 +2685,8 @@ def streaming_txn_source_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     """STREAMING READS of a transaction-log table — 'readStream from a
     Delta table' in miniature, the read-side dual of the txn-log sink:
     a Python streaming source whose OFFSETS ARE LOG VERSIONS. Each
-    micro-batch advances one commit: the reader opens `{v:05d}.json`,
+    micro-batch advances one commit: the reader plans that commit
+    (_txn_commit_plan over TxnLogWriter.commit_actions),
     REFUSES any non-append commit (remove actions — the
     skipChangeCommits contract: silently streaming past a compaction
     would replay rewritten rows), reads that commit's added parquet
@@ -2638,70 +2705,22 @@ def streaming_txn_source_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     plan each batch, and the real-cluster form reads the added files
     executor-side like any scan (the Simple reader trades that for
     protocol clarity at fixture scale)."""
-    from pyspark.sql.datasource import (
-        DataSource,
-        SimpleDataSourceStreamReader,
-    )
+    from user_feed_cdc_spark.sources.txn_writer import TxnLogWriter
 
     root, log_dir = _txn_stream_table(spark, sf_dir)
-
+    latest = TxnLogWriter(root).latest_version()
     memo: dict = {}  # per-invocation file cache (see _txn_stream_file_table)
-
-    def _commit_batches(version: int) -> list:
-        return _txn_stream_commit_batches(root, log_dir, version, memo=memo)
-
-    latest = max(
-        int(n.split(".")[0])
-        for n in os.listdir(log_dir)
-        if n.endswith(".json") and ".checkpoint." not in n
+    _register_version_stream(
+        spark,
+        "txn_log_stream",
+        _TXN_STREAM_SCHEMA,
+        -1,
+        latest,
+        lambda v: _txn_stream_commit_batches(root, log_dir, v, memo=memo),
     )
-
-    class TxnLogStreamReader(SimpleDataSourceStreamReader):
-        def initialOffset(self):
-            return {"v": -1}
-
-        def read(self, start):
-            v = start["v"]
-            if v >= latest:
-                return (iter([]), {"v": v})  # steady state: no new commit
-            return (iter(_commit_batches(v + 1)), {"v": v + 1})
-
-        def readBetweenOffsets(self, start, end):
-            batches: list = []
-            for v in range(start["v"] + 1, end["v"] + 1):
-                batches.extend(_commit_batches(v))
-            return iter(batches)
-
-    class TxnLogStream(DataSource):
-        @classmethod
-        def name(cls):
-            return "txn_log_stream"
-
-        def schema(self):
-            return (
-                "event_id long, ts_us long, user_id long, "
-                "event_type string, value double, props string"
-            )
-
-        def simpleStreamReader(self, schema):
-            return TxnLogStreamReader()
-
-    spark.dataSource.register(TxnLogStream)
-    sink = "streaming_txn_source_sink"
-    q = (
-        spark.readStream.format("txn_log_stream")
-        .load()
-        .writeStream.format("memory")
-        .queryName(sink)
-        .trigger(processingTime="0 seconds")
-        .start()
-    )
-    try:
-        _await_stream_offset(q, "v", latest)
-    finally:
-        q.stop()
-        q.awaitTermination(30)
-    back = spark.table(sink).coalesce(1).select(
+    back = _drain_to_memory(
+        spark, "txn_log_stream", "streaming_txn_source_sink", "v", latest
+    ).select(
         "event_id",
         F.timestamp_micros("ts_us").alias("ts"),
         "user_id",
@@ -2998,9 +3017,9 @@ def table_changes(
     keyed on row identity over just that commit's touched files —
     shuffle ∝ changed data, never table size; untouched files are
     never opened. The per-version loop is |versions| driver JSON
-    reads, the same planning cost every other log read pays."""
-    import json
-
+    reads, the same planning cost every other log read pays. Commits
+    are read through _txn_commit_plan(root, v); `log_dir` is `root`'s
+    `_log`."""
     ev_schema = TABLE_SCHEMAS["events"]
     out: DataFrame | None = None
 
@@ -3015,29 +3034,17 @@ def table_changes(
     # PREVIOUS winning dv, so walk the whole log once (driver, JSON)
     prev_dv: dict[str, str] = {}
     for v in range(0, hi + 1):
-        path = os.path.join(log_dir, f"{v:05d}.json")
-        if not os.path.exists(path):
+        try:
+            plan = _txn_commit_plan(root, v, "cdf")
+        except FileNotFoundError:
             if v >= lo:
                 raise ValueError(
                     f"commit v{v} in table_changes({lo}, {hi}) was "
                     "vacuumed — the change history is gone"
-                )
+                ) from None
             continue
-        with open(path) as f:
-            acts = [json.loads(line) for line in f if line.strip()]
-        adds = [
-            a["file"]
-            for a in acts
-            if a.get("action") == "add" and a.get("dataChange", True)
-        ]
-        removes = [
-            a["file"]
-            for a in acts
-            if a.get("action") == "remove" and a.get("dataChange", True)
-        ]
-        dvs = [a for a in acts if a.get("action") == "dv"]
         if lo <= v <= hi:
-            added, removed = _read(adds), _read(removes)
+            added, removed = _read(plan.adds), _read(plan.removes)
             pieces = []
             if added is not None:
                 ins = (
@@ -3085,26 +3092,25 @@ def table_changes(
                         *[F.col(f"a.{c}").alias(c) for c in cols],
                     ).withColumn("change_type", F.lit("update_postimage"))
                 )
-            for a in dvs:
+            for file, dv in plan.dvs:
                 new_dv = spark.read.schema("event_id long").parquet(
-                    os.path.join(root, a["dv"])
+                    os.path.join(root, dv)
                 )
-                if a["file"] in prev_dv:
+                if file in prev_dv:
                     old = spark.read.schema("event_id long").parquet(
-                        os.path.join(root, prev_dv[a["file"]])
+                        os.path.join(root, prev_dv[file])
                     )
                     new_dv = new_dv.join(old, ["event_id"], "left_anti")
                 rows = (
                     spark.read.schema(ev_schema)
-                    .parquet(os.path.join(root, a["file"]))
+                    .parquet(os.path.join(root, file))
                     .join(F.broadcast(new_dv), ["event_id"], "left_semi")
                 )
                 pieces.append(rows.withColumn("change_type", F.lit("delete")))
             for p in pieces:
                 p = p.withColumn("commit_version", F.lit(v).cast("long"))
                 out = p if out is None else out.unionByName(p)
-        for a in dvs:
-            prev_dv[a["file"]] = a["dv"]
+        prev_dv.update(plan.dvs)
     if out is None:
         # no change-producing commit in range (e.g. OPTIMIZE-only):
         # an EMPTY feed with the full feed schema, never an error —
@@ -3288,74 +3294,26 @@ def streaming_txn_cdf_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     is bounded by that commit's touched files (the executor-side form
     maps the same per-commit diff onto partitioned anti-joins, exactly
     what the batch table_changes already does in Spark)."""
-    from pyspark.sql.datasource import (
-        DataSource,
-        SimpleDataSourceStreamReader,
-    )
+    from user_feed_cdc_spark.sources.txn_writer import TxnLogWriter
 
     root, log_dir = _txn_cdf_table(spark, sf_dir)
-    latest = max(
-        int(n.split(".")[0])
-        for n in os.listdir(log_dir)
-        if n.endswith(".json") and ".checkpoint." not in n
-    )
+    latest = TxnLogWriter(root).latest_version()
     memo: dict = {}  # per-invocation file cache (see _txn_stream_file_table)
-
-    def _commit_changes(version: int) -> list:
-        return _txn_stream_commit_batches(
-            root, log_dir, version, mode="cdf", memo=memo
-        )
-
-    class TxnCdfStreamReader(SimpleDataSourceStreamReader):
-        def initialOffset(self):
-            return {"v": 0}  # startingVersion=1: stream AFTER v0's base
-
-        def read(self, start):
-            v = start["v"]
-            if v >= latest:
-                return (iter([]), {"v": v})
-            return (iter(_commit_changes(v + 1)), {"v": v + 1})
-
-        def readBetweenOffsets(self, start, end):
-            batches: list = []
-            for v in range(start["v"] + 1, end["v"] + 1):
-                batches.extend(_commit_changes(v))
-            return iter(batches)
-
-    class TxnCdfStream(DataSource):
-        @classmethod
-        def name(cls):
-            return "txn_cdf_stream"
-
-        def schema(self):
-            return (
-                "change_type string, commit_version long, event_id long, "
-                "ts_us long, user_id long, event_type string, "
-                "value double, props string"
-            )
-
-        def simpleStreamReader(self, schema):
-            return TxnCdfStreamReader()
-
-    spark.dataSource.register(TxnCdfStream)
-    sink = "streaming_txn_cdf_sink"
-    q = (
-        spark.readStream.format("txn_cdf_stream")
-        .load()
-        .writeStream.format("memory")
-        .queryName(sink)
-        .trigger(processingTime="0 seconds")
-        .start()
+    _register_version_stream(
+        spark,
+        "txn_cdf_stream",
+        _TXN_CDF_STREAM_SCHEMA,
+        0,  # startingVersion=1: stream AFTER v0's base
+        latest,
+        lambda v: _txn_stream_commit_batches(
+            root, log_dir, v, mode="cdf", memo=memo
+        ),
     )
-    try:
-        _await_stream_offset(q, "v", latest)
-    finally:
-        q.stop()
-        q.awaitTermination(30)
+    back = _drain_to_memory(
+        spark, "txn_cdf_stream", "streaming_txn_cdf_sink", "v", latest
+    )
     return (
-        spark.table(sink)
-        .coalesce(1)  # driver-resident memory sink: no fan-out agg
-        .groupBy("change_type", "commit_version", "event_type")
+        back.groupBy("change_type", "commit_version", "event_type")
         .agg(
             F.count(F.lit(1)).alias("n"),
             F.sum(
@@ -3371,6 +3329,65 @@ def streaming_txn_cdf_live(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
+def _txn_exec_stream_source(root: str, latest: int):
+    """The DataSource class behind streaming_txn_source_exec_live: a
+    full DataSourceStreamReader over the append-only table at `root`
+    whose offsets are log versions up to `latest`. The DRIVER plans
+    each batch from the commit alone (_txn_commit_plan: refusal plus
+    one InputPartition per added file); EXECUTORS open the files."""
+    from pyspark.sql.datasource import (
+        DataSource,
+        DataSourceStreamReader,
+        InputPartition,
+    )
+
+    class TxnLogExecStreamReader(DataSourceStreamReader):
+        def initialOffset(self):
+            return {"v": -1}
+
+        def latestOffset(self):
+            # advance ONE commit per trigger (rate limiting — the
+            # maxFilesPerTrigger analogue), bounded at the log head
+            v = getattr(self, "_v", -1)
+            self._v = min(v + 1, latest)
+            return {"v": self._v}
+
+        def partitions(self, start, end):
+            parts = [
+                InputPartition(f)
+                for v in range(start["v"] + 1, end["v"] + 1)
+                for f in _txn_commit_plan(root, v).adds
+            ]
+            # an empty batch (no new commit) still needs >=1 partition
+            return parts or [InputPartition("")]
+
+        def read(self, partition):
+            # EXECUTOR-side: open the parquet data file where the
+            # task runs — bytes never transit the driver, and the
+            # batch body stays an Arrow RecordBatch end to end (the
+            # data source runner ships RecordBatches as-is)
+            if not partition.value:
+                return iter([])
+            tbl = _txn_stream_file_table(root, partition.value)
+            return iter(tbl.to_batches())
+
+        def commit(self, end):
+            pass
+
+    class TxnLogExecStream(DataSource):
+        @classmethod
+        def name(cls):
+            return "txn_log_exec_stream"
+
+        def schema(self):
+            return _TXN_STREAM_SCHEMA
+
+        def streamReader(self, schema):
+            return TxnLogExecStreamReader()
+
+    return TxnLogExecStream
+
+
 @_register("streaming_txn_source_exec_live", _TXN_STREAM_ORACLE)
 def streaming_txn_source_exec_live(
     spark: SparkSession, sf_dir: str
@@ -3379,7 +3396,7 @@ def streaming_txn_source_exec_live(
     split — closing the one residual nit on streaming_txn_source_live
     (whose Simple-protocol reader pulls data through the driver by
     design): this is a full DataSourceStreamReader, so the DRIVER
-    plans each micro-batch from commit JSON alone (parse `{v:05d}.json`,
+    plans each micro-batch from the commit alone (_txn_commit_plan:
     refuse non-append commits per skipChangeCommits, one InputPartition
     per added data file — catalog scale, exactly Delta's planning
     phase) while EXECUTORS open the parquet files (pyarrow inside
@@ -3394,120 +3411,18 @@ def streaming_txn_source_exec_live(
     each batch parallelizes over its commit's files, and a failed
     batch replans from the same offsets because planning is a pure
     function of the log."""
-    import json as _json
+    from user_feed_cdc_spark.sources.txn_writer import TxnLogWriter
 
-    from pyspark.sql.datasource import (
-        DataSource,
-        DataSourceStreamReader,
-        InputPartition,
-    )
-
-    root, log_dir = _txn_stream_table(spark, sf_dir)
-    latest = max(
-        int(n.split(".")[0])
-        for n in os.listdir(log_dir)
-        if n.endswith(".json") and ".checkpoint." not in n
-    )
-
-    class _FilePartition(InputPartition):
-        def __init__(self, path: str):
-            self.path = path
-
-    class TxnLogExecStreamReader(DataSourceStreamReader):
-        def initialOffset(self):
-            return {"v": -1}
-
-        def latestOffset(self):
-            # advance ONE commit per trigger (rate limiting — the
-            # maxFilesPerTrigger analogue), bounded at the log head
-            v = getattr(self, "_v", -1)
-            self._v = min(v + 1, latest)
-            return {"v": self._v}
-
-        def partitions(self, start, end):
-            # DRIVER planning: commit JSON only, one partition per
-            # added file; a remove action refuses (skipChangeCommits)
-            parts = []
-            for v in range(start["v"] + 1, end["v"] + 1):
-                with open(os.path.join(log_dir, f"{v:05d}.json")) as f:
-                    actions = [
-                        _json.loads(line) for line in f if line.strip()
-                    ]
-                if any(a["action"] == "remove" for a in actions):
-                    raise ValueError(
-                        f"commit v{v} is not append-only; streaming "
-                        "past a change commit would replay rewritten "
-                        "rows"
-                    )
-                parts.extend(
-                    _FilePartition(os.path.join(root, a["file"]))
-                    for a in actions
-                    if a["action"] == "add"
-                )
-            # an empty batch (no new commit) still needs >=1 partition
-            return parts or [_FilePartition("")]
-
-        def read(self, partition):
-            # EXECUTOR-side: open the parquet data file where the
-            # task runs — bytes never transit the driver, and the
-            # batch body stays an Arrow RecordBatch end to end (the
-            # data source runner ships RecordBatches as-is; no per-row
-            # tuple build — guide §4.2)
-            if not partition.path:
-                return iter([])
-            import pyarrow as pa
-            import pyarrow.compute as pc
-            import pyarrow.parquet as pq
-
-            tbl = pq.read_table(partition.path)
-            ts64 = tbl.column("ts").cast(pa.int64())
-            if tbl.schema.field("ts").type.unit == "ns":
-                ts64 = pc.divide(ts64, pa.scalar(1000, pa.int64()))
-            out = pa.table(
-                {
-                    "event_id": tbl.column("event_id").cast(pa.int64()),
-                    "ts_us": ts64,
-                    "user_id": tbl.column("user_id").cast(pa.int64()),
-                    "event_type": tbl.column("event_type").cast(pa.string()),
-                    "value": tbl.column("value").cast(pa.float64()),
-                    "props": tbl.column("props").cast(pa.string()),
-                }
-            )
-            return iter(out.to_batches())
-
-        def commit(self, end):
-            pass
-
-    class TxnLogExecStream(DataSource):
-        @classmethod
-        def name(cls):
-            return "txn_log_exec_stream"
-
-        def schema(self):
-            return (
-                "event_id long, ts_us long, user_id long, "
-                "event_type string, value double, props string"
-            )
-
-        def streamReader(self, schema):
-            return TxnLogExecStreamReader()
-
-    spark.dataSource.register(TxnLogExecStream)
-    sink = "streaming_txn_source_exec_sink"
-    q = (
-        spark.readStream.format("txn_log_exec_stream")
-        .load()
-        .writeStream.format("memory")
-        .queryName(sink)
-        .trigger(processingTime="0 seconds")
-        .start()
-    )
-    try:
-        _await_stream_offset(q, "v", latest)
-    finally:
-        q.stop()
-        q.awaitTermination(30)
-    back = spark.table(sink).coalesce(1).select(
+    root, _log_dir = _txn_stream_table(spark, sf_dir)
+    latest = TxnLogWriter(root).latest_version()
+    spark.dataSource.register(_txn_exec_stream_source(root, latest))
+    back = _drain_to_memory(
+        spark,
+        "txn_log_exec_stream",
+        "streaming_txn_source_exec_sink",
+        "v",
+        latest,
+    ).select(
         "event_id",
         F.timestamp_micros("ts_us").alias("ts"),
         "user_id",
@@ -4147,63 +4062,26 @@ def streaming_txn_cdf_ivm_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     import time
     import uuid
 
-    from pyspark.sql.datasource import (
-        DataSource,
-        SimpleDataSourceStreamReader,
-    )
-
     from user_feed_cdc_spark.sources.txn_writer import TxnLogWriter
 
     root, log_dir = _txn_cdf_table(spark, sf_dir)
-    latest = max(
-        int(n.split(".")[0])
-        for n in os.listdir(log_dir)
-        if n.endswith(".json") and ".checkpoint." not in n
-    )
+    latest = TxnLogWriter(root).latest_version()
     mv_root = _scratch_path("txncdfivm", sf_dir, uuid.uuid4().hex[:12])
     os.makedirs(mv_root, exist_ok=True)
     mv = TxnLogWriter(mv_root)
     mv_schema = "event_type string, n long, cents_sum long"
 
     memo: dict = {}  # per-invocation file cache (see _txn_stream_file_table)
-
-    def _commit_changes(version: int) -> list:
-        return _txn_stream_commit_batches(
-            root, log_dir, version, mode="cdf", memo=memo
-        )
-
-    class TxnCdfIvmReader(SimpleDataSourceStreamReader):
-        def initialOffset(self):
-            return {"v": -1}  # from empty: v0's inserts build the base
-
-        def read(self, start):
-            v = start["v"]
-            if v >= latest:
-                return (iter([]), {"v": v})
-            return (iter(_commit_changes(v + 1)), {"v": v + 1})
-
-        def readBetweenOffsets(self, start, end):
-            batches: list = []
-            for v in range(start["v"] + 1, end["v"] + 1):
-                batches.extend(_commit_changes(v))
-            return iter(batches)
-
-    class TxnCdfIvmStream(DataSource):
-        @classmethod
-        def name(cls):
-            return "txn_cdf_ivm_stream"
-
-        def schema(self):
-            return (
-                "change_type string, commit_version long, event_id long, "
-                "ts_us long, user_id long, event_type string, "
-                "value double, props string"
-            )
-
-        def simpleStreamReader(self, schema):
-            return TxnCdfIvmReader()
-
-    spark.dataSource.register(TxnCdfIvmStream)
+    _register_version_stream(
+        spark,
+        "txn_cdf_ivm_stream",
+        _TXN_CDF_STREAM_SCHEMA,
+        -1,  # from empty: v0's inserts build the base
+        latest,
+        lambda v: _txn_stream_commit_batches(
+            root, log_dir, v, mode="cdf", memo=memo
+        ),
+    )
 
     def _commit_stages_data_change(version: int) -> bool:
         """True unless the source commit at ``version`` stages no
@@ -4213,21 +4091,11 @@ def streaming_txn_cdf_ivm_live(spark: SparkSession, sf_dir: str) -> DataFrame:
         HINT: the skip below additionally verifies the planned batch
         itself is empty, so a wrong hint costs one tiny job, never
         correctness."""
-        import json as _json
-
-        p = os.path.join(log_dir, f"{version:05d}.json")
-        if not os.path.exists(p):
+        try:
+            plan = _txn_commit_plan(root, version, "cdf")
+        except FileNotFoundError:
             return True
-        with open(p) as f:
-            acts = [_json.loads(line) for line in f if line.strip()]
-        return any(
-            (
-                a.get("action") in ("add", "remove")
-                and a.get("dataChange", True)
-            )
-            or a.get("action") == "dv"
-            for a in acts
-        )
+        return bool(plan.adds or plan.removes or plan.dvs)
 
     def refresh(bdf: DataFrame, bid: int) -> None:
         last = mv.last_txn("mv_refresh")

@@ -168,10 +168,12 @@ def _scan_partition_estimate(df: DataFrame) -> int | None:
     maxSplitBytes = min(maxPartitionBytes, max(openCostInBytes,
     padded_total / defaultParallelism)), chunks bin-packed in
     size-descending order, closing a partition when it would exceed
-    maxSplitBytes. Returns None when the plan is not file-backed or a
-    size is unreadable — the caller falls back to the RDD probe.
-    tests/test_operators.py pins estimate == df.rdd.getNumPartitions()
-    on every fan_out input shape."""
+    maxSplitBytes. Returns None when the plan is not file-backed, the
+    relation has partition columns (inputFiles() ignores partition
+    pruning, so a filter on a partition column would count every
+    directory's files), or a size is unreadable — the caller falls
+    back to the RDD probe. tests/test_operators.py pins estimate ==
+    df.rdd.getNumPartitions() on every fan_out input shape."""
     import re
     from urllib.parse import unquote, urlparse
 
@@ -180,12 +182,19 @@ def _scan_partition_estimate(df: DataFrame) -> int | None:
         # relation) inherits the scan's partitioning — anything else
         # (an explicit repartition, a join, a Python map) changes the
         # partition count and must take the exact RDD probe.
-        plan = df._jdf.queryExecution().analyzed().treeString()
+        analyzed = df._jdf.queryExecution().analyzed()
+        plan = analyzed.treeString()
         nodes = {
             m.group(1)
             for m in re.finditer(r"^[\s+:\-]*([A-Za-z]+)", plan, re.M)
         }
         if not nodes <= {"Project", "Filter", "Relation", "SubqueryAlias"}:
+            return None
+        leaves = analyzed.collectLeaves()
+        if any(
+            not leaves.apply(i).relation().partitionSchema().isEmpty()
+            for i in range(leaves.size())
+        ):
             return None
         files = df.inputFiles()
     except Exception:

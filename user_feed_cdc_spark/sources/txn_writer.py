@@ -315,15 +315,22 @@ class TxnLogWriter:
         ckpt = self._checkpoint_version()
         return max(vs[-1] if vs else -1, ckpt if ckpt is not None else -1)
 
+    def _commit_path(self, v: int) -> str:
+        return os.path.join(self.log_dir, f"{v:05d}.json")
+
+    def commit_actions(self, v: int) -> list[dict]:
+        """The action dicts of commit `v`, in file order — the one
+        parser of the commit-file format. Raises FileNotFoundError when
+        the commit file is gone (vacuumed, or never written); each
+        caller decides what a missing commit means to it."""
+        with open(self._commit_path(v)) as f:
+            return [json.loads(line) for line in f if line.strip()]
+
     def _actions_between(self, lo: int, hi: int) -> list[dict]:
         acts: list[dict] = []
         for v in self._commit_versions():
             if lo <= v <= hi:
-                path = os.path.join(self.log_dir, f"{v:05d}.json")
-                with open(path) as f:
-                    acts.extend(
-                        json.loads(line) for line in f if line.strip()
-                    )
+                acts.extend(self.commit_actions(v))
         return acts
 
     def _checkpoint_meta(self) -> dict | None:
@@ -430,7 +437,7 @@ class TxnLogWriter:
                 if a.get("action") == "commitInfo":
                     out[a["version"]] = a["timestamp"]
         for v in self._commit_versions():
-            with open(os.path.join(self.log_dir, f"{v:05d}.json")) as f:
+            with open(self._commit_path(v)) as f:
                 first = f.readline()
             if first.strip():
                 a = json.loads(first)
@@ -803,9 +810,8 @@ class TxnLogWriter:
                 # grace-period default).
                 if v in ts_of:
                     return ts_of[v]
-                p = os.path.join(self.log_dir, f"{v:05d}.json")
                 try:
-                    return int(os.path.getmtime(p) * 1000)
+                    return int(os.path.getmtime(self._commit_path(v)) * 1000)
                 except OSError:
                     return None
 
@@ -904,7 +910,7 @@ class TxnLogWriter:
         if not deferred:
             for v in self._commit_versions():
                 if v <= ckpt:
-                    os.remove(os.path.join(self.log_dir, f"{v:05d}.json"))
+                    os.remove(self._commit_path(v))
         return doomed
 
     def write_checkpoint(self, version: int, parts: int | None = None) -> None:
@@ -1272,7 +1278,7 @@ class Transaction:
             if target > self.base_version + 1:
                 # commits landed since we began — logical conflict check
                 self._check_conflicts(self.base_version + 1, target - 1)
-            path = os.path.join(w.log_dir, f"{target:05d}.json")
+            path = w._commit_path(target)
             # Atomicity: the commit must appear WITH its content. An
             # O_EXCL create followed by buffered writes leaves a window
             # where concurrent conflict checks read an empty/torn file
@@ -1377,12 +1383,8 @@ class Transaction:
         concurrent_data_adds = 0
         concurrent_file_actions = 0
         for v in range(lo, hi + 1):
-            path = os.path.join(self.writer.log_dir, f"{v:05d}.json")
             try:
-                with open(path) as f:
-                    lines = [
-                        json.loads(line) for line in f if line.strip()
-                    ]
+                lines = self.writer.commit_actions(v)
             except FileNotFoundError:
                 raise CommitConflict(
                     f"commit v{v} in v{lo}..v{hi} was vacuumed while "
