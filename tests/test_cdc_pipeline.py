@@ -202,11 +202,14 @@ def test_feed_sink_commits_through_txn_log(spark, tmp_path):
     assert tx2.count() == tx.count()
 
 
-def test_feed_txnlog_compaction_preserves_snapshot(spark, tmp_path):
+def test_feed_txnlog_compaction_preserves_snapshot(
+    spark, tmp_path, monkeypatch
+):
     """compact_feed_txnlog: the atomic batch-file fold must leave the
     snapshot byte-identical, swap the live set to the single compacted
     file, keep the old batch files on disk (vacuum's job, not
-    compaction's), and conflict if raced by another compaction."""
+    compaction's), and conflict if raced by another compaction —
+    including one that commits after this compaction's begin()."""
     import pytest
 
     from user_feed_cdc_spark.sources.txn_writer import (
@@ -248,6 +251,25 @@ def test_feed_txnlog_compaction_preserves_snapshot(spark, tmp_path):
 
     with pytest.raises(CommitConflict):
         racing.commit()  # a racing compaction of the same files refuses
+
+    # the live set is read at the transaction's base version, so a
+    # compaction landing between begin() and that read still clashes
+    import shutil
+
+    shutil.copytree(os.path.join(feed, name), os.path.join(feed, "racer"))
+    real_begin = TxnLogWriter.begin
+
+    def begin_then_race(self):
+        txn = real_begin(self)
+        race = real_begin(self)
+        for old in self.live_files():
+            race.remove(old)
+        race.add("racer").commit()
+        return txn
+
+    monkeypatch.setattr(TxnLogWriter, "begin", begin_then_race)
+    with pytest.raises(CommitConflict):
+        compact_feed_txnlog(spark, feed)
 
 
 def test_upsert_pipeline_lifecycle(spark, tmp_path):

@@ -3098,20 +3098,21 @@ def test_txn_log_replay_asserts_one_action_per_file_per_commit():
     and re-add across DIFFERENT commits) still replay fine."""
     import pytest
 
-    from user_feed_cdc_spark.sources.txn_writer import _last_wins
+    from user_feed_cdc_spark.sources.txn_writer import Snapshot
 
     def log(rows):
-        return [{"version": v, "action": a, "file": f} for v, a, f in rows]
+        acts = ({"version": v, "action": a, "file": f} for v, a, f in rows)
+        return Snapshot(2, tuple(acts))
 
     ok = log(
         [(0, "add", "f0"), (1, "remove", "f0"), (2, "add", "f0"),
          (0, "add", "f1"), (1, "remove", "f1")]
     )
-    assert _last_wins(ok) == ["f0"]
+    assert ok.live == ("f0",)
 
     bad = log([(0, "add", "f0"), (0, "remove", "f0"), (0, "add", "f1")])
     with pytest.raises(ValueError, match="one-action-per-file-per-commit"):
-        _last_wins(bad)
+        bad.live
 
 
 def test_txn_writer_concurrent_commits(tmp_path):
@@ -3317,8 +3318,7 @@ def test_txn_writer_schema_survives_checkpoint_and_vacuum(tmp_path):
     w.vacuum()  # the commits that set both schemas are gone
     assert w._commit_versions() == []
     metas = [
-        a for a in w._replay_actions(w.latest_version())
-        if a.get("action") == "metaData"
+        a for a in w.snapshot().actions if a.get("action") == "metaData"
     ]
     assert metas and metas[-1]["schema"] == "a bigint, b string"
     # and the checkpoint file itself records it
@@ -3363,7 +3363,7 @@ def test_txn_writer_review_fixes(spark, tmp_path):
     assert not [n for n in os.listdir(w.log_dir) if ".tmp" in n]
     w.vacuum()
     assert w._commit_versions() == []
-    acts = w._replay_actions(w.latest_version())
+    acts = w.snapshot().actions
     adds = {a["file"]: a for a in acts if a["action"] == "add"}
     assert adds["r0"]["min_id"] == 1 and adds["r0"]["max_id"] == 9
     assert adds["r0"]["bloom"] == "b0" and adds["r0"]["m"] == 64
@@ -3512,7 +3512,7 @@ def test_txn_stream_source_refuses_change_commits(spark, sf_dir, tmp_path):
 
     from user_feed_cdc_spark.sources.formats import _txn_stream_table
 
-    root, log_dir = _txn_stream_table(spark, sf_dir)
+    root, _log_dir = _txn_stream_table(spark, sf_dir)
     root2 = str(tmp_path / "txnstream_copy")
     shutil.copytree(root, root2)
     log2 = os.path.join(root2, "_log")
@@ -3525,15 +3525,15 @@ def test_txn_stream_source_refuses_change_commits(spark, sf_dir, tmp_path):
     # drive the REAL reader code: appends yield rows, the rewrite raises
     from user_feed_cdc_spark.sources.formats import _txn_stream_commit_rows
 
-    rows = _txn_stream_commit_rows(root2, log2, 0)
+    rows = _txn_stream_commit_rows(root2, 0)
     assert rows and len(rows[0]) == 6  # append commit yields full tuples
     with pytest.raises(ValueError, match="not append-only"):
-        _txn_stream_commit_rows(root2, log2, 5)
+        _txn_stream_commit_rows(root2, 5)
 
     # the five-micro-batch certification must be NON-VACUOUS: every
     # commit carries rows (r11 review: bucketing on pmod(event_id, 5)
     # over the multiples-of-20 slice put ALL rows in commit 0)
-    per_commit = [len(_txn_stream_commit_rows(root, log_dir, v))
+    per_commit = [len(_txn_stream_commit_rows(root, v))
                   for v in range(5)]
     assert all(n > 0 for n in per_commit), per_commit
 
@@ -3568,14 +3568,14 @@ def test_txn_stream_planners_share_the_append_only_refusal(
         f.write(json.dumps(
             {"version": 5, "action": "add", "file": "a0r"}) + "\n")
 
-    assert _txn_stream_commit_rows(root2, log2, 4)
-    assert _txn_stream_commit_batches(root2, log2, 4)
+    assert _txn_stream_commit_rows(root2, 4)
+    assert _txn_stream_commit_batches(root2, 4)
     reader = _txn_exec_stream_source(root2, 5)({}).streamReader(None)
     parts = reader.partitions({"v": -1}, {"v": 4})
     assert sorted(p.value for p in parts) == [f"a{b}" for b in range(5)]
     for plan in (
-        lambda: _txn_stream_commit_rows(root2, log2, 5),
-        lambda: _txn_stream_commit_batches(root2, log2, 5),
+        lambda: _txn_stream_commit_rows(root2, 5),
+        lambda: _txn_stream_commit_batches(root2, 5),
         lambda: reader.partitions({"v": 4}, {"v": 5}),
     ):
         with pytest.raises(ValueError, match="not append-only"):
@@ -3583,11 +3583,12 @@ def test_txn_stream_planners_share_the_append_only_refusal(
 
 
 def test_commit_file_format_stays_in_txn_writer():
-    """The commit file's name and the version listing of `_log` belong
-    to TxnLogWriter alone: no other module builds a `{v:05d}.json`
-    name or parses a version out of a log listing
-    (`int(name.split(".")[0])`) — they read commits through
-    TxnLogWriter.commit_actions and the head through latest_version."""
+    """The commit file's name and the listing of `_log` belong to
+    TxnLogWriter alone: no other module builds a `{v:05d}.json` name,
+    parses a version out of a log listing (`int(name.split(".")[0])`)
+    or lists a `_log` directory (`os.listdir(log_dir)`) — they read
+    commits through TxnLogWriter.commit_actions, the head through
+    latest_version and checkpoint files through checkpoint_files."""
     import ast
     from pathlib import Path
 
@@ -3617,7 +3618,141 @@ def test_commit_file_format_stays_in_txn_writer():
                 and ast.unparse(node.args[0]).endswith(".split('.')[0]")
             ):
                 offenders.append(f"{path.name}:{node.lineno}")
+            elif (
+                isinstance(node, ast.Call)
+                and ast.unparse(node.func) == "os.listdir"
+                and node.args
+                and "log" in ast.unparse(node.args[0]).lower()
+            ):
+                offenders.append(f"{path.name}:{node.lineno}")
     assert not offenders, offenders
+
+
+def test_snapshot_reads_the_pointer_once_and_lists_the_log_once(
+    tmp_path, monkeypatch
+):
+    """One TxnLogWriter.snapshot() on a checkpointed log opens
+    `_last_checkpoint` once and lists `_log` once, and every fact it
+    derives (live, adds, dvs, newest, txn) comes from that one replay."""
+    import builtins
+    import os
+
+    from user_feed_cdc_spark.sources.txn_writer import TxnLogWriter
+
+    w = TxnLogWriter(str(tmp_path / "t"), checkpoint_interval=4)
+    for i in range(10):  # checkpoints at v3 and v7
+        os.makedirs(os.path.join(w.root, f"f{i}"))
+        txn = w.begin().add(f"f{i}", min_id=i).set_txn("app", i)
+        if i == 5:
+            txn.remove("f1").set_dv("f2", "dv2")
+        txn.commit()
+    assert w._checkpoint_version() == 7
+
+    pointer_reads, listings = [], []
+    real_open, real_listdir = builtins.open, os.listdir
+
+    def counting_open(path, *a, **k):
+        if os.path.basename(str(path)) == "_last_checkpoint":
+            pointer_reads.append(path)
+        return real_open(path, *a, **k)
+
+    def counting_listdir(path="."):
+        if os.path.normpath(str(path)) == os.path.normpath(w.log_dir):
+            listings.append(path)
+        return real_listdir(path)
+
+    monkeypatch.setattr(builtins, "open", counting_open)
+    monkeypatch.setattr(os, "listdir", counting_listdir)
+    snap = w.snapshot()
+    live, adds, dvs = snap.live, snap.adds, snap.dvs
+    txn, ci = snap.txn("app"), snap.newest("commitInfo")
+    monkeypatch.undo()
+
+    assert (len(pointer_reads), len(listings)) == (1, 1)
+    assert snap.version == 9
+    assert live == tuple(sorted(f"f{i}" for i in range(10) if i != 1))
+    assert {f: a["min_id"] for f, a in adds.items()} == {
+        f"f{i}": i for i in range(10) if i != 1
+    }
+    assert dvs == {"f2": "dv2"} and txn == 9 and ci["version"] == 9
+    # an empty table is version -1 with no actions
+    empty = TxnLogWriter(str(tmp_path / "empty")).snapshot()
+    assert (empty.version, empty.actions, empty.live) == (-1, (), ())
+
+
+def test_snapshot_refuses_a_gapped_log_tail(tmp_path):
+    """A commit missing between the replay base and the requested
+    version refuses: replaying around the hole of v2 (remove a, add c)
+    would resurrect a and lose c. Versions below the gap still read."""
+    import os
+
+    import pytest
+
+    from user_feed_cdc_spark.sources.txn_writer import TxnLogWriter
+
+    w = TxnLogWriter(str(tmp_path / "t"))
+    w.begin().add("a").commit()  # v0
+    w.begin().add("b").commit()  # v1
+    w.begin().remove("a").add("c").commit()  # v2
+    w.begin().add("d").commit()  # v3
+    assert w.live_files() == ["b", "c", "d"]
+    os.remove(os.path.join(w.log_dir, "00002.json"))
+    with pytest.raises(ValueError, match="v2 is missing"):
+        w.live_files()
+    with pytest.raises(ValueError, match="v2 is missing"):
+        w.snapshot(2)
+    assert w.live_files(as_of=1) == ["a", "b"]
+    # above a checkpoint the same holds: the tail must be contiguous
+    w2 = TxnLogWriter(str(tmp_path / "t2"))
+    for n in ("a", "b", "c", "d"):
+        w2.begin().add(n).commit()
+    w2.write_checkpoint(1)
+    os.remove(os.path.join(w2.log_dir, "00002.json"))
+    with pytest.raises(ValueError, match="v2 is missing"):
+        w2.live_files()
+    assert w2.live_files(as_of=1) == ["a", "b"]
+
+
+def test_snapshot_views_match_a_full_log_replay(spark, sf_dir):
+    """snapshot(v).live, .adds and .dvs on the restore, clone and DV
+    fixtures equal an independent replay of every raw commit up to v:
+    last action wins per file, the newest add payload and the newest
+    dv sidecar per live file."""
+    from user_feed_cdc_spark.sources.formats import (
+        _txn_clone_tables,
+        _txn_log_dv_table,
+        _txn_restore_table,
+    )
+    from user_feed_cdc_spark.sources.txn_writer import TxnLogWriter
+
+    roots = [
+        _txn_restore_table(spark, sf_dir)[0],
+        *_txn_clone_tables(spark, sf_dir)[:2],
+        _txn_log_dv_table(spark, sf_dir)[0],
+    ]
+    for root in roots:
+        w = TxnLogWriter(root)
+        assert w._checkpoint_version() is None  # every commit on disk
+        state: dict[str, str] = {}
+        add_of: dict[str, dict] = {}
+        dv_of: dict[str, str] = {}
+        for v in range(w.latest_version() + 1):
+            for a in w.commit_actions(v):
+                kind = a["action"]
+                if kind in ("add", "remove"):
+                    state[a["file"]] = kind
+                if kind == "add":
+                    add_of[a["file"]] = a
+                elif kind == "dv":
+                    dv_of[a["file"]] = a["dv"]
+            live = sorted(f for f, k in state.items() if k == "add")
+            snap = w.snapshot(v)
+            assert snap.version == v
+            assert list(snap.live) == live, (root, v)
+            assert snap.adds == {f: add_of[f] for f in live}, (root, v)
+            assert snap.dvs == {
+                f: d for f, d in dv_of.items() if f in live
+            }, (root, v)
 
 
 def test_txn_stream_cdf_mode(spark, sf_dir):
@@ -3638,7 +3773,7 @@ def test_txn_stream_cdf_mode(spark, sf_dir):
     )
     from user_feed_cdc_spark.sources.tables import load_table
 
-    root, log_dir = _txn_cdf_table(spark, sf_dir)
+    root, _log_dir = _txn_cdf_table(spark, sf_dir)
     ev = load_table(spark, sf_dir, "events")
     n_even = ev.filter(F.col("event_id") % 2 == 0).count()
     n_odd = ev.filter(F.col("event_id") % 2 == 1).count()
@@ -3647,7 +3782,7 @@ def test_txn_stream_cdf_mode(spark, sf_dir):
     n_m9 = ev.filter(F.col("event_id") % 10 == 9).count()
 
     got = {
-        v: _txn_stream_commit_rows(root, log_dir, v, mode="cdf")
+        v: _txn_stream_commit_rows(root, v, mode="cdf")
         for v in range(6)
     }
     def tally(rows):
@@ -3712,11 +3847,11 @@ def test_txn_stream_commit_batches_match_tuple_reference(spark, sf_dir):
         _txn_stream_table,
     )
 
-    root, log_dir = _txn_stream_table(spark, sf_dir)
+    root, _log_dir = _txn_stream_table(spark, sf_dir)
     memo_b: dict = {}
     memo_r: dict = {}
     for v in range(5):
-        batches = _txn_stream_commit_batches(root, log_dir, v, memo=memo_b)
+        batches = _txn_stream_commit_batches(root, v, memo=memo_b)
         assert all(isinstance(b, pa.RecordBatch) for b in batches)
         for b in batches:
             assert b.schema.names == [
@@ -3726,19 +3861,19 @@ def test_txn_stream_commit_batches_match_tuple_reference(spark, sf_dir):
             assert b.schema.field("ts_us").type == pa.int64()
             assert b.schema.field("value").type == pa.float64()
         assert sorted(_batch_rows(batches)) == sorted(
-            _txn_stream_commit_rows(root, log_dir, v, memo=memo_r)
+            _txn_stream_commit_rows(root, v, memo=memo_r)
         ), f"append commit v{v}"
 
-    croot, clog = _txn_cdf_table(spark, sf_dir)
+    croot, _clog = _txn_cdf_table(spark, sf_dir)
     memo_b, memo_r = {}, {}
     for v in range(6):
         batches = _txn_stream_commit_batches(
-            croot, clog, v, mode="cdf", memo=memo_b
+            croot, v, mode="cdf", memo=memo_b
         )
         for b in batches:
             assert b.schema.names[:2] == ["change_type", "commit_version"]
         assert sorted(_batch_rows(batches)) == sorted(
-            _txn_stream_commit_rows(croot, clog, v, mode="cdf", memo=memo_r)
+            _txn_stream_commit_rows(croot, v, mode="cdf", memo=memo_r)
         ), f"cdf commit v{v}"
 
 
@@ -3791,14 +3926,14 @@ def test_txn_stream_commit_batches_fallback_guard(tmp_path):
     for v in (0, 1):
         got = sorted(
             _batch_rows(
-                _txn_stream_commit_batches(root, log_dir, v, mode="cdf")
+                _txn_stream_commit_batches(root, v, mode="cdf")
             )
         )
-        want = sorted(_txn_stream_commit_rows(root, log_dir, v, mode="cdf"))
+        want = sorted(_txn_stream_commit_rows(root, v, mode="cdf"))
         assert got == want, f"v{v}"
     # and the change commit is non-trivial (the guard actually fired on
     # rows that produce output)
-    assert _txn_stream_commit_rows(root, log_dir, 1, mode="cdf")
+    assert _txn_stream_commit_rows(root, 1, mode="cdf")
 
 
 def test_txn_stream_dv_null_sidecar_falls_back(tmp_path, monkeypatch):
@@ -3861,11 +3996,11 @@ def test_txn_stream_dv_null_sidecar_falls_back(tmp_path, monkeypatch):
     monkeypatch.setattr(fm, "_txn_stream_commit_rows", counting_ref)
     got = sorted(
         _batch_rows(
-            fm._txn_stream_commit_batches(root, log_dir, 1, mode="cdf")
+            fm._txn_stream_commit_batches(root, 1, mode="cdf")
         )
     )
     assert calls["n"] == 1, "dv null guard must take the tuple fallback"
-    want = sorted(ref(root, log_dir, 1, mode="cdf"))
+    want = sorted(ref(root, 1, mode="cdf"))
     assert got == want
     assert want, "the dv delta must emit the non-null deletion"
 
@@ -4004,7 +4139,7 @@ def test_txn_cdf_between_timestamps(spark, sf_dir):
     )
     from user_feed_cdc_spark.sources.tables import load_table
 
-    root, log_dir = _txn_cdf_table(spark, sf_dir)
+    root, _log_dir = _txn_cdf_table(spark, sf_dir)
     ev = load_table(spark, sf_dir, "events")
     n_odd = ev.filter(F.col("event_id") % 2 == 1).count()
     n_m4 = ev.filter(F.col("event_id") % 10 == 4).count()
@@ -4012,7 +4147,7 @@ def test_txn_cdf_between_timestamps(spark, sf_dir):
 
     def tally(t1, t2):
         rows = (
-            table_changes_between_timestamps(spark, root, log_dir, t1, t2)
+            table_changes_between_timestamps(spark, root, t1, t2)
             .groupBy("change_type")
             .count()
             .collect()
@@ -4050,15 +4185,19 @@ def test_txn_cdf_refuses_vacuumed_range(spark, sf_dir, tmp_path):
     os.remove(os.path.join(log_dir, "00002.json"))  # simulated vacuum
 
     with pytest.raises(ValueError, match="v2.*vacuumed"):
-        table_changes(spark, root, log_dir, 1, 5).count()
+        table_changes(spark, root, 1, 5).count()
+    # a range above the gap whose dv delta needs v2 refuses too: v4's
+    # previous sidecar for a0d cannot be resolved without it
+    with pytest.raises(ValueError, match="v2.*vacuumed"):
+        table_changes(spark, root, 4, 4)
     # ranges above the gap still work: v5 update pairs intact
-    out = table_changes(spark, root, log_dir, 5, 5)
+    out = table_changes(spark, root, 5, 5)
     kinds = {r.change_type for r in out.select("change_type").collect()}
     assert kinds == {"update_preimage", "update_postimage"}
     # the streaming dv-delta walk (v4 needs prior-dv evidence from
     # v0..v3) refuses on the same gap
     with pytest.raises(ValueError, match="vacuumed"):
-        _txn_stream_commit_rows(root, log_dir, 4, mode="cdf")
+        _txn_stream_commit_rows(root, 4, mode="cdf")
 
 
 def test_txn_commit_batch_is_idempotent(spark, tmp_path):
@@ -4323,12 +4462,12 @@ def test_txn_writer_restore(tmp_path):
     assert v == 4  # a NEW commit, not a rewind
     assert w.live_files() == ["a", "b"]
     # the re-added files carry their ORIGINAL stats payload
-    adds = w._winning_adds(4)
+    adds = w.snapshot(4).adds
     assert adds["a"]["min_id"] == 1 and adds["b"]["max_id"] == 9
     # restoring forward again reinstates c AND its deletion vector
     assert w.restore(3) == 5
     assert w.live_files() == ["c"]
-    assert w._newest_dv(5) == {"c": "dvc"}
+    assert w.snapshot(5).dvs == {"c": "dvc"}
 
     # refusal: restore across a vacuumed data file
     w2 = TxnLogWriter(str(tmp_path / "t2"))
@@ -4373,12 +4512,12 @@ def test_txn_writer_restore_rewinds_definition(tmp_path):
     w.begin().set_constraints(["x >= 0"]).commit()  # v2: ADD CONSTRAINT
 
     assert w.restore(0) == 3
-    assert w._newest_schema() == "x long"  # schema rewound
+    assert w.snapshot().newest("metaData")["schema"] == "x long"  # rewound
     assert w.constraints() == []  # constraints cleared (empty is real)
 
     # rolling forward again reinstates both
     assert w.restore(2) == 4
-    assert w._newest_schema() == "x long, y long"
+    assert w.snapshot().newest("metaData")["schema"] == "x long, y long"
     assert w.constraints() == ["x >= 0"]
 
     # refusal: target predates the table's first metaData action
@@ -4406,7 +4545,7 @@ def test_txn_writer_clone_from_relative_root(tmp_path, monkeypatch):
     c = TxnLogWriter(str(tmp_path / "clone"))
     assert c.live_files() == [str(tmp_path / "src" / "a")]
     assert all(os.path.isabs(f) for f in c.live_files())
-    assert c._newest_dv(0) == {
+    assert c.snapshot(0).dvs == {
         str(tmp_path / "src" / "a"): str(tmp_path / "src" / "dva")
     }
 
@@ -4435,10 +4574,10 @@ def test_txn_writer_shallow_clone(tmp_path):
         [str(src_root / "a"), str(src_root / "b")]
     )  # absolute source paths, identity under os.path.join
     assert all(os.path.isabs(n) for n in live)
-    adds = c._winning_adds(0)
+    adds = c.snapshot(0).adds
     assert all(a["min_id"] == 3 and a["max_id"] == 7 for a in adds.values())
-    assert c._newest_dv(0) == {str(src_root / "a"): str(src_root / "dva")}
-    assert c._newest_schema() == "x long"
+    assert c.snapshot(0).dvs == {str(src_root / "a"): str(src_root / "dva")}
+    assert c.snapshot().newest("metaData")["schema"] == "x long"
     assert c.constraints() == ["x >= 0"]
     assert c.last_txn("app1") is None  # new lineage
 
@@ -4733,7 +4872,7 @@ def test_txn_restore_refuses_stale_dv_on_readd(tmp_path):
     # restoring to v1 (where the DV was part of the snapshot) is fine
     assert w.restore(1) == 3
     assert w.live_files() == ["f"]
-    assert w._newest_dv(3) == {"f": "dv1"}
+    assert w.snapshot(3).dvs == {"f": "dv1"}
 
 
 def test_txn_clone_carries_protocol(tmp_path):
@@ -5594,18 +5733,14 @@ def test_dv_optimize_cdf_silent_and_materialized(spark, sf_dir):
         load_table,
         table_changes,
     )
-    from user_feed_cdc_spark.sources.txn_writer import (
-        TxnLogWriter,
-        _newest_dv_of,
-    )
+    from user_feed_cdc_spark.sources.txn_writer import TxnLogWriter
 
     root = _txn_dv_optimize_table(spark, sf_dir)
-    log_dir = os.path.join(root, "_log")
     w = TxnLogWriter(root)
     hi = w.latest_version()
 
     # the OPTIMIZE version is CDF-silent
-    assert table_changes(spark, root, log_dir, hi, hi).count() == 0
+    assert table_changes(spark, root, hi, hi).count() == 0
 
     # the dv versions emitted exactly the vector deltas
     ev = load_table(spark, sf_dir, "events")
@@ -5615,14 +5750,13 @@ def test_dv_optimize_cdf_silent_and_materialized(spark, sf_dir):
         ((bucket == 1) & (mod10 == 3)) | ((bucket == 3) & (mod10 == 3))
     ).count()
     n_v2 = ev.filter((bucket == 1) & (mod10 == 7)).count()  # widened delta
-    assert table_changes(spark, root, log_dir, 1, 1).count() == n_v1
-    assert table_changes(spark, root, log_dir, 2, 2).count() == n_v2
+    assert table_changes(spark, root, 1, 1).count() == n_v1
+    assert table_changes(spark, root, 2, 2).count() == n_v2
 
     # no live file resolves a DV post-OPTIMIZE; untouched files remain
-    live = w.live_files()
-    acts = w._replay_actions(hi)
-    assert not _newest_dv_of(acts, set(live))
-    assert {"f0", "f2", "f4", "f5", "c_f1", "c_f3"} == set(live)
+    snap = w.snapshot(hi)
+    assert not snap.dvs
+    assert {"f0", "f2", "f4", "f5", "c_f1", "c_f3"} == set(snap.live)
 
     # compacted = original minus winning vector, row-exact
     n_f1 = spark.read.parquet(os.path.join(root, "f1")).count()
@@ -5869,9 +6003,9 @@ def test_multipart_checkpoint_replay_and_refusals(spark, tmp_path):
     head = w.latest_version()
 
     w.write_checkpoint(head)  # single-file reference
-    single = w._checkpoint_lines(head)
+    single = w._checkpoint_lines(w._checkpoint_meta())
     w.write_checkpoint(head, parts=3)
-    multi = w._checkpoint_lines(head)
+    multi = w._checkpoint_lines(w._checkpoint_meta())
     def json_key(a):
         import json as _j
 
@@ -5888,9 +6022,7 @@ def test_multipart_checkpoint_replay_and_refusals(spark, tmp_path):
     w.vacuum(retain_ms=0, now_ms=int(time.time() * 1000))
     assert w.live_files() == ["a", "b"]
     # dv association survives through the parts
-    from user_feed_cdc_spark.sources.txn_writer import _newest_dv_of
-    acts = w._replay_actions(w.latest_version())
-    assert _newest_dv_of(acts, {"a", "b"}) == {"b": "bdv"}
+    assert w.snapshot().dvs == {"b": "bdv"}
 
     # (b) a missing part refuses loudly
     part0 = [

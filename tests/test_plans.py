@@ -1165,7 +1165,7 @@ def test_txn_log_bloom_index_prunes_files(spark, sf_dir):
 
     root, _log_dir = _txn_log_bloom_table(spark, sf_dir)
     w = TxnLogWriter(root)
-    entries = list(w._winning_adds(w.latest_version()).values())
+    entries = list(w.snapshot().adds.values())
     probe = (
         load_table(spark, sf_dir, "events").agg(F.max("event_id")).first()[0]
     )
@@ -1279,7 +1279,7 @@ def test_txn_optimize_zorder_prunes_both_dims(spark, sf_dir):
     scanned = {f.rstrip("/").split("/")[-2] for f in df.inputFiles()}
     assert scanned == {"z0", "z1"}, scanned
 
-    root, log_dir = _txn_zorder_table(spark, sf_dir)
+    root, _log_dir = _txn_zorder_table(spark, sf_dir)
     assert os.path.exists(os.path.join(root, "u0"))  # old layout retained
     # the user dimension prunes on the SAME layout (the 2-D property)
     import json
@@ -1289,7 +1289,7 @@ def test_txn_optimize_zorder_prunes_both_dims(spark, sf_dir):
     lower = _zorder_prune(root, "user", 0, max_user // 2 - 1)
     assert lower == ["z0", "z2"], lower
     # CDF silence: the ZORDER publish (v4) changes no data
-    assert table_changes(spark, root, log_dir, 4, 4).count() == 0
+    assert table_changes(spark, root, 4, 4).count() == 0
 
 
 def test_txn_cdf_touches_only_changed_files(spark, sf_dir):
@@ -1303,11 +1303,11 @@ def test_txn_cdf_touches_only_changed_files(spark, sf_dir):
         table_changes,
     )
 
-    root, log_dir = _txn_cdf_table(spark, sf_dir)
-    v2 = table_changes(spark, root, log_dir, 2, 2)
+    root, _log_dir = _txn_cdf_table(spark, sf_dir)
+    v2 = table_changes(spark, root, 2, 2)
     scanned = {f.rstrip("/").split("/")[-2] for f in v2.inputFiles()}
     assert scanned == {"a0", "a0d"}, scanned
-    v3 = table_changes(spark, root, log_dir, 3, 3)
+    v3 = table_changes(spark, root, 3, 3)
     assert v3.inputFiles() == []
     assert v3.count() == 0
 

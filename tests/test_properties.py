@@ -727,7 +727,7 @@ def test_cdf_apply_changes_reproduces_snapshots(ops):
             state = dict(snapshots[lo])
             for v in range(lo + 1, head + 1):
                 for ch in _txn_stream_commit_rows(
-                    root, w.log_dir, v, mode="cdf"
+                    root, v, mode="cdf"
                 ):
                     ctype, row = ch[0], ch[2:]
                     if ctype == "insert":

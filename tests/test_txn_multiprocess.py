@@ -16,7 +16,7 @@ contract end to end:
   surface CommitConflict (concurrent remove-remove),
 * the replayed live set equals exactly what the winners committed,
   and the one-action-per-file-per-commit invariant holds across every
-  commit file (the same assertion txn_writer._last_wins makes on
+  commit file (the same assertion txn_writer._last_actions makes on
   every replay).
 
 Reference parity: the reference's feed writes race freely (Cassandra

@@ -888,36 +888,36 @@ def read_snapshot(
     spark: SparkSession, root: str, as_of: int | None = None
 ) -> DataFrame:
     """The ONE txn-log snapshot read every certified reader shares:
-    TxnLogWriter's replay (checkpoint base + tail, multi-part parts,
-    vacuumed-history refusal, protocol gate, asserted one-action-per-
-    file-per-commit) resolves the live files as of `as_of` (default
-    HEAD) on the driver — planning scale, no Spark job — and the live
-    files are scanned with the newest metaData schema the replay sees
+    TxnLogWriter.snapshot (checkpoint base + tail, multi-part parts,
+    vacuumed-history and gapped-tail refusals, protocol gate, asserted
+    one-action-per-file-per-commit) resolves the table as of `as_of`
+    (default HEAD) on the driver — planning scale, no Spark job — and
+    scan_snapshot scans it."""
+    from user_feed_cdc_spark.sources.txn_writer import TxnLogWriter
+
+    return scan_snapshot(spark, root, TxnLogWriter(root).snapshot(as_of))
+
+
+def scan_snapshot(spark: SparkSession, root: str, snap) -> DataFrame:
+    """Scan a replayed txn_writer.Snapshot of the table at `root`: its
+    live files with the newest metaData schema it carries
     (schema-on-log), else the events schema. A column-mapping
     metaData (a JSON document, not DDL) names LOGICAL columns over the
     physical events columns, so those tables scan the events schema
-    too (read_txn_log_mapped projects). Data files never move until
-    the scan executes."""
-    from user_feed_cdc_spark.sources.txn_writer import (
-        TxnLogWriter,
-        _last_wins,
-        _newest_action,
-    )
-
-    w = TxnLogWriter(root)
-    hi = w.latest_version() if as_of is None else as_of
-    acts = w._replay_actions(hi) if hi >= 0 else []
-    meta = _newest_action(acts, "metaData")
+    too (read_txn_log_mapped projects). Readers that take other facts
+    (deletion vectors, stats) from the same Snapshot see exactly the
+    version they scan. Data files never move until the scan
+    executes."""
+    meta = snap.newest("metaData")
     schema = (
         meta["schema"]
         if meta and not meta["schema"].startswith("{")
         else TABLE_SCHEMAS["events"]
     )
-    live = _last_wins(acts)
-    if not live:
+    if not snap.live:
         return spark.createDataFrame([], schema)
     return spark.read.schema(schema).parquet(
-        *[os.path.join(root, name) for name in live]
+        *[os.path.join(root, name) for name in snap.live]
     )
 
 
@@ -931,7 +931,7 @@ def source_txn_log_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     two files, add their merged replacement); a reader that trusts the
     directory listing instead of the log double-counts the compacted
     buckets and the value hash fails loudly — the gate certifies the
-    log replay itself (txn_writer._last_wins: later version wins per
+    log replay itself (txn_writer._last_actions: later version wins per
     file, and one commit may not both add and remove a file).
 
     This is file-level time travel, the complement of the row-level
@@ -1098,16 +1098,16 @@ def source_txn_log_deletes(spark: SparkSession, sf_dir: str) -> DataFrame:
     from user_feed_cdc_spark.sources.txn_writer import TxnLogWriter
 
     root, _log_dir = _txn_log_dv_table(spark, sf_dir)
-    w = TxnLogWriter(root)
-    v = w.latest_version()  # pin: the DVs and the scan share one version
-    dv_map = w._newest_dv(v)  # planning step: |dv| actions, driver-side
-    scan = read_snapshot(spark, root, as_of=v).withColumn(
+    # one snapshot: the DVs and the scan share one version (planning
+    # step: |dv| actions, driver-side)
+    snap = TxnLogWriter(root).snapshot()
+    scan = scan_snapshot(spark, root, snap).withColumn(
         "_file",
         F.regexp_extract(F.input_file_name(), "/([^/]+)/[^/]+$", 1),
     )
     dv_schema = "event_id long"
     dv_rows = None
-    for fname, dvname in sorted(dv_map.items()):
+    for fname, dvname in sorted(snap.dvs.items()):
         part = (
             spark.read.schema(dv_schema)
             .parquet(os.path.join(root, dvname))
@@ -1195,12 +1195,11 @@ def source_txn_log_data_skipping(
     from user_feed_cdc_spark.sources.txn_writer import TxnLogWriter
 
     root, _log_dir = _txn_log_stats_table(spark, sf_dir)
-    w = TxnLogWriter(root)
     # planning step: |files| winning add actions, exactly the Delta
     # stats-pruning pass; the predicate event_id <= max/2 comes from
     # the stats themselves (the planning phase knows the table's max
     # without scanning data)
-    adds = w._winning_adds(w.latest_version())
+    adds = TxnLogWriter(root).snapshot().adds
     hi = max(a["max_id"] for a in adds.values()) // 2
     survivors = sorted(f for f, a in adds.items() if a["min_id"] <= hi)
     scan = spark.read.schema(TABLE_SCHEMAS["events"]).parquet(
@@ -1383,8 +1382,7 @@ def source_txn_log_bloom_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     probe = (
         load_table(spark, sf_dir, "events").agg(F.max("event_id")).first()[0]
     )
-    w = TxnLogWriter(root)
-    adds = w._winning_adds(w.latest_version())  # planning step: |files|
+    adds = TxnLogWriter(root).snapshot().adds  # planning step: |files|
     by_bloom = _read_bloom_sidecars(
         spark, root, [a["bloom"] for a in adds.values()]
     )
@@ -1761,8 +1759,7 @@ def source_txn_log_optimize_cluster(
     from user_feed_cdc_spark.sources.txn_writer import TxnLogWriter
 
     root, _log_dir = _txn_optimize_table(spark, sf_dir)
-    w = TxnLogWriter(root)
-    adds = w._winning_adds(w.latest_version())  # planning step: |files|
+    adds = TxnLogWriter(root).snapshot().adds  # planning step: |files|
     hi = max(a["max_id"] for a in adds.values()) // 4
     survivors = sorted(f for f, a in adds.items() if a["min_id"] <= hi)
     scan = spark.read.schema(TABLE_SCHEMAS["events"]).parquet(
@@ -1784,10 +1781,7 @@ def _txn_dv_optimize_table(spark: SparkSession, sf_dir: str) -> str:
     were already logically deleted when the dv actions landed, so the
     change-data feed must NOT re-emit them (Delta's REORG TABLE ...
     APPLY (PURGE) semantics). Untouched files are never rewritten."""
-    from user_feed_cdc_spark.sources.txn_writer import (
-        TxnLogWriter,
-        _newest_dv_of,
-    )
+    from user_feed_cdc_spark.sources.txn_writer import TxnLogWriter
 
     def build(root: str) -> None:
         w = TxnLogWriter(root)
@@ -1815,10 +1809,8 @@ def _txn_dv_optimize_table(spark: SparkSession, sf_dir: str) -> str:
         w.begin().set_dv("f1", "dv_f1b").commit()  # supersedes dv_f1a
 
         # DV-aware OPTIMIZE: materialize the winning vectors
-        acts = w._replay_actions(w.latest_version())
-        dv_map = _newest_dv_of(acts, set(w.live_files()))
         txn = w.begin()
-        for fname, dvname in sorted(dv_map.items()):
+        for fname, dvname in sorted(w.snapshot(txn.base_version).dvs.items()):
             data = spark.read.schema(TABLE_SCHEMAS["events"]).parquet(
                 os.path.join(root, fname)
             )
@@ -1862,26 +1854,21 @@ def source_txn_log_optimize_dv(
     into clean scans, at rewrite cost ∝ data in DV'd files only.
     dataChange=False keeps CDF exactly-once: the deletes were emitted
     when the dv actions landed, the compaction emits nothing."""
-    from user_feed_cdc_spark.sources.txn_writer import (
-        TxnLogWriter,
-        _newest_dv_of,
-    )
+    from user_feed_cdc_spark.sources.txn_writer import TxnLogWriter
 
     root = _txn_dv_optimize_table(spark, sf_dir)
-    w = TxnLogWriter(root)
-    live = w.live_files()
-    acts = w._replay_actions(w.latest_version())
-    residual = _newest_dv_of(acts, set(live))
-    if residual:
+    snap = TxnLogWriter(root).snapshot()
+    if snap.dvs:
         raise ValueError(
-            f"OPTIMIZE left live files with deletion vectors: {residual}"
+            f"OPTIMIZE left live files with deletion vectors: {snap.dvs}"
         )
+    live = set(snap.live)
     untouched = {f"f{b}" for b in (0, 2, 4, 5)}
-    if not untouched <= set(live) or not {"c_f1", "c_f3"} <= set(live):
+    if not untouched <= live or not {"c_f1", "c_f3"} <= live:
         raise ValueError(
             f"unexpected post-OPTIMIZE live set: {sorted(live)}"
         )
-    return _fidelity_agg(read_snapshot(spark, root))
+    return _fidelity_agg(scan_snapshot(spark, root, snap))
 
 
 def _txn_compact_table(spark: SparkSession, sf_dir: str) -> str:
@@ -1918,12 +1905,7 @@ def _txn_compact_table(spark: SparkSession, sf_dir: str) -> str:
         # planning is PURE LOG MATH: sizes come from add stats, no
         # filesystem listing — the same catalog-scale read every
         # other planner pass does
-        acts = w._replay_actions(w.latest_version())
-        sizes = {
-            a["file"]: a["bytes"]
-            for a in acts
-            if a.get("action") == "add"
-        }
+        sizes = {f: a["bytes"] for f, a in w.snapshot().adds.items()}
         target = max(1, sum(sizes.values()) // 4)
         bins: list[tuple[list[str], int]] = []
         for name in sorted(sizes, key=lambda n: -sizes[n]):  # FFD
@@ -1979,21 +1961,19 @@ def source_txn_log_compact_small_files(
     from user_feed_cdc_spark.sources.txn_writer import TxnLogWriter
 
     root = _txn_compact_table(spark, sf_dir)
-    w = TxnLogWriter(root)
-    live = w.live_files()
-    if len(live) > 8:
+    snap = TxnLogWriter(root).snapshot()
+    if len(snap.live) > 8:
         raise ValueError(
-            f"compaction left {len(live)} live files of 16 — no shrink"
+            f"compaction left {len(snap.live)} live files of 16 — no shrink"
         )
-    acts = w._replay_actions(w.latest_version())
     n_adds = sum(
         1
-        for a in acts
+        for a in snap.actions
         if a.get("action") == "add" and a["version"] == 1
     )
     n_removes = sum(
         1
-        for a in acts
+        for a in snap.actions
         if a.get("action") == "remove" and a["version"] == 1
     )
     if n_adds and n_removes < 2 * n_adds:
@@ -2002,7 +1982,7 @@ def source_txn_log_compact_small_files(
             f"{n_removes} removed fragments — a single-file bin was "
             "pointlessly rewritten"
         )
-    return _fidelity_agg(read_snapshot(spark, root))
+    return _fidelity_agg(scan_snapshot(spark, root, snap))
 
 
 _TXN_SCHEMA_EVO_ORACLE = """
@@ -2398,13 +2378,12 @@ def _txn_commit_plan(
 
 def _txn_stream_commit_rows(
     root: str,
-    log_dir: str,
     version: int,
     mode: str = "append_only",
     memo: dict | None = None,
 ) -> list[tuple]:
     """One streaming micro-batch = one commit, two contracts (planned
-    by _txn_commit_plan; `log_dir` is `root`'s `_log`):
+    by _txn_commit_plan):
 
     * mode='append_only' (default): REFUSE non-append commits; emit
       the added files' rows as (event_id, ts_us, user_id, event_type,
@@ -2482,7 +2461,6 @@ _TXN_STREAM_PA_FIELDS = [
 
 def _txn_stream_commit_batches(
     root: str,
-    log_dir: str,
     version: int,
     mode: str = "append_only",
     memo: dict | None = None,
@@ -2619,7 +2597,7 @@ def _txn_stream_commit_batches(
         dv_plans.append((new_arr, prev_arr, ft))
 
     if not (dv_vec_ok and _vec_ok(at) and _vec_ok(rt)):
-        rows = _txn_stream_commit_rows(root, log_dir, version, mode, memo)
+        rows = _txn_stream_commit_rows(root, version, mode, memo)
         if not rows:
             return []
         schema = pa.schema(
@@ -2707,7 +2685,7 @@ def streaming_txn_source_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     protocol clarity at fixture scale)."""
     from user_feed_cdc_spark.sources.txn_writer import TxnLogWriter
 
-    root, log_dir = _txn_stream_table(spark, sf_dir)
+    root, _log_dir = _txn_stream_table(spark, sf_dir)
     latest = TxnLogWriter(root).latest_version()
     memo: dict = {}  # per-invocation file cache (see _txn_stream_file_table)
     _register_version_stream(
@@ -2716,7 +2694,7 @@ def streaming_txn_source_live(spark: SparkSession, sf_dir: str) -> DataFrame:
         _TXN_STREAM_SCHEMA,
         -1,
         latest,
-        lambda v: _txn_stream_commit_batches(root, log_dir, v, memo=memo),
+        lambda v: _txn_stream_commit_batches(root, v, memo=memo),
     )
     back = _drain_to_memory(
         spark, "txn_log_stream", "streaming_txn_source_sink", "v", latest
@@ -2847,11 +2825,10 @@ def _zorder_prune(root: str, dim: str, lo: int, hi: int) -> list[str]:
     Morton-clustered. Planning scale: |files| winning add actions."""
     from user_feed_cdc_spark.sources.txn_writer import TxnLogWriter
 
-    w = TxnLogWriter(root)
     mn, mx = f"{dim}_min", f"{dim}_max"
     return sorted(
         f
-        for f, a in w._winning_adds(w.latest_version()).items()
+        for f, a in TxnLogWriter(root).snapshot().adds.items()
         if a[mn] <= hi and a[mx] >= lo
     )
 
@@ -2993,7 +2970,7 @@ def _txn_cdf_table(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
 
 
 def table_changes(
-    spark: SparkSession, root: str, log_dir: str, lo: int, hi: int
+    spark: SparkSession, root: str, lo: int, hi: int
 ) -> DataFrame:
     """Row-level change-data-feed read across commit versions [lo, hi]
     — Delta's table_changes() re-expressed over the mini log. Per
@@ -3009,7 +2986,8 @@ def table_changes(
     rows emit an update_preimage/update_postimage PAIR (Delta's MERGE
     change types), never a phantom delete+insert; a dv action emits
     the rows its sidecar ADDS over the file's previous dv (cumulative
-    snapshots — the delta between snapshots is the change).
+    snapshots — the delta between snapshots is the change, the
+    previous sidecar resolved by _TxnCommitPlan.prev_dv).
     Everything row-scale runs as Spark anti-/inner-joins per version,
     unioned into one frame tagged (change_type, commit_version).
 
@@ -3017,9 +2995,9 @@ def table_changes(
     keyed on row identity over just that commit's touched files —
     shuffle ∝ changed data, never table size; untouched files are
     never opened. The per-version loop is |versions| driver JSON
-    reads, the same planning cost every other log read pays. Commits
-    are read through _txn_commit_plan(root, v); `log_dir` is `root`'s
-    `_log`."""
+    reads, the same planning cost every other log read pays; only
+    versions in [lo, hi] are read, plus the backward prev-dv walk of a
+    dv action. A missing commit the read needs REFUSES."""
     ev_schema = TABLE_SCHEMAS["events"]
     out: DataFrame | None = None
 
@@ -3030,87 +3008,75 @@ def table_changes(
             *[os.path.join(root, f) for f in files]
         )
 
-    # DV actions are cumulative per file: to diff we need each file's
-    # PREVIOUS winning dv, so walk the whole log once (driver, JSON)
-    prev_dv: dict[str, str] = {}
-    for v in range(0, hi + 1):
+    for v in range(lo, hi + 1):
         try:
             plan = _txn_commit_plan(root, v, "cdf")
         except FileNotFoundError:
-            if v >= lo:
-                raise ValueError(
-                    f"commit v{v} in table_changes({lo}, {hi}) was "
-                    "vacuumed — the change history is gone"
-                ) from None
-            continue
-        if lo <= v <= hi:
-            added, removed = _read(plan.adds), _read(plan.removes)
-            pieces = []
-            if added is not None:
-                ins = (
-                    added.join(removed, ["event_id"], "left_anti")
-                    if removed is not None
-                    else added
-                )
-                pieces.append(ins.withColumn("change_type", F.lit("insert")))
-            if removed is not None:
-                dele = (
-                    removed.join(added, ["event_id"], "left_anti")
-                    if added is not None
-                    else removed
-                )
-                pieces.append(dele.withColumn("change_type", F.lit("delete")))
-            if added is not None and removed is not None:
-                import functools
+            raise ValueError(
+                f"commit v{v} in table_changes({lo}, {hi}) was "
+                "vacuumed — the change history is gone"
+            ) from None
+        added, removed = _read(plan.adds), _read(plan.removes)
+        pieces = []
+        if added is not None:
+            ins = (
+                added.join(removed, ["event_id"], "left_anti")
+                if removed is not None
+                else added
+            )
+            pieces.append(ins.withColumn("change_type", F.lit("insert")))
+        if removed is not None:
+            dele = (
+                removed.join(added, ["event_id"], "left_anti")
+                if added is not None
+                else removed
+            )
+            pieces.append(dele.withColumn("change_type", F.lit("delete")))
+        if added is not None and removed is not None:
+            import functools
 
-                cols = [
-                    fld.name
-                    for fld in ev_schema.fields
-                    if fld.name != "event_id"
-                ]
-                both = added.alias("a").join(
-                    removed.alias("r"), "event_id", "inner"
+            cols = [f.name for f in ev_schema.fields if f.name != "event_id"]
+            both = added.alias("a").join(removed.alias("r"), "event_id")
+            changed = both.filter(
+                ~functools.reduce(
+                    lambda x, y: x & y,
+                    [
+                        F.col(f"a.{c}").eqNullSafe(F.col(f"r.{c}"))
+                        for c in cols
+                    ],
                 )
-                changed = both.filter(
-                    ~functools.reduce(
-                        lambda x, y: x & y,
-                        [
-                            F.col(f"a.{c}").eqNullSafe(F.col(f"r.{c}"))
-                            for c in cols
-                        ],
-                    )
+            )
+            pieces.append(
+                changed.select(
+                    "event_id",
+                    *[F.col(f"r.{c}").alias(c) for c in cols],
+                ).withColumn("change_type", F.lit("update_preimage"))
+            )
+            pieces.append(
+                changed.select(
+                    "event_id",
+                    *[F.col(f"a.{c}").alias(c) for c in cols],
+                ).withColumn("change_type", F.lit("update_postimage"))
+            )
+        for file, dv in plan.dvs:
+            new_dv = spark.read.schema("event_id long").parquet(
+                os.path.join(root, dv)
+            )
+            prev = plan.prev_dv(file)
+            if prev is not None:
+                old = spark.read.schema("event_id long").parquet(
+                    os.path.join(root, prev)
                 )
-                pieces.append(
-                    changed.select(
-                        "event_id",
-                        *[F.col(f"r.{c}").alias(c) for c in cols],
-                    ).withColumn("change_type", F.lit("update_preimage"))
-                )
-                pieces.append(
-                    changed.select(
-                        "event_id",
-                        *[F.col(f"a.{c}").alias(c) for c in cols],
-                    ).withColumn("change_type", F.lit("update_postimage"))
-                )
-            for file, dv in plan.dvs:
-                new_dv = spark.read.schema("event_id long").parquet(
-                    os.path.join(root, dv)
-                )
-                if file in prev_dv:
-                    old = spark.read.schema("event_id long").parquet(
-                        os.path.join(root, prev_dv[file])
-                    )
-                    new_dv = new_dv.join(old, ["event_id"], "left_anti")
-                rows = (
-                    spark.read.schema(ev_schema)
-                    .parquet(os.path.join(root, file))
-                    .join(F.broadcast(new_dv), ["event_id"], "left_semi")
-                )
-                pieces.append(rows.withColumn("change_type", F.lit("delete")))
-            for p in pieces:
-                p = p.withColumn("commit_version", F.lit(v).cast("long"))
-                out = p if out is None else out.unionByName(p)
-        prev_dv.update(plan.dvs)
+                new_dv = new_dv.join(old, ["event_id"], "left_anti")
+            rows = (
+                spark.read.schema(ev_schema)
+                .parquet(os.path.join(root, file))
+                .join(F.broadcast(new_dv), ["event_id"], "left_semi")
+            )
+            pieces.append(rows.withColumn("change_type", F.lit("delete")))
+        for p in pieces:
+            p = p.withColumn("commit_version", F.lit(v).cast("long"))
+            out = p if out is None else out.unionByName(p)
     if out is None:
         # no change-producing commit in range (e.g. OPTIMIZE-only):
         # an EMPTY feed with the full feed schema, never an error —
@@ -3125,7 +3091,7 @@ def table_changes(
 
 
 def table_changes_between_timestamps(
-    spark: SparkSession, root: str, log_dir: str, t1: int, t2: int
+    spark: SparkSession, root: str, t1: int, t2: int
 ) -> DataFrame:
     """Timestamp-bounded change feed — Delta's startingTimestamp /
     endingTimestamp contract composed from the two r12 pieces: the
@@ -3148,7 +3114,7 @@ def table_changes_between_timestamps(
         )
         return spark.createDataFrame([], ddl)
     return table_changes(
-        spark, root, log_dir, min(starts), w.version_at_timestamp(t2)
+        spark, root, min(starts), w.version_at_timestamp(t2)
     )
 
 
@@ -3177,8 +3143,8 @@ def source_txn_log_cdf(spark: SparkSession, sf_dir: str) -> DataFrame:
     never open. This is what downstream incremental consumers
     (materialized-view maintenance, cdc_incremental_agg_maintenance)
     read instead of re-scanning snapshots."""
-    root, log_dir = _txn_cdf_table(spark, sf_dir)
-    changes = table_changes(spark, root, log_dir, 1, 5)
+    root, _log_dir = _txn_cdf_table(spark, sf_dir)
+    changes = table_changes(spark, root, 1, 5)
     return changes.groupBy(
         "change_type", "commit_version", "event_type"
     ).agg(
@@ -3296,7 +3262,7 @@ def streaming_txn_cdf_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     what the batch table_changes already does in Spark)."""
     from user_feed_cdc_spark.sources.txn_writer import TxnLogWriter
 
-    root, log_dir = _txn_cdf_table(spark, sf_dir)
+    root, _log_dir = _txn_cdf_table(spark, sf_dir)
     latest = TxnLogWriter(root).latest_version()
     memo: dict = {}  # per-invocation file cache (see _txn_stream_file_table)
     _register_version_stream(
@@ -3306,7 +3272,7 @@ def streaming_txn_cdf_live(spark: SparkSession, sf_dir: str) -> DataFrame:
         0,  # startingVersion=1: stream AFTER v0's base
         latest,
         lambda v: _txn_stream_commit_batches(
-            root, log_dir, v, mode="cdf", memo=memo
+            root, v, mode="cdf", memo=memo
         ),
     )
     back = _drain_to_memory(
@@ -3559,7 +3525,7 @@ def _txn_clone_tables(
         src_live_before = src.live_files()
         src_log_before = src.latest_version()
         # diverge the clone: stats-pruned COW DELETE (only r0 matches)
-        adds = clone._winning_adds(clone.latest_version())
+        adds = clone.snapshot().adds
         cut = max(a["max_id"] for a in adds.values()) // 8
         txn = clone.begin()
         rewrote = []
@@ -3824,10 +3790,11 @@ def read_txn_log_mapped(spark: SparkSession, root: str) -> DataFrame:
 
     from user_feed_cdc_spark.sources.txn_writer import TxnLogWriter
 
-    meta = _json.loads(TxnLogWriter(root)._newest_schema())
+    snap = TxnLogWriter(root).snapshot()  # one version: schema AND scan
+    meta = _json.loads(snap.newest("metaData")["schema"])
     mapping = meta.get("columnMapping", {})
-    snap = read_snapshot(spark, root)  # PHYSICAL (events) column names
-    return snap.select(
+    scan = scan_snapshot(spark, root, snap)  # PHYSICAL (events) names
+    return scan.select(
         *[
             F.col(mapping.get(logical, logical)).alias(logical)
             for logical in meta["columns"]
@@ -3930,8 +3897,7 @@ def source_txn_log_partition_values(
     root, _log_dir = _txn_partvals_table(spark, sf_dir)
     from user_feed_cdc_spark.sources.txn_writer import TxnLogWriter
 
-    w = TxnLogWriter(root)
-    adds = w._winning_adds(w.latest_version())
+    adds = TxnLogWriter(root).snapshot().adds
     # deterministic probe: MIN(event_type), read off the log's adds
     target = min(a["partition_values"]["event_type"] for a in adds.values())
     survivors = sorted(
@@ -3998,13 +3964,13 @@ def source_txn_log_cdf_ivm(spark: SparkSession, sf_dir: str) -> DataFrame:
     version, anti-joins over just the touched files), the whole point
     of maintaining a 100 TB table's views from its feed instead of
     rescanning it."""
-    root, log_dir = _txn_cdf_table(spark, sf_dir)
+    root, _log_dir = _txn_cdf_table(spark, sf_dir)
     cents = F.floor(F.col("value") * 100.0 + F.lit(0.5)).cast("long")
     base = read_snapshot(spark, root, as_of=1)
     mv1 = base.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n0"), F.sum(cents).alias("c0")
     )
-    ch = table_changes(spark, root, log_dir, 2, 5)
+    ch = table_changes(spark, root, 2, 5)
     sign = (
         F.when(
             F.col("change_type").isin("insert", "update_postimage"), F.lit(1)
@@ -4064,7 +4030,7 @@ def streaming_txn_cdf_ivm_live(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from user_feed_cdc_spark.sources.txn_writer import TxnLogWriter
 
-    root, log_dir = _txn_cdf_table(spark, sf_dir)
+    root, _log_dir = _txn_cdf_table(spark, sf_dir)
     latest = TxnLogWriter(root).latest_version()
     mv_root = _scratch_path("txncdfivm", sf_dir, uuid.uuid4().hex[:12])
     os.makedirs(mv_root, exist_ok=True)
@@ -4079,7 +4045,7 @@ def streaming_txn_cdf_ivm_live(spark: SparkSession, sf_dir: str) -> DataFrame:
         -1,  # from empty: v0's inserts build the base
         latest,
         lambda v: _txn_stream_commit_batches(
-            root, log_dir, v, mode="cdf", memo=memo
+            root, v, mode="cdf", memo=memo
         ),
     )
 
@@ -4520,7 +4486,7 @@ def source_txn_log_row_tracking(
                 num_records=sizes[name],
             ).commit()
         # OPTIMIZE compaction: inherit ids, MATERIALIZE them into C
-        adds = w._winning_adds(w.latest_version())
+        adds = w.snapshot().adds
         parts = []
         for name in ("ra", "rb"):
             base = int(adds[name]["base_row_id"])
@@ -4564,11 +4530,8 @@ def source_txn_log_row_tracking(
         ).commit()
 
     root = cached_fixture("rowtrack", sf_dir, ":v1", build)
-    w = TxnLogWriter(root)
-    adds = w._winning_adds(w.latest_version())
     frames = []
-    for name in w.live_files():
-        a = adds[name]
+    for name, a in sorted(TxnLogWriter(root).snapshot().adds.items()):
         if a.get("materialized_row_ids"):
             frames.append(
                 spark.read.parquet(os.path.join(root, name)).select(
@@ -5536,17 +5499,15 @@ def source_txn_log_multipart_checkpoint(
     multi-GB JSON a driver must stream alone; parts bound file size
     and parallelize the load — the same reason Delta shards
     checkpoint parquet."""
-    root, log_dir = _txn_multipart_table(spark, sf_dir)
-    parts = [
-        n
-        for n in os.listdir(log_dir)
-        if ".checkpoint." in n and not n.endswith(".checkpoint.json")
-    ]
+    from user_feed_cdc_spark.sources.txn_writer import TxnLogWriter
+
+    root, _log_dir = _txn_multipart_table(spark, sf_dir)
+    w = TxnLogWriter(root)
+    files = w.checkpoint_files(w.latest_version())
+    parts = [n for n in files if not n.endswith(".checkpoint.json")]
     if len(parts) != 3:
         raise ValueError(f"expected 3 checkpoint parts, got {parts}")
-    if any(
-        n.endswith(".checkpoint.json") for n in os.listdir(log_dir)
-    ):
+    if len(files) != len(parts):
         raise ValueError("single-file checkpoint present alongside parts")
     return _fidelity_agg(read_snapshot(spark, root))
 
@@ -5638,8 +5599,7 @@ def source_txn_log_hidden_partitioning(
     )
     # predicate -> day range, resolved against the log alone
     lo_day, hi_day = lo.date(), hi.date()
-    w = TxnLogWriter(root)
-    adds = w._winning_adds(w.latest_version())
+    adds = TxnLogWriter(root).snapshot().adds
     survivors = sorted(
         f
         for f, a in adds.items()
@@ -5779,8 +5739,7 @@ def source_txn_log_string_stats_pruning(
             "fixture degenerate: probe does not extend its prefix — "
             "the truncation hazard this entry certifies is absent"
         )
-    w = TxnLogWriter(root)
-    adds = w._winning_adds(w.latest_version())
+    adds = TxnLogWriter(root).snapshot().adds
     survivors = sorted(
         f
         for f, a in adds.items()

@@ -5,7 +5,7 @@ certified in sources/formats.py. Every transaction log — the certified
 fixtures included — is produced here: optimistic-concurrency version
 allocation, logical conflict checks, checkpoint writing, and an
 idempotent streaming foreachBatch sink — and the replay below
-(_replay_actions + _last_wins) is the one every reader runs. The write
+(TxnLogWriter.snapshot) is the one every reader runs. The write
 path a user of the reference's feed table (event_processor.py:89-113
 appends each activity batch to serving storage) hits first.
 
@@ -24,7 +24,7 @@ Protocol (a faithful miniature of Delta's OptimisticTransaction):
   OPTIMIZE of the same file group, the classic case).
 * Every commit holds the ONE-ACTION-PER-FILE-PER-COMMIT invariant at
   write time (the replay side independently asserts it — see
-  _last_wins, the one replay every reader and writer runs).
+  _last_actions, the one replay every reader and writer runs).
 * With `checkpoint_interval=N`, every Nth commit also writes
   `{v:05d}.checkpoint.json` (the live file list as of v, plus the
   newest txn action per streaming app — Delta checkpoints carry
@@ -58,6 +58,8 @@ from __future__ import annotations
 
 import json
 import os
+from dataclasses import dataclass
+from functools import cached_property
 
 
 class CommitConflict(Exception):
@@ -79,7 +81,7 @@ def _last_actions(actions: list[dict]) -> dict[str, tuple[int, int]]:
     file -> (version, 1 if its winning action is a remove else 0).
     Every txn-log reader (formats.py's snapshot reads included) and
     every writer-side state derivation resolves files here — live
-    sets through _last_wins, vacuum's removed-at-or-below-checkpoint
+    sets through Snapshot.live, vacuum's removed-at-or-below-checkpoint
     sweep directly. Across commits the later version wins (a re-add
     generalizes); a remove ranks above an add only across versions.
     The ONE-ACTION-PER-FILE-PER-COMMIT invariant the committer holds
@@ -104,44 +106,95 @@ def _last_actions(actions: list[dict]) -> dict[str, tuple[int, int]]:
     return last
 
 
-def _last_wins(actions: list[dict]) -> list[str]:
-    """Sorted live file names: the files whose winning action (see
-    _last_actions) is an add."""
-    return sorted(
-        f for f, (_v, r) in _last_actions(actions).items() if r == 0
-    )
+@dataclass(frozen=True)
+class Snapshot:
+    """ONE replayed version of a txn-log table: `version` (-1 for an
+    empty table) and the checkpoint+tail `actions` TxnLogWriter.
+    snapshot() replayed for it, plus every fact readers and writers
+    derive from them — so two facts read for one operation always come
+    from the same version. Each derived view is computed once, on
+    first use."""
 
+    version: int
+    actions: tuple[dict, ...] = ()
 
-def _winning_adds_of(
-    acts: list[dict], live: set[str]
-) -> dict[str, dict]:
-    """Winning (newest) add action per file in `live`, over an
-    already-replayed action list — the shared derivation restore/
-    clone/checkpoint all consume so one replay serves them all."""
-    out: dict[str, dict] = {}
-    for a in acts:
-        if a.get("action") == "add" and (
-            a["file"] not in out
-            or a["version"] >= out[a["file"]]["version"]
-        ):
-            out[a["file"]] = a
-    return {f: a for f, a in out.items() if f in live}
+    @cached_property
+    def live(self) -> tuple[str, ...]:
+        """Sorted live file names: the files whose winning action (see
+        _last_actions) is an add."""
+        last = _last_actions(self.actions)
+        return tuple(sorted(f for f, (_v, r) in last.items() if r == 0))
 
+    @cached_property
+    def adds(self) -> dict[str, dict]:
+        """Winning (newest) add action per live file — the full payload
+        (stats, bloom, partition values) checkpoints, RESTORE and CLONE
+        re-emit and planners prune on."""
+        live = set(self.live)
+        out: dict[str, dict] = {}
+        for a in self.actions:
+            f = a.get("file")
+            if a.get("action") == "add" and f in live and (
+                f not in out or a["version"] >= out[f]["version"]
+            ):
+                out[f] = a
+        return out
 
-def _newest_dv_of(
-    acts: list[dict], live: set[str] | None
-) -> dict[str, str]:
-    """file -> newest deletion-vector sidecar over an action list;
-    `live=None` keeps EVERY file's newest dv — what a reader would
-    resolve for a file the moment a later commit makes it live again
-    (the stale-DV hazard restore must reason about)."""
-    newest: dict[str, tuple[int, str]] = {}
-    for a in acts:
-        if a.get("action") == "dv" and (live is None or a["file"] in live):
-            v = a["version"]
-            if a["file"] not in newest or v >= newest[a["file"]][0]:
-                newest[a["file"]] = (v, a["dv"])
-    return {f: dv for f, (_v, dv) in newest.items()}
+    @cached_property
+    def dvs_any(self) -> dict[str, str]:
+        """file -> newest deletion-vector sidecar for EVERY file, live
+        or not — what a reader would resolve for a file the moment a
+        later commit makes it live again (the stale-DV hazard restore
+        must reason about)."""
+        newest: dict[str, tuple[int, str]] = {}
+        for a in self.actions:
+            f = a.get("file")
+            if a.get("action") == "dv" and (
+                f not in newest or a["version"] >= newest[f][0]
+            ):
+                newest[f] = (a["version"], a["dv"])
+        return {f: dv for f, (_v, dv) in newest.items()}
+
+    @cached_property
+    def dvs(self) -> dict[str, str]:
+        """file -> newest deletion-vector sidecar, live files only."""
+        live = set(self.live)
+        return {f: dv for f, dv in self.dvs_any.items() if f in live}
+
+    def newest(self, kind: str) -> dict | None:
+        """The NEWEST action of `kind` — the newest-wins rule schema,
+        constraints, protocol and commitInfo resolve by."""
+        newest = None
+        for a in self.actions:
+            if a.get("action") == kind and (
+                newest is None or a["version"] >= newest["version"]
+            ):
+                newest = a
+        return newest
+
+    @property
+    def constraints(self) -> list[str]:
+        """The newest constraints action's CHECK expressions (empty for
+        an unconstrained table)."""
+        con = self.newest("constraints")
+        return list(con["exprs"]) if con else []
+
+    @property
+    def generated(self) -> dict[str, str]:
+        """column -> GENERATED ALWAYS AS expression from the newest
+        metaData action."""
+        meta = self.newest("metaData")
+        return dict(meta.get("generated", {})) if meta else {}
+
+    def txn(self, app: str) -> int | None:
+        """Highest txn watermark of a streaming app (None if it never
+        committed) — the idempotence check Delta's txnVersion serves."""
+        batches = [
+            a["batch"]
+            for a in self.actions
+            if a.get("action") == "txn" and a.get("app") == app
+        ]
+        return max(batches) if batches else None
 
 
 # Built-in freshness floor for vacuum's UNTRACKED-orphan sweep when the
@@ -254,19 +307,6 @@ def _identity_high(acts: list[dict], col: str, spec: dict) -> int | None:
     return max(highs) if sign > 0 else min(highs)
 
 
-def _newest_action(acts: list[dict], kind: str) -> dict | None:
-    """The NEWEST action of `kind` over an already-replayed list —
-    the newest-wins rule shared by schema, constraints, and protocol
-    resolution (and by restore's table-definition rewind)."""
-    newest = None
-    for a in acts:
-        if a.get("action") == kind and (
-            newest is None or a["version"] >= newest["version"]
-        ):
-            newest = a
-    return newest
-
-
 # The highest table-format reader version this engine implements.
 # Version 1: base snapshot replay; 2: checkpoints/DV/stats/schema/txn/
 # constraints/CDF — everything certified in sources/formats.py. A table
@@ -304,16 +344,33 @@ class TxnLogWriter:
                 out.append(int(name.split(".")[0]))
         return sorted(out)
 
-    def latest_version(self) -> int:
-        """Highest committed version, -1 for an empty table. The
-        checkpoint version participates: after a vacuum with the
-        checkpoint at HEAD every commit file is pruned, and deriving
-        the version from commit files alone would RESET numbering to 0
-        — new commits would land below the checkpoint and be invisible
-        to every checkpoint-based replay (pytest-pinned)."""
+    def _log_state(self) -> tuple[list[int], dict | None, int]:
+        """(commit versions, `_last_checkpoint` pointer, HEAD) from ONE
+        listing of `_log` and ONE pointer read. The checkpoint version
+        participates in HEAD: after a vacuum with the checkpoint at
+        HEAD every commit file is pruned, and deriving the version from
+        commit files alone would RESET numbering to 0 — new commits
+        would land below the checkpoint and be invisible to every
+        checkpoint-based replay (pytest-pinned)."""
         vs = self._commit_versions()
-        ckpt = self._checkpoint_version()
-        return max(vs[-1] if vs else -1, ckpt if ckpt is not None else -1)
+        meta = self._checkpoint_meta()
+        ckpt = meta["version"] if meta else -1
+        return vs, meta, max(vs[-1] if vs else -1, ckpt)
+
+    def latest_version(self) -> int:
+        """Highest committed version, -1 for an empty table."""
+        return self._log_state()[2]
+
+    def checkpoint_files(self, version: int) -> list[str]:
+        """Sorted names of the checkpoint files at `version` in `_log`:
+        the single `.checkpoint.json` file and/or the parts of a
+        multi-part checkpoint."""
+        prefix = f"{version:05d}.checkpoint."
+        return sorted(
+            n
+            for n in os.listdir(self.log_dir)
+            if n.startswith(prefix) and n.endswith(".json")
+        )
 
     def _commit_path(self, v: int) -> str:
         return os.path.join(self.log_dir, f"{v:05d}.json")
@@ -327,6 +384,8 @@ class TxnLogWriter:
             return [json.loads(line) for line in f if line.strip()]
 
     def _actions_between(self, lo: int, hi: int) -> list[dict]:
+        # the raw commits still on disk, gaps skipped: vacuum and row
+        # tracking need removed files' actions, which no snapshot keeps
         acts: list[dict] = []
         for v in self._commit_versions():
             if lo <= v <= hi:
@@ -346,13 +405,12 @@ class TxnLogWriter:
         meta = self._checkpoint_meta()
         return meta["version"] if meta else None
 
-    def _checkpoint_lines(self, ckpt: int) -> list[dict]:
-        """Action lines of the checkpoint at `ckpt`, resolving the
-        single-file and multi-part layouts from the pointer. A
-        pointer naming parts that are missing on disk REFUSES —
-        replaying a partial live set would silently drop files."""
-        meta = self._checkpoint_meta() or {}
-        parts = meta.get("parts") if meta.get("version") == ckpt else None
+    def _checkpoint_lines(self, meta: dict) -> list[dict]:
+        """Action lines of the checkpoint a `_last_checkpoint` pointer
+        names, single-file or multi-part. A pointer naming parts that
+        are missing on disk REFUSES — replaying a partial live set
+        would silently drop files."""
+        ckpt, parts = meta["version"], meta.get("parts")
         if parts is None:
             paths = [
                 os.path.join(self.log_dir, f"{ckpt:05d}.checkpoint.json")
@@ -378,27 +436,44 @@ class TxnLogWriter:
                 )
         return acts
 
-    def _replay_actions(self, hi: int) -> list[dict]:
-        """Checkpoint base (when one exists at or below hi) + tail —
-        the same bounded replay the reader runs, so the writer stays
-        correct after pre-checkpoint commits are vacuumed."""
-        ckpt = self._checkpoint_version()
+    def snapshot(self, as_of: int | None = None) -> Snapshot:
+        """The table as of a version (default HEAD), from ONE listing of
+        `_log` and ONE `_last_checkpoint` read: the checkpoint base
+        (when one exists at or below the version) plus the commits
+        above it — the bounded replay that stays correct after
+        pre-checkpoint commits are vacuumed. Every replayed fact in the
+        engine comes from here. Refuses rather than replaying a
+        silently-partial history: time travel below a checkpoint whose
+        earlier commits were vacuumed, and a commit missing anywhere
+        between the base and the version (a gapped tail would resurrect
+        removed files and drop added ones)."""
+        vs, meta, head = self._log_state()
+        hi = head if as_of is None else as_of
+        if hi < 0:
+            return Snapshot(-1)
+        ckpt = meta["version"] if meta else None
         if ckpt is not None and ckpt <= hi:
-            acts = self._checkpoint_lines(ckpt)
-            lo = ckpt + 1
+            acts, lo = self._checkpoint_lines(meta), ckpt + 1
+        elif ckpt is not None and (not vs or vs[0] != 0):
+            raise ValueError(
+                f"cannot replay to v{hi}: history below checkpoint "
+                f"v{ckpt} was vacuumed"
+            )
         else:
             acts, lo = [], 0
-        if lo == 0 and self._checkpoint_version() is not None:
-            vs = self._commit_versions()
-            if not vs or vs[0] != 0:
-                # time travel below the checkpoint after a vacuum: the
-                # commits that would answer it are gone — refuse rather
-                # than replay a silently-partial history
-                raise ValueError(
-                    f"cannot replay to v{hi}: history below checkpoint "
-                    f"v{self._checkpoint_version()} was vacuumed"
-                )
-        acts.extend(self._actions_between(lo, hi))
+        tail = [v for v in vs if lo <= v <= hi]
+        if len(tail) != hi - lo + 1:
+            gap = next(
+                want for v, want in zip(tail + [None], range(lo, hi + 1))
+                if v != want
+            )
+            raise ValueError(
+                f"cannot replay to v{hi}: commit v{gap} is missing from "
+                "the log — refusing a gapped replay"
+            )
+        for v in tail:
+            acts.extend(self.commit_actions(v))
+        snap = Snapshot(hi, tuple(acts))
         # protocol gate (Delta's minReaderVersion): the NEWEST protocol
         # action visible to this replay rules — newest-wins, matching
         # what write_checkpoint carries forward, so a downgrade commit
@@ -406,22 +481,19 @@ class TxnLogWriter:
         # was vacuumed. Refusing beats silently ignoring a feature the
         # snapshot depends on; time travel to below an upgrade still
         # works because only the replayed actions are consulted.
-        newest = _newest_action(acts, "protocol")
-        need = newest["minReader"] if newest else 1
+        proto = snap.newest("protocol")
+        need = proto["minReader"] if proto else 1
         if need > SUPPORTED_READER_VERSION:
             raise ValueError(
                 f"table requires reader version {need}; this engine "
                 f"supports {SUPPORTED_READER_VERSION} — refusing rather "
                 "than mis-reading an unknown feature"
             )
-        return acts
+        return snap
 
     def live_files(self, as_of: int | None = None) -> list[str]:
         """Sorted live data-file names as of a version (default HEAD)."""
-        hi = self.latest_version() if as_of is None else as_of
-        if hi < 0:
-            return []
-        return _last_wins(self._replay_actions(hi))
+        return list(self.snapshot(as_of).live)
 
     def _known_commit_timestamps(self) -> list[tuple[int, int]]:
         """(version, commit timestamp ms) for every commit whose
@@ -431,9 +503,9 @@ class TxnLogWriter:
         written before the protocol carried commitInfo are absent —
         timestamp travel refuses over them rather than guessing."""
         out: dict[int, int] = {}
-        ckpt = self._checkpoint_version()
-        if ckpt is not None:
-            for a in self._checkpoint_lines(ckpt):
+        meta = self._checkpoint_meta()
+        if meta is not None:
+            for a in self._checkpoint_lines(meta):
                 if a.get("action") == "commitInfo":
                     out[a["version"]] = a["timestamp"]
         for v in self._commit_versions():
@@ -481,42 +553,15 @@ class TxnLogWriter:
         return max(v for v, t in known if t <= ts_ms)
 
     def last_txn(self, app: str) -> int | None:
-        """Newest txn watermark for a streaming app (None if never
-        committed) — the idempotence check Delta's txnVersion serves."""
-        hi = self.latest_version()
-        if hi < 0:
-            return None
-        best = None
-        for a in self._replay_actions(hi):
-            if a.get("action") == "txn" and a.get("app") == app:
-                best = a["batch"] if best is None else max(best, a["batch"])
-        return best
-
-    def _winning_adds(self, as_of: int) -> dict[str, dict]:
-        """Full payload of the WINNING add action per live file as of a
-        version — what checkpointing, RESTORE, and CLONE all re-emit so
-        stats/bloom/dv metadata survives the state copy."""
-        acts = self._replay_actions(as_of)
-        return _winning_adds_of(acts, set(_last_wins(acts)))
-
-    def _newest_dv(self, as_of: int) -> dict[str, str]:
-        """file -> newest deletion-vector sidecar as of a version,
-        restricted to files live at that version."""
-        acts = self._replay_actions(as_of)
-        return _newest_dv_of(acts, set(_last_wins(acts)))
+        """Newest txn watermark for a streaming app at HEAD."""
+        return self.snapshot().txn(app)
 
     def constraints(self, as_of: int | None = None) -> list[str]:
-        """The table's CHECK constraints: the NEWEST constraints
-        action's expression list (empty for an unconstrained table).
-        Carried through checkpoints like schema/txn state. `as_of`
-        pins the read to a version — the write paths read the
-        definition as of their transaction's base snapshot so the
-        conflict check provably covers anything newer."""
-        hi = self.latest_version() if as_of is None else as_of
-        if hi < 0:
-            return []
-        newest = _newest_action(self._replay_actions(hi), "constraints")
-        return list(newest["exprs"]) if newest else []
+        """The table's CHECK constraints as of a version (default HEAD).
+        The write paths read the definition as of their transaction's
+        base snapshot, so the conflict check provably covers anything
+        newer."""
+        return self.snapshot(as_of).constraints
 
     # -- transactions ---------------------------------------------------
 
@@ -559,19 +604,15 @@ class TxnLogWriter:
         # WHOLE table, so it is marked serializable — ANY concurrent
         # write (not just definition changes) conflicts it.
         txn = self.begin().serializable()
-        acts_then = self._replay_actions(version)
-        acts_now = self._replay_actions(txn.base_version)
-        target_live = _last_wins(acts_then)
-        current_live = set(_last_wins(acts_now))
-        target_adds = _winning_adds_of(acts_then, set(target_live))
-        dv_then = _newest_dv_of(acts_then, set(target_live))
-        # live=None: what a reader resolves for a file once it is live
-        # again — the stale-DV hazard for re-added files
-        dv_now_any = _newest_dv_of(acts_now, None)
-        for f in sorted(current_live - set(target_live)):
+        snap_then = self.snapshot(version)
+        snap_now = self.snapshot(txn.base_version)
+        current_live = set(snap_now.live)
+        for f in sorted(current_live - set(snap_then.live)):
             txn.remove(f)
-        for f in target_live:
-            then, now = dv_then.get(f), dv_now_any.get(f)
+        for f in snap_then.live:
+            # dvs_any: what a reader resolves for a file once it is
+            # live again — the stale-DV hazard for re-added files
+            then, now = snap_then.dvs.get(f), snap_now.dvs_any.get(f)
             if then is None and now is not None:
                 raise ValueError(
                     f"cannot restore to v{version}: {f} gained deletion "
@@ -586,14 +627,14 @@ class TxnLogWriter:
                     )
                 payload = {
                     k: v
-                    for k, v in target_adds[f].items()
+                    for k, v in snap_then.adds[f].items()
                     if k not in ("version", "action", "file", "dataChange")
                 }
                 txn.add(f, **payload)
             if then is not None and then != now:
                 txn.set_dv(f, then)  # newest-wins: supersedes the newer DV
-        meta_then = _newest_action(acts_then, "metaData")
-        meta_now = _newest_action(acts_now, "metaData")
+        meta_then = snap_then.newest("metaData")
+        meta_now = snap_now.newest("metaData")
 
         def _meta_state(m):
             # full definition, not just the schema string: a restore
@@ -637,19 +678,15 @@ class TxnLogWriter:
             ident = meta_then.get("identity") or {}
             if ident:
                 ((_c, spec),) = ident.items()
-                # acts_now is a SUPERSET of acts_then (history is
-                # append-only), so one lineage-scoped walk suffices
-                high = _identity_high(acts_now, _c, spec)
+                # snap_now's history is a SUPERSET of snap_then's
+                # (append-only), so one lineage-scoped walk suffices
+                high = _identity_high(snap_now.actions, _c, spec)
                 if high is not None:
                     txn.actions[-1]["identityHigh"] = high
-        cons_then = _newest_action(acts_then, "constraints")
-        cons_now = _newest_action(acts_now, "constraints")
-        exprs_then = list(cons_then["exprs"]) if cons_then else []
-        exprs_now = list(cons_now["exprs"]) if cons_now else []
-        if exprs_then != exprs_now:
+        if snap_then.constraints != snap_now.constraints:
             # the empty list is a real, clearable state: a newest-wins
             # constraints action with no exprs reads as unconstrained
-            txn.set_constraints(exprs_then)
+            txn.set_constraints(snap_then.constraints)
         # Final existence re-check immediately before commit: VACUUM
         # writes no commit, so the serializable conflict check cannot
         # see one racing this restore — re-verifying here narrows that
@@ -685,18 +722,14 @@ class TxnLogWriter:
         protocol on clone): a clone must not downgrade the reader bar
         that guards the DV/constraint features it just copied.
         Returns the clone's commit version (0)."""
-        as_of = self.latest_version() if version is None else version
-        acts = self._replay_actions(as_of)
-        live = _last_wins(acts)
-        adds = _winning_adds_of(acts, set(live))
-        dvs = _newest_dv_of(acts, set(live))
+        snap = self.snapshot(version)
         dest = TxnLogWriter(dest_root, self.checkpoint_interval)
         os.makedirs(dest_root, exist_ok=True)
         txn = dest.begin()
-        for f in live:
+        for f in snap.live:
             payload = {
                 k: v
-                for k, v in adds[f].items()
+                for k, v in snap.adds[f].items()
                 if k not in ("version", "action", "file", "dataChange")
             }
             # abspath, not a bare join: a writer rooted at a RELATIVE
@@ -706,14 +739,14 @@ class TxnLogWriter:
             # documented absolute-name contract true by construction.
             src = os.path.abspath(os.path.join(self.root, f))
             txn.add(src, data_change=False, **payload)
-            if f in dvs:
+            if f in snap.dvs:
                 txn.set_dv(
-                    src, os.path.abspath(os.path.join(self.root, dvs[f]))
+                    src, os.path.abspath(os.path.join(self.root, snap.dvs[f]))
                 )
         newest = {
             kind: act
             for kind in ("metaData", "constraints", "protocol")
-            if (act := _newest_action(acts, kind)) is not None
+            if (act := snap.newest(kind)) is not None
         }
         if "metaData" in newest:
             # identity spec AND its high-water mark ride into the
@@ -729,7 +762,7 @@ class TxnLogWriter:
             ident = newest["metaData"].get("identity") or {}
             if ident:
                 ((_c, spec),) = ident.items()
-                high = _identity_high(acts, _c, spec)
+                high = _identity_high(snap.actions, _c, spec)
                 if high is not None:
                     txn.actions[-1]["identityHigh"] = high
         if "constraints" in newest:
@@ -738,24 +771,11 @@ class TxnLogWriter:
             txn.set_protocol(newest["protocol"]["minReader"])
         return txn.commit()
 
-    def _newest_schema(self) -> str | None:
-        hi = self.latest_version()
-        if hi < 0:
-            return None
-        newest = _newest_action(self._replay_actions(hi), "metaData")
-        return newest["schema"] if newest else None
-
     def generated_columns(self, as_of: int | None = None) -> dict[str, str]:
-        """column -> GENERATED ALWAYS AS expression from the newest
-        metaData action (empty for a table without generated columns).
-        Carried through checkpoints, clones, and restores like the
-        schema string it annotates. `as_of` pins the read to a version
-        (see constraints())."""
-        hi = self.latest_version() if as_of is None else as_of
-        if hi < 0:
-            return {}
-        newest = _newest_action(self._replay_actions(hi), "metaData")
-        return dict(newest.get("generated", {})) if newest else {}
+        """column -> GENERATED ALWAYS AS expression as of a version
+        (default HEAD); carried through checkpoints, clones and
+        restores like the schema string it annotates."""
+        return self.snapshot(as_of).generated
 
     def vacuum(
         self, retain_ms: int | None = None, now_ms: int | None = None
@@ -784,9 +804,10 @@ class TxnLogWriter:
         import shutil
         import time
 
-        ckpt = self._checkpoint_version()
-        if ckpt is None:
+        meta = self._checkpoint_meta()
+        if meta is None:
             raise ValueError("vacuum requires a checkpoint")
+        ckpt = meta["version"]
         # scan the RAW commit files, not the checkpoint-based replay —
         # the checkpoint carries only the surviving adds, so the very
         # removes vacuum exists to collect are invisible through it.
@@ -855,11 +876,11 @@ class TxnLogWriter:
         # action payloads ("dv" on dv actions, "bloom" on adds), so
         # both sources contribute file AND sidecar names.
         # the raw scan from above + the checkpoint's own lines cover
-        # everything _replay_actions would see (replay = checkpoint +
-        # a tail that is a subset of the raw scan) without re-reading
-        # any commit file
+        # everything a snapshot would see (replay = checkpoint + a tail
+        # that is a subset of the raw scan) without re-reading any
+        # commit file
         referenced = set(last)
-        for a in raw_acts + self._checkpoint_lines(ckpt):
+        for a in raw_acts + self._checkpoint_lines(meta):
             if "file" in a:
                 referenced.add(a["file"])
             if a.get("action") == "dv":
@@ -938,14 +959,12 @@ class TxnLogWriter:
         repoints, so a crash mid-write never strands a reader on a
         partial set; readers REFUSE a pointer whose parts are missing
         rather than replaying half a live set."""
-        acts = self._replay_actions(version)
-        live = _last_wins(acts)
-        winning_add = _winning_adds_of(acts, set(live))
+        snap = self.snapshot(version)
         lines = []
-        for f in live:
+        for f in snap.live:
             payload = {
                 k: v
-                for k, v in winning_add[f].items()
+                for k, v in snap.adds[f].items()
                 if k not in ("version", "action", "file")
             }
             lines.append(
@@ -953,13 +972,13 @@ class TxnLogWriter:
             )
         lines.extend(
             {"version": version, "action": "dv", "file": f, "dv": dv}
-            for f, dv in sorted(_newest_dv_of(acts, set(live)).items())
+            for f, dv in sorted(snap.dvs.items())
         )
         # carry the newest commitInfo forward (ORIGINAL version + ts,
         # not re-stamped): after vacuum it is the resolver's floor —
         # timestamp travel to at-or-after the checkpoint keeps working,
         # below it refuses exactly like VERSION AS OF
-        ci = _newest_action(acts, "commitInfo")
+        ci = snap.newest("commitInfo")
         if ci is not None:
             lines.append(
                 {
@@ -970,7 +989,7 @@ class TxnLogWriter:
             )
         # carry the newest protocol demand forward — the gate must
         # survive vacuuming the commit that raised it
-        proto = _newest_action(acts, "protocol")
+        proto = snap.newest("protocol")
         if proto is not None:
             lines.append(
                 {
@@ -981,7 +1000,7 @@ class TxnLogWriter:
             )
         # carry the newest constraints declaration forward — enforcement
         # must survive vacuuming the commit that declared it
-        con = _newest_action(acts, "constraints")
+        con = snap.newest("constraints")
         if con is not None:
             lines.append(
                 {
@@ -990,25 +1009,19 @@ class TxnLogWriter:
                     "exprs": con["exprs"],
                 }
             )
-        txns: dict[str, dict] = {}
-        for a in acts:
-            if a.get("action") == "txn" and (
-                a["app"] not in txns
-                or a["version"] >= txns[a["app"]]["version"]
-            ):
-                txns[a["app"]] = a
+        apps = {a["app"] for a in snap.actions if a.get("action") == "txn"}
         lines.extend(
             {
                 "version": version,
                 "action": "txn",
                 "app": app,
-                "batch": t["batch"],
+                "batch": snap.txn(app),
             }
-            for app, t in sorted(txns.items())
+            for app in sorted(apps)
         )
         # carry the newest schema forward too — like txn watermarks,
         # schema-on-log must survive vacuuming the commits that set it
-        meta = _newest_action(acts, "metaData")
+        meta = snap.newest("metaData")
         if meta is not None:
             line = {
                 "version": version,
@@ -1031,7 +1044,7 @@ class TxnLogWriter:
             if ident:
                 line["identity"] = ident
                 ((_c, spec),) = ident.items()
-                high = _identity_high(acts, _c, spec)
+                high = _identity_high(snap.actions, _c, spec)
                 if high is not None:
                     line["identityHigh"] = high
             # EVERY direction ever declared rides as a lineage record
@@ -1059,7 +1072,7 @@ class TxnLogWriter:
                         else min(cur[sgn], mark)
                     )
 
-            for a in acts:
+            for a in snap.actions:
                 if a.get("action") != "metaData":
                     continue
                 for c, s in (a.get("identity") or {}).items():
@@ -1531,11 +1544,11 @@ def _violation_counts(df, exprs: list[str]) -> list[tuple[str, int]]:
     return [(e, int(row[i] or 0)) for i, e in enumerate(exprs)]
 
 
-def _refuse_live_name(name: str, acts: list[dict]) -> None:
+def _refuse_live_name(name: str, snap: Snapshot) -> None:
     """Appends stage FRESH file names. Writing over a LIVE file's path
     would clobber committed data BEFORE the conflict-checked commit
     decides (r13 review) — refuse up front."""
-    if name in set(_last_wins(acts)):
+    if name in snap.live:
         raise ValueError(
             f"append target {name!r} is a LIVE file — appends must use "
             "fresh names; rewriting a live file is a remove+add "
@@ -1543,7 +1556,7 @@ def _refuse_live_name(name: str, acts: list[dict]) -> None:
         )
 
 
-def _validate_against_definition(df, acts: list[dict]):
+def _validate_against_definition(df, snap: Snapshot):
     """Resolve GENERATED ALWAYS AS columns (compute missing, validate
     provided) and evaluate every declared CHECK constraint over the
     batch in ONE Spark aggregate; refuse the ENTIRE batch with
@@ -1553,8 +1566,7 @@ def _validate_against_definition(df, acts: list[dict]):
     enforcement."""
     from pyspark.sql import functions as F
 
-    meta = _newest_action(acts, "metaData")
-    gen = dict(meta.get("generated", {})) if meta else {}
+    gen = snap.generated
     provided = [c for c in gen if c in df.columns]
     for col, expr in gen.items():
         if col not in df.columns:
@@ -1563,8 +1575,7 @@ def _validate_against_definition(df, acts: list[dict]):
     labels = [
         f"GENERATED ALWAYS AS ({gen[c]}) for column {c}" for c in provided
     ]
-    con = _newest_action(acts, "constraints")
-    exprs = list(con["exprs"]) if con else []
+    exprs = snap.constraints
     checks += exprs
     labels += [f"CHECK ({e})" for e in exprs]
     if checks:
@@ -1635,16 +1646,11 @@ def append_with_checks(writer: TxnLogWriter, df, name: str, **stats) -> int:
     a window where a definition landed between validation and
     begin() and the append slid under it unchecked)."""
     txn = writer.begin()
-    # ONE replay serves the whole definition read (generated columns,
-    # constraints, live set) — the accessors would each replay the
-    # checkpoint+tail again (r13 review)
-    acts = (
-        writer._replay_actions(txn.base_version)
-        if txn.base_version >= 0
-        else []
-    )
-    _refuse_live_name(name, acts)
-    df = _validate_against_definition(df, acts)
+    # ONE snapshot serves the whole definition read (generated columns,
+    # constraints, live set)
+    snap = writer.snapshot(txn.base_version)
+    _refuse_live_name(name, snap)
+    df = _validate_against_definition(df, snap)
     _claim_write(writer, df, name)
     return txn.add(name, **stats).commit()
 
@@ -1679,12 +1685,8 @@ def append_with_identity(
     from pyspark.sql import functions as F
 
     txn = writer.begin()
-    acts = (
-        writer._replay_actions(txn.base_version)
-        if txn.base_version >= 0
-        else []
-    )
-    meta = _newest_action(acts, "metaData")
+    snap = writer.snapshot(txn.base_version)
+    meta = snap.newest("metaData")
     ident = dict(meta.get("identity", {})) if meta else {}
     if not ident:
         raise ValueError(
@@ -1696,7 +1698,7 @@ def append_with_identity(
             f"identity column {col!r} is GENERATED ALWAYS — explicit "
             "values are refused (Delta's identity-insert rule)"
         )
-    _refuse_live_name(name, acts)
+    _refuse_live_name(name, snap)
     start, step = int(spec["start"]), int(spec["step"])
     # step DIRECTION is immutable for the column's visible lifetime
     # (r15 review): a fresh opposite-sign lineage would honor any
@@ -1709,7 +1711,7 @@ def append_with_identity(
     # refusal now SURVIVES routine checkpoint+vacuum maintenance.
     sign = 1 if step > 0 else -1
     opp = "-1" if sign > 0 else "1"
-    for a in acts:
+    for a in snap.actions:
         if a.get("action") != "metaData":
             continue
         old = (a.get("identity") or {}).get(col)
@@ -1731,7 +1733,7 @@ def append_with_identity(
     # A re-declared start is honored only when it moves FORWARD past
     # every issued sid — never backward, so live rows' sids can't be
     # recycled.
-    found = _identity_high(acts, col, spec)
+    found = _identity_high(snap.actions, col, spec)
     if found is None:
         hwm = start - step
     elif step > 0:
@@ -1742,7 +1744,7 @@ def append_with_identity(
     df = df.withColumn(
         col, (F.lit(hwm) + F.lit(step) * rank).cast("long")
     )
-    df = _validate_against_definition(df, acts)
+    df = _validate_against_definition(df, snap)
     n = df.count()
     _claim_write(writer, df, name)
     new_meta = {k: v for k, v in meta.items() if k != "version"}
@@ -1767,23 +1769,15 @@ def add_constraint(writer: TxnLogWriter, spark, expr: str) -> int:
     the validation scan never saw (scan-first left a window where a
     concurrent append landed between scan and begin() unchecked)."""
     txn = writer.begin()
-    acts = (
-        writer._replay_actions(txn.base_version)
-        if txn.base_version >= 0
-        else []
-    )
-    live = _last_wins(acts)
-    if live:
-        snap = spark.read.parquet(
-            *[os.path.join(writer.root, f) for f in live]
+    snap = writer.snapshot(txn.base_version)
+    if snap.live:
+        rows = spark.read.parquet(
+            *[os.path.join(writer.root, f) for f in snap.live]
         )
-        ((_, n),) = _violation_counts(snap, [expr])
+        ((_, n),) = _violation_counts(rows, [expr])
         if n > 0:
             raise ConstraintViolation(
                 f"{n} existing row(s) violate CHECK ({expr}) — "
                 "constraint not added"
             )
-    con = _newest_action(acts, "constraints")
-    return txn.set_constraints(
-        (list(con["exprs"]) if con else []) + [expr]
-    ).commit()
+    return txn.set_constraints(snap.constraints + [expr]).commit()

@@ -685,10 +685,9 @@ def read_feed_txnlog(spark: SparkSession, feed_path: str) -> DataFrame:
 
     from user_feed_cdc_spark.sources.txn_writer import TxnLogWriter
 
-    writer = TxnLogWriter(feed_path)
     parts = [
         spark.read.parquet(os.path.join(feed_path, name))
-        for name in writer.live_files()
+        for name in TxnLogWriter(feed_path).snapshot().live
     ]
     if not parts:
         raise ValueError(f"txn-log feed table at {feed_path} is empty")
@@ -713,11 +712,14 @@ def compact_feed_txnlog(spark: SparkSession, feed_path: str) -> str:
 
     writer = TxnLogWriter(feed_path)
     txn = writer.begin()
-    # ONE live-files snapshot drives BOTH the data read and the remove
-    # set: deriving them from two separate replays would fold a batch
-    # committed in between into the compacted file while leaving it
-    # live in the log — every one of its rows would then read twice
-    live = writer.live_files()
+    # ONE snapshot, at the transaction's base version, drives BOTH the
+    # data read and the remove set: deriving them from two separate
+    # replays would fold a batch committed in between into the
+    # compacted file while leaving it live in the log — every one of
+    # its rows would then read twice. Pinned to base_version, any
+    # compaction that commits after begin() is above it, so the
+    # commit-time check sees its removes
+    live = writer.snapshot(txn.base_version).live
     if not live:
         raise ValueError(f"txn-log feed table at {feed_path} is empty")
     merged = reduce(
