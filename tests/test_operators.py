@@ -4200,6 +4200,101 @@ def test_txn_cdf_refuses_vacuumed_range(spark, sf_dir, tmp_path):
         _txn_stream_commit_rows(root, 4, mode="cdf")
 
 
+def test_txn_cdf_dv_above_vacuumed_checkpoint(spark, sf_dir, tmp_path):
+    """A dv commit above a checkpoint whose earlier commits were
+    vacuumed resolves the file's previous dv from the checkpoint: both
+    table_changes and the streaming CDF emit exactly the deleted rows
+    instead of refusing."""
+    import os
+
+    from pyspark.sql import functions as F
+
+    from user_feed_cdc_spark.sources.formats import (
+        _txn_stream_commit_rows,
+        table_changes,
+    )
+    from user_feed_cdc_spark.sources.tables import load_table
+    from user_feed_cdc_spark.sources.txn_writer import TxnLogWriter
+
+    root = str(tmp_path / "t")
+    ev = load_table(spark, sf_dir, "events").filter(F.col("event_id") < 40)
+    for name, parity in (("a", 0), ("b", 1)):
+        ev.filter(F.col("event_id") % 2 == parity).write.parquet(
+            os.path.join(root, name)
+        )
+    w = TxnLogWriter(root)
+    w.begin().add("a").commit()  # v0
+    w.begin().add("b").commit()  # v1
+    w.write_checkpoint(1)
+    w.vacuum()
+    assert not os.path.exists(w._commit_path(0))
+    doomed = sorted(
+        r.event_id
+        for r in spark.read.parquet(os.path.join(root, "a")).limit(2).collect()
+    )
+    spark.createDataFrame([(i,) for i in doomed], "event_id long").write.parquet(
+        os.path.join(root, "dva")
+    )
+    assert w.begin().set_dv("a", "dva").commit() == 2
+
+    got = table_changes(spark, root, 2, 2).collect()
+    assert sorted((r.event_id, r.change_type) for r in got) == [
+        (i, "delete") for i in doomed
+    ]
+    streamed = _txn_stream_commit_rows(root, 2, mode="cdf")
+    assert sorted(r[:3] for r in streamed) == [
+        ("delete", 2, i) for i in doomed
+    ]
+
+
+def test_txn_commit_reads_only_head(tmp_path, monkeypatch):
+    """A commit's timestamp clamp reads HEAD's commitInfo alone: one
+    commit on a 20-commit log opens a constant number of files, not
+    one per commit in the history."""
+    import builtins
+
+    from user_feed_cdc_spark.sources.txn_writer import TxnLogWriter
+
+    w = TxnLogWriter(str(tmp_path / "t"))
+    for i in range(20):
+        w.begin().add(f"f{i}").commit(timestamp=1000 + i)
+    opened = []
+    real_open = builtins.open
+
+    def counting_open(path, *a, **k):
+        opened.append(str(path))
+        return real_open(path, *a, **k)
+
+    monkeypatch.setattr(builtins, "open", counting_open)
+    v = w.begin().add("f20").commit(timestamp=5)
+    monkeypatch.undo()
+    assert v == 20
+    assert len(opened) <= 3, opened
+    # the clamp still holds: a clock behind HEAD commits at HEAD + 1
+    assert w.snapshot().newest("commitInfo")["timestamp"] == 1020
+
+
+def test_txn_row_ids_survive_checkpoint_and_vacuum(tmp_path):
+    """The row-id high-water mark rides the checkpoint: after two
+    appends, a delete of the second file, a checkpoint and a vacuum,
+    the next append still allocates above every id ever issued."""
+    from user_feed_cdc_spark.sources.txn_writer import TxnLogWriter
+
+    root = tmp_path / "t"
+    w = TxnLogWriter(str(root))
+    for name in ("a", "b"):
+        (root / name).mkdir(parents=True)
+        w.begin().add(
+            name, base_row_id=w.snapshot().row_id_high_water, num_records=10
+        ).commit()
+    assert w.snapshot().row_id_high_water == 20
+    w.begin().remove("b").commit()  # v2: b's ids 10..19 stay retired
+    w.write_checkpoint(2)
+    assert w.vacuum() == ["b"]
+    assert w.snapshot().live == ("a",)
+    assert w.snapshot().row_id_high_water == 20
+
+
 def test_txn_commit_batch_is_idempotent(spark, tmp_path):
     """The foreachBatch sink body: a replayed batch (same batch_id)
     must be a no-op — no new commit, no duplicated data file — while

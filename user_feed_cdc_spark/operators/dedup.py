@@ -15,13 +15,12 @@ whole-stage-codegen'd.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from user_feed_cdc_spark.functions.numeric import round_half_up as r2
 from user_feed_cdc_spark.registry import registry
+from user_feed_cdc_spark.session import input_width, with_conf
 from user_feed_cdc_spark.sources.tables import fan_out, load_table
 
 QUERIES, ORACLES, _register = registry()
@@ -258,61 +257,12 @@ def lsh_band_rows(docs: DataFrame, id_col: str = "doc_id", n_shingle: int = 1) -
 MAX_BUCKET = 256  # LSH skew guard: buckets larger than this are degenerate
 
 
-def _loop_partitions(src: DataFrame) -> int | None:
-    """Input-size-derived shuffle width for the label-propagation loop
-    (the batch twin of streaming.windows.stream_state_partitions, same
-    knob philosophy): ceil(source bytes / SPARK_GRAFT_CC_PART_BYTES),
-    clamped to [SPARK_GRAFT_CC_PART_MIN, SPARK_GRAFT_CC_PART_MAX].
-    The loop's per-round exchanges carry |docs|x|bands| fixed-width
-    rows — far narrower than the source — so inheriting the session's
-    batch shuffle width runs every round as a fleet of near-empty
-    tasks plus an AQE replan (measured at sf0.1: 3 exchanges x 2-3
-    rounds x 32 tasks; width 4 cuts the clustering construction ~20%
-    like-for-like, guide §2.2 "fewer, larger partitions"). Returns
-    None (keep the session default) when the source isn't file-backed
-    — callers whose input is a checkpointed frame pass the width
-    derived from their original scan instead."""
-    import math
-    from urllib.parse import unquote, urlparse
-
-    try:
-        files = src.inputFiles()
-    except Exception:
-        return None
-    if not files:
-        return None
-    total = 0
-    for uri in files:
-        p = unquote(urlparse(uri).path) if ":/" in uri else uri
-        try:
-            total += os.path.getsize(p)
-        except OSError:
-            return None
-    part_bytes = int(
-        os.environ.get("SPARK_GRAFT_CC_PART_BYTES", str(8 << 20))
-    )
-    lo = int(os.environ.get("SPARK_GRAFT_CC_PART_MIN", "4"))
-    hi = int(os.environ.get("SPARK_GRAFT_CC_PART_MAX", "4096"))
-    return max(lo, min(hi, math.ceil(total / part_bytes)))
-
-
-def _materialize(df: DataFrame, mode: str) -> DataFrame:
-    """Cut lineage between propagation rounds. ``local_checkpoint`` is the
-    fast single-process path but NOT fault-tolerant on a real cluster
-    (executor loss kills the job); ``persist`` keeps the lineage and
-    replicated blocks — use it (or a reliable checkpoint dir) at 100 TB."""
-    if mode == "local_checkpoint":
-        return df.localCheckpoint(eager=False)
-    return df.persist()
-
-
 @_register("dedup_minhash_lsh", None)  # not SQL-expressible → rows-only check
 def dedup_minhash_lsh(
     spark: SparkSession,
     sf_dir: str,
     max_bucket: int = MAX_BUCKET,
     max_rounds: int = 8,
-    materialize: str = "local_checkpoint",
 ) -> DataFrame:
     """MinHash+LSH near-dup as CLUSTER assignment (the production shape for
     LLM-corpus dedup, cf. SlimPajama/Gopher pipelines): LSH band buckets →
@@ -339,9 +289,7 @@ def dedup_minhash_lsh(
     """
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     bands = lsh_band_rows(docs, n_shingle=3)
-    return _cluster_by_bands(
-        bands, docs.select("doc_id"), max_bucket, max_rounds, materialize
-    )
+    return _cluster_by_bands(bands, docs.select("doc_id"), max_bucket, max_rounds)
 
 
 def _cluster_by_bands(
@@ -349,7 +297,6 @@ def _cluster_by_bands(
     all_docs: DataFrame,
     max_bucket: int = MAX_BUCKET,
     max_rounds: int = 8,
-    materialize: str = "local_checkpoint",
     loop_partitions: int | None = None,
 ) -> DataFrame:
     """Shared clustering core: (doc_id, band_idx, band_hash) rows →
@@ -360,98 +307,82 @@ def _cluster_by_bands(
     oracle-certified md5 twin (dedup_minhash_md5_clusters).
 
     The loop's exchanges run at an INPUT-DERIVED shuffle width
-    (_loop_partitions over ``bands``'s file sources, or the
+    (session.input_width over ``bands``'s file sources, or the
     ``loop_partitions`` override for checkpoint-backed callers): the
     per-round frames are |docs|x|bands| fixed-width rows, so the
     session's batch shuffle width schedules near-empty tasks plus an
-    AQE replan per round (guide §2.2). min-label propagation is
+    AQE replan per round (measured at sf0.1: 3 exchanges x 2-3 rounds
+    x 32 tasks; width 4 cuts the clustering construction ~20%, guide
+    §2.2 "fewer, larger partitions"). min-label propagation is
     partition-count independent, so results are identical at any
-    width. The session conf is restored after the driver-synced loop;
-    the RETURNED frame's plan executes later, under the caller's
-    conf."""
+    width. The width is set on a scoped session the loop's frames are
+    bound to; the RETURNED frame joins from ``all_docs`` and so
+    executes later, under the caller's session and conf. Rounds cut
+    lineage with localCheckpoint: fast, but not fault-tolerant on a
+    real cluster (executor loss kills the job), where a reliable
+    checkpoint dir would take its place."""
     if loop_partitions is None:
-        loop_partitions = _loop_partitions(bands)
-    spark = bands.sparkSession
-    _prev_parts = None
+        files = bands.inputFiles()
+        if files:
+            loop_partitions = input_width(*files)
     if loop_partitions is not None:
-        _prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set(
-            "spark.sql.shuffle.partitions", str(loop_partitions)
+        bands = with_conf(
+            bands, {"spark.sql.shuffle.partitions": str(loop_partitions)}
         )
-    try:
-        # skew guard + round-0 bucket minima in ONE window pass: the first
-        # hyperedge round's bucket min is min(doc_id) over the bucket —
-        # labels are the identity at round 0 — so it rides the exact
-        # (band_idx, band_hash) partition the guard already shuffles into,
-        # deleting round 0's bands⋈labels join, its second window shuffle,
-        # and the labels-init distinct (3 exchanges; guide §2.4 "two
-        # operations keyed the same way share one exchange")
-        w_bucket = W.partitionBy("band_idx", "band_hash")
-        bands = (
-            bands.withColumn("_bsz", F.count(F.lit(1)).over(w_bucket))
-            .withColumn("_bm0", F.min("doc_id").over(w_bucket))
-            .filter(F.col("_bsz") <= max_bucket)
-            .drop("_bsz")
-        )
-        # materialize once: the minhash computation must not rerun per round
-        bands = _materialize(bands, materialize)
-        loop_bands = bands.drop("_bm0")
+    # skew guard + round-0 bucket minima in ONE window pass: the first
+    # hyperedge round's bucket min is min(doc_id) over the bucket —
+    # labels are the identity at round 0 — so it rides the exact
+    # (band_idx, band_hash) partition the guard already shuffles into,
+    # deleting round 0's bands⋈labels join, its second window shuffle,
+    # and the labels-init distinct (3 exchanges; guide §2.4 "two
+    # operations keyed the same way share one exchange")
+    w_bucket = W.partitionBy("band_idx", "band_hash")
+    bands = (
+        bands.withColumn("_bsz", F.count(F.lit(1)).over(w_bucket))
+        .withColumn("_bm0", F.min("doc_id").over(w_bucket))
+        .filter(F.col("_bsz") <= max_bucket)
+        .drop("_bsz")
+    )
+    # materialize once: the minhash computation must not rerun per round
+    bands = bands.localCheckpoint(eager=False)
+    loop_bands = bands.drop("_bm0")
 
-        # round 0 (identity labels) from the precomputed bucket minima
-        stepped = bands.groupBy("doc_id").agg(F.min("_bm0").alias("rep_id"))
-        reps0 = stepped.select(
+    # round 0 (identity labels) from the precomputed bucket minima
+    stepped = bands.groupBy("doc_id").agg(F.min("_bm0").alias("rep_id"))
+    reps0 = stepped.select(
+        F.col("doc_id").alias("rep_id"), F.col("rep_id").alias("_rr")
+    )
+    labels = stepped.join(reps0, "rep_id", "left").select(
+        "doc_id", F.coalesce("_rr", F.col("rep_id")).alias("rep_id")
+    ).localCheckpoint(eager=False)
+    prev_sum = labels.agg(F.sum("rep_id")).collect()[0][0]
+    for _ in range(1, max_rounds):
+        # hyperedge step: every bucket's min label spreads to its members
+        stepped = (
+            loop_bands.join(labels, "doc_id")
+            .withColumn("bm", F.min("rep_id").over(w_bucket))
+            .groupBy("doc_id")
+            .agg(F.min("bm").alias("rep_id"))
+        )
+        # pointer-jump (path halving): rep ← rep(rep). The hyperedge step
+        # alone moves labels ONE hop per round, so a chain of templated
+        # near-dups of diameter d needs d rounds (measured: >8 at sf0.1 —
+        # the sum-convergence exit never fired). Composing with the jump
+        # squares the propagation distance per round → O(log d) rounds.
+        reps = stepped.select(
             F.col("doc_id").alias("rep_id"), F.col("rep_id").alias("_rr")
         )
-        labels = _materialize(
-            stepped.join(reps0, "rep_id", "left").select(
-                "doc_id", F.coalesce("_rr", F.col("rep_id")).alias("rep_id")
-            ),
-            materialize,
-        )
-        prev_sum = labels.agg(F.sum("rep_id")).collect()[0][0]
-        prev_labels = labels  # previous round's persisted frame, for eviction
-        for _ in range(1, max_rounds):
-            # hyperedge step: every bucket's min label spreads to its members
-            stepped = (
-                loop_bands.join(labels, "doc_id")
-                .withColumn("bm", F.min("rep_id").over(w_bucket))
-                .groupBy("doc_id")
-                .agg(F.min("bm").alias("rep_id"))
-            )
-            # pointer-jump (path halving): rep ← rep(rep). The hyperedge step
-            # alone moves labels ONE hop per round, so a chain of templated
-            # near-dups of diameter d needs d rounds (measured: >8 at sf0.1 —
-            # the sum-convergence exit never fired). Composing with the jump
-            # squares the propagation distance per round → O(log d) rounds.
-            reps = stepped.select(
-                F.col("doc_id").alias("rep_id"), F.col("rep_id").alias("_rr")
-            )
-            labels = _materialize(
-                stepped.join(reps, "rep_id", "left").select(
-                    "doc_id", F.coalesce("_rr", F.col("rep_id")).alias("rep_id")
-                ),
-                materialize,
-            )
-            # labels only ever decrease → Σ rep_id strictly decreases until
-            # fixpoint; one scalar agg per round detects convergence exactly
-            # (and, in persist mode, forces this round's blocks so the
-            # previous round's can be evicted without a recompute cliff)
-            cur_sum = labels.agg(F.sum("rep_id")).collect()[0][0]
-            if materialize == "persist" and prev_labels is not None:
-                prev_labels.unpersist()
-            prev_labels = labels
-            if cur_sum == prev_sum:
-                break
-            prev_sum = cur_sum
-        if materialize == "persist":
-            # the final labels frame is materialized; its lineage no longer
-            # needs the bands blocks
-            bands.unpersist()
-        # docs whose every bucket was skew-dropped (or with no shingles) are
-        # their own singleton cluster
-    finally:
-        if _prev_parts is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", _prev_parts)
+        labels = stepped.join(reps, "rep_id", "left").select(
+            "doc_id", F.coalesce("_rr", F.col("rep_id")).alias("rep_id")
+        ).localCheckpoint(eager=False)
+        # labels only ever decrease → Σ rep_id strictly decreases until
+        # fixpoint; one scalar agg per round detects convergence exactly
+        cur_sum = labels.agg(F.sum("rep_id")).collect()[0][0]
+        if cur_sum == prev_sum:
+            break
+        prev_sum = cur_sum
+    # docs whose every bucket was skew-dropped (or with no shingles) are
+    # their own singleton cluster
     return all_docs.join(labels, "doc_id", "left").select(
         "doc_id", F.coalesce("rep_id", "doc_id").alias("rep_id")
     )

@@ -2868,16 +2868,12 @@ def streaming_stateful_totals_live(spark: SparkSession, sf_dir: str) -> DataFram
     shape (reference connection_state.py:4-12 generalized from one
     global counter)."""
     from user_feed_cdc_spark.functions.numeric import round_half_up as r2_
+    from user_feed_cdc_spark.session import input_width
     from user_feed_cdc_spark.streaming.stateful import running_user_totals
     from user_feed_cdc_spark.streaming.windows import (
         events_file_stream,
         events_stream_dir,
         run_to_memory,
-    )
-
-    from user_feed_cdc_spark.streaming.windows import (
-        stream_partition_scope,
-        stream_state_partitions,
     )
 
     src = events_stream_dir(sf_dir)
@@ -2888,14 +2884,10 @@ def streaming_stateful_totals_live(spark: SparkSession, sf_dir: str) -> DataFram
     # below the executor parallelism (state-store overhead is the
     # SECONDARY cost here, unlike the JVM state operators) — size by
     # max(input-derived, defaultParallelism).
-    n_parts = max(
-        stream_state_partitions(src),
-        spark.sparkContext.defaultParallelism,
+    sink = run_to_memory(
+        spark, totals, "streaming_stateful_totals_live_sink", "update",
+        width=max(input_width(src), spark.sparkContext.defaultParallelism),
     )
-    with stream_partition_scope(spark, n=n_parts):
-        sink = run_to_memory(
-            spark, totals, "streaming_stateful_totals_live_sink", "update"
-        )
     # Update mode appends one row per (user, micro-batch) to the memory
     # sink; with a multi-file source the replay runs several batches, so
     # reduce to each user's FINAL state (n_events is strictly increasing

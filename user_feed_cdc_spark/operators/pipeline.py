@@ -1032,10 +1032,9 @@ def pipeline_training_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast gram semi-join. Nothing quadratic, nothing collected."""
     from user_feed_cdc_spark.operators.dedup import (
         _cluster_by_bands,
-        _loop_partitions,
-        _materialize,
         md5_band_rows,
     )
+    from user_feed_cdc_spark.session import input_width
 
     docs = fan_out(  # s1 token/stopword derivation is CPU-bound on the scan
         load_table(spark, sf_dir, "documents")
@@ -1063,14 +1062,14 @@ def pipeline_training_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the clustering stage re-reads s2 twice (bands + membership) and the
     # decon stage once more; materialize the small survivor frame once
     # (lineage-truncating local checkpoint, GC-cleaned — the clustering
-    # core's own materializer; at 100 TB use its persist mode instead)
-    s2 = _materialize(s2, "local_checkpoint")
+    # core's own materializer)
+    s2 = s2.localCheckpoint(eager=False)
     clusters = _cluster_by_bands(
         md5_band_rows(s2).withColumnRenamed("band_val", "band_hash"),
         s2.select("doc_id"),
         # s2 is checkpoint-backed (no file lineage), so the loop width
         # derives from the original documents scan instead
-        loop_partitions=_loop_partitions(docs),
+        loop_partitions=input_width(*docs.inputFiles()),
     )
     s3 = (
         s2.join(clusters, "doc_id")
@@ -2930,7 +2929,8 @@ def pipeline_ccnet_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Doc-level LM scores are |docs| rows × 4 ints — the scan-side
     # work (bigram explode + two LM joins) must run ONCE, not once
     # per consumer (rank input, band counts): cut lineage the same
-    # way dedup's _materialize does (persist on a real cluster).
+    # way dedup's clustering loop does (a reliable checkpoint on a
+    # real cluster).
     docscore = scored.groupBy("doc_id").agg(
         F.count(F.lit(1)).alias("n_bigrams"),
         F.sum("s_int").alias("sum_s"),

@@ -2156,7 +2156,7 @@ def text_pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the scored output job otherwise EACH execute the bigram explode +
     # aggregate; the checkpointed frame is the distinct-bigram count
     # table (vocab²-bounded, far smaller than the token stream). At
-    # 100 TB use persist/reliable-checkpoint mode (cf. dedup._materialize).
+    # 100 TB use a reliable checkpoint (cf. dedup._cluster_by_bands).
     bc = bc.localCheckpoint(eager=False)
     row = bc.agg(
         F.sum("n_xy").alias("nb"), F.max("n_xy").alias("mx")
@@ -2283,7 +2283,7 @@ def text_rake_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     # without the barrier the guard job and the output job each re-plan
     # the whole explode+window subtree. The checkpointed frame is the
     # token-run table a RAKE pass materializes anyway; at 100 TB use
-    # persist/reliable-checkpoint mode (cf. dedup._materialize).
+    # a reliable checkpoint (cf. dedup._cluster_by_bands).
     sized = sized.localCheckpoint(eager=False)
     phrases = sized.groupBy("doc_id", "grp").agg(
         F.array_join(

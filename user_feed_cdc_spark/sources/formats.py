@@ -49,6 +49,7 @@ from pyspark.sql import functions as F
 
 from user_feed_cdc_spark.registry import registry
 from user_feed_cdc_spark.schemas import TABLE_SCHEMAS
+from user_feed_cdc_spark.session import input_width, scoped_session, with_conf
 from user_feed_cdc_spark.sources.tables import load_table
 
 if TYPE_CHECKING:
@@ -2310,27 +2311,20 @@ class _TxnCommitPlan(NamedTuple):
     dvs: list[tuple[str, str]]
 
     def prev_dv(self, file: str) -> str | None:
-        """`file`'s newest dv sidecar BEFORE this commit, by a
-        log-only backward walk (stateless, so failure replay via
-        readBetweenOffsets stays exact); None when it had none. A
-        commit the walk needs that was vacuumed REFUSES — the delta
-        would otherwise be computed against a guessed base."""
-        for v in range(self.version - 1, -1, -1):
-            try:
-                older = self.writer.commit_actions(v)
-            except FileNotFoundError:
-                raise ValueError(
-                    f"commit v{v} needed to resolve v{self.version}'s dv "
-                    "delta was vacuumed"
-                ) from None
-            hit = [
-                x["dv"]
-                for x in older
-                if x["action"] == "dv" and x["file"] == file
-            ]
-            if hit:
-                return hit[-1]
-        return None
+        """`file`'s newest dv sidecar BEFORE this commit (None when it
+        had none), from the snapshot one version earlier — stateless,
+        so failure replay via readBetweenOffsets stays exact, and a
+        checkpoint carries it past vacuumed commits. History the
+        snapshot cannot replay REFUSES — the delta would otherwise be
+        computed against a guessed base."""
+        try:
+            snap = self.writer.snapshot(self.version - 1)
+        except ValueError as e:
+            raise ValueError(
+                f"{e}; the history needed to resolve v{self.version}'s "
+                "dv delta was vacuumed"
+            ) from None
+        return snap.dvs_any.get(file)
 
 
 def _txn_commit_plan(
@@ -4093,13 +4087,16 @@ def streaming_txn_cdf_ivm_live(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .otherwise(F.lit(0))
         )
+        # the batch's session carries the stream's width, so the fold
+        # below plans at it too
+        session = bdf.sparkSession
         live = mv.live_files()
         cur = (
-            spark.read.schema(mv_schema).parquet(
+            session.read.schema(mv_schema).parquet(
                 *[os.path.join(mv_root, f) for f in live]
             )
             if live
-            else spark.createDataFrame([], mv_schema)
+            else session.createDataFrame([], mv_schema)
         )
         # fold the signed delta into the view as ONE union + aggregate
         # (integer addition is associative, so this is bit-identical to
@@ -4136,32 +4133,31 @@ def streaming_txn_cdf_ivm_live(spark: SparkSession, sf_dir: str) -> DataFrame:
         txn.add(name).set_txn("mv_refresh", bid)
         txn.commit()
 
-    from user_feed_cdc_spark.streaming.windows import stream_partition_scope
-
     # The refresh's union-fold aggregate handles ≤|groups| rows per
     # batch; partition it from the CHANGE-FEED source size
     # (the same input-derived sizing every live entry uses) instead of
     # the batch shuffle default — 6 refreshes × 3 tiny jobs otherwise
     # launch 32 near-empty shuffle tasks each (guide §2.2/§2.4)
-    with stream_partition_scope(spark, root):
-        q = (
-            spark.readStream.format("txn_cdf_ivm_stream")
-            .load()
-            .writeStream.foreachBatch(refresh)
-            .option("checkpointLocation", os.path.join(mv_root, "_ckpt"))
-            .trigger(processingTime="0 seconds")
-            .start()
-        )
-        try:
-            deadline = time.monotonic() + 120
-            while time.monotonic() < deadline:
-                last = mv.last_txn("mv_refresh")
-                if last is not None and last >= latest:
-                    break
-                time.sleep(0.05)
-        finally:
-            q.stop()
-            q.awaitTermination(30)
+    changes = with_conf(
+        spark.readStream.format("txn_cdf_ivm_stream").load(),
+        {"spark.sql.shuffle.partitions": str(input_width(root))},
+    )
+    q = (
+        changes.writeStream.foreachBatch(refresh)
+        .option("checkpointLocation", os.path.join(mv_root, "_ckpt"))
+        .trigger(processingTime="0 seconds")
+        .start()
+    )
+    try:
+        deadline = time.monotonic() + 120
+        while time.monotonic() < deadline:
+            last = mv.last_txn("mv_refresh")
+            if last is not None and last >= latest:
+                break
+            time.sleep(0.05)
+    finally:
+        q.stop()
+        q.awaitTermination(30)
     return spark.read.schema(mv_schema).parquet(
         *[os.path.join(mv_root, f) for f in mv.live_files()]
     )
@@ -4423,19 +4419,6 @@ _ROW_TRACKING_ORACLE = """
 """
 
 
-def _row_id_high_water(writer) -> int:
-    """The next unallocated row id: max(base_row_id + num_records) over
-    EVERY add ever logged — including removed files, so a compaction
-    can never recycle ids (Delta's rowIdHighWaterMark; a checkpointing
-    production form would carry this in table metadata exactly because
-    checkpoints drop non-live adds)."""
-    hi = 0
-    for a in writer._actions_between(0, writer.latest_version()):
-        if a.get("action") == "add" and "base_row_id" in a:
-            hi = max(hi, int(a["base_row_id"]) + int(a["num_records"]))
-    return hi
-
-
 @_register("source_txn_log_row_tracking", _ROW_TRACKING_ORACLE)
 def source_txn_log_row_tracking(
     spark: SparkSession, sf_dir: str
@@ -4457,7 +4440,8 @@ def source_txn_log_row_tracking(
     (≡1, ids nA..), compact A+B→C carrying materialized ids, then
     append D (≡2) — whose base MUST be the high-water mark nA+nB even
     though A and B are no longer live (id recycling would corrupt
-    every downstream row reference; the helper scans all adds ever).
+    every downstream row reference; Snapshot.row_id_high_water covers
+    every add ever, through the mark checkpoints carry).
     The oracle rebuilds every (event_id, row_id) pair from rank
     arithmetic, so id stability across the rewrite and the
     non-recycling allocation are both value-certified.
@@ -4482,7 +4466,7 @@ def source_txn_log_row_tracking(
             sizes[name] = part.count()
             w.begin().add(
                 name,
-                base_row_id=_row_id_high_water(w),
+                base_row_id=w.snapshot().row_id_high_water,
                 num_records=sizes[name],
             ).commit()
         # OPTIMIZE compaction: inherit ids, MATERIALIZE them into C
@@ -4526,7 +4510,9 @@ def source_txn_log_row_tracking(
         )
         d.write.mode("overwrite").parquet(os.path.join(root, "rd"))
         w.begin().add(
-            "rd", base_row_id=_row_id_high_water(w), num_records=d.count()
+            "rd",
+            base_row_id=w.snapshot().row_id_high_water,
+            num_records=d.count(),
         ).commit()
 
     root = cached_fixture("rowtrack", sf_dir, ":v1", build)
@@ -5000,9 +4986,9 @@ def source_json_bzip2_roundtrip(
     At 100 TB this is THE codec decision for text lakes that cannot
     land parquet immediately: a 1 TB .jsonl.gz is one task for hours,
     a 1 TB .jsonl.bz2 (or zstd-seekable outside stdlib) is ~8000
-    parallel splits. The conf tweak is scoped try/finally and the
-    split assertion keeps the claim load-bearing instead of
-    documentation."""
+    parallel splits. The split size is set on a scoped session, never
+    on the caller's, and the split assertion keeps the claim
+    load-bearing instead of documentation."""
 
     def build(path: str) -> None:
         (
@@ -5027,43 +5013,36 @@ def source_json_bzip2_roundtrip(
     path = cached_fixture(
         "events_jsonbz2", sf_dir, ":v1", build, tag="jsonbz2"
     )
-    conf_key = "spark.sql.files.maxPartitionBytes"
-    old = spark.conf.get(conf_key)
     part_file = [
         n
         for n in os.listdir(path)
         if n.startswith("part-") and n.endswith(".json.bz2")
     ][0]
     fsize = os.path.getsize(os.path.join(path, part_file))
-    try:
-        # a split size ~1/3 of the file forces multiple byte-range
-        # splits at ANY scale factor — Spark only emits them when the
-        # codec reports isSplitable (gzip would stay at one partition
-        # no matter how small the split size); range readers then sync
-        # to the next bzip2 block boundary so rows appear exactly once
-        spark.conf.set(conf_key, str(max(4096, fsize // 3)))
-        back = (
-            spark.read.schema(TABLE_SCHEMAS["events"])
-            .option("timestampFormat", _TS_FMT)
-            .json(path)
+    # a split size ~1/3 of the file forces multiple byte-range splits
+    # at ANY scale factor — Spark only emits them when the codec
+    # reports isSplitable (gzip would stay at one partition no matter
+    # how small the split size); range readers then sync to the next
+    # bzip2 block boundary so rows appear exactly once. The split size
+    # lives on the reading session, so the returned plan re-plans (and
+    # reads) with it whenever it runs.
+    small_splits = scoped_session(
+        spark,
+        {"spark.sql.files.maxPartitionBytes": str(max(4096, fsize // 3))},
+    )
+    back = (
+        small_splits.read.schema(TABLE_SCHEMAS["events"])
+        .option("timestampFormat", _TS_FMT)
+        .json(path)
+    )
+    n_splits = back.rdd.getNumPartitions()
+    if n_splits < 2:
+        raise ValueError(
+            "bzip2 read did not split: one file produced "
+            f"{n_splits} partition(s) — the splittable-codec "
+            "contract is broken"
         )
-        n_splits = back.rdd.getNumPartitions()
-        if n_splits < 2:
-            raise ValueError(
-                "bzip2 read did not split: one file produced "
-                f"{n_splits} partition(s) — the splittable-codec "
-                "contract is broken"
-            )
-        # MATERIALIZE while the conf is live: a lazily returned plan
-        # would re-plan (and read) under the restored default — one
-        # split — leaving the multi-split row fidelity this entry
-        # exists to certify unexecuted (r14 review). The aggregate is
-        # |event_type| rows, so the local rebuild is trivial.
-        agg = _fidelity_agg(back)
-        rows = agg.collect()
-        return spark.createDataFrame(rows, agg.schema)
-    finally:
-        spark.conf.set(conf_key, old)
+    return _fidelity_agg(back)
 
 
 # ---------------------------------------------------------------------------

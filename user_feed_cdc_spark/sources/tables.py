@@ -14,6 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F, types as T
 
 from user_feed_cdc_spark.schemas import TABLE_NAMES, TABLE_SCHEMAS
+from user_feed_cdc_spark.session import scoped_session
 
 # Legacy events files carry ts as raw int64 nanoseconds (either plain
 # INT64 or TIMESTAMP(NANOS)-annotated); current driver files store a
@@ -99,33 +100,20 @@ def load_events(
     DuckDB reads the same µs values, so the oracle comparison sees
     identical wall-clock values (session tz is UTC)."""
     kind = _events_ts_kind(path)
+    if kind == "ns":
+        # Legacy TIMESTAMP(NANOS) files — never current driver files —
+        # read as raw int64 under nanosAsLong. The reader comes from a
+        # scoped session, so the plan keeps the conf wherever it is
+        # planned or run and the caller's session never sees it.
+        spark = scoped_session(
+            spark, {"spark.sql.legacy.parquet.nanosAsLong": "true"}
+        )
     reader = spark.readStream if streaming else spark.read
     if options:
         reader = reader.options(**options)
     if kind == "native":
         return reader.schema(TABLE_SCHEMAS["events"]).parquet(path)
-    if kind != "ns":
-        raw = reader.schema(_EVENTS_RAW_SCHEMA).parquet(path)
-        return raw.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
-    # Legacy TIMESTAMP(NANOS) branch — never on current driver files.
-    # nanosAsLong is session-wide; save/restore around plan definition so
-    # one legacy read doesn't silently turn every later NANOS read in the
-    # session into long. The conf is consulted when the scan relation is
-    # resolved (here), not at action time: with an explicit schema the
-    # restored conf never re-enters this plan. Batch reads of a kind="ns"
-    # file after restore would error loudly (the pre-sniff behavior) —
-    # which is the correct failure, they should come through this path.
-    conf_key = "spark.sql.legacy.parquet.nanosAsLong"
-    prev = spark.conf.get(conf_key, None)
-    spark.conf.set(conf_key, "true")
-    try:
-        raw = reader.schema(_EVENTS_RAW_SCHEMA).parquet(path)
-        raw.schema  # force analysis while the conf is active
-    finally:
-        if prev is None:
-            spark.conf.unset(conf_key)
-        else:
-            spark.conf.set(conf_key, prev)
+    raw = reader.schema(_EVENTS_RAW_SCHEMA).parquet(path)
     return raw.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
 
 

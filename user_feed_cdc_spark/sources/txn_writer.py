@@ -161,6 +161,21 @@ class Snapshot:
         live = set(self.live)
         return {f: dv for f, dv in self.dvs_any.items() if f in live}
 
+    @cached_property
+    def row_id_high_water(self) -> int:
+        """The next unallocated row id: max(base_row_id + num_records)
+        over every add this replay holds — removed files' included, so
+        a compaction never recycles ids — and the mark a checkpoint
+        carries for the adds it dropped (Delta's rowIdHighWaterMark),
+        so a vacuum never does either."""
+        hi = 0
+        for a in self.actions:
+            if a.get("action") == "rowIdHighWater":
+                hi = max(hi, a["mark"])
+            elif a.get("action") == "add" and "base_row_id" in a:
+                hi = max(hi, int(a["base_row_id"]) + int(a["num_records"]))
+        return hi
+
     def newest(self, kind: str) -> dict | None:
         """The NEWEST action of `kind` — the newest-wins rule schema,
         constraints, protocol and commitInfo resolve by."""
@@ -384,8 +399,8 @@ class TxnLogWriter:
             return [json.loads(line) for line in f if line.strip()]
 
     def _actions_between(self, lo: int, hi: int) -> list[dict]:
-        # the raw commits still on disk, gaps skipped: vacuum and row
-        # tracking need removed files' actions, which no snapshot keeps
+        # the raw commits still on disk, gaps skipped: vacuum needs
+        # removed files' actions, which no snapshot keeps
         acts: list[dict] = []
         for v in self._commit_versions():
             if lo <= v <= hi:
@@ -516,6 +531,30 @@ class TxnLogWriter:
                 if a.get("action") == "commitInfo":
                     out[v] = a["timestamp"]
         return sorted(out.items())
+
+    def _head_commit_timestamp(self, head: int) -> int | None:
+        """Commit timestamp of HEAD (version `head`) from its first
+        line, else the commitInfo the newest checkpoint carries (HEAD's
+        commit was vacuumed); None when neither has one. One file read
+        however long the history is."""
+        try:
+            with open(self._commit_path(head)) as f:
+                first = f.readline()
+            if first.strip():
+                a = json.loads(first)
+                if a.get("action") == "commitInfo":
+                    return a["timestamp"]
+        except FileNotFoundError:
+            pass
+        meta = self._checkpoint_meta()
+        if meta is None:
+            return None
+        carried = [
+            a["timestamp"]
+            for a in self._checkpoint_lines(meta)
+            if a.get("action") == "commitInfo"
+        ]
+        return carried[-1] if carried else None
 
     def version_at_timestamp(self, ts_ms: int) -> int:
         """TIMESTAMP AS OF resolution, log-only (Delta's
@@ -974,6 +1013,16 @@ class TxnLogWriter:
             {"version": version, "action": "dv", "file": f, "dv": dv}
             for f, dv in sorted(snap.dvs.items())
         )
+        # carry the row-id high-water mark: the checkpoint drops the
+        # adds of removed files, whose ids must stay retired
+        if snap.row_id_high_water:
+            lines.append(
+                {
+                    "version": version,
+                    "action": "rowIdHighWater",
+                    "mark": snap.row_id_high_water,
+                }
+            )
         # carry the newest commitInfo forward (ORIGINAL version + ts,
         # not re-stamped): after vacuum it is the resolver's floor —
         # timestamp travel to at-or-after the checkpoint keeps working,
@@ -1263,7 +1312,8 @@ class Transaction:
         Every commit's FIRST line is a commitInfo action carrying the
         commit timestamp (ms): `timestamp` when given (fixtures pass
         explicit values for determinism), wall clock otherwise —
-        clamped to strictly exceed the newest known commit timestamp,
+        clamped to strictly exceed HEAD's commit timestamp (read from
+        HEAD alone, so a commit costs the same at any history length),
         Delta's in-commit-timestamp monotonicity fix for clock skew,
         so TIMESTAMP AS OF floors are well-defined even when a racing
         writer's clock runs behind. First-line placement keeps
@@ -1308,8 +1358,8 @@ class Transaction:
                 if timestamp is not None
                 else int(time.time() * 1000)
             )
-            known = w._known_commit_timestamps()
-            ts = max(req, known[-1][1] + 1) if known else req
+            prev = w._head_commit_timestamp(target - 1)
+            ts = max(req, prev + 1) if prev is not None else req
             tmp = path + f".tmp{os.getpid()}.{threading.get_ident()}"
             with open(tmp, "w") as f:
                 f.write(

@@ -12,96 +12,13 @@ stream equivalence is pinned by tests/test_streaming.py.
 
 from __future__ import annotations
 
-import math
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from user_feed_cdc_spark.session import input_width, rebind, with_conf
 from user_feed_cdc_spark.sources.tables import load_events
 
 DEFAULT_WATERMARK = "10 minutes"
-
-# --- Scale-adaptive streaming state partitioning -------------------------
-#
-# Structured Streaming has no AQE: stateful operators inherit
-# spark.sql.shuffle.partitions at query start and keep that many state
-# store instances FOREVER (the count is pinned in the checkpoint).  Every
-# micro-batch — including the empty watermark-advance batch availableNow
-# appends — pays a per-partition fixed cost (store load, eviction scan,
-# delta-file commit) for EVERY state store of EVERY stateful operator, so
-# a partition count inherited from the batch default is pure overhead
-# whenever the actual state volume doesn't need it (measured here: the
-# stream-stream join entry runs 4 stores x N partitions x 2 batches; at
-# N=32 on a 2 MB source that is 12.6 s wall, at N=8 it is 3.3 s, with
-# row-identical output — guide §2.2/§2.4: fewer, larger partitions, and
-# don't shuffle into more partitions than the data warrants).
-#
-# The partition count is therefore DERIVED FROM INPUT SIZE (the same
-# bytes-per-partition logic AQE's coalescing applies to batch shuffles),
-# not hard-coded to either the local core count or a cluster constant:
-# ~SPARK_GRAFT_STREAM_PART_BYTES of compressed source bytes per state
-# partition (default 8 MB ≈ 32-64 MB of in-memory state), floored at
-# SPARK_GRAFT_STREAM_PART_MIN (default 4, keeps multi-core locally) and
-# capped at SPARK_GRAFT_STREAM_PART_MAX (default 4096, a deployment knob:
-# a 100 TB/day topic at 8 MB/partition would otherwise ask for millions —
-# production sizes the cap to executor count x a small factor).  All
-# three knobs are env-tunable so cluster deployments can size state
-# partitioning without touching code.
-
-STREAM_PART_BYTES = int(
-    os.environ.get("SPARK_GRAFT_STREAM_PART_BYTES", str(8 << 20))
-)
-STREAM_PART_MIN = int(os.environ.get("SPARK_GRAFT_STREAM_PART_MIN", "4"))
-STREAM_PART_MAX = int(os.environ.get("SPARK_GRAFT_STREAM_PART_MAX", "4096"))
-
-
-def _path_bytes(path: str) -> int:
-    """Recursive on-disk size of a file or directory (symlinks followed:
-    the stream-replay dirs are symlink farms over the real parquet)."""
-    if os.path.isfile(path):
-        return os.path.getsize(path)
-    total = 0
-    for root, _dirs, files in os.walk(path, followlinks=True):
-        for f in files:
-            try:
-                total += os.path.getsize(os.path.join(root, f))
-            except OSError:
-                pass
-    return total
-
-
-def stream_state_partitions(*paths: str) -> int:
-    """State-partition count for a streaming query reading ``paths``:
-    ceil(source bytes / STREAM_PART_BYTES), clamped to
-    [STREAM_PART_MIN, STREAM_PART_MAX]."""
-    size = sum(_path_bytes(p) for p in paths)
-    return max(
-        STREAM_PART_MIN,
-        min(STREAM_PART_MAX, math.ceil(size / STREAM_PART_BYTES)),
-    )
-
-
-class stream_partition_scope:
-    """Context manager: pin spark.sql.shuffle.partitions to the
-    input-derived state-partition count for the duration of a streaming
-    query's start+drain, restoring the session default afterwards.  The
-    streaming query captures the value at start; batch work outside the
-    scope is untouched (and batch work is AQE-coalesced anyway)."""
-
-    def __init__(self, spark: SparkSession, *paths: str, n: int | None = None):
-        self.spark = spark
-        self.n = n if n is not None else stream_state_partitions(*paths)
-
-    def __enter__(self):
-        self.prev = self.spark.conf.get("spark.sql.shuffle.partitions")
-        self.spark.conf.set("spark.sql.shuffle.partitions", str(self.n))
-        return self
-
-    def __exit__(self, *exc):
-        self.spark.conf.set("spark.sql.shuffle.partitions", self.prev)
-        return False
-
 
 def events_stream_dir(sf_dir: str) -> str:
     """A directory exposing ONLY the events parquet of an sf dir, for
@@ -277,41 +194,40 @@ def run_to_memory(
     name: str,
     output_mode: str = "append",
     src_paths: tuple[str, ...] = (),
+    width: int | None = None,
 ):
     """Drive a streaming DF to completion into an in-memory table
-    (availableNow) and return the materialized batch result.
+    (availableNow) and return the materialized batch result, bound to
+    ``spark``.
 
-    ``src_paths``: the streamed source files/dirs — when given, the
-    query's state partitioning is derived from their size
-    (stream_state_partitions) instead of inheriting the batch shuffle
-    default; the session conf is restored after the drain."""
-    scope = (
-        stream_partition_scope(spark, *src_paths)
-        if src_paths
-        else _null_scope()
+    The query's shuffle and state-store width is ``width``, else
+    session.input_width of ``src_paths`` (the streamed source files or
+    dirs), else the session's. A stateful operator keeps the width it
+    starts with, so a batch default (the core count, or a cluster's
+    hundreds) would make every micro-batch pay for near-empty state
+    stores: the stream-stream join entry took 12.6 s at 32 partitions
+    and 3.3 s at 8 on a 2 MB source, row-identical. The width is set on
+    a scoped session the query starts from; ``spark``'s conf is never
+    touched."""
+    if width is None and src_paths:
+        width = input_width(*src_paths)
+    if width is not None:
+        df = with_conf(df, {"spark.sql.shuffle.partitions": str(width)})
+    q = (
+        df.writeStream.format("memory")
+        .queryName(name)
+        .outputMode(output_mode)
+        .trigger(availableNow=True)
+        .start()
     )
-    with scope:
-        q = (
-            df.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(output_mode)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    q.awaitTermination()
     # The memory sink is DRIVER-RESIDENT by construction (its size is
     # bounded by driver memory whatever the scale), so fanning its
     # local scan into a session-width shuffle for the downstream
     # aggregate is pure scheduling overhead — measured 0.6 -> 0.2 s on
     # a 5k-row sink agg (guide §2.2: don't shuffle into more
     # partitions than the data warrants). coalesce(1) narrows the
-    # local scan only; results are partition-independent.
-    return spark.table(name).coalesce(1)
-
-
-class _null_scope:
-    def __enter__(self):
-        return self
-
-    def __exit__(self, *exc):
-        return False
+    # local scan only; results are partition-independent. The sink's
+    # table lives in the query's session; downstream batch work plans
+    # under the caller's.
+    return rebind(df.sparkSession.table(name), spark).coalesce(1)
