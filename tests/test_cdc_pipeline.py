@@ -859,3 +859,156 @@ def test_kafka_cdc_live_roundtrip(spark, tmp_path):
     assert {r.activity_type for r in out} == {
         "LIKE_SHARD", "COMMENT_SHARD", "CREATE_SHARD", "FOLLOW_USER"
     }
+
+
+def _replay_rows(spark, path: str) -> list[str]:
+    """Every row of the table at `path` as sorted JSON; activity_id is
+    a fresh uuid per run, so it is left out."""
+    df = spark.read.parquet(path).drop("activity_id")
+    return sorted(
+        json.dumps(r.asDict(), default=str, sort_keys=True) for r in df.collect()
+    )
+
+
+def _staged_parquet(d, batches, types) -> str:
+    """One parquet file per batch, mtimes increasing, so a file stream
+    with maxFilesPerTrigger=1 replays the same batches every run."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    if not d.exists():
+        d.mkdir()
+        for i, rows in enumerate(batches):
+            path = d / f"{i:04d}.parquet"
+            cols = {k: pa.array([r[k] for r in rows], t) for k, t in types.items()}
+            pq.write_table(pa.table(cols), str(path))
+            os.utime(path, (1_700_000_000 + i, 1_700_000_000 + i))
+    return str(d)
+
+
+def _cdc_src(d) -> str:
+    src = d / "cdc_in"
+    if not src.exists():
+        src.mkdir()
+        (src / "b.jsonl").write_text("\n".join(fixture_lines()) + "\n")
+    return str(src)
+
+
+def _replay_feed(spark, d, ckpt):
+    feed = str(d / "feed")
+    run_cdc_pipeline(spark, _cdc_src(d), feed, ckpt).awaitTermination()
+    return [feed]
+
+
+def _replay_dead_letters(spark, d, ckpt):
+    feed, dl = str(d / "feed"), str(d / "dead")
+    run_cdc_pipeline(
+        spark, _cdc_src(d), feed, ckpt, dead_letter_path=dl
+    ).awaitTermination()
+    return [feed, dl]
+
+
+def _replay_upsert(spark, d, ckpt):
+    from user_feed_cdc_spark.streaming.cdc_pipeline import run_cdc_upsert_pipeline
+
+    state = str(d / "state")
+    run_cdc_upsert_pipeline(spark, _cdc_src(d), state, ckpt).awaitTermination()
+    return [state]
+
+
+def _replay_ingest(spark, d, ckpt):
+    import pyarrow as pa
+
+    from user_feed_cdc_spark.streaming.ingest import dedup_ingest_stream
+
+    docs = [
+        [{"doc_id": 10, "text": "alpha"}, {"doc_id": 11, "text": "beta"}],
+        [{"doc_id": 20, "text": "beta"}, {"doc_id": 21, "text": "gamma"}],
+    ]
+    src = _staged_parquet(
+        d / "docs_in", docs, {"doc_id": pa.int64(), "text": pa.string()}
+    )
+    stream = (
+        spark.readStream.schema("doc_id long, text string")
+        .option("maxFilesPerTrigger", 1)
+        .parquet(src)
+    )
+    corpus, ledger = str(d / "corpus"), str(d / "ledger")
+    dedup_ingest_stream(stream, corpus, ledger, ckpt).awaitTermination()
+    return [corpus, ledger]
+
+
+def _replay_sketch(spark, d, ckpt):
+    import datetime as dt
+
+    import pyarrow as pa
+
+    from user_feed_cdc_spark.streaming.sketch_rollup import write_sketch_stream
+
+    day = dt.datetime(2024, 1, 5)
+    events = [
+        [
+            {"user_id": u, "event_type": t, "ts": day + dt.timedelta(hours=h + 30 * b)}
+            for u in range(5)
+            for t, h in (("view", 1), ("click", 2))
+        ]
+        for b in range(2)
+    ]
+    types = {"user_id": pa.int64(), "event_type": pa.string(), "ts": pa.timestamp("us")}
+    src = _staged_parquet(d / "events_in", events, types)
+    stream = (
+        spark.readStream.schema("user_id long, event_type string, ts timestamp")
+        .option("maxFilesPerTrigger", 1)
+        .parquet(src)
+    )
+    sketches = str(d / "sketches")
+    write_sketch_stream(stream, sketches, ckpt).awaitTermination()
+    return [sketches]
+
+
+@pytest.mark.parametrize(
+    "sink, batches",
+    [
+        (_replay_feed, 1),
+        (_replay_dead_letters, 1),
+        (_replay_upsert, 1),
+        (_replay_ingest, 2),
+        (_replay_sketch, 2),
+    ],
+    ids=["feed", "dead_letters", "upsert", "ingest", "sketch"],
+)
+def test_batch_id_sink_same_path_replay(spark, tmp_path, sink, batches):
+    """Every `_batch_id` sink, run a second time onto the same output
+    paths from a fresh checkpoint (batch ids restart at 0), leaves the
+    same rows: each replayed batch overwrites its own partitions, so
+    nothing is duplicated, and every batch's partitions survive the
+    batches written after them."""
+    paths = sink(spark, tmp_path, str(tmp_path / "ck1"))
+    first = [_replay_rows(spark, p) for p in paths]
+    assert sink(spark, tmp_path, str(tmp_path / "ck2")) == paths
+    again = [_replay_rows(spark, p) for p in paths]
+    assert again == first
+    for path, rows in zip(paths, again):
+        assert len(set(rows)) == len(rows)
+        ids = spark.read.parquet(path).select("_batch_id").distinct().collect()
+        assert sorted(r._batch_id for r in ids) == list(range(batches)), path
+
+
+def test_batch_sink_and_stream_start_live_in_cdc_pipeline():
+    """The replay rule (dynamic partition overwrite) and the foreachBatch
+    start are written once, in streaming/cdc_pipeline.py
+    (overwrite_batch, start_batches): a copy elsewhere that dropped the
+    overwrite mode would let a replayed batch wipe its whole table."""
+    from pathlib import Path
+
+    pkg = Path(__file__).resolve().parents[1] / "user_feed_cdc_spark"
+    found = {}
+    for path in sorted(pkg.rglob("*.py")):
+        text = path.read_text()
+        for needle in ("partitionOverwriteMode", ".foreachBatch("):
+            if needle in text:
+                found[path.relative_to(pkg).as_posix(), needle] = text.count(needle)
+    assert found == {
+        ("streaming/cdc_pipeline.py", "partitionOverwriteMode"): 1,
+        ("streaming/cdc_pipeline.py", ".foreachBatch("): 1,
+    }

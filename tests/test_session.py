@@ -277,3 +277,60 @@ def test_parent_listener_sees_scoped_stream(spark, sf_dir):
     # the sink was read through the query's session and handed back
     # bound to the caller's
     assert out.sparkSession is parent
+
+
+def _stream_buses(spark) -> int:
+    listeners = spark.sparkContext._jsc.sc().listenerBus().listeners()
+    return sum(
+        1
+        for listener in listeners
+        if listener.getClass().getSimpleName() == "StreamingQueryListenerBus"
+    )
+
+
+def test_scoped_sessions_leave_no_listener_bus(spark, tmp_path):
+    """Every session's StreamingQueryManager puts a listener bus on the
+    SparkContext. Batch work on scoped clones never makes one, even when
+    the caller's session has a streaming listener, and a drain
+    run_to_memory starts from a scoped clone takes the clone's bus off
+    again once it has ended: ten width-changing drains and ten
+    width-changing batch queries leave the count where it was."""
+    from pyspark.sql.streaming import StreamingQueryListener
+
+    from user_feed_cdc_spark.session import scoped_session, with_conf
+    from user_feed_cdc_spark.streaming.windows import run_to_memory
+
+    class Ends(StreamingQueryListener):
+        def __init__(self):
+            self.n = 0
+
+        def onQueryStarted(self, event):
+            pass
+
+        def onQueryProgress(self, event):
+            pass
+
+        def onQueryIdle(self, event):
+            pass
+
+        def onQueryTerminated(self, event):
+            self.n += 1
+
+    parent = scoped_session(spark, {"spark.sql.shuffle.partitions": "7"})
+    ends = Ends()
+    parent.streams.addListener(ends)
+    src = str(tmp_path / "ids")
+    parent.range(10).write.parquet(src)
+    before = _stream_buses(spark)
+    wide = {"spark.sql.shuffle.partitions": "10"}
+    try:
+        for i in range(10):
+            batch = with_conf(parent.range(100).groupBy("id").count(), wide)
+            assert batch.count() == 100
+            stream = parent.readStream.schema("id long").parquet(src)
+            out = run_to_memory(parent, stream, f"bus_drain_{i}", width=10)
+            assert out.count() == 10
+        assert _stream_buses(spark) == before
+        assert ends.n == 10
+    finally:
+        parent.streams.removeListener(ends)

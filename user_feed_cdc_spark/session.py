@@ -9,6 +9,8 @@ from __future__ import annotations
 
 import math
 import os
+from collections.abc import Iterator
+from contextlib import contextmanager
 from pathlib import Path
 from urllib.parse import unquote, urlparse
 
@@ -66,16 +68,12 @@ def scoped_session(spark: SparkSession, conf: dict[str, str]) -> SparkSession:
     """A clone of `spark` with `conf` set on the clone only. The clone
     shares the SparkContext, cache and catalog of `spark` and starts
     from a copy of its conf, temp views, functions and registered
-    Python data sources; the parent's streaming listeners are copied
-    in, so they also see queries started from the clone. Engine code
-    overrides a conf value this way instead of setting it on a session
-    that concurrent queries share."""
-    jclone = spark._jsparkSession.cloneSession()
-    clone = SparkSession(spark.sparkContext, jclone)
+    Python data sources. Engine code overrides a conf value this way
+    instead of setting it on a session that concurrent queries share;
+    streams start from a clone through scoped_stream."""
+    clone = SparkSession(spark.sparkContext, spark._jsparkSession.cloneSession())
     for key, value in conf.items():
         clone.conf.set(key, value)
-    for listener in spark._jsparkSession.streams().listListeners():
-        jclone.streams().addListener(listener)
     return clone
 
 
@@ -98,6 +96,37 @@ def with_conf(df: DataFrame, conf: dict[str, str]) -> DataFrame:
     if all(session.conf.get(k, None) == v for k, v in conf.items()):
         return df
     return rebind(df, scoped_session(session, conf))
+
+
+@contextmanager
+def scoped_stream(df: DataFrame, conf: dict[str, str]) -> Iterator[DataFrame]:
+    """with_conf(df, conf) for a frame that streams are started from,
+    to be left once they have ended. A scoped clone gets the streaming
+    listeners of `df`'s session, so they see its streams too. Each
+    session's StreamingQueryManager puts its own listener bus on the
+    SparkContext when first used, and nothing removes it, so on leaving
+    the clone's bus is taken off again; queued events are delivered
+    first, so the copied listeners still see the streams end. Batch
+    work on a clone never touches its manager and adds no bus."""
+    scoped = with_conf(df, conf)
+    if scoped is df:
+        yield df
+        return
+    manager = scoped.sparkSession._jsparkSession.streams()
+    for listener in df.sparkSession._jsparkSession.streams().listListeners():
+        manager.addListener(listener)
+    try:
+        yield scoped
+    finally:
+        (field,) = [
+            f
+            for f in manager.getClass().getDeclaredFields()
+            if f.getType().getSimpleName() == "StreamingQueryListenerBus"
+        ]
+        field.setAccessible(True)
+        context = scoped.sparkSession.sparkContext._jsc.sc()
+        context.listenerBus().waitUntilEmpty()
+        context.removeSparkListener(field.get(manager))
 
 
 # Input-derived shuffle width for loops and streaming state. Structured

@@ -49,8 +49,9 @@ from pyspark.sql import functions as F
 
 from user_feed_cdc_spark.registry import registry
 from user_feed_cdc_spark.schemas import TABLE_SCHEMAS
-from user_feed_cdc_spark.session import input_width, scoped_session, with_conf
+from user_feed_cdc_spark.session import input_width, scoped_session, scoped_stream
 from user_feed_cdc_spark.sources.tables import load_table
+from user_feed_cdc_spark.streaming.cdc_pipeline import start_batches
 
 if TYPE_CHECKING:
     from user_feed_cdc_spark.sources.txn_writer import TxnLogWriter
@@ -1544,15 +1545,11 @@ def streaming_txn_sink_live(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", "1")
         .parquet(stream_dir)
     )
-    q = (
-        stream.writeStream.foreachBatch(
-            lambda bdf, bid: commit_batch(writer, bdf, bid, app="events_sink")
-        )
-        .option("checkpointLocation", os.path.join(root, "_ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    start_batches(
+        stream,
+        lambda bdf, bid: commit_batch(writer, bdf, bid, app="events_sink"),
+        os.path.join(root, "_ckpt"),
+    ).awaitTermination()
     return _fidelity_agg(read_snapshot(spark, root))
 
 
@@ -4138,26 +4135,23 @@ def streaming_txn_cdf_ivm_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (the same input-derived sizing every live entry uses) instead of
     # the batch shuffle default — 6 refreshes × 3 tiny jobs otherwise
     # launch 32 near-empty shuffle tasks each (guide §2.2/§2.4)
-    changes = with_conf(
+    with scoped_stream(
         spark.readStream.format("txn_cdf_ivm_stream").load(),
         {"spark.sql.shuffle.partitions": str(input_width(root))},
-    )
-    q = (
-        changes.writeStream.foreachBatch(refresh)
-        .option("checkpointLocation", os.path.join(mv_root, "_ckpt"))
-        .trigger(processingTime="0 seconds")
-        .start()
-    )
-    try:
-        deadline = time.monotonic() + 120
-        while time.monotonic() < deadline:
-            last = mv.last_txn("mv_refresh")
-            if last is not None and last >= latest:
-                break
-            time.sleep(0.05)
-    finally:
-        q.stop()
-        q.awaitTermination(30)
+    ) as changes:
+        q = start_batches(
+            changes, refresh, os.path.join(mv_root, "_ckpt"), available_now=False
+        )
+        try:
+            deadline = time.monotonic() + 120
+            while time.monotonic() < deadline:
+                last = mv.last_txn("mv_refresh")
+                if last is not None and last >= latest:
+                    break
+                time.sleep(0.05)
+        finally:
+            q.stop()
+            q.awaitTermination(30)
     return spark.read.schema(mv_schema).parquet(
         *[os.path.join(mv_root, f) for f in mv.live_files()]
     )

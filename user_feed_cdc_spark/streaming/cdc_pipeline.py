@@ -32,6 +32,10 @@ operators/cdc.py certifies the streaming semantics too.
 
 from __future__ import annotations
 
+import os
+from collections.abc import Callable
+from functools import reduce
+
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F, types as T
 
@@ -121,14 +125,14 @@ def canonical_columns(table: str, payload) -> list[Column]:
 VALID_OP = "c"  # creates only (reference: strategy.py:14-17)
 
 
-def is_valid(meta) -> Column:
+def is_valid(meta, ops: tuple[str, ...] = (VALID_OP,)) -> Column:
     """Validation predicate (reference: strategy.py:12-18): required
-    metadata present and op == 'c'."""
+    metadata present and the op in `ops` (creates only by default)."""
     return (
         meta["__op"].isNotNull()
         & meta["__table"].isNotNull()
         & meta["__source_ts_ms"].isNotNull()
-        & (meta["__op"] == VALID_OP)
+        & meta["__op"].isin(*ops)
     )
 
 
@@ -183,7 +187,8 @@ def _with_batch_seq(batch_df: DataFrame, batch_id: int) -> DataFrame:
     """foreachBatch _seq/_batch_id assignment, shared by the append and
     upsert sinks: per-batch monotonically_increasing_id (legal again in
     foreachBatch where the frame is batch), coalesced under any _seq the
-    batch-mode normalize already assigned."""
+    batch-mode normalize already assigned. Both land in one projection:
+    a stamp above the nondeterministic _seq would stay a separate one."""
     df = batch_df.withColumn("_batch_id", F.lit(batch_id))
     if "_seq" in df.columns:
         return df.withColumn(
@@ -248,10 +253,7 @@ def normalize_changes(raw: DataFrame, value_col: str = "value") -> DataFrame:
     parsed = _parsed_with_seq(raw, value_col)
     p = F.col("_p")
     valid = parsed.filter(
-        p["__op"].isNotNull()
-        & p["__table"].isNotNull()
-        & p["__source_ts_ms"].isNotNull()
-        & p["__op"].isin(*UPSERT_OPS)
+        is_valid(p, UPSERT_OPS)
         & p["__source_table"].isin(*CDC_TABLES)
         & p["id"].isNotNull()
     )
@@ -285,22 +287,9 @@ def write_feed_upsert_stream(
     merge-on-read semantics built from the primitives."""
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        df = _with_batch_seq(batch_df, batch_id)
-        (
-            df.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("_batch_id")
-            .parquet(state_path)
-        )
+        overwrite_batch(_with_batch_seq(batch_df, batch_id), state_path, batch_id)
 
-    writer = (
-        changes.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_batches(changes, write_batch, checkpoint, available_now)
 
 
 def read_feed_state(spark: SparkSession, state_path: str) -> DataFrame:
@@ -601,27 +590,75 @@ def write_feed_stream(
     events a deterministic total order. At 100 TB, compact small
     _batch_id partitions periodically; the overwrite unit stays the batch.
     """
-    out = (
+    spark = activities.sparkSession
+    write_feed = _feed_sink(spark, feed_path, n_user_buckets, sink_format)
+    return start_batches(
+        _feed_layout(activities, n_user_buckets), write_feed, checkpoint, available_now
+    )
+
+
+def _feed_sink(
+    spark: SparkSession, feed_path: str, n_user_buckets: int, sink_format: str
+) -> Callable[[DataFrame, int], None]:
+    """Record the feed table's bucket count with the table and return its
+    micro-batch writer. Both feed streams, write_feed_stream and
+    run_cdc_pipeline's dead-letter fan-out, start through here."""
+    if sink_format in ("parquet", "txnlog"):
+        # record the bucketing contract with the table so readers can
+        # validate instead of silently pruning with the wrong modulus
+        write_feed_meta(spark, feed_path, n_user_buckets)
+    return lambda batch_df, batch_id: _write_feed_batch(
+        batch_df, batch_id, feed_path, sink_format
+    )
+
+
+def _feed_layout(activities: DataFrame, n_user_buckets: int) -> DataFrame:
+    """Canonical activities plus the feed table's partition columns."""
+    return (
         activities
         .withColumn("activity_date", F.to_date("event_timestamp"))
         .withColumn("user_bucket", user_bucket_expr(F.col("user_id"), n_user_buckets))
     )
-    if sink_format in ("parquet", "txnlog"):
-        # record the bucketing contract with the table so readers can
-        # validate instead of silently pruning with the wrong modulus
-        write_feed_meta(activities.sparkSession, feed_path, n_user_buckets)
 
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        _write_feed_batch(batch_df, batch_id, feed_path, sink_format)
 
+def start_batches(
+    frame: DataFrame,
+    write_batch: Callable[[DataFrame, int], None],
+    checkpoint: str,
+    available_now: bool = True,
+):
+    """Start `frame` as a checkpointed append stream that hands every
+    micro-batch to write_batch(batch_df, batch_id): with available_now,
+    drain what is there and stop; otherwise run micro-batches back to
+    back (the default ProcessingTime(0) trigger) until stopped. Every
+    foreachBatch stream in the package starts here."""
     writer = (
-        out.writeStream.foreachBatch(write_batch)
+        frame.writeStream.foreachBatch(write_batch)
         .option("checkpointLocation", checkpoint)
         .outputMode("append")
     )
     if available_now:
         writer = writer.trigger(availableNow=True)
     return writer.start()
+
+
+def overwrite_batch(df: DataFrame, path: str, batch_id: int, *partition_by: str) -> None:
+    """The idempotent micro-batch sink: stamp `batch_id` as `_batch_id`
+    (unless `df` carries it already, as _with_batch_seq's frames do) and
+    dynamic-overwrite parquet under `path`, partitioned by
+    (*partition_by, _batch_id). Only this batch's partitions are
+    replaced, so a replayed batch (a retry, or a fresh checkpoint over
+    the same input, which restarts batch ids at 0) overwrites its own
+    earlier output instead of appending duplicates, and every other
+    batch's output stays as it is."""
+    if "_batch_id" not in df.columns:
+        df = df.withColumn("_batch_id", F.lit(batch_id))
+    (
+        df.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(*partition_by, "_batch_id")
+        .parquet(path)
+    )
 
 
 def _write_feed_batch(
@@ -661,11 +698,16 @@ def _write_feed_batch(
             .save()
         )
         return
-    (
-        df.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("activity_date", "user_bucket", "_batch_id")
-        .parquet(feed_path)
+    overwrite_batch(df, feed_path, batch_id, "activity_date", "user_bucket")
+
+
+def _read_live(spark: SparkSession, feed_path: str, live: tuple[str, ...]) -> DataFrame:
+    """Union of the txn-log feed table's `live` batch files."""
+    if not live:
+        raise ValueError(f"txn-log feed table at {feed_path} is empty")
+    return reduce(
+        lambda a, b: a.unionByName(b),
+        [spark.read.parquet(os.path.join(feed_path, n)) for n in live],
     )
 
 
@@ -680,18 +722,9 @@ def read_feed_txnlog(spark: SparkSession, feed_path: str) -> DataFrame:
     each per-batch read prunes on (activity_date, user_bucket) like
     the raw layout. At scale, OPTIMIZE through the committer folds
     small batch files together without changing this read."""
-    import os
-    from functools import reduce
-
     from user_feed_cdc_spark.sources.txn_writer import TxnLogWriter
 
-    parts = [
-        spark.read.parquet(os.path.join(feed_path, name))
-        for name in TxnLogWriter(feed_path).snapshot().live
-    ]
-    if not parts:
-        raise ValueError(f"txn-log feed table at {feed_path} is empty")
-    return reduce(lambda a, b: a.unionByName(b), parts)
+    return _read_live(spark, feed_path, TxnLogWriter(feed_path).snapshot().live)
 
 
 def compact_feed_txnlog(spark: SparkSession, feed_path: str) -> str:
@@ -705,9 +738,6 @@ def compact_feed_txnlog(spark: SparkSession, feed_path: str) -> str:
     periodically at scale so the snapshot read unions O(1) compacted
     sets plus the recent tail instead of every batch ever written.
     Returns the committed compacted-file name."""
-    import os
-    from functools import reduce
-
     from user_feed_cdc_spark.sources.txn_writer import TxnLogWriter
 
     writer = TxnLogWriter(feed_path)
@@ -720,12 +750,7 @@ def compact_feed_txnlog(spark: SparkSession, feed_path: str) -> str:
     # compaction that commits after begin() is above it, so the
     # commit-time check sees its removes
     live = writer.snapshot(txn.base_version).live
-    if not live:
-        raise ValueError(f"txn-log feed table at {feed_path} is empty")
-    merged = reduce(
-        lambda a, b: a.unionByName(b),
-        [spark.read.parquet(os.path.join(feed_path, n)) for n in live],
-    )
+    merged = _read_live(spark, feed_path, live)
     name = f"compacted{txn.base_version + 1:05d}"
     (
         merged.write.mode("overwrite")
@@ -920,38 +945,15 @@ def run_cdc_pipeline(
     if dead_letter_path is None:
         activities = normalize_events(raw)
         return write_feed_stream(activities, feed_path, checkpoint, available_now)
-
-    parsed = parse_cdc(raw)
-    # same bucket-contract sidecar the single-output path writes: without
-    # it read_feed_meta returns None and a reader pruning with a different
-    # modulus gets no mismatch error (the silent failure the sidecar
-    # exists to prevent)
-    write_feed_meta(spark, feed_path, N_USER_BUCKETS)
+    write_feed = _feed_sink(spark, feed_path, N_USER_BUCKETS, "parquet")
 
     def write_both(batch_df: DataFrame, batch_id: int) -> None:
         batch_df = batch_df.persist()  # parse once, serve both outputs
-        acts = normalize_events(batch_df).withColumn(
-            "activity_date", F.to_date("event_timestamp")
-        ).withColumn("user_bucket", user_bucket_expr(F.col("user_id")))
-        _write_feed_batch(acts, batch_id, feed_path)
-        (
-            dead_letters(batch_df)
-            .withColumn("_batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("_batch_id")
-            .parquet(dead_letter_path)
-        )
+        write_feed(_feed_layout(normalize_events(batch_df), N_USER_BUCKETS), batch_id)
+        overwrite_batch(dead_letters(batch_df), dead_letter_path, batch_id)
         batch_df.unpersist()
 
-    writer = (
-        parsed.writeStream.foreachBatch(write_both)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_batches(parse_cdc(raw), write_both, checkpoint, available_now)
 
 
 def pipeline_status(query) -> dict:

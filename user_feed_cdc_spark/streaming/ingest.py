@@ -10,8 +10,8 @@ Per micro-batch (foreachBatch, where the frame is batch again):
   4. append admitted docs to the corpus and their digests to the ledger,
      both dynamic-OVERWRITTEN by `_batch_id` partition — a replayed
      batch replaces its own output instead of appending duplicates
-     (same idempotency contract as the feed sink,
-     cdc_pipeline.py::_write_feed_batch).
+     (cdc_pipeline.overwrite_batch, the sink every `_batch_id` table
+     lands through).
 
 At 100 TB: the ledger is digests only (16 B/doc — ~1.6 TB per 100 B
 docs), bucketed on digest so the anti-join co-locates; the admission
@@ -25,6 +25,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.utils import AnalysisException
+
+from user_feed_cdc_spark.streaming.cdc_pipeline import overwrite_batch, start_batches
 
 
 def _ledger_digests(
@@ -69,31 +71,12 @@ def dedup_ingest_stream(
         spark = batch_df.sparkSession
         admitted = admit_new_docs(
             batch_df, _ledger_digests(spark, ledger_path, exclude_batch_id=batch_id)
-        ).withColumn("_batch_id", F.lit(batch_id))
+        )
         admitted.persist()  # two writes below; compute admission once
         try:
-            (
-                admitted.select("doc_id", "text", "_batch_id")
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("_batch_id")
-                .parquet(corpus_path)
-            )
-            (
-                admitted.select("digest", "_batch_id")
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("_batch_id")
-                .parquet(ledger_path)
-            )
+            overwrite_batch(admitted.select("doc_id", "text"), corpus_path, batch_id)
+            overwrite_batch(admitted.select("digest"), ledger_path, batch_id)
         finally:
             admitted.unpersist()
 
-    writer = (
-        docs_stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_batches(docs_stream, process, checkpoint, available_now)

@@ -9,11 +9,12 @@ Why this shape at scale:
 - The per-batch aggregation is map-side mergeable: each input split
   collapses to at most |types|·|days-in-batch| sketch rows (~1.5 KB
   each at lgK=12) before the shuffle.
-- Sketch rows land dynamic-OVERWRITTEN by `_batch_id` partition — the
-  same idempotent-replay contract as the feed and ingest sinks: a
-  replayed batch replaces its own sketch rows, and because HLL register
-  merges are idempotent max-folds, the merged estimate is EXACTLY the
-  same whether a batch ran once or retried (pytest pins this).
+- Sketch rows land dynamic-OVERWRITTEN by `_batch_id` partition
+  through cdc_pipeline.overwrite_batch, the idempotent-replay sink the
+  feed and ingest tables use too: a replayed batch replaces its own
+  sketch rows, and because HLL register merges are idempotent
+  max-folds, the merged estimate is EXACTLY the same whether a batch
+  ran once or retried (pytest pins this).
 - Reading is `hll_union_agg` over the sketch table grouped however the
   question demands — the distinct-users-last-year query touches 365
   rows per type, not a year of raw events.
@@ -28,6 +29,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.utils import AnalysisException
+
+from user_feed_cdc_spark.streaming.cdc_pipeline import overwrite_batch, start_batches
 
 
 def batch_sketches(batch_df: DataFrame) -> DataFrame:
@@ -50,23 +53,9 @@ def write_sketch_stream(
     idempotently partitioned by `_batch_id`."""
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        (
-            batch_sketches(batch_df)
-            .withColumn("_batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("_batch_id")
-            .parquet(sketch_path)
-        )
+        overwrite_batch(batch_sketches(batch_df), sketch_path, batch_id)
 
-    writer = (
-        events.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_batches(events, write_batch, checkpoint, available_now)
 
 
 def read_distinct_rollup(

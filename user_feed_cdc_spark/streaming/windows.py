@@ -15,7 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from user_feed_cdc_spark.session import input_width, rebind, with_conf
+from user_feed_cdc_spark.session import input_width, rebind, scoped_stream
 from user_feed_cdc_spark.sources.tables import load_events
 
 DEFAULT_WATERMARK = "10 minutes"
@@ -211,16 +211,16 @@ def run_to_memory(
     touched."""
     if width is None and src_paths:
         width = input_width(*src_paths)
-    if width is not None:
-        df = with_conf(df, {"spark.sql.shuffle.partitions": str(width)})
-    q = (
-        df.writeStream.format("memory")
-        .queryName(name)
-        .outputMode(output_mode)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    conf = {} if width is None else {"spark.sql.shuffle.partitions": str(width)}
+    with scoped_stream(df, conf) as df:
+        (
+            df.writeStream.format("memory")
+            .queryName(name)
+            .outputMode(output_mode)
+            .trigger(availableNow=True)
+            .start()
+            .awaitTermination()
+        )
     # The memory sink is DRIVER-RESIDENT by construction (its size is
     # bounded by driver memory whatever the scale), so fanning its
     # local scan into a session-width shuffle for the downstream
