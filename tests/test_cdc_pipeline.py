@@ -13,6 +13,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from user_feed_cdc_spark.streaming.cdc_pipeline import (
+    N_USER_BUCKETS,
+    RAW_USER_BUCKETS,
     dead_letters,
     kafka_source_options,
     normalize_events,
@@ -53,6 +55,26 @@ def fixture_lines() -> list[str]:
         _ev("likes", id=16, shard_id=4, liked_by="2", ts=BASE_TS + 5000),
         _ev("likes", id=17, shard_id=5, liked_by="2", ts=BASE_TS + 5000),
     ]
+
+
+def bulk_lines(n: int, first_id: int) -> list[str]:
+    """`n` valid creates over 300 users (ids "1000".. so they never meet
+    a fixture user), cycling through the four tables, all on the
+    fixture's date and one millisecond apart."""
+    out = []
+    for i in range(first_id, first_id + n):
+        user, ts = str(1000 + i % 300), BASE_TS + i % 1_000_000
+        table = ("likes", "comments", "shards", "followers")[i % 4]
+        if table == "likes":
+            out.append(_ev(table, id=i, shard_id=i % 50, liked_by=user, ts=ts))
+        elif table == "comments":
+            out.append(_ev(table, id=i, user_id=user, shard_id=i % 50, message="m", ts=ts))
+        elif table == "shards":
+            out.append(_ev(table, id=i, user_id=user, title="t", mode="normal",
+                           type="public", templateType="react", ts=ts))
+        else:
+            out.append(_ev(table, id=i, follower_id=user, following_id="1", ts=ts))
+    return out
 
 
 def test_normalize_batch_golden(spark):
@@ -181,7 +203,7 @@ def test_feed_sink_commits_through_txn_log(spark, tmp_path):
     run("feed_pq", "ck_pq", "parquet")
     run("feed_tx", "ck_tx", "txnlog")
 
-    # activity_id is a per-run uuid; compare the deterministic columns
+    # activity_id is random per run; compare the deterministic columns
     key_cols = ["user_id", "activity_type", "event_timestamp", "target_id"]
     pq = spark.read.parquet(str(tmp_path / "feed_pq"))
     tx = read_feed_txnlog(spark, str(tmp_path / "feed_tx"))
@@ -554,7 +576,7 @@ def test_kafka_frame_normalizes_like_file_source(spark):
     assert via_kafka.schema.simpleString() == "struct<value:string>"
     via_file = spark.createDataFrame([(ln,) for ln in lines], "value string")
 
-    drop = {"activity_id", "_seq"}  # uuid / source-order id: per-run
+    drop = {"activity_id", "_seq"}  # random id / source-order id: per-run
     cols = [c for c in normalize_events(via_file).columns if c not in drop]
     got = sorted(map(tuple, normalize_events(via_kafka).select(cols).collect()))
     want = sorted(map(tuple, normalize_events(via_file).select(cols).collect()))
@@ -581,31 +603,6 @@ def test_pipeline_status_counters(spark, tmp_path):
     assert status["last_batch_id"] is not None
     assert status["exception"] is None
     assert status["query_id"] == str(q.id)
-
-
-def test_sink_idempotent_replay(spark, tmp_path):
-    """Replaying the same micro-batch (fresh checkpoint → same batch id)
-    must NOT duplicate feed rows: the dynamic-overwrite-by-_batch_id sink
-    replaces its own partitions. This is the §7.3.3 improvement over the
-    reference's blind at-least-once append (env.py:14-15)."""
-    src = tmp_path / "cdc_in"
-    feed = str(tmp_path / "feed")
-    src.mkdir()
-    (src / "b.jsonl").write_text("\n".join(fixture_lines()) + "\n")
-
-    run_cdc_pipeline(spark, str(src), feed, str(tmp_path / "ck1")).awaitTermination()
-    assert spark.read.parquet(feed).count() == 6
-    # replay: same input, fresh checkpoint → batch id 0 again, same feed path
-    run_cdc_pipeline(spark, str(src), feed, str(tmp_path / "ck2")).awaitTermination()
-    out = spark.read.parquet(feed)
-    assert out.count() == 6
-    dupes = (
-        out.groupBy(F.col("metadata")["primary_key_value"])
-        .count()
-        .filter("count > 1")
-        .count()
-    )
-    assert dupes == 0
 
 
 def test_read_user_feed_order_pagination_pruning(spark, tmp_path):
@@ -652,12 +649,13 @@ def test_feed_meta_records_and_validates_bucket_count(spark, tmp_path):
     (src / "b.jsonl").write_text("\n".join(fixture_lines()) + "\n")
     run_cdc_pipeline(spark, str(src), feed, str(tmp_path / "ck")).awaitTermination()
 
-    assert read_feed_meta(spark, feed) == 32  # N_USER_BUCKETS recorded
+    assert read_feed_meta(spark, feed) == RAW_USER_BUCKETS  # the raw tier's count
     assert read_user_feed(spark, feed, "2", limit=2).count() == 2  # auto-resolve
-    with _pytest.raises(ValueError, match="n_user_buckets=32"):
-        read_user_feed(spark, feed, "2", n_user_buckets=8)
+    assert N_USER_BUCKETS != RAW_USER_BUCKETS
+    with _pytest.raises(ValueError, match=f"n_user_buckets={RAW_USER_BUCKETS}"):
+        read_user_feed(spark, feed, "2", n_user_buckets=N_USER_BUCKETS)
 
-    # compaction carries the contract along
+    # compaction re-buckets to, and records, the serving count
     compacted = str(tmp_path / "feed_c")
     compact_feed(spark, feed, compacted)
     assert read_feed_meta(spark, compacted) == 32
@@ -861,9 +859,119 @@ def test_kafka_cdc_live_roundtrip(spark, tmp_path):
     }
 
 
+def test_compact_feed_rebuckets_to_serving_count(spark, tmp_path):
+    """The raw tier is written, and recorded, at RAW_USER_BUCKETS;
+    compact_feed re-buckets to N_USER_BUCKETS: exactly that many
+    user_bucket= dirs per date (one file each), the serving count in its
+    sidecar, and for every fixture user the same pages as the raw
+    table."""
+    from user_feed_cdc_spark.streaming.cdc_pipeline import compact_feed, read_feed_meta
+
+    src = tmp_path / "cdc_in"
+    feed, compacted = str(tmp_path / "feed"), str(tmp_path / "feed_c")
+    src.mkdir()
+    lines = fixture_lines() + bulk_lines(2000, first_id=100)
+    (src / "b.jsonl").write_text("\n".join(lines) + "\n")
+    run_cdc_pipeline(spark, str(src), feed, str(tmp_path / "ck")).awaitTermination()
+    assert read_feed_meta(spark, feed) == RAW_USER_BUCKETS
+    (date_dir,) = [d for d in os.listdir(feed) if d.startswith("activity_date=")]
+    raw_buckets = [b for b in os.listdir(os.path.join(feed, date_dir)) if "=" in b]
+    assert len(raw_buckets) == RAW_USER_BUCKETS
+
+    compact_feed(spark, feed, compacted)
+    assert read_feed_meta(spark, compacted) == N_USER_BUCKETS
+    dates = [d for d in os.listdir(compacted) if d.startswith("activity_date=")]
+    assert dates == [date_dir]
+    buckets = sorted(
+        b for b in os.listdir(os.path.join(compacted, date_dir))
+        if b.startswith("user_bucket=")
+    )
+    assert buckets == sorted(f"user_bucket={i}" for i in range(N_USER_BUCKETS))
+    for b in buckets:
+        files = os.listdir(os.path.join(compacted, date_dir, b))
+        assert len([f for f in files if f.endswith(".parquet")]) == 1, b
+
+    for user in ("2", "4", "5"):  # every user of fixture_lines()
+        for offset in (0, 2, 10):
+            want = read_user_feed(spark, feed, user, limit=2, offset=offset).collect()
+            got = read_user_feed(spark, compacted, user, limit=2, offset=offset).collect()
+            assert [r.activity_id for r in got] == [r.activity_id for r in want], (
+                user, offset,
+            )
+
+
+def test_activity_ids_are_unique_uuids(spark, tmp_path):
+    """activity_id is a 36-character UUID-shaped string that uuid.UUID
+    parses, unique across the batches of one stream, a second stream into
+    a fresh table, and batch-mode normalize_events."""
+    import uuid
+
+    from user_feed_cdc_spark.streaming.cdc_pipeline import (
+        file_json_stream,
+        write_feed_stream,
+    )
+
+    src = tmp_path / "cdc_in"
+    src.mkdir()
+    for k in range(3):
+        path = src / f"b{k}.jsonl"
+        path.write_text("\n".join(bulk_lines(200, first_id=k * 200)) + "\n")
+        os.utime(path, (1_700_000_000 + k, 1_700_000_000 + k))
+
+    def stream_ids(name: str) -> list[str]:
+        feed = str(tmp_path / name)
+        acts = normalize_events(file_json_stream(spark, str(src), max_files=1))
+        write_feed_stream(acts, feed, str(tmp_path / f"ck_{name}")).awaitTermination()
+        out = spark.read.parquet(feed)
+        batch_ids = {r._batch_id for r in out.select("_batch_id").collect()}
+        assert batch_ids == {0, 1, 2}  # one batch per file
+        return [r.activity_id for r in out.select("activity_id").collect()]
+
+    batch = normalize_events(
+        spark.createDataFrame([(s,) for s in bulk_lines(600, 0)], ["value"])
+    )
+    ids = stream_ids("feed_a") + stream_ids("feed_b") + [
+        r.activity_id for r in batch.select("activity_id").collect()
+    ]
+    assert len(ids) == 3 * 600
+    assert len(set(ids)) == len(ids)
+    for i in ids:
+        assert len(i) == 36 and str(uuid.UUID(i)) == i, i
+
+
+@pytest.mark.parametrize("with_dead_letters", [False, True], ids=["feed", "dead_letters"])
+def test_live_batches_reuse_generated_code(spark, tmp_path, with_dead_letters):
+    """After its first micro-batch, a continuously triggered
+    run_cdc_pipeline compiles no more Java: every per-batch value (the
+    activity-id token, the _batch_id stamp) reaches generated code as a
+    reference, not as a literal inlined in its source."""
+    src = tmp_path / "cdc_in"
+    src.mkdir()
+    dead = str(tmp_path / "dead") if with_dead_letters else None
+    q = run_cdc_pipeline(
+        spark, str(src), str(tmp_path / "feed"), str(tmp_path / "ck"),
+        available_now=False, dead_letter_path=dead,
+    )
+    metric = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    compiled = []
+    try:
+        for k in range(4):
+            staged = tmp_path / f"b{k}.jsonl"
+            staged.write_text("\n".join(bulk_lines(2000, first_id=k * 2000)) + "\n")
+            os.rename(staged, src / staged.name)  # one whole file per batch
+            q.processAllAvailable()
+            compiled.append(metric.METRIC_COMPILATION_TIME().getCount())
+    finally:
+        q.stop()
+    assert q.exception() is None
+    batches = [p for p in q.recentProgress if p["numInputRows"]]
+    assert [p["numInputRows"] for p in batches] == [2000] * 4
+    assert compiled[1:] == [compiled[0]] * 3, compiled
+
+
 def _replay_rows(spark, path: str) -> list[str]:
     """Every row of the table at `path` as sorted JSON; activity_id is
-    a fresh uuid per run, so it is left out."""
+    random per run, so it is left out."""
     df = spark.read.parquet(path).drop("activity_id")
     return sorted(
         json.dumps(r.asDict(), default=str, sort_keys=True) for r in df.collect()
@@ -967,31 +1075,39 @@ def _replay_sketch(spark, d, ckpt):
 
 
 @pytest.mark.parametrize(
-    "sink, batches",
+    "sink, batches, counts",
     [
-        (_replay_feed, 1),
-        (_replay_dead_letters, 1),
-        (_replay_upsert, 1),
-        (_replay_ingest, 2),
-        (_replay_sketch, 2),
+        (_replay_feed, 1, [6]),
+        (_replay_dead_letters, 1, [6, 5]),
+        (_replay_upsert, 1, [8]),
+        (_replay_ingest, 2, [3, 3]),
+        (_replay_sketch, 2, [4]),
     ],
     ids=["feed", "dead_letters", "upsert", "ingest", "sketch"],
 )
-def test_batch_id_sink_same_path_replay(spark, tmp_path, sink, batches):
+def test_batch_id_sink_same_path_replay(spark, tmp_path, sink, batches, counts):
     """Every `_batch_id` sink, run a second time onto the same output
     paths from a fresh checkpoint (batch ids restart at 0), leaves the
     same rows: each replayed batch overwrites its own partitions, so
-    nothing is duplicated, and every batch's partitions survive the
-    batches written after them."""
+    nothing is duplicated (no row, and no CDC primary key, twice), and
+    every batch's partitions survive the batches written after them.
+    This is the §7.3.3 improvement over the reference's blind
+    at-least-once append (env.py:14-15)."""
     paths = sink(spark, tmp_path, str(tmp_path / "ck1"))
     first = [_replay_rows(spark, p) for p in paths]
+    assert [len(rows) for rows in first] == counts
     assert sink(spark, tmp_path, str(tmp_path / "ck2")) == paths
     again = [_replay_rows(spark, p) for p in paths]
     assert again == first
     for path, rows in zip(paths, again):
         assert len(set(rows)) == len(rows)
-        ids = spark.read.parquet(path).select("_batch_id").distinct().collect()
+        out = spark.read.parquet(path)
+        ids = out.select("_batch_id").distinct().collect()
         assert sorted(r._batch_id for r in ids) == list(range(batches)), path
+        if "metadata" in out.columns:
+            pk = F.col("metadata")["primary_key_value"]
+            pks = [r[0] for r in out.select(pk).collect()]
+            assert len(set(pks)) == len(pks), path
 
 
 def test_batch_sink_and_stream_start_live_in_cdc_pipeline():

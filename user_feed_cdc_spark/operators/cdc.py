@@ -188,7 +188,7 @@ _CANONICAL_ORACLE = """
 @_register("cdc_canonical_activities", _CANONICAL_ORACLE)
 def cdc_canonical_activities(spark: SparkSession, sf_dir: str) -> DataFrame:
     """JSON fixture → THE streaming transform (normalize_events) → canonical
-    rows. activity_id (uuid) is excluded — non-deterministic by design
+    rows. activity_id (random per run) is excluded — non-deterministic by design
     (SURVEY.md §7.3.2); metadata map is projected to columns so the
     driver can hash it."""
     raw = cdc_fixture_json(spark, sf_dir)

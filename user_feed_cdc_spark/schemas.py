@@ -209,8 +209,9 @@ MERGED_CDC_SCHEMA = T.StructType(
 # Canonical activity record (reference: config.py:18-25 CassandraRecord;
 # cassandra-init.cql:6-15 codeshard.user_activity). activity_id is an
 # opaque unique id; per-user time ordering is carried by event_timestamp
-# + seq tiebreaker, NOT by the id (SURVEY.md §7.3.1 — Spark uuid() is v4,
-# the reference's uuid1() time-ordering is replaced explicitly).
+# + seq tiebreaker, NOT by the id (SURVEY.md §7.3.1 — the id is a random
+# per-batch token plus the row's seq, UUID-shaped; the reference's uuid1()
+# time-ordering is replaced explicitly).
 ACTIVITY_SCHEMA = T.StructType(
     [
         T.StructField("user_id", T.StringType()),

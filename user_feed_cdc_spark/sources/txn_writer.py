@@ -1548,7 +1548,7 @@ def commit_batch(
     The data write happens BEFORE the commit, so a crash between the
     two leaves an orphan file that is invisible to every log reader —
     the same safety order Delta relies on. Returns the committed data
-    file name, or None for a skipped replay.
+    file name, or None for a skipped replay or an empty batch.
 
     `partition_by` lays the batch's file out hive-partitioned inside
     its own directory (the feed sink's (activity_date, user_bucket)
@@ -1556,22 +1556,31 @@ def commit_batch(
     checkpoint lineage — micro-batch ids restart at 0 on a fresh
     checkpoint, so a new lineage over the same table needs a new app
     id (the same contract as Delta's txnAppId)."""
+    import shutil
+
+    from pyspark.sql import Observation
+    from pyspark.sql import functions as F
+
     last = writer.last_txn(app)
     if last is not None and last >= batch_id:
         return None
-    if batch_df.isEmpty():
-        # an empty micro-batch (processing-time triggers emit them)
-        # must still advance the watermark — but adding a zero-part-file
-        # parquet dir to the log would break every later schema-less
-        # snapshot read ("Unable to infer schema")
-        writer.begin().set_txn(app, batch_id).commit()
-        return None
     name = f"{prefix}{batch_id:05d}"
-    out = batch_df.write.mode("overwrite")
+    path = os.path.join(writer.root, name)
+    rows = Observation()  # counted by the write's own job: no extra job
+    out = batch_df.observe(rows, F.count(F.lit(1)).alias("n")).write.mode("overwrite")
     if partition_by:
         out = out.partitionBy(*partition_by)
-    out.parquet(os.path.join(writer.root, name))
+    out.parquet(path)
     txn = writer.begin()
+    if rows.get["n"] == 0:
+        # an empty micro-batch (processing-time triggers emit them)
+        # must still advance the watermark — but its directory (no
+        # part file when partitioned, a schema-only one when not) stays
+        # out of the log: a zero-part-file dir would break every later
+        # schema-less snapshot read ("Unable to infer schema")
+        shutil.rmtree(path, ignore_errors=True)
+        txn.set_txn(app, batch_id).commit()
+        return None
     txn.add(name).set_txn(app, batch_id)
     txn.commit()
     return name

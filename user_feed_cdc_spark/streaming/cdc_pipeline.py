@@ -17,13 +17,18 @@ Design decisions vs the reference:
   sparse schema, then when/otherwise per canonical column — each event
   parsed exactly once. Unknown tables land in a dead-letter output
   instead of raising ValueError.
-- uuid1() time-ordering (strategy.py:36) is split into uuid() for
-  uniqueness + explicit (event_timestamp, _batch_id, _seq) ordering
-  (SURVEY.md §7.3.1).
+- uuid1() time-ordering (strategy.py:36) is split into a unique
+  activity_id + explicit (event_timestamp, _batch_id, _seq) ordering
+  (SURVEY.md §7.3.1). The id is UUID-shaped: a random per-batch token
+  plus the row's _seq, so every micro-batch runs the same generated
+  code (uuid() would inline a fresh seed and recompile each batch).
 - The feed sink is parquet partitioned by (activity_date, user_bucket,
   _batch_id) with dynamic overwrite per batch — the Cassandra
   (user_id, ts DESC) layout re-expressed for a lake, idempotent under
-  replay; the Cassandra connector is a sink_format swap.
+  replay; the Cassandra connector is a sink_format swap. The raw
+  streaming tier buckets users coarsely (RAW_USER_BUCKETS files per
+  batch); compact_feed re-buckets to the serving fan-out
+  (N_USER_BUCKETS).
 
 Transforms are pure column expressions shared verbatim between batch
 and streaming (same function, both paths), so the batch oracle check in
@@ -183,18 +188,42 @@ def _demux_columns(p) -> list[Column]:
     return out_cols
 
 
-def _with_batch_seq(batch_df: DataFrame, batch_id: int) -> DataFrame:
-    """foreachBatch _seq/_batch_id assignment, shared by the append and
-    upsert sinks: per-batch monotonically_increasing_id (legal again in
+def _activity_id() -> Column:
+    """A UUID-shaped activity id over the frame's `_seq`: 16 hex digits
+    of a fresh random token, then `_seq` as 16 hex digits, grouped
+    8-4-4-4-12, so uuid.UUID() parses it. `_seq` is unique within a
+    batch and the 64-bit token is drawn per call (one call per batch),
+    so ids stay unique across batches, checkpoints and tables. The
+    token rides in a string literal, which generated code reads from its
+    references array, so every batch compiles to the same class (uuid()
+    inlines its seed as a long literal: a recompile per batch). Null
+    while `_seq` is (a streaming normalize, before the sink assigns
+    it)."""
+    token = os.urandom(8).hex()
+    seq = F.lpad(F.lower(F.hex("_seq")), 16, "0")
+    return F.concat(
+        F.lit(f"{token[:8]}-{token[8:12]}-{token[12:]}-"),
+        seq.substr(1, 4),
+        F.lit("-"),
+        seq.substr(5, 12),
+    )
+
+
+def _with_batch_seq(batch_df: DataFrame) -> DataFrame:
+    """foreachBatch _seq assignment, shared by the append and upsert
+    sinks: per-batch monotonically_increasing_id (legal again in
     foreachBatch where the frame is batch), coalesced under any _seq the
-    batch-mode normalize already assigned. Both land in one projection:
-    a stamp above the nondeterministic _seq would stay a separate one."""
-    df = batch_df.withColumn("_batch_id", F.lit(batch_id))
-    if "_seq" in df.columns:
-        return df.withColumn(
-            "_seq", F.coalesce(F.col("_seq"), F.monotonically_increasing_id())
-        )
-    return df.withColumn("_seq", F.monotonically_increasing_id())
+    batch-mode normalize already assigned; then, on frames that carry
+    an activity_id, this batch's ids from that _seq (_activity_id). The
+    `_batch_id` stamp is left to the sink: overwrite_batch keeps it out
+    of the generated code."""
+    seq = F.monotonically_increasing_id()
+    if "_seq" in batch_df.columns:
+        seq = F.coalesce(F.col("_seq"), seq)
+    df = batch_df.withColumn("_seq", seq)
+    if "activity_id" in df.columns:
+        df = df.withColumn("activity_id", _activity_id())
+    return df
 
 
 def normalize_events(raw: DataFrame, value_col: str = "value") -> DataFrame:
@@ -226,7 +255,7 @@ def normalize_events(raw: DataFrame, value_col: str = "value") -> DataFrame:
     out_cols = _demux_columns(p)
     return valid.select(
         out_cols[0],  # user_id
-        F.expr("uuid()").alias("activity_id"),
+        _activity_id().alias("activity_id"),
         *out_cols[1:],
         "_seq",
     )
@@ -287,7 +316,7 @@ def write_feed_upsert_stream(
     merge-on-read semantics built from the primitives."""
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        overwrite_batch(_with_batch_seq(batch_df, batch_id), state_path, batch_id)
+        overwrite_batch(_with_batch_seq(batch_df), state_path, batch_id)
 
     return start_batches(changes, write_batch, checkpoint, available_now)
 
@@ -488,7 +517,14 @@ def cassandra_sink_options(
     }
 
 
-N_USER_BUCKETS = 32  # feed-layout fanout; scale with cluster size at 100 TB
+N_USER_BUCKETS = 32  # serving-layout fanout; scale with cluster size at 100 TB
+# The raw streaming tier's fanout: every micro-batch writes one file per
+# bucket it touches, and each file is a fixed cost on the live path, so
+# the raw tier buckets coarsely and compact_feed re-buckets to
+# N_USER_BUCKETS for serving. Picked by measurement (perfbench
+# cdc_ingest, 4 vCPU): 8 cut live freshness from 437 to 281 ms against
+# 32, and beat 4 in 4 of 4 alternating pairs (247 vs 289 ms).
+RAW_USER_BUCKETS = 8
 
 
 def user_bucket_expr(user_id_col, n_buckets: int = N_USER_BUCKETS) -> Column:
@@ -569,7 +605,7 @@ def write_feed_stream(
     feed_path: str,
     checkpoint: str,
     available_now: bool = True,
-    n_user_buckets: int = N_USER_BUCKETS,
+    n_user_buckets: int = RAW_USER_BUCKETS,
     sink_format: str = "parquet",
 ):
     """Feed-table sink: parquet partitioned by (activity_date, user_bucket,
@@ -577,7 +613,10 @@ def write_feed_stream(
     (cassandra-init.cql:14-15): date partitions prune time-range reads,
     user_bucket partitions prune per-user reads to 1/n of the files (the
     user_id partition-key role), and explicit (event_timestamp, _batch_id,
-    _seq) ordering replaces the TIMEUUID DESC clustering.
+    _seq) ordering replaces the TIMEUUID DESC clustering. This raw tier
+    buckets at RAW_USER_BUCKETS (recorded in the sidecar), since each
+    batch writes a file per bucket; compact_feed re-buckets to
+    N_USER_BUCKETS for serving.
 
     IDEMPOTENT replay (improves on the reference's at-least-once +
     swallow-all data loss, env.py:14-15 / event_processor.py:111-113):
@@ -587,8 +626,9 @@ def write_feed_stream(
     the checkpointed source offsets. _seq is assigned here (per-batch
     monotonically_increasing_id — legal in foreachBatch where the frame
     is batch again); with ascending _batch_id it gives same-millisecond
-    events a deterministic total order. At 100 TB, compact small
-    _batch_id partitions periodically; the overwrite unit stays the batch.
+    events a deterministic total order, and activity_id is derived from
+    it (_activity_id). At 100 TB, compact small _batch_id partitions
+    periodically; the overwrite unit stays the batch.
     """
     spark = activities.sparkSession
     write_feed = _feed_sink(spark, feed_path, n_user_buckets, sink_format)
@@ -644,17 +684,21 @@ def start_batches(
 
 def overwrite_batch(df: DataFrame, path: str, batch_id: int, *partition_by: str) -> None:
     """The idempotent micro-batch sink: stamp `batch_id` as `_batch_id`
-    (unless `df` carries it already, as _with_batch_seq's frames do) and
-    dynamic-overwrite parquet under `path`, partitioned by
+    and dynamic-overwrite parquet under `path`, partitioned by
     (*partition_by, _batch_id). Only this batch's partitions are
     replaced, so a replayed batch (a retry, or a fresh checkpoint over
     the same input, which restarts batch ids at 0) overwrites its own
     earlier output instead of appending duplicates, and every other
-    batch's output stays as it is."""
-    if "_batch_id" not in df.columns:
-        df = df.withColumn("_batch_id", F.lit(batch_id))
+    batch's output stays as it is.
+
+    The stamp is a string literal: it names a directory only, so its
+    type is never stored (reads infer `_batch_id` as an int from the
+    directory name), and a string literal reaches generated
+    code through its references array, where an int literal is inlined
+    and would recompile the write stage every batch."""
     (
-        df.write.mode("overwrite")
+        df.withColumn("_batch_id", F.lit(str(batch_id)))
+        .write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy(*partition_by, "_batch_id")
         .parquet(path)
@@ -666,7 +710,7 @@ def _write_feed_batch(
 ) -> None:
     """One micro-batch of canonical activities (already carrying
     activity_date/user_bucket) → idempotent partitioned write."""
-    df = _with_batch_seq(batch_df, batch_id)
+    df = _with_batch_seq(batch_df)
     if sink_format == "txnlog":
         # Commit through the engine's lakehouse committer (r10 VERDICT
         # directive: the feed sink — reference event_processor.py:89-113
@@ -683,7 +727,8 @@ def _write_feed_batch(
 
         writer = TxnLogWriter(feed_path, checkpoint_interval=8)
         commit_batch(
-            writer, df, batch_id, app="feed_sink",
+            writer, df.withColumn("_batch_id", F.lit(batch_id)), batch_id,
+            app="feed_sink",
             partition_by=["activity_date", "user_bucket"],
         )
         return
@@ -691,7 +736,7 @@ def _write_feed_batch(
         # connector path (untestable without a cluster): primary-key
         # upsert is naturally idempotent, no _batch_id partitioning
         (
-            df.drop("activity_date", "user_bucket", "_batch_id", "_seq")
+            df.drop("activity_date", "user_bucket", "_seq")
             .write.format("org.apache.spark.sql.cassandra")
             .options(**cassandra_sink_options())
             .mode("append")
@@ -775,12 +820,16 @@ def compact_feed(spark: SparkSession, feed_path: str, compacted_path: str) -> No
     Run periodically (e.g. per closed date partition); the streaming
     sink keeps writing new _batch_id partitions meanwhile.
 
-    The compacted table's sidecar carries the source's bucket count and
-    the schema Spark infers from the files just written: one inference
-    per compaction instead of one per page read. A writer that later
+    Rows are re-bucketed to the serving fan-out (N_USER_BUCKETS), whatever
+    count the raw table was written with (RAW_USER_BUCKETS by default),
+    and the compacted table's sidecar records N_USER_BUCKETS with the
+    schema Spark infers from the files just written: one inference per
+    compaction instead of one per page read. A writer that later
     changes the table's schema out of band is not seen by readers until
     the next compact_feed, the same contract as the bucket count."""
-    feed = spark.read.parquet(feed_path)
+    feed = spark.read.parquet(feed_path).withColumn(
+        "user_bucket", user_bucket_expr(F.col("user_id"), N_USER_BUCKETS)
+    )
     (
         feed.repartition(F.col("activity_date"), F.col("user_bucket"))
         .sortWithinPartitions(
@@ -795,11 +844,8 @@ def compact_feed(spark: SparkSession, feed_path: str, compacted_path: str) -> No
         .partitionBy("activity_date", "user_bucket")
         .parquet(compacted_path)
     )
-    # compaction preserves the bucket layout → carry its contract along
-    buckets = read_feed_meta(spark, feed_path)
-    if buckets is not None:
-        schema = spark.read.parquet(compacted_path).schema
-        write_feed_meta(spark, compacted_path, buckets, schema=schema)
+    schema = spark.read.parquet(compacted_path).schema
+    write_feed_meta(spark, compacted_path, N_USER_BUCKETS, schema=schema)
 
 
 def read_user_feed(
@@ -945,11 +991,11 @@ def run_cdc_pipeline(
     if dead_letter_path is None:
         activities = normalize_events(raw)
         return write_feed_stream(activities, feed_path, checkpoint, available_now)
-    write_feed = _feed_sink(spark, feed_path, N_USER_BUCKETS, "parquet")
+    write_feed = _feed_sink(spark, feed_path, RAW_USER_BUCKETS, "parquet")
 
     def write_both(batch_df: DataFrame, batch_id: int) -> None:
         batch_df = batch_df.persist()  # parse once, serve both outputs
-        write_feed(_feed_layout(normalize_events(batch_df), N_USER_BUCKETS), batch_id)
+        write_feed(_feed_layout(normalize_events(batch_df), RAW_USER_BUCKETS), batch_id)
         overwrite_batch(dead_letters(batch_df), dead_letter_path, batch_id)
         batch_df.unpersist()
 
